@@ -3,12 +3,13 @@
 One round (the reference's two chained MR jobs become one DataFrame plan,
 SURVEY.md §7.0):
 
-  docs slice → extract refs (P1-P5, F1-F14) → robots filter → within-round
-  dedup (deterministic champion, A5-A7 order) → merge with carried-over
-  ``pending`` queue → seen-set filter (Bloom prefilter + exact confirm)
-  → per-host politeness top-k (skew-salted two-phase window) → fetch batch
-  → append scheduled URLs to ``seen`` + OR-merge their bits into the
-  per-bucket Blooms → checkpoint (tables + counters + lineage, atomic).
+  docs slice → extract refs (P1-P5, F1-F14) → robots filter → merge with
+  the carried-over ``pending`` queue → champion dedup (A5-A7 order) on an
+  exchange by ``bucket`` → seen filter (one Bloom probe on that partitioning
+  routes the maybe-seen slice to one exact join) → per-host politeness top-k
+  (skew-salted two-phase window) → one per-bucket count (scheduled total +
+  lineage) → fetch batch → append scheduled URLs to ``seen`` + OR-merge
+  their bits into the per-bucket Blooms → atomic checkpoint.
 
 Determinism: every emission point uses a total order (priority, page_ts,
 url-length, url, doc_id, offset) — the reference's champion tie-break
@@ -85,19 +86,22 @@ def _obs_get(obs) -> dict:
 def _dedup_candidates(cand: DataFrame) -> DataFrame:
     """One deterministic champion per url_hash (A5-A7 tie-break style).
 
+    Grouped by (bucket, url_hash) — the same groups, as bucket derives from
+    url_hash — so an input hash-partitioned by ``bucket`` needs no exchange.
     ``__is_new``, when present, marks rows observed THIS round (vs rows
     read back from pending deltas); the group keeps max(__is_new) so the
     round driver knows which champions carry a fresh observation."""
+    keys = ("bucket", "url_hash")
     ordk = F.struct(
         F.col("priority"), F.col("page_ts"), F.length("ref_url"), F.col("ref_url"),
         F.col("doc_id"), F.col("offset"),
     )
-    aggs = [F.min_by(F.struct(*[c for c in CAND_COLS if c != "url_hash"]), ordk).alias("c")]
+    aggs = [F.min_by(F.struct(*[c for c in CAND_COLS if c not in keys]), ordk).alias("c")]
     flagged = "__is_new" in cand.columns
     if flagged:
         aggs.append(F.max("__is_new").alias("__is_new"))
-    out = cand.groupBy("url_hash").agg(*aggs)
-    cols = ["url_hash", "c.*"] + (["__is_new"] if flagged else [])
+    out = cand.groupBy(*keys).agg(*aggs)
+    cols = [c if c in keys else f"c.{c}" for c in CAND_COLS] + (["__is_new"] if flagged else [])
     return out.select(*cols)
 
 
@@ -216,7 +220,8 @@ class FrontierDriver:
         politeness_df: DataFrame | None = None,
         robots: DataFrame | None = None,
     ) -> dict[str, int]:
-        """Execute one frontier round and commit its checkpoint."""
+        """Execute one frontier round and commit its checkpoint; a round that
+        raises commits nothing and releases the frames it cached."""
         spark, cfg, cat = self.spark, self.cfg, self.catalog
         snap = cat.snapshot()
         parent = snap["snapshot_id"] if snap else None
@@ -228,6 +233,30 @@ class FrontierDriver:
         bloom = cat.read_table(spark, "bloom", snap) if cfg.use_bloom else None
         tomb = cat.read_table(spark, "tombstones", snap)
         cuckoo_tbl = cat.read_table(spark, "cuckoo", snap)
+        # carried from the parent snapshot's counters — never rescan state
+        # tables for bookkeeping (a count() over a 10^10-row seen table per
+        # round is exactly the scan the metadata exists to avoid)
+        prev_counters = (snap or {}).get("counters", {})
+        n_pend_prev = int(prev_counters.get("pending_after", 0))
+        prev_seen_total = int(prev_counters.get("seen_total", 0))
+        # per-bucket (m, n_items) of the filters on disk — n_buckets rows,
+        # column-pruned (the bits stay on disk)
+        old_stats: dict[int, tuple[int, int]] = {}
+        if bloom is not None:
+            old_stats = {
+                int(r["bucket"]): (int(r["m"]), int(r["n_items"]))
+                for r in bloom.select("bucket", "m", "n_items").collect()
+            }
+        n_ever = prev_seen_total + int(prev_counters.get("invalidated", 0))
+        if cfg.use_bloom and seen is not None and sum(n for _, n in old_stats.values()) < n_ever:
+            # no filter holds every URL ever scheduled (none, or one an older
+            # checkpoint kept across a round run without it): it must not
+            # route, and step 5 rebuilds each bucket from the seen table
+            bloom = None
+            old_stats = {
+                int(r["bucket"]): (0, int(r["count"]))
+                for r in seen.groupBy("bucket").count().collect()
+            }
 
         # 1. this round's arriving documents (closed-world fetch simulation)
         rdocs = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_rounds)) == round_id)
@@ -241,177 +270,169 @@ class FrontierDriver:
         # per-round pending WRITE IO is O(new discoveries), not O(queue).
         from pyspark.sql import Observation
 
-        # carried from the parent snapshot's counters — never rescan state
-        # tables for bookkeeping (a count() over a 10^10-row seen table per
-        # round is exactly the scan the metadata exists to avoid)
-        prev_counters = (snap or {}).get("counters", {})
-        n_pend_prev = int(prev_counters.get("pending_after", 0))
-        prev_seen_total = int(prev_counters.get("seen_total", 0))
         if pending is not None:
             cand = cand.unionByName(
                 pending.select(*CAND_COLS).withColumn("__is_new", F.lit(0))
             )
-        cand = _dedup_candidates(cand)
+        # the dedup exchange partitions by bucket, so no exchange runs between
+        # it and the Bloom cogroup (caching these champions would hide that
+        # partitioning from the planner; the seen filter caches its probe)
+        cand = _dedup_candidates(cand.repartition(cfg.n_buckets, "bucket"))
         obs_queue = Observation()
         cand = cand.observe(
             obs_queue, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
-        ).persist()
-
-        # 3. seen-set filter (bloom prefilter routes; exact join decides;
-        # tombstoned URLs — re-crawl invalidation — count as unseen)
-        new_urls = seenmod.filter_new_urls(
-            spark, cand, seen, bloom, tombstones=tomb, cuckoo_table=cuckoo_tbl,
-            key="url_hash", n_buckets=cfg.n_buckets,
         )
-        obs_live = Observation()
-        new_urls = new_urls.observe(
-            obs_live, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
-        )
-        # host is a pure derivation of ref_url, recomputed AFTER the dedup
-        # shuffle + seen filter (politeness is the first consumer) — the
-        # dedup exchange and the pending files carry no host/surt strings
-        from ..functions import urls as U
-
-        new_urls = new_urls.withColumn("host", U.url_host(F.col("ref_url"))).persist()
-
-        # 4. politeness scheduling (skew-salted two-phase top-k)
-        scheduled = pol.schedule_round(
-            new_urls, politeness_df, cfg.default_budget, cfg.n_salts
-        ).persist()
-        # single action materializes extract→dedup→seen-filter→schedule and
-        # resolves every observation riding on the pass
-        n_sched = scheduled.count()
-        counters = finish_counters()
-        qd, live = _obs_get(obs_queue), _obs_get(obs_live)
-        n_merged_new = int(qd.get("n_new") or 0)  # champions w/ a fresh observation
-        n_live = int(live.get("n") or 0)  # live queue size (post seen filter)
-        n_live_new = int(live.get("n_new") or 0)
-        # live queue + fresh champions the seen filter dropped == the oracle's
-        # "merged queue" (stale delta rows are invisible to it)
-        n_queue = n_live + (n_merged_new - n_live_new)
-        n_cand = counters["round_candidates"]
-
-        # 5. state updates: pending += delta (new − scheduled); seen += scheduled
-        newly_seen = scheduled.select("url_hash", "h1", "h2", "bucket").withColumn(
-            "seen_round", F.lit(round_id)
-        )
-
-        tables: dict[str, list[str]] = dict((snap or {}).get("tables", {}))
-        batch = scheduled.withColumn("surt", U.surt(F.col("ref_url"))).select(
-            "url_hash", "ref_url", "surt", "host", "kind", "priority", "page_ts",
-            "doc_id", "offset", "queue_pos", "fetch_delay_ms",
-        )
-        batch_path = cat.write_table(
-            batch.sortWithinPartitions("host", "queue_pos"), f"fetch_batch_{round_id}", round_id
-        )
-        tables[f"fetch_batch_{round_id}"] = [batch_path]
-        # one file per bucket dir (vs n_tasks × n_buckets small files).
-        # seen stores only the membership key + hash/bucket columns — URL
-        # strings live in the fetch_batch tables (the crawl log); at 10^10
-        # rows the string columns would triple the table for no reader.
-        seen_path = cat.write_table(
-            newly_seen.repartition(cfg.n_buckets, "bucket"),
-            "seen", round_id, partition_by=["bucket"],
-        )
-        tables["seen"] = tables.get("seen", []) + [seen_path]  # append (Iceberg add-files)
-
-        # scheduling a resurrected URL clears its tombstone (it is seen
-        # again); tombstone tables are small — O(tombstones) rewrite
-        if tomb is not None:
-            remaining = tomb.join(scheduled.select("url_hash"), "url_hash", "left_anti")
-            remaining = remaining.persist()
-            if remaining.count() > 0:
-                tomb_path = cat.write_table(remaining, "tombstones", round_id)
-                ck_path = cat.write_table(
-                    seenmod.build_cuckoo_table(remaining), "cuckoo", round_id
-                )
-                tables["tombstones"] = [tomb_path]
-                tables["cuckoo"] = [ck_path]
-            else:
-                tables.pop("tombstones", None)
-                tables.pop("cuckoo", None)
-            remaining.unpersist()
-
-        pend_paths = list(tables.get("pending", []))
-        not_scheduled = lambda df: df.join(
-            scheduled.select("url_hash"), "url_hash", "left_anti"
-        )
-        if len(pend_paths) >= cfg.pending_compact_every - 1:
-            # compaction round: fold every delta + drop scheduled/seen rows
-            # into one table (amortized — most rounds write only the delta)
-            pend_df = not_scheduled(new_urls).select(*CAND_COLS)
-            tables["pending"] = [cat.write_table(pend_df, "pending", round_id)]
-            counters["pending_compacted"] = 1
-        else:
-            delta_pend = not_scheduled(new_urls.where(F.col("__is_new") == 1)).select(
-                *CAND_COLS
+        cached: list[DataFrame] = []
+        try:
+            # 3. seen-set filter (bloom prefilter routes; exact join decides;
+            # tombstoned URLs — re-crawl invalidation — count as unseen)
+            new_urls = seenmod.filter_new_urls(
+                spark, cand, seen, bloom, tombstones=tomb, cuckoo_table=cuckoo_tbl,
+                key="url_hash", n_buckets=cfg.n_buckets, cache=cached,
             )
-            tables["pending"] = pend_paths + [
-                cat.write_table(delta_pend, "pending", round_id)
-            ]
+            obs_live = Observation()
+            new_urls = new_urls.observe(
+                obs_live, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
+            )
+            # host is a pure derivation of ref_url, recomputed AFTER the dedup
+            # shuffle + seen filter (politeness is the first consumer) — the
+            # dedup exchange and the pending files carry no host/surt strings
+            from ..functions import urls as U
 
-        # per-partition lineage (also feeds the bloom capacity arithmetic)
-        lineage_rows = newly_seen.groupBy("bucket").count().orderBy("bucket").collect()
-        delta_n = {int(r["bucket"]): int(r["count"]) for r in lineage_rows}
+            new_urls = new_urls.withColumn("host", U.url_host(F.col("ref_url")))
+            cached.append(new_urls.persist())
 
-        if cfg.use_bloom:
-            # per-bucket (m, n_items) of the filters on disk — n_buckets rows,
-            # column-pruned (the bits stay on disk)
-            old_stats: dict[int, tuple[int, int]] = {}
-            if bloom is not None:
-                old_stats = {
-                    int(r["bucket"]): (int(r["m"]), int(r["n_items"]))
-                    for r in bloom.select("bucket", "m", "n_items").collect()
-                }
-            m_by_bucket = {b: m for b, (m, _) in old_stats.items()}
-            delta = self._bloom_delta(newly_seen, m_by_bucket)  # (bucket, h1, h2)
-            merged = self._merge_blooms(bloom, delta)
-            # capacity policy: once a bucket's item count exceeds
-            # bloom_rebuild_load of its sized capacity (m / bits_per_key),
-            # rebuild that bucket from the exact seen table at 4x the size.
-            # Pure metadata arithmetic — no filter is materialized to decide.
-            default_m = seenmod._bloom_params(cfg.expected_per_bucket, cfg.bits_per_key)[0]
-            over: dict[int, int] = {}
-            for b in set(old_stats) | set(delta_n):
-                m = old_stats.get(b, (default_m, 0))[0]
-                n_tot = old_stats.get(b, (0, 0))[1] + delta_n.get(b, 0)
-                if n_tot * cfg.bits_per_key > cfg.bloom_rebuild_load * m:
-                    over[b] = n_tot
-            if over:
-                seen_all = cat.read_table(spark, "seen", {"tables": tables})
-                m_new = {
-                    b: seenmod._bloom_params(4 * n, cfg.bits_per_key)[0]
-                    for b, n in over.items()
-                }
-                rebuilt = seenmod.build_bloom_table(
-                    seen_all.where(F.col("bucket").isin(*over)),
-                    cfg.n_buckets, cfg.bits_per_key, m_by_bucket=m_new,
+            # 4. politeness scheduling (skew-salted two-phase top-k)
+            scheduled = pol.schedule_round(
+                new_urls, politeness_df, cfg.default_budget, cfg.n_salts
+            )
+            cached.append(scheduled.persist())
+            # single action materializes extract→dedup→seen-filter→schedule,
+            # resolves every observation riding on the pass, and yields the
+            # per-bucket lineage (which also feeds the bloom capacity arithmetic)
+            lineage_rows = scheduled.groupBy("bucket").count().collect()
+            delta_n = {int(r["bucket"]): int(r["count"]) for r in sorted(lineage_rows)}
+            n_sched = sum(delta_n.values())
+            counters = finish_counters()
+            qd, live = _obs_get(obs_queue), _obs_get(obs_live)
+            n_merged_new = int(qd.get("n_new") or 0)  # champions w/ a fresh observation
+            n_live = int(live.get("n") or 0)  # live queue size (post seen filter)
+            n_live_new = int(live.get("n_new") or 0)
+            # live queue + fresh champions the seen filter dropped == the oracle's
+            # "merged queue" (stale delta rows are invisible to it)
+            n_queue = n_live + (n_merged_new - n_live_new)
+            n_cand = counters["round_candidates"]
+
+            # 5. state updates: pending += delta (new − scheduled); seen += scheduled
+            newly_seen = scheduled.select("url_hash", "h1", "h2", "bucket").withColumn(
+                "seen_round", F.lit(round_id)
+            )
+
+            tables: dict[str, list[str]] = dict((snap or {}).get("tables", {}))
+            batch = scheduled.withColumn("surt", U.surt(F.col("ref_url"))).select(
+                "url_hash", "ref_url", "surt", "host", "kind", "priority", "page_ts",
+                "doc_id", "offset", "queue_pos", "fetch_delay_ms",
+            )
+            batch_path = cat.write_table(
+                batch.sortWithinPartitions("host", "queue_pos"), f"fetch_batch_{round_id}", round_id
+            )
+            tables[f"fetch_batch_{round_id}"] = [batch_path]
+            # one file per bucket dir (vs n_tasks × n_buckets small files).
+            # seen stores only the membership key + hash/bucket columns — URL
+            # strings live in the fetch_batch tables (the crawl log); at 10^10
+            # rows the string columns would triple the table for no reader.
+            seen_path = cat.write_table(
+                newly_seen.repartition(cfg.n_buckets, "bucket"),
+                "seen", round_id, partition_by=["bucket"],
+            )
+            tables["seen"] = tables.get("seen", []) + [seen_path]  # append (Iceberg add-files)
+
+            # scheduling a resurrected URL clears its tombstone (it is seen
+            # again); tombstone tables are small — O(tombstones) rewrite
+            if tomb is not None:
+                remaining = tomb.join(scheduled.select("url_hash"), "url_hash", "left_anti")
+                cached.append(remaining.persist())
+                if remaining.count() > 0:
+                    tomb_path = cat.write_table(remaining, "tombstones", round_id)
+                    ck_path = cat.write_table(
+                        seenmod.build_cuckoo_table(remaining), "cuckoo", round_id
+                    )
+                    tables["tombstones"] = [tomb_path]
+                    tables["cuckoo"] = [ck_path]
+                else:
+                    tables.pop("tombstones", None)
+                    tables.pop("cuckoo", None)
+
+            pend_paths = list(tables.get("pending", []))
+            not_scheduled = lambda df: df.join(
+                scheduled.select("url_hash"), "url_hash", "left_anti"
+            )
+            if len(pend_paths) >= cfg.pending_compact_every - 1:
+                # compaction round: fold every delta + drop scheduled/seen rows
+                # into one table (amortized — most rounds write only the delta)
+                pend_df = not_scheduled(new_urls).select(*CAND_COLS)
+                tables["pending"] = [cat.write_table(pend_df, "pending", round_id)]
+                counters["pending_compacted"] = 1
+            else:
+                delta_pend = not_scheduled(new_urls.where(F.col("__is_new") == 1)).select(
+                    *CAND_COLS
                 )
-                merged = merged.where(~F.col("bucket").isin(*over)).unionByName(rebuilt)
-                counters["bloom_rebuilt_buckets"] = len(over)
-            bloom_path = cat.write_table(merged, "bloom", round_id)
-            tables["bloom"] = [bloom_path]
+                tables["pending"] = pend_paths + [
+                    cat.write_table(delta_pend, "pending", round_id)
+                ]
 
-        # 6. counters (oracle-equal semantics; see frontier/oracle.py)
-        seen_total = prev_seen_total + n_sched
-        counters.update(
-            {
-                "queue_after_dedup": int(n_queue),
-                "dup_dropped": int(n_cand + n_pend_prev - n_queue),
-                "scheduled": int(n_sched),
-                "pending_after": int(n_live - n_sched),
-                "seen_total": int(seen_total),
+            if cfg.use_bloom:
+                m_by_bucket = {b: m for b, (m, _) in old_stats.items() if m}
+                delta = self._bloom_delta(newly_seen, m_by_bucket)  # (bucket, h1, h2)
+                merged = self._merge_blooms(bloom, delta)
+                # capacity policy: once a bucket's item count exceeds
+                # bloom_rebuild_load of its sized capacity (m / bits_per_key),
+                # rebuild that bucket from the exact seen table at 4x the size.
+                # Pure metadata arithmetic — no filter is materialized to decide.
+                default_m = seenmod._bloom_params(cfg.expected_per_bucket, cfg.bits_per_key)[0]
+                over: dict[int, int] = {}
+                for b in set(old_stats) | set(delta_n):
+                    m = old_stats.get(b, (default_m, 0))[0]
+                    n_tot = old_stats.get(b, (0, 0))[1] + delta_n.get(b, 0)
+                    if n_tot * cfg.bits_per_key > cfg.bloom_rebuild_load * m:
+                        over[b] = n_tot
+                if over:
+                    seen_all = cat.read_table(spark, "seen", {"tables": tables})
+                    m_new = {
+                        b: seenmod._bloom_params(4 * n, cfg.bits_per_key)[0]
+                        for b, n in over.items()
+                    }
+                    rebuilt = seenmod.build_bloom_table(
+                        seen_all.where(F.col("bucket").isin(*over)),
+                        cfg.n_buckets, cfg.bits_per_key, m_by_bucket=m_new,
+                    )
+                    merged = merged.where(~F.col("bucket").isin(*over)).unionByName(rebuilt)
+                    counters["bloom_rebuilt_buckets"] = len(over)
+                bloom_path = cat.write_table(merged, "bloom", round_id)
+                tables["bloom"] = [bloom_path]
+            else:
+                tables.pop("bloom", None)  # it would miss this round's URLs
+
+            # 6. counters (oracle-equal semantics; see frontier/oracle.py)
+            seen_total = prev_seen_total + n_sched
+            counters.update(
+                {
+                    "queue_after_dedup": int(n_queue),
+                    "dup_dropped": int(n_cand + n_pend_prev - n_queue),
+                    "scheduled": int(n_sched),
+                    "pending_after": int(n_live - n_sched),
+                    "seen_total": int(seen_total),
+                }
+            )
+            lineage = {
+                "seen_rows_per_bucket": delta_n,
+                "round": round_id,
             }
-        )
-        lineage = {
-            "seen_rows_per_bucket": delta_n,
-            "round": round_id,
-        }
-        cat.commit(round_id, tables, counters, lineage, parent)
-        cand.unpersist()
-        new_urls.unpersist()
-        scheduled.unpersist()
-        return counters
+            cat.commit(round_id, tables, counters, lineage, parent)
+            return counters
+        finally:
+            for df in cached:
+                df.unpersist()
 
     def run(
         self,

@@ -7,13 +7,12 @@ anti-join of every candidate against the full seen table shuffles ~TBs per
 round, so this engine uses the classic two-tier design:
 
 1. **Partitioned Bloom filters** (one per ``bucket = pmod(h1, n_buckets)``)
-   prefilter candidates: "definitely new" URLs skip the exact join
-   entirely; only "maybe seen" candidates (true dups + ~1% false
-   positives) reach the join.
-2. **Exact confirm**: the maybe-seen slice anti-joins the bucket-partitioned
-   exact seen table. Bloom false positives therefore never drop URLs — the
-   seen set matches the single-process oracle bit-exactly (the BASELINE.json
-   exactness contract).
+   route candidates: "definitely new" URLs skip the exact join entirely;
+   only "maybe seen" candidates (true dups + ~1% false positives) reach it.
+2. **Exact confirm**: the maybe-seen slice left-joins the exact seen keys.
+   Bloom false positives therefore never drop URLs — the seen set matches
+   the single-process oracle bit-exactly (the BASELINE.json exactness
+   contract).
 3. **Cuckoo overlay for deletions** (re-crawl invalidation): tombstones are
    exact ground truth in a small table; a per-bucket cuckoo filter (which,
    unlike Bloom, supports deletes) accelerates "was this URL un-seen?" —
@@ -34,7 +33,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 BLOOM_SCHEMA = "bucket int, m long, k int, n_items long, bits binary"
 CUCKOO_SCHEMA = "bucket int, n_buckets long, n_items long, table binary"
@@ -138,8 +136,10 @@ def bloom_probe(
     earlier collect+broadcast variant serialized ~2MB × n_buckets through
     the driver and every Python worker; at bench scale that alone capped
     scaling at ~1.7x from 8→32 cores.
+
+    A bucket without a Bloom row is marked maybe-seen: an absent filter
+    routes its rows to the exact check instead of declaring them new.
     """
-    cand_cols = candidates.columns
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields)
     out_schema += f", {out_col} boolean"
 
@@ -149,7 +149,7 @@ def bloom_probe(
             out[out_col] = pd.Series([], dtype=bool)
             return out
         if len(bloom_pdf) == 0:
-            out[out_col] = False  # no filter for this bucket → nothing seen
+            out[out_col] = True  # no filter for this bucket → exact check
             return out
         m = int(bloom_pdf["m"].iloc[0])
         k = int(bloom_pdf["k"].iloc[0])
@@ -336,80 +336,56 @@ def filter_new_urls(
     cuckoo_table: DataFrame | None = None,
     key: str = "url_hash",
     n_buckets: int = 64,
+    *,
+    cache: list[DataFrame],
 ) -> DataFrame:
     """Return candidates not in the effective seen set (seen − tombstones).
 
-    ``candidates`` and ``seen`` must already carry (h1, h2, bucket) — see
-    ``with_hashes`` — and ``candidates`` must be UNIQUE per ``key`` (the
-    round driver calls this post-champion-dedup; the Bloom probe runs over
-    a projected key frame and joins its verdict back by ``key``, so a
-    duplicate key would fan out). Exactness contract: the filters only
-    *route* rows; all membership decisions come from the exact tables, so
-    Bloom false positives and cuckoo false positives never change the
-    result.
+    Preconditions: ``candidates`` and ``seen`` carry (h1, h2, bucket) — see
+    ``with_hashes``; ``candidates`` is UNIQUE per ``key`` (the round driver
+    calls this after the champion dedup), so no join fans out; and, for the
+    Bloom cogroup to shuffle only the filter table, ``candidates`` is
+    hash-partitioned by ``bucket`` (the round driver's dedup exchange).
 
-    Scale shape: every probe and join operates on the CANDIDATE side —
-    tombstone resurrection is decided per maybe-seen row as
-    ``(∉ seen) ∨ (cuckoo-positive ∧ ∈ tombstones)``; the cuckoo verdict
-    (no false negatives) makes a negative final without consulting the
-    tombstone table, and the tombstone join itself runs over the small
-    maybe slice (tombstones are ≪ seen — broadcastable in the common
-    case). The 10^10-row seen table is only ever the build side of one
-    membership join and never flows through a Python kernel; an earlier
-    shape probed the whole seen table through the cuckoo cogroup —
-    O(seen) Arrow bytes per round once any tombstone existed.
-
-    Deliberate non-optimization: the cuckoo cogroup consumes the flagged
-    maybe slice WITH its payload columns (unlike the Bloom probe above,
-    which probes a key projection and joins the verdict back). Projecting
-    here too would reference ``flagged`` twice in one lazy plan, and
-    Catalyst re-executes the shared subtree — a fourth Python cogroup
-    re-running the Bloom probe over ALL candidates (measured in the plan),
-    which costs far more than carrying the small maybe slice's strings
-    through one Arrow hop.
+    The filters only *route* rows; membership is decided by the exact
+    tables, so Bloom and cuckoo false positives never change the result.
+    One Bloom probe marks every candidate: negatives are new and never meet
+    the seen table; the maybe-seen slice left-joins the seen keys. The probe
+    is persisted so both routes read it once, and appended to ``cache`` for
+    the caller to unpersist after materializing the result. A maybe-seen row
+    found in seen is kept iff it is cuckoo-positive ∧ ∈ tombstones; a cuckoo
+    negative (no false negatives) never matches in the tombstone join. The
+    10^10-row seen table is only the build side of one join and never flows
+    through a Python kernel.
     """
     if seen is None:
         return candidates
 
     if bloom_table is not None:
-        # probe a (key, h1, h2, bucket) projection — candidate payload
-        # strings stay JVM-side instead of round-tripping through Arrow
-        keys = candidates.select(key, "h1", "h2", "bucket")
-        verdict = bloom_probe(spark, keys, bloom_table).select(key, "maybe_seen")
-        probed = candidates.join(verdict, key)
+        probed = bloom_probe(spark, candidates, bloom_table)
+        cache.append(probed.persist())
         fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
     else:
-        fresh = None
-        maybe = candidates
-
-    # exact membership flag for the maybe slice (seen is unique per key —
-    # one row per scheduled URL — so the left join cannot fan out). One
-    # linear flow (flag joins + a single filter), not a union of filtered
-    # branches: each union branch would re-execute the Bloom cogroup.
+        fresh, maybe = None, candidates
+    # seen is unique per key (one row per scheduled URL)
     seen_keys = seen.select(F.col(key).alias("__seen_key")).withColumn("__in_seen", F.lit(1))
     flagged = maybe.join(
         seen_keys, maybe[key] == seen_keys["__seen_key"], "left"
     ).drop("__seen_key")
+    keep = F.col("__in_seen").isNull()
     if tombstones is not None:
         if cuckoo_table is not None:
             flagged = cuckoo_probe(spark, flagged, cuckoo_table)
         else:
             flagged = flagged.withColumn("maybe_deleted", F.lit(True))
         t_keys = tombstones.select(F.col(key).alias("__t_key")).withColumn("__tomb", F.lit(1))
-        # the tombstone lookup is CONDITIONAL on the cuckoo verdict: a
-        # cuckoo negative (no false negatives) is final, so the join
-        # predicate carries `maybe_deleted` and negative rows can never
-        # match a tombstone — the docstring's "negative is final without
-        # consulting the tombstone table" is now the plan's shape, not
-        # just the predicate's algebra.
         flagged = flagged.join(
             t_keys,
-            (flagged[key] == t_keys["__t_key"]) & flagged["maybe_deleted"],
+            (flagged[key] == t_keys["__t_key"]) & flagged["maybe_deleted"]
+            & flagged["__in_seen"].isNotNull(),
             "left",
-        ).drop("__t_key")
-        keep = F.col("__in_seen").isNull() | F.col("__tomb").isNotNull()
-        confirmed_new = flagged.where(keep).drop("__in_seen", "maybe_deleted", "__tomb")
-    else:
-        confirmed_new = flagged.where(F.col("__in_seen").isNull()).drop("__in_seen")
-    return confirmed_new if fresh is None else fresh.unionByName(confirmed_new)
+        ).drop("__t_key", "maybe_deleted")
+        keep = keep | F.col("__tomb").isNotNull()
+    confirmed = flagged.where(keep).drop("__in_seen", "__tomb")
+    return confirmed if fresh is None else fresh.unionByName(confirmed)

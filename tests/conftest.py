@@ -14,6 +14,50 @@ def spark():
 
 
 @pytest.fixture()
+def cache():
+    """Receives the frames a call persists; unpersisted after the test."""
+    frames = []
+    yield frames
+    for df in frames:
+        df.unpersist()
+
+
+@pytest.fixture(scope="session")
+def plan_ops(spark):
+    """Flatten a frame's executed plan into ``(class name, one-line
+    description, node)`` in pre-order. Adaptive wrappers and query stages
+    are unwrapped, and each cached relation's plan is walked once however
+    many scans read it, so counts are of operators that run."""
+    stages = {"ShuffleQueryStageExec", "BroadcastQueryStageExec",
+              "ResultQueryStageExec", "TableCacheQueryStageExec"}
+    ident = spark._jvm.System.identityHashCode
+
+    def ops(df):
+        out, cached = [], set()
+
+        def walk(node):
+            cls = node.getClass().getSimpleName()
+            if cls == "AdaptiveSparkPlanExec":
+                return walk(node.executedPlan())
+            if cls in stages:
+                return walk(node.plan())
+            out.append((cls, node.simpleString(25), node))
+            if cls == "InMemoryTableScanExec":
+                builder = node.relation().cacheBuilder()
+                if ident(builder) not in cached:
+                    cached.add(ident(builder))
+                    walk(builder.cachedPlan())
+            kids = node.children()
+            for i in range(kids.size()):
+                walk(kids.apply(i))
+
+        walk(df._jdf.queryExecution().executedPlan())
+        return out
+
+    return ops
+
+
+@pytest.fixture()
 def tmpdir_path():
     d = tempfile.mkdtemp(prefix="isis-test-")
     yield d
