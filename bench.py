@@ -169,9 +169,6 @@ def bench_frontier(spark, n_docs: int, n_rounds: int) -> dict:
     cfg = FrontierConfig(
         n_rounds=n_rounds,
         n_buckets=max(32, CPUS * 2),
-        # skew-leg knobs: bounded budget + SALTS=1 reproduces the naive
-        # single-window-per-host plan for the straggler comparison
-        n_salts=int(os.environ.get("SPARK_GRAFT_BENCH_SALTS", "16")),
         default_budget=int(
             os.environ.get("SPARK_GRAFT_BENCH_BUDGET", str(1 << 30))
         ),  # default: throughput mode, schedule everything new
@@ -363,7 +360,7 @@ def write_scaling_md(pairs: list[tuple[int, dict, int, dict, float]], n_docs: in
             f"""# BENCH baseline — frontier scaling (N vs 4N parallelism)
 
 Same job (frontier rounds: extract → canonicalize → dedup → Bloom+exact
-seen-filter → skew-salted schedule → checkpoint), same deterministic input
+seen-filter → per-host top-k schedule → checkpoint), same deterministic input
 ({n_docs} docs, ≈{cands} frontier URL candidates in the largest pair),
 multiple N-vs-4N parallelism pairs on this 32-core host (the sandbox analog
 of two cluster sizes, per BASELINE.md protocol):

@@ -15,19 +15,22 @@ north-rule additions. Semantics here:
   ``ImageData.java:255-282``: time first, then URL-length, then URL) so
   crawl order is bit-stable at any partition count.
 - **skew**: a hot host (10M candidates on one window partition) is the
-  classic straggler. Selection runs in two phases:
-  (1) per ``(host, salt)`` — ``salt = pmod(xxhash64(url_hash), S)`` —
-  take the per-salt top-``budget`` (a superset of the true top-``budget``);
-  (2) re-rank the ≤ ``S × budget`` survivors per host. Phase-2 groups are
-  bounded, so no partition exceeds ``S × budget`` rows per host.
+  classic straggler. Selection is one exact per-host ``row_number`` cut at
+  ``min(top, budget)``, where ``top`` is the largest budget any host can
+  have (a Python int, read with one small aggregate job over the
+  politeness table per call). Because ``top`` is a literal, Spark's
+  ``InsertWindowGroupLimit`` plans a Partial ``WindowGroupLimit`` (a
+  top-``top`` per map partition) before the host exchange, so the exchange
+  carries at most ``input partitions × top`` rows per host. The partial
+  limit is planned only while ``top`` ≤
+  ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default);
+  above it the plan is a plain window and the result is the same.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-DEFAULT_SALTS = 16
 
 
 def robots_pattern_to_regex(pattern: str) -> str | None:
@@ -273,7 +276,6 @@ def schedule_round(
     candidates: DataFrame,
     politeness: DataFrame | None,
     default_budget: int = 5,
-    n_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
     """Select each host's top-``budget`` candidates, skew-safely.
 
@@ -281,7 +283,17 @@ def schedule_round(
     ``(ref_url, url_hash, host, priority, page_ts)``. Output adds
     ``queue_pos`` (1-based per-host fetch order) and ``fetch_delay_ms``
     (queue_pos × crawl_delay_ms), restricted to scheduled rows.
+
+    One window ranks each host's rows in ``crawl_order`` and keeps
+    ``queue_pos <= top`` and ``queue_pos <= budget``. ``top`` =
+    ``max(default_budget, max(max_fetch_per_round))`` bounds every budget,
+    so the first cut never drops a scheduled row; it is read with one
+    small aggregate job over ``politeness`` (none without a table). While
+    ``top`` ≤ ``spark.sql.optimizer.windowGroupLimitThreshold``, Spark
+    keeps only each map partition's per-host top-``top`` before the host
+    exchange: a hot host sends at most ``input partitions × top`` rows.
     """
+    top = default_budget
     if politeness is not None:
         budgets = politeness.select(
             "host",
@@ -289,6 +301,7 @@ def schedule_round(
             F.col("crawl_delay_ms").alias("__delay"),
         )
         cand = candidates.join(F.broadcast(budgets), "host", "left")
+        top = max(top, budgets.agg(F.max("__budget")).first()[0] or top)
     else:
         cand = candidates.withColumn("__budget", F.lit(None).cast("int")).withColumn(
             "__delay", F.lit(None).cast("long")
@@ -297,22 +310,10 @@ def schedule_round(
         "__delay", F.coalesce("__delay", F.lit(1000).cast("long"))
     )
 
-    order = crawl_order()
-    # Phase 1: per-(host, salt) partial top-budget — bounded partitions even
-    # for a pathological host. The per-salt top-k is a superset of the true
-    # per-host top-k, so phase 2 sees every true winner.
-    salted = cand.withColumn("__salt", F.pmod(F.xxhash64("url_hash"), F.lit(n_salts)))
-    w1 = Window.partitionBy("host", "__salt").orderBy(*order)
-    survivors = (
-        salted.withColumn("__rn1", F.row_number().over(w1))
-        .where(F.col("__rn1") <= F.col("__budget"))
-        .drop("__rn1", "__salt")
-    )
-    # Phase 2: exact per-host rank over ≤ n_salts × budget survivors.
-    w2 = Window.partitionBy("host").orderBy(*order)
+    w = Window.partitionBy("host").orderBy(*crawl_order())
     return (
-        survivors.withColumn("queue_pos", F.row_number().over(w2))
-        .where(F.col("queue_pos") <= F.col("__budget"))
+        cand.withColumn("queue_pos", F.row_number().over(w))
+        .where((F.col("queue_pos") <= F.lit(top)) & (F.col("queue_pos") <= F.col("__budget")))
         .withColumn("fetch_delay_ms", (F.col("queue_pos").cast("long") - 1) * F.col("__delay"))
         .drop("__budget", "__delay")
     )

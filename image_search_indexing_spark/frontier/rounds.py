@@ -7,9 +7,10 @@ SURVEY.md §7.0):
   the carried-over ``pending`` queue → champion dedup (A5-A7 order) on an
   exchange by ``bucket`` → seen filter (one Bloom probe on that partitioning
   routes the maybe-seen slice to one exact join) → per-host politeness top-k
-  (skew-salted two-phase window) → one per-bucket count (scheduled total +
-  lineage) → fetch batch → append scheduled URLs to ``seen`` + OR-merge
-  their bits into the per-bucket Blooms → atomic checkpoint.
+  (one host window; a partial per-partition top-k before its exchange) →
+  one per-bucket count (scheduled total + lineage) → fetch batch → append
+  scheduled URLs to ``seen`` + OR-merge their bits into the per-bucket
+  Blooms → atomic checkpoint.
 
 Determinism: every emission point uses a total order (priority, page_ts,
 url-length, url, doc_id, offset) — the reference's champion tie-break
@@ -57,7 +58,7 @@ CAND_COLS = [
 class FrontierConfig:
     n_rounds: int = 4
     n_buckets: int = 32
-    n_salts: int = 8
+    n_salts: int = 8  # unused (politeness has no salts); perfbench/crawl.py still sets it
     default_budget: int = 5
     default_priority: int = 9
     bits_per_key: int = 12
@@ -288,7 +289,7 @@ class FrontierDriver:
             # tombstoned URLs — re-crawl invalidation — count as unseen)
             new_urls = seenmod.filter_new_urls(
                 spark, cand, seen, bloom, tombstones=tomb, cuckoo_table=cuckoo_tbl,
-                key="url_hash", n_buckets=cfg.n_buckets, cache=cached,
+                key="url_hash", cache=cached,
             )
             obs_live = Observation()
             new_urls = new_urls.observe(
@@ -302,10 +303,8 @@ class FrontierDriver:
             new_urls = new_urls.withColumn("host", U.url_host(F.col("ref_url")))
             cached.append(new_urls.persist())
 
-            # 4. politeness scheduling (skew-salted two-phase top-k)
-            scheduled = pol.schedule_round(
-                new_urls, politeness_df, cfg.default_budget, cfg.n_salts
-            )
+            # 4. politeness scheduling (per-host top-k, one host exchange)
+            scheduled = pol.schedule_round(new_urls, politeness_df, cfg.default_budget)
             cached.append(scheduled.persist())
             # single action materializes extract→dedup→seen-filter→schedule,
             # resolves every observation riding on the pass, and yields the

@@ -335,7 +335,6 @@ def filter_new_urls(
     tombstones: DataFrame | None = None,
     cuckoo_table: DataFrame | None = None,
     key: str = "url_hash",
-    n_buckets: int = 64,
     *,
     cache: list[DataFrame],
 ) -> DataFrame:

@@ -98,6 +98,11 @@ def cosine_topk(
         import pandas as pd
 
         qrows = q.collect()  # bounded: the query side of a top-k probe
+        id_t = dict((f.name, f.dataType.simpleString()) for f in queries.schema.fields)[id_col]
+        if not qrows:  # no query vectors: nothing to rank, and Q would be 1-D
+            return queries.sparkSession.createDataFrame(
+                [], f"query_id {id_t}, neighbor_id {id_t}, rank int"
+            )
         qids = np.array([r["query_id"] for r in qrows])
         Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
         qn = np.sqrt((Q * Q).sum(axis=1))
@@ -133,7 +138,6 @@ def cosine_topk(
                     }
                 )
 
-        id_t = dict((f.name, f.dataType.simpleString()) for f in queries.schema.fields)[id_col]
         scored = spread(c).mapInPandas(
             _score, f"query_id {id_t}, neighbor_id {id_t}, sim double"
         )

@@ -5,7 +5,7 @@ Pipeline (all engine code, no shortcuts):
 documents → derive interleaved spans (``frontier/docspans.py``) →
 ``extract_refs`` (kind dispatch, gates, canonicalize/SURT, hash) →
 deterministic per-URL champion dedup (A5-A7 order) → per-host politeness
-top-k (two-phase skew-salted window) → fetch batch.
+top-k (one host window, partial top-k before its exchange) → fetch batch.
 
 Because the span derivation is closed-form arithmetic, the whole chain has
 a compact ANSI-SQL equivalent (see ``__spark_entry__.oracle_sql``): the

@@ -36,7 +36,7 @@ def _run_engine(spark, corpus, workdir, n_rounds=N_ROUNDS):
     drv = FrontierDriver(
         spark,
         workdir,
-        FrontierConfig(n_rounds=n_rounds, n_buckets=16, n_salts=4, default_budget=5),
+        FrontierConfig(n_rounds=n_rounds, n_buckets=16, default_budget=5),
     )
     counters = drv.run(
         corpus["docs"],
@@ -173,7 +173,7 @@ def test_resume_bit_identical(spark, corpus, tmp_path_factory):
     drv_full, _ = _run_engine(spark, corpus, wd_a, n_rounds=3)
 
     wd_b = str(tmp_path_factory.mktemp("frontier-resume"))
-    cfgs = dict(n_rounds=3, n_buckets=16, n_salts=4, default_budget=5)
+    cfgs = dict(n_rounds=3, n_buckets=16, default_budget=5)
     drv1 = FrontierDriver(spark, wd_b, FrontierConfig(**cfgs))
     args = (corpus["docs"], corpus["meta"], corpus["seeds"], corpus["politeness"], corpus["robots"])
     drv1.run(*args, n_rounds=2)  # "killed" after round 1
@@ -198,7 +198,7 @@ def test_invalidation_resurrects_and_matches_oracle(spark, corpus, corpus_py, tm
     set and counters keep matching the oracle; scheduling clears the
     tombstone."""
     wd = str(tmp_path_factory.mktemp("frontier-inv"))
-    cfgs = dict(n_rounds=3, n_buckets=16, n_salts=4, default_budget=5)
+    cfgs = dict(n_rounds=3, n_buckets=16, default_budget=5)
     drv = FrontierDriver(spark, wd, FrontierConfig(**cfgs))
     args = (corpus["docs"], corpus["meta"], corpus["seeds"], corpus["politeness"], corpus["robots"])
     drv.run(*args, n_rounds=2)
@@ -262,7 +262,7 @@ def test_invalidation_of_queue_scheduled_url_without_rediscovery(
     tombstone would resurrect the stale delta row and reschedule the URL
     with no rediscovery."""
     wd = str(tmp_path_factory.mktemp("frontier-inv-stale"))
-    cfgs = dict(n_rounds=3, n_buckets=16, n_salts=4, default_budget=2)
+    cfgs = dict(n_rounds=3, n_buckets=16, default_budget=2)
     drv = FrontierDriver(spark, wd, FrontierConfig(**cfgs))
     args = (corpus["docs"], corpus["meta"], corpus["seeds"], corpus["politeness"], corpus["robots"])
     drv.run(*args, n_rounds=2)
@@ -325,7 +325,7 @@ def test_pending_compaction_preserves_equality(spark, corpus, corpus_py, tmp_pat
         spark,
         wd,
         FrontierConfig(
-            n_rounds=4, n_buckets=16, n_salts=4, default_budget=3,
+            n_rounds=4, n_buckets=16, default_budget=3,
             pending_compact_every=2,
         ),
     )
@@ -360,7 +360,7 @@ def test_span_cap_counters_match_oracle(spark, corpus, corpus_py, tmp_path_facto
     drv = FrontierDriver(
         spark,
         wd,
-        FrontierConfig(n_rounds=2, n_buckets=16, n_salts=4, default_budget=5, spans_cap=4),
+        FrontierConfig(n_rounds=2, n_buckets=16, default_budget=5, spans_cap=4),
     )
     counters = drv.run(
         corpus["docs"], corpus["meta"], corpus["seeds"], corpus["politeness"],

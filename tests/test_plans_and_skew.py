@@ -3,13 +3,14 @@
 The task brief: "after each operator works, .explain the plan and iterate
 until it's the plan you'd want". These tests pin the plan properties that
 matter at 100 TB: small dimensions broadcast, filters/projections reach
-the parquet scan, the politeness two-phase bounds per-partition work on a
-pathological hot host, and a crash between data write and snapshot commit
-never corrupts the checkpoint.
+the parquet scan, the politeness partial top-k bounds what a pathological
+hot host sends through the host exchange, and a crash between data write
+and snapshot commit never corrupts the checkpoint.
 """
 
 import json
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -54,10 +55,11 @@ def test_filter_pushdown_to_scan(spark, tmpdir_path, corpus):
     assert "ReadSchema: struct<doc_id:string>" in plan
 
 
-def test_hot_host_skew_no_straggler(spark):
-    """A host holding 50% of all candidates must not put 50% of rows in one
-    phase-2 partition: phase 1 caps each (host, salt) group at `budget`, so
-    phase 2 sees ≤ n_salts × budget rows for the hot host."""
+def test_hot_host_skew_no_straggler(spark, plan_ops):
+    """A host holding 50% of all candidates must not cross the host
+    exchange in full: the partial WindowGroupLimit keeps each map
+    partition's per-host top-``budget``, so the exchange carries at most
+    input partitions × budget of the hot host's rows."""
     from image_search_indexing_spark.frontier.politeness import schedule_round
 
     n = 40_000
@@ -76,20 +78,25 @@ def test_hot_host_skew_no_straggler(spark):
         F.to_timestamp(F.lit("2016-01-01")).alias("page_ts"),
     )
     cand = hot.unionByName(cold)
-    budget, salts = 7, 8
-    sched = schedule_round(cand, None, default_budget=budget, n_salts=salts)
-    rows = sched.groupBy("host").count().collect()
-    per_host = {r["host"]: r["count"] for r in rows}
-    assert per_host["hot.pt"] == budget  # exact top-k survived the salting
+    budget = 7
+    sched = schedule_round(cand, None, default_budget=budget)
+    rows = sched.collect()
+    per_host = Counter(r["host"] for r in rows)
+    assert per_host["hot.pt"] == budget  # exact top-k survived the partial limit
     assert max(per_host.values()) <= budget
     # determinism: hot host's picks are the global minima by crawl order
-    picked = sorted(
-        r["ref_url"] for r in sched.where(F.col("host") == "hot.pt").collect()
-    )
+    picked = sorted(r["ref_url"] for r in rows if r["host"] == "hot.pt")
     want = sorted(
         f"http://hot.pt/u{i}" for i in sorted(range(n), key=lambda i: (len(f"http://hot.pt/u{i}"), f"http://hot.pt/u{i}"))[:budget]
     )
     assert picked == want
+    exchanges = [
+        node for cls, line, node in plan_ops(sched)
+        if cls == "ShuffleExchangeExec" and "hashpartitioning(host" in line
+    ]
+    assert len(exchanges) == 1, exchanges
+    written = exchanges[0].metrics().apply("shuffleRecordsWritten").value()
+    assert written <= n + cand.rdd.getNumPartitions() * budget, written
 
 
 def test_crash_between_write_and_commit_is_invisible(spark, corpus, tmpdir_path):
@@ -98,7 +105,7 @@ def test_crash_between_write_and_commit_is_invisible(spark, corpus, tmpdir_path)
     from image_search_indexing_spark.frontier.rounds import FrontierConfig, FrontierDriver
 
     args = (corpus["docs"], corpus["meta"], corpus["seeds"], corpus["politeness"], corpus["robots"])
-    cfgs = dict(n_rounds=2, n_buckets=16, n_salts=4, default_budget=5)
+    cfgs = dict(n_rounds=2, n_buckets=16, default_budget=5)
 
     wd_ref = f"{tmpdir_path}/ref"
     ref = FrontierDriver(spark, wd_ref, FrontierConfig(**cfgs))

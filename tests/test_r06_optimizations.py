@@ -9,7 +9,8 @@ Covered rewrites:
   definition, including the zero-shingle NULL-signature doc;
 - near_dup_pairs' per-bucket BLAS kernel == the per-pair HOF cosine filter;
 - cosine_topk's batch-local-top-k numpy kernel == the crossJoin + window
-  HOF path (ranks identical, ties broken by neighbor_id).
+  HOF path (ranks identical, ties broken by neighbor_id), also on an empty
+  query side.
 """
 
 from __future__ import annotations
@@ -221,3 +222,21 @@ def test_cosine_topk_numpy_equals_hof_path(spark):
         for r in cosine_topk(q, c, k=5).collect()
     }
     assert fast == slow and len(fast) == 8 * 5
+
+
+def test_cosine_topk_numpy_empty_queries(spark):
+    """An empty query side yields an empty frame with the HOF path's
+    schema (the numpy kernel used to raise while building the plan)."""
+    from image_search_indexing_spark.operators.similarity import cosine_topk
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    q = emb.where(F.col("vec_id") < 0)
+    fast = cosine_topk(q, emb, k=3, dim=3)
+    slow = cosine_topk(q, emb, k=3)
+    assert fast.collect() == [] and slow.collect() == []
+    assert [(f.name, f.dataType) for f in fast.schema] == [
+        (f.name, f.dataType) for f in slow.schema
+    ]

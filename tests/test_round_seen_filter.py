@@ -1,7 +1,7 @@
 """Round driver × seen filter: one cached Bloom probe per round on the
 dedup's bucket partitioning, Bloom on/off equivalence (also across a
-resume and a stale filter in the manifest), and cached frames released
-when a round raises."""
+resume and a stale filter in the manifest), one host exchange for the
+politeness top-k, and cached frames released when a round raises."""
 
 import pytest
 
@@ -15,7 +15,7 @@ N_ROUNDS = 3
 
 def _cfg(use_bloom=True):
     return FrontierConfig(
-        n_rounds=N_ROUNDS, n_buckets=16, n_salts=4, default_budget=5, use_bloom=use_bloom
+        n_rounds=N_ROUNDS, n_buckets=16, default_budget=5, use_bloom=use_bloom
     )
 
 
@@ -83,6 +83,30 @@ def test_one_bloom_probe_on_dedup_partitioning(bloom_on, plan_ops):
     agg = next(i for i in range(start, len(probe_ops)) if "min_by(" in probe_ops[i][1])
     between = [line for cls, line, _ in probe_ops[start + 1:agg] if "Exchange" in cls]
     assert not between, between
+
+
+def test_politeness_one_host_exchange_with_partial_limit(bloom_on):
+    """Round 1 schedules with one host window: a single exchange by host,
+    a partial per-host top-k below it (Spark's WindowGroupLimit, planned
+    from the literal ``top`` cut) and the final one above it."""
+    _, _, (_, _, ops) = bloom_on
+    assert not [line for _, line, _ in ops if "__salt" in line]
+    # the plan above the cached live queue; the extract plan cached below it
+    # has host exchanges of its own (robots rules, seed priorities)
+    ops = ops[: [cls for cls, _, _ in ops].index("InMemoryTableScanExec")]
+    names = [cls for cls, _, _ in ops]
+    host_x = [
+        i for i, (cls, line, _) in enumerate(ops)
+        if cls == "ShuffleExchangeExec" and "hashpartitioning(host" in line
+    ]
+    assert len(host_x) == 1, [line for _, line, _ in ops]
+    limits = {
+        node.mode().toString(): i for i, (cls, _, node) in enumerate(ops)
+        if cls == "WindowGroupLimitExec"
+    }
+    assert limits.get("Final", len(ops)) < host_x[0] < limits.get("Partial", -1), limits
+    assert names.count("WindowGroupLimitExec") == 2
+    assert names.count("WindowExec") == 1
 
 
 def test_bloom_off_equals_bloom_on(spark, corpus, tmp_path_factory, bloom_on):

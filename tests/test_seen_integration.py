@@ -22,10 +22,10 @@ def test_bloom_routing_is_exact(spark, cache):
     seen = _urls(spark, 0, 3000)
     cand = _urls(spark, 2000, 6000)
     bloom = build_bloom_table(seen, 16)
-    new = filter_new_urls(spark, cand, seen, bloom, n_buckets=16, cache=cache)
+    new = filter_new_urls(spark, cand, seen, bloom, cache=cache)
     assert new.count() == 3000  # ids 3000..5999; bloom fp never drops a URL
     # without bloom, identical result (bloom is routing only)
-    new2 = filter_new_urls(spark, cand, seen, None, n_buckets=16, cache=cache)
+    new2 = filter_new_urls(spark, cand, seen, None, cache=cache)
     assert {r["url_hash"] for r in new.collect()} == {r["url_hash"] for r in new2.collect()}
 
 
@@ -35,10 +35,10 @@ def test_cuckoo_deletions_resurrect(spark, cache):
     bloom = build_bloom_table(seen, 16)
     tomb = _urls(spark, 2500, 3000)  # re-crawl invalidation of 500 URLs
     cuckoo = build_cuckoo_table(tomb)
-    new = filter_new_urls(spark, cand, seen, bloom, tomb, cuckoo, n_buckets=16, cache=cache)
+    new = filter_new_urls(spark, cand, seen, bloom, tomb, cuckoo, cache=cache)
     assert new.count() == 3500  # 3000 unseen + 500 resurrected
     # tombstones remain ground truth even without the cuckoo accelerator
-    new2 = filter_new_urls(spark, cand, seen, bloom, tomb, None, n_buckets=16, cache=cache)
+    new2 = filter_new_urls(spark, cand, seen, bloom, tomb, None, cache=cache)
     assert {r["url_hash"] for r in new.collect()} == {r["url_hash"] for r in new2.collect()}
 
 
@@ -56,7 +56,7 @@ def test_cuckoo_probe_runs_on_candidate_slice_not_seen_table(spark, plan_ops, ca
     bloom = build_bloom_table(seen, 16)
     tomb = _urls(spark, 2500, 3000)
     cuckoo = build_cuckoo_table(tomb)
-    new = filter_new_urls(spark, cand, seen, bloom, tomb, cuckoo, n_buckets=16, cache=cache)
+    new = filter_new_urls(spark, cand, seen, bloom, tomb, cuckoo, cache=cache)
     cogroups = [n for cls, _, n in plan_ops(new) if cls == "FlatMapCoGroupsInPandasExec"]
     assert len(cogroups) == 2, [n.simpleString(25) for n in cogroups]
     (cuckoo_node,) = [n for n in cogroups if "maybe_deleted" in n.simpleString(25)]
@@ -105,8 +105,8 @@ def test_missing_bloom_row_routes_to_exact_check(spark, cache):
     seen = _urls(spark, 0, 3000)
     cand = _urls(spark, 2000, 6000)
     bloom = build_bloom_table(seen, 16).where(F.col("bucket") != 3)
-    got = filter_new_urls(spark, cand, seen, bloom, n_buckets=16, cache=cache)
-    want = filter_new_urls(spark, cand, seen, None, n_buckets=16, cache=cache)
+    got = filter_new_urls(spark, cand, seen, bloom, cache=cache)
+    want = filter_new_urls(spark, cand, seen, None, cache=cache)
     got, want = ({r["url_hash"] for r in df.collect()} for df in (got, want))
     assert got == want
     assert len(got) == 3000
@@ -124,7 +124,7 @@ def test_filter_hash_exchange_count(spark, plan_ops):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     cache = []
     try:
-        new = filter_new_urls(spark, cand, seen, bloom, n_buckets=16, cache=cache)
+        new = filter_new_urls(spark, cand, seen, bloom, cache=cache)
         assert new.count() == 3000
         ops = plan_ops(new)
     finally:
@@ -150,7 +150,7 @@ def test_bloom_negatives_never_meet_seen_table(spark, plan_ops):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
         cache = []
         try:
-            new = filter_new_urls(spark, cand, seen, bloom, n_buckets=16, cache=cache)
+            new = filter_new_urls(spark, cand, seen, bloom, cache=cache)
             ops = plan_ops(new)
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

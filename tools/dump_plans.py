@@ -39,7 +39,8 @@ def main() -> None:
     cap(
         "frontier_schedule (end-to-end round)",
         qs["frontier_schedule"](spark, sf),
-        "extract → canonicalize → champion dedup → two-phase politeness top-k.",
+        "extract → canonicalize → champion dedup → politeness top-k (partial "
+        "WindowGroupLimit before the one host exchange).",
     )
     cap("q3_shipping_priority", qs["q3_shipping_priority"](spark, sf),
         "fact-fact sort-merge + broadcast dimension; revenue in exact cents.")
