@@ -594,7 +594,7 @@ def _caption_guard(spark, sf):
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     combined = docspans.interleaved_from_documents(docs)
-    refs = extract_refs(combined, None, features="full", caption_page_budget=40)
+    refs = extract_refs(combined, None, caption_page_budget=40)
     return refs.where(F.col("drop_reason").isNull()).select(
         "doc_id",
         "span_idx",

@@ -231,7 +231,7 @@ def check_streaming(spark) -> dict:
     the frontier corpus format is the streaming input contract)."""
     from pyspark.sql import functions as F
 
-    from image_search_indexing_spark.frontier.extract import extract_refs
+    from image_search_indexing_spark.frontier.extract import media_refs
     from image_search_indexing_spark.streaming.ingest import run_to_memory
 
     n_docs = int(os.environ.get("SPARK_GRAFT_CHECK_DOCS", "100000"))
@@ -245,7 +245,7 @@ def check_streaming(spark) -> dict:
     got = run_to_memory(spark, src, "t_check_refs")
     stream_sec = round(time.time() - t0, 2)
     t0 = time.time()
-    want = extract_refs(docs, meta, features="frontier").where(F.col("drop_reason").isNull())
+    want = media_refs(docs, meta).where(F.col("drop_reason").isNull())
 
     def agg(df):
         return df.agg(

@@ -1,12 +1,17 @@
 """Derive the interleaved spans table from the flat ``documents`` testdata.
 
-The driver's testdata (`/root/testdata/sf*/documents.parquet`) is flat
-(doc_id:bigint, text, lang, source, n_chars); the engine's input_hint shape
-is (doc_id:string, spans:array<struct<kind,text,media_ref,offset>>). This
-module derives spans **deterministically with closed-form arithmetic** on
-``doc_id`` so that the *entire* frontier pipeline over them (extraction →
-canonicalize → dedup → politeness schedule) has a compact ANSI-SQL
-equivalent the DuckDB oracle can run — an end-to-end correctness gate.
+The testdata ``sf*/documents.parquet`` is flat (doc_id:bigint, text, lang,
+source, n_chars); the engine's input_hint shape is (doc_id:string,
+spans:array<struct<kind,text,media_ref,offset>>). This module derives
+spans **deterministically with closed-form arithmetic** on ``doc_id`` so
+that the *entire* frontier pipeline over them (extraction → canonicalize →
+dedup → politeness schedule) has a compact ANSI-SQL equivalent the DuckDB
+oracle can run — an end-to-end correctness gate.
+
+``interleaved_from_documents`` is the one derivation: spans and the page
+envelope (base_url, fetch_ts) come out of one projection over one scan,
+and every plan over the testdata (frontier_schedule, the indexer, the
+caption guard) extracts from it with ``meta=None``.
 
 Derivation (all integer arithmetic, no RNG):
 
@@ -41,13 +46,14 @@ def _host(hid: Column) -> Column:
     return F.concat(F.lit("site"), hid.cast("string"), _tld(hid))
 
 
-def spans_from_documents(docs: DataFrame) -> DataFrame:
-    """documents(doc_id bigint, text, ...) → (doc_id string, spans array)."""
+def interleaved_from_documents(docs: DataFrame) -> DataFrame:
+    """documents(doc_id bigint, text, ...) → (doc_id string, spans array,
+    base_url, fetch_ts): spans and page envelope in ONE projection, so
+    extraction with ``meta=None`` reads the table once."""
     # rename the numeric id first: the output re-uses the name `doc_id` for
     # the string form, and Catalyst projection collapse must not see both.
-    # spread(): downstream consumers broadcast the meta side, so the whole
-    # extract/parse pipeline would otherwise inherit the 1-row-group
-    # documents scan's single task (see session.spread)
+    # spread(): everything up to the first exchange would otherwise inherit
+    # the 1-row-group documents scan's single task (see session.spread)
     docs = spread(docs.select(F.col("doc_id").alias("__did"), "text"))
     did = F.col("__did")
     n_refs = (did % 4 + 1).cast("int")
@@ -81,75 +87,6 @@ def spans_from_documents(docs: DataFrame) -> DataFrame:
             lambda i: F.array(text_span(i), media_span(i)),
         )
     )
-    doc_id_str = F.concat(F.lit("doc-"), F.lpad(did.cast("string"), 9, "0"))
-    return docs.select(doc_id_str.alias("doc_id"), spans.alias("spans"))
-
-
-def interleaved_from_documents(docs: DataFrame) -> DataFrame:
-    """Spans + page envelope in ONE projection (single scan of documents).
-
-    ``spans_from_documents`` + ``docmeta_from_documents`` joined on doc_id
-    would plan a self-join (two scans of the same table); since both are
-    closed-form on doc_id, the flagship derives them together and feeds
-    the pre-joined frame to ``extract_refs(combined, meta=None)``."""
-    # same arithmetic as spans_from_documents + docmeta_from_documents,
-    # inlined into one projection; Catalyst collapses it onto one scan.
-    # spread() for the same reason as spans_from_documents: everything up
-    # to the first exchange otherwise runs on the 1-row-group scan's task
-    docs2 = spread(docs.select(F.col("doc_id").alias("__did"), "text"))
-    did = F.col("__did")
-    hid = did % N_HOSTS
-    base = F.concat(
-        F.lit("http://www."), _host(hid), F.lit("/page/"), did.cast("string"), F.lit(".html")
-    )
-    secs = (did % 365) * 86400 + (did % 86400)
-    ts = F.timestamp_seconds(F.unix_timestamp(F.lit("2016-01-01 00:00:00")) + secs)
-    doc_id_str = F.concat(F.lit("doc-"), F.lpad(did.cast("string"), 9, "0"))
-    n_refs = (did % 4 + 1).cast("int")
-
-    # re-derive spans inline (copy of spans_from_documents' projection) so
-    # the whole frame is one select over one scan
-    def media_span(i):
-        img_id = (did * 7 + i * 13) % POOL
-        hid_i = img_id % N_HOSTS
-        ext = F.when(img_id % 2 == 0, ".png").otherwise(".jpg")
-        url = F.concat(
-            F.lit("http://www."), _host(hid_i), F.lit("/img/"), img_id.cast("string"), ext
-        )
-        kind = F.when(i % 3 == 0, "img").when(i % 3 == 1, "a").otherwise("css")
-        return F.struct(
-            kind.alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            url.alias("media_ref"),
-            (i * 2 + 1).cast("int").alias("offset"),
-        )
-
-    def text_span(i):
-        return F.struct(
-            F.lit("text").alias("kind"),
-            F.substring(F.col("text"), (i * 37 + 1).cast("int"), 30).alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            (i * 2).cast("int").alias("offset"),
-        )
-
-    spans_col = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0).cast("bigint"), n_refs - F.lit(1)),
-            lambda i: F.array(text_span(i), media_span(i)),
-        )
-    )
-    return docs2.select(
-        doc_id_str.alias("doc_id"),
-        spans_col.alias("spans"),
-        base.alias("base_url"),
-        F.date_format(ts, "yyyyMMddHHmmss").alias("fetch_ts"),
-    )
-
-
-def docmeta_from_documents(docs: DataFrame) -> DataFrame:
-    """Per-doc page envelope (base_url + archive fetch_ts), same arithmetic."""
-    docs = docs.select(F.col("doc_id").alias("__did"))
-    did = F.col("__did")
     hid = did % N_HOSTS
     base = F.concat(
         F.lit("http://www."), _host(hid), F.lit("/page/"), did.cast("string"), F.lit(".html")
@@ -159,6 +96,7 @@ def docmeta_from_documents(docs: DataFrame) -> DataFrame:
     doc_id_str = F.concat(F.lit("doc-"), F.lpad(did.cast("string"), 9, "0"))
     return docs.select(
         doc_id_str.alias("doc_id"),
+        spans.alias("spans"),
         base.alias("base_url"),
         F.date_format(ts, "yyyyMMddHHmmss").alias("fetch_ts"),
     )

@@ -4,10 +4,12 @@ Re-expresses the reference's HTML extraction pipeline
 (``processors/ImageInformationExtractor.java``) over the input_hint span
 model ``spans: array<struct<kind,text,media_ref,offset>>``:
 
-- MIME/kind dispatch (P1, ``:191-236``)        → ``kind`` predicates
+- MIME/kind dispatch (P1, ``:191-236``)        → ``kind IN (img,a,css)``
+  filter, applied before any URL work
 - per-page image cap (P4, ``:71,531-535``)     → ``F.slice`` before explode
 - <a>-extension gate (P3, ``:43,653-664``)     → extension ``isin`` filter
 - CSS-vs-parsed anti-join (J4, ``:596-613``)   → per-(doc,url) window mark
+  in batch, ``array_contains`` over the doc's parsed URLs in streaming
 - inline data:image → ``hash:`` URL (F8, ``:247-271``) → ``md5`` + prefix
 - >10000-char URL drop + count (``:64,483-492``)
 - caption = nearest non-empty text span by offset (F11, ``:672-816``):
@@ -23,17 +25,28 @@ model ``spans: array<struct<kind,text,media_ref,offset>>``:
   media span on that page gets the reference's empty-string caption and a
   ``caption_truncated`` mark (the counter analog of the skip).
 
+One core builds every media-ref row: ``_capped_docs`` → ``_explode`` →
+media filter → ``_ref_url`` → ``_with_ref_columns`` (ext, drop_reason,
+SURT, hash, host, page_ts). The entry points differ only around it:
+
+- ``media_refs``: the core (``REF_COLS``).
+- ``extract_refs_frontier``: the core with the round's counters riding
+  as ``observe`` metrics on the same pass.
+- ``extract_refs``: the caption-context windows before the media filter,
+  then the core, then the indexer's text features and the caption guard.
+- ``extract_refs_streaming``: the core with the window-free J4 check.
+
 Everything is built-in Column expressions — single scan, no UDFs, no
-shuffle except the per-doc window sort (partition key ``doc_id``), which at
-100 TB stays healthy because doc_id is high-cardinality and spans/doc are
-capped (P4). Dropped rows carry a ``drop_reason`` instead of disappearing,
-so the round driver can emit the reference's counters (A12) from the same
-scan.
+shuffle except the window exchanges (partition key ``doc_id``), which at
+100 TB stay healthy because doc_id is high-cardinality and spans/doc are
+capped (P4). Media rows dropped by a gate carry a ``drop_reason`` instead
+of disappearing, so the round driver can emit the reference's counters
+(A12) from the same scan; valid rows are ``drop_reason IS NULL``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
@@ -43,48 +56,11 @@ from ..functions import urls as U
 IMAGE_FILE_EXTENSIONS = ["jpg", "jpeg", "png", "tif", "tiff", "gif", "svg", "webp", "bmp", "ico"]
 MAX_IMAGE_IN_HTML = 10_000  # ImageInformationExtractor.java:71
 MAX_URL_LENGTH = 10_000  # ImageInformationExtractor.java:64 MAX_IMAGE_FIELD_SIZE
-
-
-def explode_spans(docs: DataFrame, meta: DataFrame, spans_cap: int = MAX_IMAGE_IN_HTML) -> DataFrame:
-    """documents ⋈ docmeta → one row per span, with per-doc caption context.
-
-    Returns every span (text and media); media rows carry ``caption`` from
-    the nearest-non-empty-text scan. The join with docmeta broadcasts when
-    small; at scale both sides are co-partitioned on doc_id by the writer.
-    """
-    extra = [c for c in ("base_url", "fetch_ts") if c in docs.columns]
-    capped = docs.select(
-        "doc_id", *extra,
-        F.slice("spans", 1, spans_cap).alias("spans"), F.size("spans").alias("n_spans_raw"),
-    )
-    exploded = (
-        (capped.join(meta, "doc_id") if meta is not None else capped)
-        .select(
-            "doc_id",
-            "base_url",
-            "fetch_ts",
-            "n_spans_raw",
-            F.posexplode("spans").alias("span_idx", "span"),
-        )
-        .select(
-            "doc_id",
-            "base_url",
-            "fetch_ts",
-            "n_spans_raw",
-            "span_idx",
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("offset"),
-        )
-    )
-
-    is_text = (F.col("kind") == "text") & (F.trim(F.coalesce(F.col("text"), F.lit(""))) != "")
-    txt = F.when(is_text, F.struct(F.col("offset"), F.trim("text").alias("text")))
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    prev_t = F.last(txt, ignorenulls=True).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    next_t = F.first(txt, ignorenulls=True).over(w.rowsBetween(1, Window.unboundedFollowing))
-    return exploded.withColumn("prev_text", prev_t).withColumn("next_text", next_t)
+MEDIA_KINDS = ("img", "a", "css")
+REF_COLS = [
+    "doc_id", "kind", "span_idx", "offset", "ref_url", "surt",
+    "url_hash", "host", "ext", "page_ts", "drop_reason",
+]
 
 
 def _capped_docs(docs: DataFrame, spans_cap: int) -> DataFrame:
@@ -97,34 +73,99 @@ def _capped_docs(docs: DataFrame, spans_cap: int) -> DataFrame:
     )
 
 
-def _explode_spans_nocaption(
-    docs: DataFrame, meta: DataFrame, spans_cap: int, capped: DataFrame | None = None
-) -> DataFrame:
-    """explode_spans minus the caption-context windows (frontier fast path:
-    media rows only need url/kind/offset, so the per-doc sort is skipped).
+def _explode(capped: DataFrame, meta: DataFrame | None) -> DataFrame:
+    """One row per span of ``capped``, with its other columns kept.
 
-    ``meta=None`` means docs already carries base_url/fetch_ts (pre-joined
-    single-scan input, e.g. docspans.interleaved_from_documents).
-    ``capped`` lets the caller pre-build (and observe) the capped frame."""
-    if capped is None:
-        capped = _capped_docs(docs, spans_cap)
-    return (
-        (capped.join(meta, "doc_id") if meta is not None else capped)
-        .select(
-            "doc_id", "base_url", "fetch_ts", "n_spans_raw",
-            F.posexplode("spans").alias("span_idx", "span"),
-        )
-        .select(
-            "doc_id", "base_url", "fetch_ts", "n_spans_raw", "span_idx",
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("offset"),
-        )
+    ``meta=None`` means the docs already carry base_url/fetch_ts
+    (pre-joined single-scan input, e.g. docspans.interleaved_from_documents,
+    or a stream); otherwise docmeta joins on doc_id (broadcast when small;
+    at scale both sides are co-partitioned on doc_id by the writer)."""
+    df = capped.join(meta, "doc_id") if meta is not None else capped
+    keep = [c for c in df.columns if c != "spans"]
+    return df.select(*keep, F.posexplode("spans").alias("span_idx", "span")).select(
+        *keep, "span_idx",
+        *[F.col(f"span.{f}").alias(f) for f in ("kind", "text", "media_ref", "offset")],
     )
 
 
-def _caption() -> "F.Column":
+def explode_spans(docs: DataFrame, meta: DataFrame | None, spans_cap: int = MAX_IMAGE_IN_HTML) -> DataFrame:
+    """documents ⋈ docmeta → one row per span, with per-doc caption context.
+
+    Returns every span (text and media) with ``prev_text``/``next_text``:
+    the nearest non-empty text span before and after it by offset."""
+    exploded = _explode(_capped_docs(docs, spans_cap), meta)
+    is_text = (F.col("kind") == "text") & (F.trim(F.coalesce(F.col("text"), F.lit(""))) != "")
+    txt = F.when(is_text, F.struct(F.col("offset"), F.trim("text").alias("text")))
+    w = Window.partitionBy("doc_id").orderBy("offset")
+    prev_t = F.last(txt, ignorenulls=True).over(w.rowsBetween(Window.unboundedPreceding, -1))
+    next_t = F.first(txt, ignorenulls=True).over(w.rowsBetween(1, Window.unboundedFollowing))
+    return exploded.withColumn("prev_text", prev_t).withColumn("next_text", next_t)
+
+
+def _ref_url(base: Column, media_ref: Column) -> Column:
+    """Resolved ref URL; F8: inline data:image → synthetic ``hash:`` URL
+    keyed by the md5 of the data URL."""
+    return F.when(
+        media_ref.startswith("data:"), F.concat(F.lit("hash:"), F.md5(media_ref))
+    ).otherwise(U.resolve_url(base, media_ref))
+
+
+def _media(spans: DataFrame) -> DataFrame:
+    """P1: media spans only, with their ref URL. Text spans leave here,
+    before any URL work or exchange."""
+    return spans.where(F.col("kind").isin(*MEDIA_KINDS)).withColumn(
+        "ref_url", _ref_url(F.col("base_url"), F.col("media_ref"))
+    )
+
+
+def _with_ref_columns(media: DataFrame, css_dup: Column, max_url_length: int) -> DataFrame:
+    """The shared ref columns over media rows: ext, drop_reason (null =
+    valid), surt, url_hash, host, page_ts. ``css_dup`` is the J4 mark: the
+    row is css and an img/a span of the same doc parsed the same URL."""
+    ext = U.url_ext(F.col("ref_url"))
+    drop_reason = (
+        F.when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
+        .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
+        .when((F.col("kind") == "a") & ~ext.isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
+        .when(css_dup, F.lit("css_already_parsed"))
+    )
+    return (
+        media.withColumn("ext", ext)
+        .withColumn("drop_reason", drop_reason)
+        .withColumn("surt", U.surt(F.col("ref_url")))
+        .withColumn("url_hash", U.url_hash(F.col("surt")))
+        .withColumn("host", U.url_host(F.col("ref_url")))
+        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
+    )
+
+
+def _refs(spans: DataFrame, max_url_length: int) -> DataFrame:
+    """Batch core over exploded spans: J4 as a per-(doc, url) window.
+
+    An array-HOF variant (css check via array_contains, no window) was
+    benched 60% SLOWER in batch — Spark evaluates lambda HOFs interpreted
+    (no codegen). The window plan stays inside whole-stage codegen except
+    its one exchange, which carries media rows only."""
+    parsed = F.max(F.when(F.col("kind").isin("img", "a"), 1).otherwise(0)).over(
+        Window.partitionBy("doc_id", "ref_url")
+    )
+    css_dup = (F.col("kind") == "css") & (parsed == 1)
+    return _with_ref_columns(_media(spans), css_dup, max_url_length)
+
+
+def media_refs(
+    docs: DataFrame,
+    meta: DataFrame | None,
+    spans_cap: int = MAX_IMAGE_IN_HTML,
+    max_url_length: int = MAX_URL_LENGTH,
+) -> DataFrame:
+    """Media-ref rows (``REF_COLS``): canonical URL, SURT, hash, host,
+    ext, page_ts and ``drop_reason``: 'empty_ref', 'url_too_long',
+    'a_not_image' (P3), 'css_already_parsed' (J4); null = valid."""
+    return _refs(_explode(_capped_docs(docs, spans_cap), meta), max_url_length).select(*REF_COLS)
+
+
+def _caption() -> Column:
     """Nearest-non-empty-text caption with sibling fallback (F11 analog)."""
     off = F.col("offset")
     pd_ = off - F.col("prev_text.offset")
@@ -146,128 +187,60 @@ def _caption() -> "F.Column":
 
 def extract_refs(
     docs: DataFrame,
-    meta: DataFrame,
+    meta: DataFrame | None,
     spans_cap: int = MAX_IMAGE_IN_HTML,
     max_url_length: int = MAX_URL_LENGTH,
-    features: str = "full",
     caption_page_budget: int | None = None,
 ) -> DataFrame:
-    """Media-ref rows with canonical URL, SURT, hash, host, caption, tokens.
+    """``media_refs`` plus the indexer's text features: page URL/SURT/host,
+    caption, alt text and URL/filename tokens.
 
-    Output includes ``drop_reason`` (null = valid): 'not_media', 'a_not_image',
-    'css_already_parsed' (J4), 'url_too_long', 'empty_ref'. Valid rows are
-    ``where(drop_reason IS NULL)`` — kept in-frame so one scan also feeds
-    the counters aggregation (reference A12).
-
-    ``features='frontier'`` skips the text-feature columns (caption
-    neighborhoods, URL/filename tokens) that only the indexer output needs —
-    the frontier loop then runs without the per-doc caption windows and the
-    tokenization regexes, which dominate the scan otherwise.
-
-    ``caption_page_budget`` (full mode only): deterministic analog of the
-    reference's per-page caption guard (``ImageInformationExtractor.java:
-    501-520`` — after an OOM or >EXTRACT_CAPTION_TIMEOUT_SECS of caption
-    work, ``malformedPageForCaptions`` blanks every later caption on the
-    page). Here the "work" proxy is the running total of caption characters
+    ``caption_page_budget``: deterministic analog of the reference's
+    per-page caption guard (``ImageInformationExtractor.java:501-520`` —
+    after an OOM or >EXTRACT_CAPTION_TIMEOUT_SECS of caption work,
+    ``malformedPageForCaptions`` blanks every later caption on the page).
+    Here the "work" proxy is the running total of caption characters
     already produced for PRIOR media spans of the page, in span order: once
     that exceeds the budget, later media spans get caption ``''`` and
     ``caption_truncated = true``. ``None`` (default) disables the guard —
     the reference's budget is wall-clock/heap, which fixtures never hit.
     """
-    if features == "frontier":
-        spans = _explode_spans_nocaption(docs, meta, spans_cap)
-    else:
-        spans = explode_spans(docs, meta, spans_cap)
-
-    is_media = F.col("kind").isin("img", "a", "css")
-    resolved = U.resolve_url(F.col("base_url"), F.col("media_ref"))
-    is_data = F.col("media_ref").startswith("data:")
-    # F8: inline data:image → synthetic hash: URL keyed by md5 of the data URL
-    ref_url = F.when(is_data, F.concat(F.lit("hash:"), F.md5(F.col("media_ref")))).otherwise(resolved)
-    ext = F.lower(F.regexp_extract(ref_url, r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
-
-    enriched = spans.withColumn("ref_url", ref_url).withColumn("ext", ext)
-
-    # J4: a css-found URL is dropped when the same resolved URL was already
-    # parsed from an img/a span of the same document.
-    w_doc_url = Window.partitionBy("doc_id", "ref_url")
-    parsed_elsewhere = F.max(
-        F.when(F.col("kind").isin("img", "a"), F.lit(1)).otherwise(F.lit(0))
-    ).over(w_doc_url)
-
-    drop_reason = (
-        F.when(~is_media, F.lit("not_media"))
-        .when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
-        .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
-        .when((F.col("kind") == "a") & ~ext.isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
-        .when((F.col("kind") == "css") & (parsed_elsewhere == 1), F.lit("css_already_parsed"))
-    )
-
-    out = (
-        enriched.withColumn("drop_reason", drop_reason)
-        .withColumn("surt", U.surt(F.col("ref_url")))
-        .withColumn("url_hash", U.url_hash(F.col("surt")))
-        .withColumn("host", U.url_host(F.col("ref_url")))
-        .withColumn("page_url", F.col("base_url"))
-        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
-    )
-    core = [
-        "doc_id",
-        "kind",
-        "span_idx",
-        "offset",
-        "ref_url",
-        "surt",
-        "url_hash",
-        "host",
-        "ext",
-        "page_url",
-        "page_ts",
-        "fetch_ts",
-        "drop_reason",
-    ]
-    if features == "frontier":
-        return out.select(*core)
-    # a media span's `text` field carries the tag's alt/title attribute
-    # (the span model's F12 attribute scavenging); empty → NULL, matching
-    # the reference's absent-attribute behavior (PageImageData.java:397-399
-    # keys page records on title+ALT+caption)
-    alt_trim = TX.java_trim(F.coalesce(F.col("text"), F.lit("")))
+    # the caption neighbors need the text spans, so their windows run
+    # before the core's media filter
+    out = _refs(explode_spans(docs, meta, spans_cap), max_url_length)
     out = out.withColumn("caption", _caption())
     guard_cols: list[str] = []
     if caption_page_budget is not None:
         # X5 caption guard: prior media spans' caption chars, page order.
-        # Same partition key as the neighbor windows → one sort, no extra
-        # shuffle; media-only cost so text spans never charge the budget.
+        # The doc_id exchange of the neighbor windows already clusters the
+        # J4 window and this one → no extra shuffle, one local re-sort.
         w_budget = (
             Window.partitionBy("doc_id")
             .orderBy("span_idx")
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        cost = F.when(is_media, F.coalesce(F.length("caption"), F.lit(0))).otherwise(F.lit(0))
+        cost = F.coalesce(F.length("caption"), F.lit(0))
         prior = F.coalesce(F.sum(cost).over(w_budget), F.lit(0))
-        truncated = is_media & (prior > F.lit(caption_page_budget))
-        out = out.withColumn("caption_truncated", truncated).withColumn(
-            "caption", F.when(truncated, F.lit("")).otherwise(F.col("caption"))
+        out = out.withColumn("caption_truncated", prior > F.lit(caption_page_budget))
+        out = out.withColumn(
+            "caption", F.when(F.col("caption_truncated"), F.lit("")).otherwise(F.col("caption"))
         )
         guard_cols = ["caption_truncated"]
-    out = (
-        out.withColumn("img_alt", F.when(alt_trim != "", alt_trim))
-        .withColumn("page_surt", U.surt(F.col("base_url")))
-        .withColumn("page_host", U.url_host(F.col("base_url")))
-        .withColumn("img_src_tokens", U.url_tokens(F.col("ref_url")))
-        .withColumn("img_filename_tokens", U.filename_tokens(F.col("ref_url")))
-        .withColumn("page_url_tokens", U.url_tokens(F.col("base_url")))
-    )
+    # a media span's `text` field carries the tag's alt/title attribute
+    # (the span model's F12 attribute scavenging); empty → NULL, matching
+    # the reference's absent-attribute behavior (PageImageData.java:397-399
+    # keys page records on title+ALT+caption)
+    alt_trim = TX.java_trim(F.coalesce(F.col("text"), F.lit("")))
     return out.select(
-        *core[:-1],
+        *REF_COLS[:-1],
+        F.col("base_url").alias("page_url"),
         "caption",
-        "img_alt",
-        "page_surt",
-        "page_host",
-        "img_src_tokens",
-        "img_filename_tokens",
-        "page_url_tokens",
+        F.when(alt_trim != "", alt_trim).alias("img_alt"),
+        U.surt(F.col("base_url")).alias("page_surt"),
+        U.url_host(F.col("base_url")).alias("page_host"),
+        U.url_tokens(F.col("ref_url")).alias("img_src_tokens"),
+        U.filename_tokens(F.col("ref_url")).alias("img_filename_tokens"),
+        U.url_tokens(F.col("base_url")).alias("page_url_tokens"),
         *guard_cols,
         "drop_reason",
     )
@@ -279,13 +252,12 @@ def extract_refs_frontier(
     spans_cap: int = MAX_IMAGE_IN_HTML,
     max_url_length: int = MAX_URL_LENGTH,
 ):
-    """Frontier fast path: media rows only, counters via ``observe``.
+    """``media_refs`` with the round's counters as ``observe`` metrics.
 
-    Returns ``(refs, obs_docs, obs_spans, obs_media)``. Non-media spans are
-    dropped *before* any URL enrichment (55% of spans carry no media_ref),
-    and all counters ride as observation metrics on the single extraction
-    pass — no persist, no separate counting actions. Read the observations
-    after the first action over ``refs``:
+    Returns ``(refs, obs_docs, obs_spans, obs_media)``. All counters ride
+    as observation metrics on the single extraction pass — no persist, no
+    separate counting actions. Read the observations after the first
+    action over ``refs``:
 
         not_media = obs_spans['spans_total'] - obs_media['media_total']
 
@@ -295,17 +267,9 @@ def extract_refs_frontier(
     (IMAGES_IN_HTML_EXCEDED) and ``spans_not_parsed``
     (IMAGES_IN_HTML_NOT_PARSED — spans beyond the P4 cap).
     """
-    from pyspark.sql import Observation
-
-    # NOTE: an array-HOF variant (resolve refs inside the span array, css
-    # check via array_contains, no window) was benched 60% SLOWER — Spark
-    # evaluates lambda HOFs interpreted (no codegen) and duplicated the
-    # transform during projection collapse. The exploded + window plan stays
-    # fully inside whole-stage codegen except the one window exchange.
-    capped = _capped_docs(docs, spans_cap)
-    obs_docs = Observation()
-    media_kinds = F.array(F.lit("img"), F.lit("a"), F.lit("css"))
-    capped = capped.observe(
+    obs_docs, obs_spans, obs_media = Observation(), Observation(), Observation()
+    media_kinds = F.array(*[F.lit(k) for k in MEDIA_KINDS])
+    capped = _capped_docs(docs, spans_cap).observe(
         obs_docs,
         F.count(F.lit(1)).alias("pages"),
         # spans.kind projects the struct field out of the array (codegen'd);
@@ -316,39 +280,8 @@ def extract_refs_frontier(
         F.count(F.when(F.col("n_spans_raw") > spans_cap, 1)).alias("pages_span_capped"),
         F.sum(F.greatest(F.col("n_spans_raw") - spans_cap, F.lit(0))).alias("spans_not_parsed"),
     )
-    exploded = _explode_spans_nocaption(docs, meta, spans_cap, capped=capped)
-    obs_spans = Observation()
-    exploded = exploded.observe(obs_spans, F.count(F.lit(1)).alias("spans_total"))
-
-    media = exploded.where(F.col("kind").isin("img", "a", "css"))
-    resolved = U.resolve_url(F.col("base_url"), F.col("media_ref"))
-    is_data = F.col("media_ref").startswith("data:")
-    ref_url = F.when(is_data, F.concat(F.lit("hash:"), F.md5(F.col("media_ref")))).otherwise(resolved)
-    ext = F.lower(F.regexp_extract(ref_url, r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
-    enriched = media.withColumn("ref_url", ref_url).withColumn("ext", ext)
-
-    w_doc_url = Window.partitionBy("doc_id", "ref_url")
-    parsed_elsewhere = F.max(
-        F.when(F.col("kind").isin("img", "a"), F.lit(1)).otherwise(F.lit(0))
-    ).over(w_doc_url)
-    drop_reason = (
-        F.when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
-        .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
-        .when((F.col("kind") == "a") & ~ext.isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
-        .when((F.col("kind") == "css") & (parsed_elsewhere == 1), F.lit("css_already_parsed"))
-    )
-    refs = (
-        enriched.withColumn("drop_reason", drop_reason)
-        .withColumn("surt", U.surt(F.col("ref_url")))
-        .withColumn("url_hash", U.url_hash(F.col("surt")))
-        .withColumn("host", U.url_host(F.col("ref_url")))
-        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
-        .select(
-            "doc_id", "kind", "span_idx", "offset", "ref_url", "surt",
-            "url_hash", "host", "ext", "page_ts", "drop_reason",
-        )
-    )
-    obs_media = Observation()
+    spans = _explode(capped, meta).observe(obs_spans, F.count(F.lit(1)).alias("spans_total"))
+    refs = _refs(spans, max_url_length).select(*REF_COLS)
     reason = lambda r: F.count(F.when(F.col("drop_reason") == r, 1)).alias(r)
     valid = F.col("drop_reason").isNull()
     # per-branch + base64 counters mirror the reference's extraction enums
@@ -359,14 +292,9 @@ def extract_refs_frontier(
         obs_media,
         F.count(F.lit(1)).alias("media_total"),
         F.count(F.when(valid, 1)).alias("valid_ref"),
-        branch("img"),
-        branch("a"),
-        branch("css"),
+        *[branch(k) for k in MEDIA_KINDS],
         F.count(F.when(valid & F.col("ref_url").startswith("hash:"), 1)).alias("data_url_refs"),
-        reason("empty_ref"),
-        reason("url_too_long"),
-        reason("a_not_image"),
-        reason("css_already_parsed"),
+        *[reason(r) for r in ("empty_ref", "url_too_long", "a_not_image", "css_already_parsed")],
     )
     return refs, obs_docs, obs_spans, obs_media
 
@@ -376,72 +304,21 @@ def extract_refs_streaming(
     spans_cap: int = MAX_IMAGE_IN_HTML,
     max_url_length: int = MAX_URL_LENGTH,
 ) -> DataFrame:
-    """Streaming-safe extraction (no non-time windows allowed there).
+    """``media_refs`` for a stream (no non-time windows allowed there).
 
-    The J4 css-vs-parsed check runs INSIDE the span array pre-explode
-    (a doc's spans arrive in one row, so the check is local — exactly the
-    reference's per-page in-memory check, ImageInformationExtractor.java:
-    596-613). Interpreted-HOF cost is acceptable on the incremental path;
-    the batch path keeps the codegen'd window plan.
+    The J4 css-vs-parsed check runs against the doc's parsed img/a URLs,
+    collected from the span array before the explode (a doc's spans arrive
+    in one row, so the check is local — exactly the reference's per-page
+    in-memory check, ImageInformationExtractor.java:596-613).
+    Interpreted-HOF cost is acceptable on the incremental path.
 
     ``stream`` columns: doc_id, spans, base_url, fetch_ts.
     """
-    base = F.col("base_url")
-
-    def ref_of(s):
-        mr = s["media_ref"]
-        return F.when(
-            mr.startswith("data:"), F.concat(F.lit("hash:"), F.md5(mr))
-        ).otherwise(U.resolve_url(base, mr))
-
-    capped = stream.select(
-        "doc_id", "base_url", "fetch_ts", F.slice("spans", 1, spans_cap).alias("spans")
-    )
-    refs_arr = F.transform(
-        F.filter(F.col("spans"), lambda s: s["kind"] != "text"),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-            ref_of(s).alias("ref_url"),
-        ),
-    )
-    staged = capped.select("doc_id", "fetch_ts", refs_arr.alias("__refs"))
     parsed = F.transform(
-        F.filter(F.col("__refs"), lambda r: r["kind"].isin("img", "a") & r["media_ref"].isNotNull()),
-        lambda r: r["ref_url"],
+        F.filter("spans", lambda s: s["kind"].isin("img", "a") & s["media_ref"].isNotNull()),
+        lambda s: _ref_url(F.col("base_url"), s["media_ref"]),
     )
-    staged = staged.select("doc_id", "fetch_ts", "__refs", parsed.alias("__parsed"))
-    exploded = staged.select(
-        "doc_id", "fetch_ts", "__parsed", F.explode("__refs").alias("s")
-    ).select("doc_id", "fetch_ts", "__parsed", "s.*")
-
-    ext = F.lower(F.regexp_extract(F.col("ref_url"), r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
-    css_dup = (F.col("kind") == "css") & F.array_contains(F.col("__parsed"), F.col("ref_url"))
-    drop_reason = (
-        F.when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
-        .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
-        .when((F.col("kind") == "a") & ~ext.isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
-        .when(css_dup, F.lit("css_already_parsed"))
-    )
-    return (
-        exploded.withColumn("drop_reason", drop_reason)
-        .withColumn("ext", ext)
-        .withColumn("surt", U.surt(F.col("ref_url")))
-        .withColumn("url_hash", U.url_hash(F.col("surt")))
-        .withColumn("host", U.url_host(F.col("ref_url")))
-        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
-        .select(
-            "doc_id", "kind", "offset", "ref_url", "surt",
-            "url_hash", "host", "ext", "page_ts", "drop_reason",
-        )
-    )
-
-
-def extraction_counters(refs: DataFrame) -> DataFrame:
-    """Reference-counter analog (A12): one row per drop_reason + totals."""
-    return (
-        refs.groupBy(F.coalesce("drop_reason", F.lit("valid_ref")).alias("counter"))
-        .agg(F.count("*").alias("value"))
-        .orderBy("counter")
-    )
+    capped = _capped_docs(stream, spans_cap).withColumn("__parsed", parsed)
+    css_dup = (F.col("kind") == "css") & F.array_contains("__parsed", F.col("ref_url"))
+    media = _media(_explode(capped, None))
+    return _with_ref_columns(media, css_dup, max_url_length).select(*REF_COLS)

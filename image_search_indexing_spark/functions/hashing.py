@@ -1,4 +1,4 @@
-"""Pure-Python/numpy XXH64 matching Spark's ``F.xxhash64`` on strings.
+"""Pure-Python XXH64 matching Spark's ``F.xxhash64`` on strings.
 
 Spark's ``xxhash64(col)`` applies XXH64 (seed 42) to the UTF-8 bytes of a
 string column and returns a *signed* 64-bit long. The single-process
@@ -9,8 +9,6 @@ Spark's output in ``tests/test_kernels.py``.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -77,13 +75,3 @@ def xxhash64(data: bytes | str, seed: int = 42) -> int:
     h = (h * _P3) & _M
     h ^= h >> 32
     return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def pmod_bucket(value: str, n: int, seed: int = 42) -> int:
-    """Spark's ``pmod(xxhash64(value), n)`` for a string value."""
-    return xxhash64(value, seed) % n
-
-
-def xxhash64_series(values, seed: int = 42) -> np.ndarray:
-    """Vectorized-ish helper over an iterable of strings (oracle-side)."""
-    return np.array([xxhash64(v, seed) for v in values], dtype=np.int64)

@@ -140,17 +140,6 @@ def decode_detected(data: bytes | None) -> str | None:
     return data.decode(_PY_CODEC.get(cs, "latin-1"), errors="replace")
 
 
-def detect_charset_udf():
-    """Arrow-vectorized charset detection over a binary column."""
-    from pyspark.sql import functions as F2
-    from pyspark.sql import types as T2
-
-    def _det(s):  # no type hints: resolved in this scope (see fix_mojibake_udf)
-        return s.map(detect_charset)
-
-    return F2.pandas_udf(_det, T2.StringType())
-
-
 def decode_detected_udf():
     """Arrow-vectorized detect-then-decode (bytes → string) UDF."""
     from pyspark.sql import functions as F2

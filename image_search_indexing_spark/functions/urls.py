@@ -77,11 +77,6 @@ def url_host(url: Column) -> Column:
     return F.lower(F.regexp_extract(stripped, r"^([^/:]*)", 1))
 
 
-def surt_host(surt_col: Column) -> Column:
-    """Host key from an already-SURTed URL: the ``(...)`` prefix."""
-    return F.regexp_extract(surt_col, r"^(\([^)]*\))", 1)
-
-
 def url_hash(url: Column) -> Column:
     """MD5 hex of the (canonical) URL — the seen-set / dedup key.
 
@@ -89,6 +84,13 @@ def url_hash(url: Column) -> Column:
     page URLs at ImageInformationExtractor.java:256,360,385.
     """
     return F.md5(url)
+
+
+def url_ext(url: Column) -> Column:
+    """Lowercased trailing ``.ext`` of a URL before any query/fragment
+    ('' when none) — the key of the ``<a>`` gate and of the reported-MIME
+    lookup."""
+    return F.lower(F.regexp_extract(url, r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
 
 
 def url_tokens(url: Column) -> Column:
@@ -118,11 +120,6 @@ def parse_archive_ts(ts: Column) -> Column:
     """
     fixed = F.rpad(F.substring(ts, 1, 14), 14, "0")
     return F.to_timestamp(fixed, "yyyyMMddHHmmss")
-
-
-def format_archive_ts(ts: Column) -> Column:
-    """timestamp -> ``yyyyMMddHHmmss`` (WARCInformationParser.java:45-47)."""
-    return F.date_format(ts, "yyyyMMddHHmmss")
 
 
 def resolve_url(base: Column, ref: Column) -> Column:

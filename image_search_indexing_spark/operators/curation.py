@@ -247,8 +247,10 @@ def decontaminate(
     broadcast (eval sets are small by definition — thousands of docs,
     not billions), the training side explodes to grams AFTER the
     semi-side hash set is built, and the per-doc count-distinct gets a
-    map-side partial aggregate. One scan of train, one broadcast, one
-    shuffle (the final per-doc agg)."""
+    map-side partial aggregate. One scan of train, one broadcast, two
+    shuffles: ``spread()``'s round-robin of the narrow (id, text)
+    projection ahead of the tokenize/shingle work, and the final per-doc
+    agg."""
     # Tokenize in a SEPARATE projection before shingling: the multi-use
     # token alias blocks project-collapse, so the regex tokenize runs once
     # per row instead of once per shingle inside the interpreted HOF

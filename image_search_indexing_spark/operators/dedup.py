@@ -20,7 +20,7 @@ swap in xxhash64 permutations (same plan shape, cheaper hash).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
@@ -37,17 +37,6 @@ def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         .groupBy("fingerprint")
         .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("min_doc_id"))
         .where(F.col("n_docs") > 1)
-    )
-
-
-def minhash_signature(text: Column, k: int = 8, shingle_words: int = 3) -> Column:
-    """array<string> of K md5-minhashes over word shingles (SQL-portable)."""
-    sh = TX.word_shingles(text, shingle_words)
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s: F.md5(F.concat(F.lit(str(i) + "|"), s))))
-            for i in range(k)
-        ]
     )
 
 

@@ -17,44 +17,25 @@ from ..functions.hashing import xxhash64
 from ..session import spread
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product of two array<double> columns.
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two array<double> columns, as a JVM-side HOF fold.
 
-    With ``dim`` given, the fold is UNROLLED into a flat left-associated
-    sum — ``((0.0 + a[0]*b[0]) + a[1]*b[1]) + ...`` — bit-for-bit equal to
-    the HOF fold (identical IEEE addition sequence). Measured caveat that
-    decides which form to use: the ``aggregate``/``zip_with`` higher-order
-    form is CodegenFallback (interpreted per element), but the unrolled
-    64-term expression inflates whole-stage-codegen past the JIT's ~8 KB
-    method limit, so in practice it ran SLOWER in every per-pair hot path
-    tried this round (falls to the bytecode interpreter + seconds of
-    compile). Per-pair kernels at volume belong in a vectorized Arrow
-    batch (see ``near_dup_pairs`` / ``cosine_topk``); the HOF fold is fine
-    for per-row signature/centroid work. The unrolled form is kept for
-    small-dim cases where both costs are negligible.
-    """
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + a[i] * b[i]
-        return acc
+    The fold is CodegenFallback (interpreted per element); per-pair
+    kernels at volume belong in a vectorized Arrow batch (see
+    ``near_dup_pairs`` / ``cosine_topk``). An unrolled 64-term sum ran
+    slower still: it inflates whole-stage codegen past the JIT's ~8 KB
+    method limit."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
 
 
-def l2norm(a: Column, dim: int | None = None) -> Column:
-    """L2 norm; unrolled (bit-identical fold order) when ``dim`` is given."""
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + a[i] * a[i]
-        return F.sqrt(acc)
+def l2norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (l2norm(a, dim) * l2norm(b, dim))
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (l2norm(a) * l2norm(b))
 
 
 def cosine_topk(
@@ -67,13 +48,14 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force cosine top-k: (query_id, neighbor_id, rank).
 
-    The query side is broadcast (it is the small side by construction);
-    ranking ties break by neighbor id for determinism. Vectors are cast
-    to double before arithmetic so results are engine-portable. With
-    ``dim`` the per-pair cosine unrolls into codegen (bit-identical, see
-    ``dot``) and each side's norm is computed once per VECTOR instead of
-    once per pair — the same operand values multiply, so the quotient is
-    unchanged bit-for-bit.
+    The query side is small by construction (broadcast, or collected for
+    the matmul); ranking ties break by neighbor id for determinism.
+    Vectors are cast to double before arithmetic so results are
+    engine-portable. Without ``dim`` each pair is scored by the HOF
+    ``cosine`` over a broadcast cross join; with ``dim`` (the vector
+    length) each corpus Arrow batch is scored by one BLAS matmul against
+    the collected query block, and only the batch-local top-k per query
+    survives.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")

@@ -3,7 +3,7 @@ testdata ``documents`` table, through the REAL engine path.
 
 Pipeline (all engine code, no shortcuts):
 documents → derive interleaved spans (``frontier/docspans.py``) →
-``extract_refs`` (kind dispatch, gates, canonicalize/SURT, hash) →
+``media_refs`` (kind dispatch, gates, canonicalize/SURT, hash) →
 deterministic per-URL champion dedup (A5-A7 order) → per-host politeness
 top-k (one host window, partial top-k before its exchange) → fetch batch.
 
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..frontier import docspans
-from ..frontier.extract import extract_refs
+from ..frontier.extract import media_refs
 from ..frontier.politeness import schedule_round
 from ..frontier.rounds import CAND_COLS, _dedup_candidates
 from ..frontier.seen import with_hashes
@@ -32,7 +32,7 @@ def frontier_schedule(spark: SparkSession, sf_dir: str, default_priority: int = 
     # spans + page envelope derived in ONE projection → one scan of the
     # table (a separate docmeta join would plan a self-join = second scan)
     combined = docspans.interleaved_from_documents(docs)
-    refs = extract_refs(combined, meta=None).where(F.col("drop_reason").isNull())
+    refs = media_refs(combined, meta=None).where(F.col("drop_reason").isNull())
     cand = with_hashes(
         refs.withColumn("priority", F.lit(default_priority).cast("int")), "url_hash", 32
     ).select(*CAND_COLS)

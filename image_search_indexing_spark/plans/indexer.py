@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..frontier import docspans
 from ..frontier.extract import extract_refs
+from ..functions import urls as U
 from ..operators.asof import asof_nearest
 
 MAXIMUM_META = 500  # FullImageMetadata.java:22
@@ -104,9 +105,9 @@ def attach_media_meta(
         "mime_detected",
         *thumb_cols,
     )
-    ext = F.lower(F.regexp_extract("img_url", r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
     reported = F.element_at(
-        F.create_map(*[F.lit(x) for kv in _EXT_MIME.items() for x in kv]), ext
+        F.create_map(*[F.lit(x) for kv in _EXT_MIME.items() for x in kv]),
+        U.url_ext(F.col("img_url")),
     )
     joined = (
         captures.join(meta, "img_url", "left")
@@ -164,12 +165,17 @@ def attach_media_meta(
     ).drop("__content_digest")
 
 
+def _valid_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Valid media refs with the indexer's text features, extracted from
+    one scan of the testdata ``documents`` table."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    refs = extract_refs(docspans.interleaved_from_documents(docs), None)
+    return refs.where(F.col("drop_reason").isNull())
+
+
 def build_records(spark: SparkSession, sf_dir: str, media_df: DataFrame | None = None):
     """(captures, page_records) from the interleaved corpus."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    spans = docspans.spans_from_documents(docs)
-    meta = docspans.docmeta_from_documents(docs)
-    refs = extract_refs(spans, meta).where(F.col("drop_reason").isNull())
+    refs = _valid_refs(spark, sf_dir)
     return records_from_refs(refs, media_df)
 
 
@@ -432,10 +438,7 @@ def build_records_media(spark: SparkSession, sf_dir: str, observation=None):
     cross-SURT digest merges (content keyed coarser than the URL)."""
     from ..sources.mediagen import synthetic_media
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    spans = docspans.spans_from_documents(docs)
-    meta = docspans.docmeta_from_documents(docs)
-    refs = extract_refs(spans, meta).where(F.col("drop_reason").isNull())
+    refs = _valid_refs(spark, sf_dir)
     media = synthetic_media(refs.select(F.col("ref_url").alias("url")))
     return records_from_refs(refs, media, observation=observation)
 
@@ -467,17 +470,14 @@ def media_parse_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as MM
     from ..sources.mediagen import synthetic_media
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    spans = docspans.spans_from_documents(docs)
-    meta = docspans.docmeta_from_documents(docs)
-    refs = extract_refs(spans, meta).where(F.col("drop_reason").isNull())
+    refs = _valid_refs(spark, sf_dir)
     media = synthetic_media(refs.select(F.col("ref_url").alias("url")))
     dec = MM.decode_image_meta(
         media.select(F.col("url").alias("img_url"), "payload")
     ).select("img_url", "width", "height", "mime_detected")
-    ext = F.lower(F.regexp_extract("img_url", r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
     reported = F.element_at(
-        F.create_map(*[F.lit(x) for kv in _EXT_MIME.items() for x in kv]), ext
+        F.create_map(*[F.lit(x) for kv in _EXT_MIME.items() for x in kv]),
+        U.url_ext(F.col("img_url")),
     )
     joined = (
         refs.select(F.col("ref_url").alias("img_url"))

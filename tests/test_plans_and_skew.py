@@ -21,11 +21,11 @@ def _plan(df) -> str:
 
 def test_politeness_budgets_broadcast(spark, corpus):
     from image_search_indexing_spark.frontier import politeness as pol
-    from image_search_indexing_spark.frontier.extract import extract_refs
+    from image_search_indexing_spark.frontier.extract import media_refs
     from image_search_indexing_spark.frontier.seen import with_hashes
     from image_search_indexing_spark.frontier.rounds import CAND_COLS, _dedup_candidates
 
-    refs = extract_refs(corpus["docs"], corpus["meta"], features="frontier")
+    refs = media_refs(corpus["docs"], corpus["meta"])
     from image_search_indexing_spark.functions import urls as U
 
     cand = with_hashes(

@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 
 
 def test_streaming_first_occurrence_matches_batch_distinct(spark, corpus, tmpdir_path):
-    from image_search_indexing_spark.frontier.extract import extract_refs
+    from image_search_indexing_spark.frontier.extract import media_refs
     from image_search_indexing_spark.streaming.dedup import run_streaming_seen
 
     docs, meta = corpus["docs"], corpus["meta"]
@@ -13,7 +13,7 @@ def test_streaming_first_occurrence_matches_batch_distinct(spark, corpus, tmpdir
 
     got = run_streaming_seen(spark, src, "t_seen_live")
     want = (
-        extract_refs(docs, meta, features="frontier")
+        media_refs(docs, meta)
         .where(F.col("drop_reason").isNull())
         .select("url_hash")
         .distinct()

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 def test_streaming_extraction_matches_batch(spark, corpus, tmpdir_path):
     """The streaming path must produce exactly the batch extraction rows."""
-    from image_search_indexing_spark.frontier.extract import extract_refs
+    from image_search_indexing_spark.frontier.extract import media_refs
     from image_search_indexing_spark.streaming.ingest import run_to_memory
 
     docs, meta = corpus["docs"], corpus["meta"]
@@ -14,7 +14,7 @@ def test_streaming_extraction_matches_batch(spark, corpus, tmpdir_path):
     docs.join(meta, "doc_id").write.mode("overwrite").parquet(src)
 
     got = run_to_memory(spark, src, "t_refs")
-    want = extract_refs(docs, meta, features="frontier").where(
+    want = media_refs(docs, meta).where(
         F.col("drop_reason").isNull()
     )
     key = lambda df: sorted(

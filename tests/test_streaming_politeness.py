@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 
 def test_stateful_host_budget_across_batches(spark, corpus, tmpdir_path):
-    from image_search_indexing_spark.frontier.extract import extract_refs
+    from image_search_indexing_spark.frontier.extract import media_refs
     from image_search_indexing_spark.streaming.politeness import run_streaming_budget
 
     src = f"{tmpdir_path}/sp_src"
@@ -32,7 +32,7 @@ def test_stateful_host_budget_across_batches(spark, corpus, tmpdir_path):
         assert sorted(qs) == list(range(1, len(qs) + 1)), (h, qs)
 
     # every host with >= budget distinct URLs must have hit the cap exactly
-    refs = extract_refs(corpus["docs"], corpus["meta"], features="frontier").where(
+    refs = media_refs(corpus["docs"], corpus["meta"]).where(
         F.col("drop_reason").isNull()
     )
     distinct_per_host = {

@@ -39,8 +39,10 @@ def main() -> None:
     cap(
         "frontier_schedule (end-to-end round)",
         qs["frontier_schedule"](spark, sf),
-        "extract → canonicalize → champion dedup → politeness top-k (partial "
-        "WindowGroupLimit before the one host exchange).",
+        "extract (kind filter below the J4 (doc_id, ref_url) exchange, so "
+        "text spans never shuffle) → canonicalize → champion dedup → "
+        "politeness top-k (partial WindowGroupLimit before the one host "
+        "exchange).",
     )
     cap("q3_shipping_priority", qs["q3_shipping_priority"](spark, sf),
         "fact-fact sort-merge + broadcast dimension; revenue in exact cents.")
@@ -65,9 +67,10 @@ def main() -> None:
         "document texts — grep the pair-join Exchanges for `text#`: absent. "
         "Shuffle bytes are O(pairs x shingle set), not O(pairs x doc length).")
     cap("caption_guard", qs["caption_guard"](spark, sf),
-        "X5 caption budget: the running-cost window rides the SAME doc_id "
-        "partition as the caption neighbor windows — one Exchange total, "
-        "budget adds only a local span_idx re-sort.")
+        "X5 caption budget: the J4 and running-cost windows ride the SAME "
+        "doc_id partition as the caption neighbor windows — one hash "
+        "Exchange (plus spread()'s round-robin), the budget adds only a "
+        "local span_idx re-sort.")
     cap("stratified_sample", qs["stratified_sample"](spark, sf),
         "deterministic curation sampling is a PURE FILTER: zero Exchanges, "
         "predicate at the scan, membership partition-invariant.")
@@ -102,8 +105,10 @@ def main() -> None:
     cap("decontam_overlap", qs["decontam_overlap"](spark, sf),
         "benchmark gram set broadcast (eval sets are small by definition); "
         "train side explodes once and only rows SURVIVING the broadcast "
-        "join shuffle — the 3 Exchanges carry the tiny bench-distinct and "
-        "the matched-gram set (two-phase count-distinct), never the corpus.")
+        "join shuffle — spread()'s round-robin moves the narrow (id, text) "
+        "projection once; the other Exchanges carry the tiny bench-distinct "
+        "and the matched-gram set (two-phase count-distinct), never grams "
+        "of the whole corpus.")
     cap("media_video", qs["media_video"](spark, sf),
         "AVI payload build codegen'd on the scan; ONE ArrowEvalPython "
         "(the container walk + DIB pixel decode — Python by design); "
