@@ -31,17 +31,20 @@ SURT, hash, host, page_ts). The entry points differ only around it:
 
 - ``media_refs``: the core (``REF_COLS``).
 - ``extract_refs_frontier``: the core with the round's counters riding
-  as ``observe`` metrics on the same pass.
+  as ``observe`` metrics on the same pass. Its J4 window rides the
+  round's bucket exchange (``_refs`` with ``n_buckets``), which the
+  champion dedup and the Bloom probe then reuse.
 - ``extract_refs``: the caption-context windows before the media filter,
   then the core, then the indexer's text features and the caption guard.
 - ``extract_refs_streaming``: the core with the window-free J4 check.
 
 Everything is built-in Column expressions — single scan, no UDFs, no
-shuffle except the window exchanges (partition key ``doc_id``), which at
-100 TB stay healthy because doc_id is high-cardinality and spans/doc are
-capped (P4). Media rows dropped by a gate carry a ``drop_reason`` instead
-of disappearing, so the round driver can emit the reference's counters
-(A12) from the same scan; valid rows are ``drop_reason IS NULL``.
+shuffle except the window exchanges (partition key ``doc_id``, or
+``bucket`` in the round), which at 100 TB stay healthy because doc_id and
+the URLs are high-cardinality and spans/doc are capped (P4). Media rows
+dropped by a gate carry a ``drop_reason`` instead of disappearing, so the
+round driver can emit the reference's counters (A12) from the same scan;
+valid rows are ``drop_reason IS NULL``.
 """
 
 from __future__ import annotations
@@ -51,6 +54,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions import urls as U
+from .seen import bucket_of
 
 # ImageInformationExtractor.java:43 IMAGE_FILE_EXTENSIONS
 IMAGE_FILE_EXTENSIONS = ["jpg", "jpeg", "png", "tif", "tiff", "gif", "svg", "webp", "bmp", "ico"]
@@ -118,13 +122,38 @@ def _media(spans: DataFrame) -> DataFrame:
     )
 
 
-def _with_ref_columns(media: DataFrame, css_dup: Column, max_url_length: int) -> DataFrame:
+def _ref_empty(media_ref: Column) -> Column:
+    return media_ref.isNull() | (F.trim(media_ref) == "")
+
+
+def _derived() -> dict[str, Column]:
+    """``_with_ref_columns``' caller-supplied inputs, computed on the media
+    rows themselves: the empty_ref gate, url_hash (from the ``surt`` column
+    ``_with_ref_columns`` adds first) and page_ts."""
+    return {
+        "ref_empty": _ref_empty(F.col("media_ref")),
+        "url_hash": U.url_hash(F.col("surt")),
+        "page_ts": U.parse_archive_ts(F.col("fetch_ts")),
+    }
+
+
+def _with_ref_columns(
+    media: DataFrame,
+    css_dup: Column,
+    max_url_length: int,
+    ref_empty: Column,
+    url_hash: Column,
+    page_ts: Column,
+) -> DataFrame:
     """The shared ref columns over media rows: ext, drop_reason (null =
     valid), surt, url_hash, host, page_ts. ``css_dup`` is the J4 mark: the
-    row is css and an img/a span of the same doc parsed the same URL."""
+    row is css and an img/a span of the same doc parsed the same URL.
+    ``ref_empty``, ``url_hash`` and ``page_ts`` are the caller's: the
+    derivations of ``_derived``, or the round's columns carried through its
+    bucket exchange (``_refs``)."""
     ext = U.url_ext(F.col("ref_url"))
     drop_reason = (
-        F.when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
+        F.when(ref_empty, F.lit("empty_ref"))
         .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
         .when((F.col("kind") == "a") & ~ext.isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
         .when(css_dup, F.lit("css_already_parsed"))
@@ -133,24 +162,47 @@ def _with_ref_columns(media: DataFrame, css_dup: Column, max_url_length: int) ->
         media.withColumn("ext", ext)
         .withColumn("drop_reason", drop_reason)
         .withColumn("surt", U.surt(F.col("ref_url")))
-        .withColumn("url_hash", U.url_hash(F.col("surt")))
+        .withColumn("url_hash", url_hash)
         .withColumn("host", U.url_host(F.col("ref_url")))
-        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
+        .withColumn("page_ts", page_ts)
     )
 
 
-def _refs(spans: DataFrame, max_url_length: int) -> DataFrame:
+def _refs(spans: DataFrame, max_url_length: int, n_buckets: int | None = None) -> DataFrame:
     """Batch core over exploded spans: J4 as a per-(doc, url) window.
 
     An array-HOF variant (css check via array_contains, no window) was
     benched 60% SLOWER in batch — Spark evaluates lambda HOFs interpreted
     (no codegen). The window plan stays inside whole-stage codegen except
-    its one exchange, which carries media rows only."""
+    its one exchange, which carries media rows only.
+
+    With ``n_buckets`` (the round driver), the window rides the round's
+    bucket exchange: the media rows get url_hash and ``bucket =
+    pmod(xxhash64(url_hash), n_buckets)``, are reduced to the columns
+    needed downstream (media_ref to its empty_ref gate, fetch_ts to
+    page_ts) and repartitioned by ``bucket``, and the window partitions by
+    (bucket, doc_id, ref_url): the same groups, as bucket is a function of
+    ref_url. The output keeps that ``bucket`` attribute, so the champion
+    dedup and the Bloom probe after it need no exchange of their own."""
+    media = _media(spans)
+    keys = ["doc_id", "ref_url"]
+    cols = _derived()
+    if n_buckets is not None:
+        url_hash = U.url_hash(U.surt(F.col("ref_url")))
+        media = media.select(
+            "doc_id", "kind", "span_idx", "offset", "ref_url",
+            cols["ref_empty"].alias("ref_empty"),
+            cols["page_ts"].alias("page_ts"),
+            url_hash.alias("url_hash"),
+            bucket_of(url_hash, n_buckets).alias("bucket"),
+        ).repartition(n_buckets, "bucket")
+        keys = ["bucket", *keys]
+        cols = {name: F.col(name) for name in cols}
     parsed = F.max(F.when(F.col("kind").isin("img", "a"), 1).otherwise(0)).over(
-        Window.partitionBy("doc_id", "ref_url")
+        Window.partitionBy(*keys)
     )
     css_dup = (F.col("kind") == "css") & (parsed == 1)
-    return _with_ref_columns(_media(spans), css_dup, max_url_length)
+    return _with_ref_columns(media, css_dup, max_url_length, **cols)
 
 
 def media_refs(
@@ -249,10 +301,15 @@ def extract_refs(
 def extract_refs_frontier(
     docs: DataFrame,
     meta: DataFrame,
+    n_buckets: int,
     spans_cap: int = MAX_IMAGE_IN_HTML,
     max_url_length: int = MAX_URL_LENGTH,
 ):
     """``media_refs`` with the round's counters as ``observe`` metrics.
+
+    The J4 window rides the round's bucket exchange (see ``_refs``), and
+    ``refs`` also carries that ``bucket`` column, hash-partitioned by it
+    into ``n_buckets`` partitions.
 
     Returns ``(refs, obs_docs, obs_spans, obs_media)``. All counters ride
     as observation metrics on the single extraction pass — no persist, no
@@ -281,7 +338,7 @@ def extract_refs_frontier(
         F.sum(F.greatest(F.col("n_spans_raw") - spans_cap, F.lit(0))).alias("spans_not_parsed"),
     )
     spans = _explode(capped, meta).observe(obs_spans, F.count(F.lit(1)).alias("spans_total"))
-    refs = _refs(spans, max_url_length).select(*REF_COLS)
+    refs = _refs(spans, max_url_length, n_buckets).select(*REF_COLS, "bucket")
     reason = lambda r: F.count(F.when(F.col("drop_reason") == r, 1)).alias(r)
     valid = F.col("drop_reason").isNull()
     # per-branch + base64 counters mirror the reference's extraction enums
@@ -321,4 +378,4 @@ def extract_refs_streaming(
     capped = _capped_docs(stream, spans_cap).withColumn("__parsed", parsed)
     css_dup = (F.col("kind") == "css") & F.array_contains("__parsed", F.col("ref_url"))
     media = _media(_explode(capped, None))
-    return _with_ref_columns(media, css_dup, max_url_length).select(*REF_COLS)
+    return _with_ref_columns(media, css_dup, max_url_length, **_derived()).select(*REF_COLS)

@@ -3,14 +3,22 @@
 One round (the reference's two chained MR jobs become one DataFrame plan,
 SURVEY.md §7.0):
 
-  docs slice → extract refs (P1-P5, F1-F14) → robots filter → merge with
-  the carried-over ``pending`` queue → champion dedup (A5-A7 order) on an
-  exchange by ``bucket`` → seen filter (one Bloom probe on that partitioning
-  routes the maybe-seen slice to one exact join) → per-host politeness top-k
-  (one host window; a partial per-partition top-k before its exchange) →
-  one per-bucket count (scheduled total + lineage) → fetch batch → append
-  scheduled URLs to ``seen`` + OR-merge their bits into the per-bucket
-  Blooms → atomic checkpoint.
+  docs slice → extract refs (P1-P5, F1-F14; the J4 window rides one
+  exchange by ``bucket``) → robots filter → union with the carried-over
+  ``pending`` queue (its own exchange by ``bucket``) → champion dedup
+  (A5-A7 order) on that partitioning, no exchange → h1/h2 → seen filter
+  (one Bloom probe on that partitioning routes the maybe-seen slice to one
+  exact join) → live queue coalesced to ``n_buckets`` partitions →
+  per-host politeness top-k (one host window; a partial per-partition top-k
+  before its exchange) → one per-bucket count (scheduled total + lineage)
+  → fetch batch → append scheduled URLs to ``seen`` + OR-merge their bits
+  into the per-bucket Blooms → atomic checkpoint.
+
+So each new candidate crosses one exchange from the documents scan to the
+Bloom cogroup, and none of the round's exchanges on the queue's path
+carries h1/h2 (recomputed from url_hash after the last one). The Bloom
+delta build is the exception: it reads (bucket, h1, h2) and nothing else,
+so there the two hashes replace the key.
 
 Determinism: every emission point uses a total order (priority, page_ts,
 url-length, url, doc_id, offset) — the reference's champion tie-break
@@ -35,11 +43,13 @@ from pyspark.sql import functions as F
 from ..sources.catalog import Catalog
 from . import extract, politeness as pol, seen as seenmod
 
-# Columns carried through the url_hash dedup shuffle and the pending queue.
-# Deliberately WITHOUT `surt` and `host`: both are pure derivations of
-# ref_url (functions/urls.py), so they are recomputed after the shuffle
-# instead of tripling the string bytes through every exchange — at 10^10
-# URLs the dedup shuffle is the round's dominant byte mover.
+# Columns carried through the round's bucket exchange, the champion dedup
+# and the pending queue. Deliberately WITHOUT `surt`, `host`, `h1` and `h2`:
+# surt and host derive from ref_url (functions/urls.py), h1/h2 from url_hash
+# (seen.with_probe_hashes), so they are recomputed after the exchange
+# instead of shuffling derivable bytes — at 10^10 URLs the bucket exchange
+# is the round's dominant byte mover. Pending files written with h1/h2
+# still read: every reader selects these columns.
 CAND_COLS = [
     "url_hash",
     "ref_url",
@@ -48,8 +58,6 @@ CAND_COLS = [
     "page_ts",
     "doc_id",
     "offset",
-    "h1",
-    "h2",
     "bucket",
 ]
 
@@ -123,7 +131,7 @@ class FrontierDriver:
         from pyspark.sql import Observation
 
         refs, obs_docs, obs_spans, obs_media = extract.extract_refs_frontier(
-            docs, meta, spans_cap=self.cfg.spans_cap
+            docs, meta, spans_cap=self.cfg.spans_cap, n_buckets=self.cfg.n_buckets
         )
         valid = refs.where(F.col("drop_reason").isNull())
         valid = pol.robots_filter(valid, robots)
@@ -139,11 +147,13 @@ class FrontierDriver:
             prio = F.coalesce(F.col("__prio"), F.lit(self.cfg.default_priority))
         else:
             prio = F.lit(self.cfg.default_priority)
+        # refs keep the bucket attribute of the extraction's bucket exchange
+        # (no recomputed column), so the dedup downstream needs no exchange
         cand = (
             valid.where(~F.col("robots_blocked"))
             .withColumn("priority", prio.cast("int"))
+            .select(*CAND_COLS)
         )
-        cand = seenmod.with_hashes(cand, "url_hash", self.cfg.n_buckets).select(*CAND_COLS)
 
         def finish_counters() -> dict[str, int]:
             spans, med, rob = _obs_get(obs_spans), _obs_get(obs_media), _obs_get(obs_robots)
@@ -272,13 +282,21 @@ class FrontierDriver:
         from pyspark.sql import Observation
 
         if pending is not None:
+            # pending files written before h1/h2 left CAND_COLS still read:
+            # the select drops the two columns
             cand = cand.unionByName(
-                pending.select(*CAND_COLS).withColumn("__is_new", F.lit(0))
+                pending.select(*CAND_COLS)
+                .withColumn("__is_new", F.lit(0))
+                .repartition(cfg.n_buckets, "bucket")
             )
-        # the dedup exchange partitions by bucket, so no exchange runs between
-        # it and the Bloom cogroup (caching these champions would hide that
-        # partitioning from the planner; the seen filter caches its probe)
-        cand = _dedup_candidates(cand.repartition(cfg.n_buckets, "bucket"))
+        # both sides are hash-partitioned by bucket (the new rows by the
+        # extraction's bucket exchange), so the partition-aware union
+        # (spark.sql.unionOutputPartitioning) feeds the dedup with no
+        # exchange, and none runs between it and the Bloom cogroup (caching
+        # these champions would hide that partitioning from the planner; the
+        # seen filter caches its probe). h1/h2 are derived here, after the
+        # last exchange, for the Bloom/cuckoo probes.
+        cand = seenmod.with_probe_hashes(_dedup_candidates(cand))
         obs_queue = Observation()
         cand = cand.observe(
             obs_queue, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
@@ -296,11 +314,18 @@ class FrontierDriver:
                 obs_live, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
             )
             # host is a pure derivation of ref_url, recomputed AFTER the dedup
-            # shuffle + seen filter (politeness is the first consumer) — the
-            # dedup exchange and the pending files carry no host/surt strings
+            # + seen filter (politeness is the first consumer) — the bucket
+            # exchange and the pending files carry no host/surt strings
             from ..functions import urls as U
 
-            new_urls = new_urls.withColumn("host", U.url_host(F.col("ref_url")))
+            # the union of the seen filter's two routes has 2 x n_buckets
+            # partitions; a narrow coalesce halves the tasks of every stage
+            # that reads the live queue (host-exchange map, pending write)
+            new_urls = (
+                new_urls.drop("h1", "h2")
+                .withColumn("host", U.url_host(F.col("ref_url")))
+                .coalesce(cfg.n_buckets)
+            )
             cached.append(new_urls.persist())
 
             # 4. politeness scheduling (per-host top-k, one host exchange)
@@ -323,9 +348,13 @@ class FrontierDriver:
             n_cand = counters["round_candidates"]
 
             # 5. state updates: pending += delta (new − scheduled); seen += scheduled
-            newly_seen = scheduled.select("url_hash", "h1", "h2", "bucket").withColumn(
-                "seen_round", F.lit(round_id)
-            )
+            sched_keys = scheduled.select("url_hash", "bucket")
+            # h1/h2 are derived after the bucket exchange of the seen write,
+            # so it carries (url_hash, bucket, seen_round) only
+            newly_seen = seenmod.with_probe_hashes(
+                sched_keys.withColumn("seen_round", F.lit(round_id))
+                .repartition(cfg.n_buckets, "bucket")
+            ).select("url_hash", "h1", "h2", "bucket", "seen_round")
 
             tables: dict[str, list[str]] = dict((snap or {}).get("tables", {}))
             batch = scheduled.withColumn("surt", U.surt(F.col("ref_url"))).select(
@@ -340,10 +369,7 @@ class FrontierDriver:
             # seen stores only the membership key + hash/bucket columns — URL
             # strings live in the fetch_batch tables (the crawl log); at 10^10
             # rows the string columns would triple the table for no reader.
-            seen_path = cat.write_table(
-                newly_seen.repartition(cfg.n_buckets, "bucket"),
-                "seen", round_id, partition_by=["bucket"],
-            )
+            seen_path = cat.write_table(newly_seen, "seen", round_id, partition_by=["bucket"])
             tables["seen"] = tables.get("seen", []) + [seen_path]  # append (Iceberg add-files)
 
             # scheduling a resurrected URL clears its tombstone (it is seen
@@ -382,7 +408,10 @@ class FrontierDriver:
 
             if cfg.use_bloom:
                 m_by_bucket = {b: m for b, (m, _) in old_stats.items() if m}
-                delta = self._bloom_delta(newly_seen, m_by_bucket)  # (bucket, h1, h2)
+                # the delta reads (bucket, h1, h2) only: its exchange carries
+                # the two hashes instead of url_hash, and AQE coalesces it
+                # (built from newly_seen, it would run n_buckets tasks)
+                delta = self._bloom_delta(seenmod.with_probe_hashes(sched_keys), m_by_bucket)
                 merged = self._merge_blooms(bloom, delta)
                 # capacity policy: once a bucket's item count exceeds
                 # bloom_rebuild_load of its sized capacity (m / bits_per_key),

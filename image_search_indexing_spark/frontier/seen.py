@@ -31,22 +31,32 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BLOOM_SCHEMA = "bucket int, m long, k int, n_items long, bits binary"
 CUCKOO_SCHEMA = "bucket int, n_buckets long, n_items long, table binary"
 
 
+def bucket_of(key: Column, n_buckets: int) -> Column:
+    """The seen-set bucket of a key: ``pmod(h1, n_buckets)``."""
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+
+
+def with_probe_hashes(df: DataFrame, key: str = "url_hash") -> DataFrame:
+    """Attach the filters' (h1, h2), derived JVM-side from the key column.
+
+    Both are recomputable from the key, so the round driver attaches them
+    after its last exchange instead of shuffling two incompressible longs
+    per row."""
+    return df.withColumn("h1", F.xxhash64(F.col(key))).withColumn(
+        "h2", F.xxhash64(F.col(key), F.lit(1))
+    )
+
+
 def with_hashes(df: DataFrame, key: str = "url_hash", n_buckets: int = 64) -> DataFrame:
     """Attach (h1, h2, bucket) derived JVM-side from the key column."""
-    h1 = F.xxhash64(F.col(key))
-    h2 = F.xxhash64(F.col(key), F.lit(1))
-    return (
-        df.withColumn("h1", h1)
-        .withColumn("h2", h2)
-        .withColumn("bucket", F.pmod(h1, F.lit(n_buckets)).cast("int"))
-    )
+    return with_probe_hashes(df, key).withColumn("bucket", bucket_of(F.col(key), n_buckets))
 
 
 # ---------------------------------------------------------------------------
@@ -340,11 +350,18 @@ def filter_new_urls(
 ) -> DataFrame:
     """Return candidates not in the effective seen set (seen − tombstones).
 
-    Preconditions: ``candidates`` and ``seen`` carry (h1, h2, bucket) — see
-    ``with_hashes``; ``candidates`` is UNIQUE per ``key`` (the round driver
-    calls this after the champion dedup), so no join fans out; and, for the
-    Bloom cogroup to shuffle only the filter table, ``candidates`` is
-    hash-partitioned by ``bucket`` (the round driver's dedup exchange).
+    Preconditions: ``candidates`` carry (h1, h2, bucket) — see
+    ``with_hashes``; the round driver derives h1/h2 with
+    ``with_probe_hashes`` after its last exchange, so no exchange carries
+    them; ``seen`` carries ``key``; ``candidates`` is UNIQUE per ``key``
+    (the round driver calls this after the champion dedup), so no join fans
+    out; and, for the Bloom cogroup to shuffle only the filter table,
+    ``candidates`` is hash-partitioned by ``bucket``: in the round driver,
+    the new rows by the extraction's bucket exchange (``extract._refs``)
+    and the pending rows by their own, joined by the partition-aware union.
+    Without that partitioning the result is the same, with one more
+    exchange. With a Bloom table the output is the union of the two routes,
+    with twice the candidates' partitions; the round driver coalesces it.
 
     The filters only *route* rows; membership is decided by the exact
     tables, so Bloom and cuckoo false positives never change the result.

@@ -80,10 +80,11 @@ def cosine_topk(
         import pandas as pd
 
         qrows = q.collect()  # bounded: the query side of a top-k probe
-        id_t = dict((f.name, f.dataType.simpleString()) for f in queries.schema.fields)[id_col]
+        # each id keeps its own side's type, as on the cross-join path
+        q_t, n_t = (df.schema[id_col].dataType.simpleString() for df in (queries, corpus))
         if not qrows:  # no query vectors: nothing to rank, and Q would be 1-D
             return queries.sparkSession.createDataFrame(
-                [], f"query_id {id_t}, neighbor_id {id_t}, rank int"
+                [], f"query_id {q_t}, neighbor_id {n_t}, rank int"
             )
         qids = np.array([r["query_id"] for r in qrows])
         Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
@@ -121,7 +122,7 @@ def cosine_topk(
                 )
 
         scored = spread(c).mapInPandas(
-            _score, f"query_id {id_t}, neighbor_id {id_t}, sim double"
+            _score, f"query_id {q_t}, neighbor_id {n_t}, sim double"
         )
     else:
         scored = c.crossJoin(F.broadcast(q)).withColumn(

@@ -22,7 +22,7 @@ from ..frontier import docspans
 from ..frontier.extract import media_refs
 from ..frontier.politeness import schedule_round
 from ..frontier.rounds import CAND_COLS, _dedup_candidates
-from ..frontier.seen import with_hashes
+from ..frontier.seen import bucket_of
 
 
 def frontier_schedule(spark: SparkSession, sf_dir: str, default_priority: int = 9) -> DataFrame:
@@ -33,9 +33,11 @@ def frontier_schedule(spark: SparkSession, sf_dir: str, default_priority: int = 
     # table (a separate docmeta join would plan a self-join = second scan)
     combined = docspans.interleaved_from_documents(docs)
     refs = media_refs(combined, meta=None).where(F.col("drop_reason").isNull())
-    cand = with_hashes(
-        refs.withColumn("priority", F.lit(default_priority).cast("int")), "url_hash", 32
-    ).select(*CAND_COLS)
+    cand = (
+        refs.withColumn("priority", F.lit(default_priority).cast("int"))
+        .withColumn("bucket", bucket_of(F.col("url_hash"), 32))
+        .select(*CAND_COLS)
+    )
     # surt/host are recomputed post-dedup — the shuffle carries no
     # derivable strings (same contract as the round driver)
     champions = (

@@ -119,19 +119,29 @@ class Catalog:
     def read_table(
         self, spark: SparkSession, table: str, snapshot: dict[str, Any] | None = None
     ) -> DataFrame | None:
-        """Read a table exactly as listed in the snapshot manifest."""
+        """Read a table exactly as listed in the snapshot manifest.
+
+        ``None`` means the table is absent: not listed, or every listed
+        path exists but holds no rows (e.g. empty rounds). A listed path
+        missing on disk raises ``FileNotFoundError``: reading it as empty
+        would, for the seen table, silently reschedule its URLs."""
         snap = snapshot or self.snapshot()
         if snap is None:
             return None
         paths = snap["tables"].get(table)
         if not paths:
             return None
+        missing = [p for p in paths if not os.path.exists(p)]
+        if missing:
+            raise FileNotFoundError(
+                f"table {table!r}: the snapshot manifest lists {missing}, not on disk"
+            )
         base = os.path.join(self.data_dir, table)
         from pyspark.errors.exceptions.captured import AnalysisException
 
         try:
             df = spark.read.option("basePath", base).parquet(*paths)
         except AnalysisException:
-            return None  # every listed file set is empty (e.g. empty rounds)
+            return None  # every listed path holds no rows
         # `round=` is physical layout (snapshot lineage), not table schema
         return df.drop("round")

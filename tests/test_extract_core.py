@@ -44,6 +44,7 @@ CASES = [
     ("d2", "img", "/img/b.png", None),
 ]
 SPANS_CAP = sum(1 for c in CASES if c[0] == "d1") - 1
+N_BUCKETS = 4  # the round's bucket exchange, as the round driver runs it
 
 
 def _spans():
@@ -80,7 +81,7 @@ def _run(spark, path):
     if path == "extract_refs":
         return X.extract_refs(docs, meta, **kw)
     if path == "extract_refs_frontier":
-        return X.extract_refs_frontier(docs, meta, **kw)[0]
+        return X.extract_refs_frontier(docs, meta, N_BUCKETS, **kw)[0]
     return X.extract_refs_streaming(docs.join(meta, "doc_id"), **kw)
 
 
@@ -102,7 +103,7 @@ def test_drop_reasons_agree_across_entry_points(spark, path):
 def test_frontier_counters_match_table(spark):
     docs, meta = _frames(spark)
     refs, obs_docs, obs_spans, obs_media = X.extract_refs_frontier(
-        docs, meta, spans_cap=SPANS_CAP, max_url_length=MAX_URL
+        docs, meta, N_BUCKETS, spans_cap=SPANS_CAP, max_url_length=MAX_URL
     )
     refs.collect()
     kept = [c for c in CASES if c[3] != CUT]

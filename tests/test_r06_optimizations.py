@@ -240,3 +240,30 @@ def test_cosine_topk_numpy_empty_queries(spark):
     assert [(f.name, f.dataType) for f in fast.schema] == [
         (f.name, f.dataType) for f in slow.schema
     ]
+
+
+def test_cosine_topk_numpy_ids_keep_their_side_types(spark):
+    """Int query ids and bigint corpus ids: each output id keeps its own
+    side's type, on both paths and also for an empty query side."""
+    from pyspark.sql.types import IntegerType, LongType
+
+    from image_search_indexing_spark.operators.similarity import cosine_topk
+
+    rng = np.random.RandomState(5)
+    q = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(6)]) for i in range(4)],
+        "vec_id int, embedding array<double>",
+    )
+    c = spark.createDataFrame(
+        [(10_000_000_000 + i, [float(x) for x in rng.randn(6)]) for i in range(40)],
+        "vec_id bigint, embedding array<double>",
+    )
+    fast = cosine_topk(q, c, k=3, dim=6)
+    slow = cosine_topk(q, c, k=3)
+    types = lambda df: {f.name: f.dataType for f in df.schema}  # noqa: E731
+    assert types(fast)["query_id"] == IntegerType() and types(fast)["neighbor_id"] == LongType()
+    assert types(fast) == types(slow)
+    rows = lambda df: {(r["query_id"], r["neighbor_id"], r["rank"]) for r in df.collect()}  # noqa: E731
+    assert rows(fast) == rows(slow) and len(rows(fast)) == 4 * 3
+    empty = cosine_topk(q.where(F.col("vec_id") < 0), c, k=3, dim=6)
+    assert empty.collect() == [] and types(empty) == types(slow)

@@ -1,0 +1,232 @@
+"""The round's exchanges: one bucket exchange carries each new candidate
+from the documents scan to the Bloom cogroup (the J4 window rides it), the
+pending rows get their own, the partition-aware union feeds the champion
+dedup with none, and no exchange carries the recomputable h1/h2 except
+the Bloom delta build's, which carries them in place of the key. Also:
+the live queue keeps ``n_buckets`` partitions, checkpoints whose pending
+files still carry h1/h2 resume identically, and a listed checkpoint path
+missing on disk fails the round instead of reading as empty."""
+
+import os
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
+from image_search_indexing_spark.frontier import politeness as pol
+from image_search_indexing_spark.frontier import seen as seenmod
+from image_search_indexing_spark.frontier.rounds import FrontierConfig, FrontierDriver
+from image_search_indexing_spark.sources.catalog import Catalog
+
+N_ROUNDS = 3
+N_BUCKETS = 16
+
+
+def _cfg():
+    return FrontierConfig(n_rounds=N_ROUNDS, n_buckets=N_BUCKETS, default_budget=5)
+
+
+def _args(corpus):
+    return (corpus["docs"], corpus["meta"], corpus["seeds"], corpus["politeness"], corpus["robots"])
+
+
+def _batches(drv):
+    out = []
+    for r in range(N_ROUNDS):
+        rows = [x.asDict() for x in drv.fetch_batch(r).collect()]
+        out.append(sorted(rows, key=lambda x: (x["host"], x["queue_pos"])))
+    return out
+
+
+def _seen(drv):
+    return sorted(
+        tuple(r) for r in drv.seen_table().select("url_hash", "h1", "h2", "bucket", "seen_round")
+        .collect()
+    )
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan()
+
+
+def _kids(node):
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _name(node):
+    return node.getClass().getSimpleName()
+
+
+def _find(node, pred):
+    """The first node in pre-order satisfying ``pred``."""
+    if pred(node):
+        return node
+    for k in _kids(node):
+        hit = _find(k, pred)
+        if hit is not None:
+            return hit
+    return None
+
+
+def _streamed(node):
+    """The nodes of the path below ``node``, leaving out broadcast build
+    sides (small dimensions, not the path the rows travel)."""
+    out = [node]
+    for k in _kids(node):
+        if _name(k) != "BroadcastExchangeExec":
+            out += _streamed(k)
+    return out
+
+
+def _output(node):
+    attrs = node.output()
+    return [attrs.apply(i).name() for i in range(attrs.size())]
+
+
+@pytest.fixture(scope="module")
+def crawl(spark, corpus, tmp_path_factory):
+    """A 3-round crawl. For round 1 (a filled seen set, pending rows from
+    round 0) it records the candidates handed to the seen filter, the live
+    queue handed to the scheduler, the scheduled frame and the Bloom delta."""
+    drv = FrontierDriver(spark, str(tmp_path_factory.mktemp("exchanges")), _cfg())
+    seen_in, sched_in, deltas = [], [], []
+    orig_filter, orig_sched = seenmod.filter_new_urls, pol.schedule_round
+    orig_delta = drv._bloom_delta
+
+    def filt(spark_, cand, *a, **kw):
+        seen_in.append(cand)
+        return orig_filter(spark_, cand, *a, **kw)
+
+    def schedule(live, *a, **kw):
+        out = orig_sched(live, *a, **kw)
+        sched_in.append((live, out))
+        return out
+
+    def delta(*a, **kw):
+        out = orig_delta(*a, **kw)
+        deltas.append(out)
+        return out
+
+    drv._bloom_delta = delta
+    seenmod.filter_new_urls, pol.schedule_round = filt, schedule
+    try:
+        counters = drv.run(*_args(corpus), n_rounds=N_ROUNDS)
+    finally:
+        seenmod.filter_new_urls, pol.schedule_round = orig_filter, orig_sched
+    live, scheduled = sched_in[1]
+    return drv, counters, seen_in[1], live, scheduled, deltas[1]
+
+
+def test_one_bucket_exchange_from_documents_to_the_probe(crawl):
+    """Round 1's new candidates cross one exchange, by bucket, with the J4
+    window above it; pending rows cross one; the union feeds the champion
+    aggregate directly."""
+    _, counters, cand, _, _, _ = crawl
+    assert counters[1]["scheduled"] > 0
+    plan = _plan(cand)
+    agg = _find(plan, lambda n: "min_by(" in n.simpleString(25))
+    assert agg is not None
+    union, between = agg, []
+    while _name(union) != "UnionExec":
+        (union,) = _kids(union)
+        between.append(_name(union))
+    assert "ShuffleExchangeExec" not in between, between
+
+    def path(child):
+        nodes = _streamed(child)
+        is_pending = any("/pending/" in n.simpleString(25) for n in nodes if "Scan" in _name(n))
+        return is_pending, nodes
+
+    paths = dict(path(k) for k in _kids(union))
+    assert set(paths) == {True, False}
+    for is_pending, nodes in paths.items():
+        xs = [i for i, n in enumerate(nodes) if _name(n) == "ShuffleExchangeExec"]
+        assert len(xs) == 1, [nodes[i].simpleString(25) for i in xs]
+        assert "hashpartitioning(bucket#" in nodes[xs[0]].simpleString(25)
+        assert nodes[xs[0]].outputPartitioning().numPartitions() == N_BUCKETS
+        if not is_pending:
+            windows = [i for i, n in enumerate(nodes) if _name(n) == "WindowExec"]
+            assert len(windows) == 1 and windows[0] < xs[0]
+            assert "bucket#" in nodes[windows[0]].simpleString(25)
+
+
+def test_no_exchange_carries_h1_h2(crawl, plan_ops):
+    """h1/h2 derive from url_hash: the candidate path, the host exchange
+    and everything under the cached live queue shuffle without them."""
+    _, _, cand, _, scheduled, _ = crawl
+    exchanges = [
+        (line, node) for df in (cand, scheduled) for cls, line, node in plan_ops(df)
+        if cls == "ShuffleExchangeExec"
+    ]
+    assert any("hashpartitioning(host" in line for line, _ in exchanges)
+    for line, node in exchanges:
+        assert not {"h1", "h2"} & set(_output(node)), line
+    assert {"h1", "h2"} <= set(cand.columns)
+
+
+def test_bloom_delta_exchange_carries_bucket_h1_h2_only(crawl, plan_ops):
+    """The one exchange that carries h1/h2: the Bloom delta build shuffles
+    the two hashes it folds into the bits, with the bucket and without the
+    url_hash they derive from. Every other exchange under it has neither."""
+    *_, delta = crawl
+    exchanges = [
+        (line, _output(node)) for cls, line, node in plan_ops(delta)
+        if cls == "ShuffleExchangeExec"
+    ]
+    with_hashes = [(line, out) for line, out in exchanges if {"h1", "h2"} & set(out)]
+    assert len(with_hashes) == 1, with_hashes
+    ((line, out),) = with_hashes
+    assert "hashpartitioning(bucket#" in line
+    # applyInPandas shuffles its grouping key next to the input columns
+    assert set(out) == {"bucket", "h1", "h2"}, out
+    assert any("hashpartitioning(host" in line for line, _ in exchanges)
+
+
+def test_live_queue_has_n_buckets_partitions(crawl):
+    """The union of the seen filter's two routes is coalesced back to
+    n_buckets partitions before the scheduler and the pending write read it."""
+    _, _, _, live, _, _ = crawl
+    assert live.rdd.getNumPartitions() == N_BUCKETS
+
+
+def test_resume_from_pending_with_h1_h2(spark, corpus, tmp_path_factory, crawl):
+    """A checkpoint written when pending files carried h1/h2 resumes to the
+    same batches, seen set and counters as an uninterrupted run."""
+    drv_full, counters_full, _, _, _, _ = crawl
+    wd = str(tmp_path_factory.mktemp("old-pending"))
+    FrontierDriver(spark, wd, _cfg()).run(*_args(corpus), n_rounds=1)
+    cat = Catalog(wd)
+    (path,) = cat.snapshot()["tables"]["pending"]
+    old = cat.read_table(spark, "pending").select(
+        "url_hash", "ref_url", "kind", "priority", "page_ts", "doc_id", "offset",
+        F.xxhash64("url_hash").alias("h1"), F.xxhash64("url_hash", F.lit(1)).alias("h2"),
+        "bucket",
+    )
+    tmp = path + ".old-layout"
+    old.write.parquet(tmp)
+    shutil.rmtree(path)
+    os.rename(tmp, path)
+    assert {"h1", "h2"} <= set(cat.read_table(spark, "pending").columns)
+
+    drv = FrontierDriver(spark, wd, _cfg())
+    counters = drv.run(*_args(corpus), n_rounds=N_ROUNDS)
+    assert counters == counters_full[1:]
+    assert _batches(drv) == _batches(drv_full)
+    assert _seen(drv) == _seen(drv_full)
+
+
+def test_missing_seen_round_fails_the_next_round(spark, corpus, tmp_path_factory):
+    """A seen round directory the manifest lists but the disk lost must
+    fail the next round (read as empty, its URLs would be rescheduled)."""
+    wd = str(tmp_path_factory.mktemp("lost-seen"))
+    FrontierDriver(spark, wd, _cfg()).run(*_args(corpus), n_rounds=1)
+    (seen_path,) = Catalog(wd).snapshot()["tables"]["seen"]
+    shutil.rmtree(seen_path)
+    drv = FrontierDriver(spark, wd, _cfg())
+    with pytest.raises(FileNotFoundError, match="'seen'.*round=0"):
+        drv.run_round(1, *_args(corpus))
+    assert drv.catalog.snapshot()["round"] == 0
