@@ -183,7 +183,11 @@ def _refs(spans: DataFrame, max_url_length: int, n_buckets: int | None = None) -
     page_ts) and repartitioned by ``bucket``, and the window partitions by
     (bucket, doc_id, ref_url): the same groups, as bucket is a function of
     ref_url. The output keeps that ``bucket`` attribute, so the champion
-    dedup and the Bloom probe after it need no exchange of their own."""
+    dedup and the Bloom probe after it need no exchange of their own.
+    ``n_buckets`` sets the bucket values, not the exchange's width: that
+    is ``spark.sql.shuffle.partitions`` (``repartition("bucket")``), and
+    AQE may coalesce it to the data's size; a bucket never spans two
+    partitions either way."""
     media = _media(spans)
     keys = ["doc_id", "ref_url"]
     cols = _derived()
@@ -195,7 +199,7 @@ def _refs(spans: DataFrame, max_url_length: int, n_buckets: int | None = None) -
             cols["page_ts"].alias("page_ts"),
             url_hash.alias("url_hash"),
             bucket_of(url_hash, n_buckets).alias("bucket"),
-        ).repartition(n_buckets, "bucket")
+        ).repartition("bucket")
         keys = ["bucket", *keys]
         cols = {name: F.col(name) for name in cols}
     parsed = F.max(F.when(F.col("kind").isin("img", "a"), 1).otherwise(0)).over(
@@ -309,7 +313,7 @@ def extract_refs_frontier(
 
     The J4 window rides the round's bucket exchange (see ``_refs``), and
     ``refs`` also carries that ``bucket`` column, hash-partitioned by it
-    into ``n_buckets`` partitions.
+    (``spark.sql.shuffle.partitions`` wide, which AQE may coalesce).
 
     Returns ``(refs, obs_docs, obs_spans, obs_media)``. All counters ride
     as observation metrics on the single extraction pass — no persist, no

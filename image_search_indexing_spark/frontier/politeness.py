@@ -272,10 +272,19 @@ def crawl_order() -> list[Column]:
     ]
 
 
+def budget_top(politeness: DataFrame, default_budget: int = 5) -> int:
+    """``max(default_budget, max(max_fetch_per_round))``: a bound on every
+    host's budget, read with one small aggregate job."""
+    top = politeness.agg(F.max("max_fetch_per_round")).first()[0]
+    return max(default_budget, top or default_budget)
+
+
 def schedule_round(
     candidates: DataFrame,
     politeness: DataFrame | None,
     default_budget: int = 5,
+    *,
+    top: int | None = None,
 ) -> DataFrame:
     """Select each host's top-``budget`` candidates, skew-safely.
 
@@ -286,14 +295,16 @@ def schedule_round(
 
     One window ranks each host's rows in ``crawl_order`` and keeps
     ``queue_pos <= top`` and ``queue_pos <= budget``. ``top`` =
-    ``max(default_budget, max(max_fetch_per_round))`` bounds every budget,
-    so the first cut never drops a scheduled row; it is read with one
-    small aggregate job over ``politeness`` (none without a table). While
+    ``budget_top(politeness, default_budget)`` bounds every budget, so the
+    first cut never drops a scheduled row. A caller that schedules many
+    rounds against one table passes it in; otherwise it is read here with
+    one small job (none without a table). While
     ``top`` ≤ ``spark.sql.optimizer.windowGroupLimitThreshold``, Spark
     keeps only each map partition's per-host top-``top`` before the host
     exchange: a hot host sends at most ``input partitions × top`` rows.
     """
-    top = default_budget
+    if top is None:
+        top = default_budget if politeness is None else budget_top(politeness, default_budget)
     if politeness is not None:
         budgets = politeness.select(
             "host",
@@ -301,7 +312,6 @@ def schedule_round(
             F.col("crawl_delay_ms").alias("__delay"),
         )
         cand = candidates.join(F.broadcast(budgets), "host", "left")
-        top = max(top, budgets.agg(F.max("__budget")).first()[0] or top)
     else:
         cand = candidates.withColumn("__budget", F.lit(None).cast("int")).withColumn(
             "__delay", F.lit(None).cast("long")

@@ -8,17 +8,27 @@ SURVEY.md §7.0):
   ``pending`` queue (its own exchange by ``bucket``) → champion dedup
   (A5-A7 order) on that partitioning, no exchange → h1/h2 → seen filter
   (one Bloom probe on that partitioning routes the maybe-seen slice to one
-  exact join) → live queue coalesced to ``n_buckets`` partitions →
-  per-host politeness top-k (one host window; a partial per-partition top-k
-  before its exchange) → one per-bucket count (scheduled total + lineage)
-  → fetch batch → append scheduled URLs to ``seen`` + OR-merge their bits
-  into the per-bucket Blooms → atomic checkpoint.
+  exact join) → per-host politeness top-k (one host window; a partial
+  per-partition top-k before its exchange) → one per-bucket count
+  (scheduled total + lineage) → fetch batch → append scheduled URLs to
+  ``seen`` + OR-merge their bits into the per-bucket Blooms → atomic
+  checkpoint.
 
 So each new candidate crosses one exchange from the documents scan to the
 Bloom cogroup, and none of the round's exchanges on the queue's path
 carries h1/h2 (recomputed from url_hash after the last one). The Bloom
 delta build is the exception: it reads (bucket, h1, h2) and nothing else,
 so there the two hashes replace the key.
+
+Every exchange and cached frame on the queue's path is sized by the
+round's data, never by ``n_buckets``. The bucket exchanges are
+``repartition("bucket")``: width ``spark.sql.shuffle.partitions``, and
+AQE may coalesce them. It coalesces the two union sides and the Bloom
+side with one spec, so the union and the cogroup stay exchange-free, and
+a bucket never spans two partitions (one seen file per bucket directory
+per round). The persisted frames (the probe, the live queue, the
+scheduled batch) take AQE's final-stage coalescing (``session.get_spark``).
+``n_buckets`` sizes only the Blooms and the seen directories.
 
 Determinism: every emission point uses a total order (priority, page_ts,
 url-length, url, doc_id, offset) — the reference's champion tie-break
@@ -34,6 +44,7 @@ the input corpus, as the sandbox has no network.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -42,6 +53,8 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import Catalog
 from . import extract, politeness as pol, seen as seenmod
+
+log = logging.getLogger(__name__)
 
 # Columns carried through the round's bucket exchange, the champion dedup
 # and the pending queue. Deliberately WITHOUT `surt`, `host`, `h1` and `h2`:
@@ -65,7 +78,7 @@ CAND_COLS = [
 @dataclass
 class FrontierConfig:
     n_rounds: int = 4
-    n_buckets: int = 32
+    n_buckets: int = 32  # Bloom/seen granularity; sizes no exchange
     n_salts: int = 8  # unused (politeness has no salts); perfbench/crawl.py still sets it
     default_budget: int = 5
     default_priority: int = 9
@@ -83,12 +96,18 @@ class FrontierConfig:
     extra: dict[str, Any] = field(default_factory=dict)
 
 
-def _obs_get(obs) -> dict:
+def _obs_get(obs, errors: list[str]) -> dict:
     """Observation.get, tolerating plans the optimizer collapsed to an
-    empty LocalRelation (the observe node never ran → Spark asserts)."""
+    empty LocalRelation (the observe node never ran → Spark asserts).
+
+    Each swallowed exception is logged and appended to ``errors``: the
+    round records their number in its lineage (``obs_errors``), as the
+    counters built from this observation then read 0."""
     try:
         return obs.get
-    except Exception:
+    except Exception as e:
+        log.warning("an observation is unreadable, its counters read 0: %r", e, exc_info=True)
+        errors.append(repr(e))
         return {}
 
 
@@ -119,6 +138,9 @@ class FrontierDriver:
         self.spark = spark
         self.cfg = cfg or FrontierConfig()
         self.catalog = Catalog(workdir)
+        # (politeness frame, schedule_round's top): the frame is kept so
+        # the identity check cannot match a new frame at a reused id
+        self._top: tuple[DataFrame, int] | None = None
 
     # ---------------------------------------------------------------- helpers
 
@@ -127,7 +149,8 @@ class FrontierDriver:
         """Build the round's candidate frame. Counters ride as observation
         metrics on the single extraction pass (reference A1's "count while
         you map" — no extra actions, no wide persist); call the returned
-        ``finish_counters()`` after the first action over the frame."""
+        ``finish_counters(errors)`` after the first action over the frame;
+        it appends each unreadable observation to ``errors``."""
         from pyspark.sql import Observation
 
         refs, obs_docs, obs_spans, obs_media = extract.extract_refs_frontier(
@@ -155,9 +178,9 @@ class FrontierDriver:
             .select(*CAND_COLS)
         )
 
-        def finish_counters() -> dict[str, int]:
-            spans, med, rob = _obs_get(obs_spans), _obs_get(obs_media), _obs_get(obs_robots)
-            docs_o = _obs_get(obs_docs)
+        def finish_counters(errors: list[str]) -> dict[str, int]:
+            spans, med, rob = (_obs_get(o, errors) for o in (obs_spans, obs_media, obs_robots))
+            docs_o = _obs_get(obs_docs, errors)
             g = lambda d, k: int(d.get(k) or 0)  # empty rounds observe None
             counters = {
                 k: g(med, k)
@@ -219,6 +242,16 @@ class FrontierDriver:
             .groupBy("bucket")
             .applyInPandas(orfold, seenmod.BLOOM_SCHEMA)
         )
+
+    def _politeness_top(self, politeness_df: DataFrame | None) -> int | None:
+        """``schedule_round``'s ``top``, read once per politeness frame (one
+        small job), not once per round. None without a table: then
+        ``schedule_round`` needs no job."""
+        if politeness_df is None:
+            return None
+        if self._top is None or self._top[0] is not politeness_df:
+            self._top = (politeness_df, pol.budget_top(politeness_df, self.cfg.default_budget))
+        return self._top[1]
 
     # ------------------------------------------------------------------ rounds
 
@@ -287,10 +320,11 @@ class FrontierDriver:
             cand = cand.unionByName(
                 pending.select(*CAND_COLS)
                 .withColumn("__is_new", F.lit(0))
-                .repartition(cfg.n_buckets, "bucket")
+                .repartition("bucket")
             )
         # both sides are hash-partitioned by bucket (the new rows by the
-        # extraction's bucket exchange), so the partition-aware union
+        # extraction's bucket exchange) at one width, and AQE coalesces the
+        # two exchanges with one spec, so the partition-aware union
         # (spark.sql.unionOutputPartitioning) feeds the dedup with no
         # exchange, and none runs between it and the Bloom cogroup (caching
         # these champions would hide that partitioning from the planner; the
@@ -302,6 +336,8 @@ class FrontierDriver:
             obs_queue, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
         )
         cached: list[DataFrame] = []
+        obs_errors: list[str] = []
+        top = self._politeness_top(politeness_df)
         try:
             # 3. seen-set filter (bloom prefilter routes; exact join decides;
             # tombstoned URLs — re-crawl invalidation — count as unseen)
@@ -318,18 +354,16 @@ class FrontierDriver:
             # exchange and the pending files carry no host/surt strings
             from ..functions import urls as U
 
-            # the union of the seen filter's two routes has 2 x n_buckets
-            # partitions; a narrow coalesce halves the tasks of every stage
-            # that reads the live queue (host-exchange map, pending write)
-            new_urls = (
-                new_urls.drop("h1", "h2")
-                .withColumn("host", U.url_host(F.col("ref_url")))
-                .coalesce(cfg.n_buckets)
-            )
+            # the live queue is the union of the seen filter's two routes: 2k
+            # partitions for the probe's AQE-chosen k (k = 1 on crawl_deep).
+            # Spark does not plan this union partition-aware (2k also when
+            # the cached frames keep their shuffle-partitions width), and a
+            # coalesce to a fixed width would undo the data sizing.
+            new_urls = new_urls.drop("h1", "h2").withColumn("host", U.url_host(F.col("ref_url")))
             cached.append(new_urls.persist())
 
             # 4. politeness scheduling (per-host top-k, one host exchange)
-            scheduled = pol.schedule_round(new_urls, politeness_df, cfg.default_budget)
+            scheduled = pol.schedule_round(new_urls, politeness_df, cfg.default_budget, top=top)
             cached.append(scheduled.persist())
             # single action materializes extract→dedup→seen-filter→schedule,
             # resolves every observation riding on the pass, and yields the
@@ -337,8 +371,8 @@ class FrontierDriver:
             lineage_rows = scheduled.groupBy("bucket").count().collect()
             delta_n = {int(r["bucket"]): int(r["count"]) for r in sorted(lineage_rows)}
             n_sched = sum(delta_n.values())
-            counters = finish_counters()
-            qd, live = _obs_get(obs_queue), _obs_get(obs_live)
+            counters = finish_counters(obs_errors)
+            qd, live = _obs_get(obs_queue, obs_errors), _obs_get(obs_live, obs_errors)
             n_merged_new = int(qd.get("n_new") or 0)  # champions w/ a fresh observation
             n_live = int(live.get("n") or 0)  # live queue size (post seen filter)
             n_live_new = int(live.get("n_new") or 0)
@@ -353,7 +387,7 @@ class FrontierDriver:
             # so it carries (url_hash, bucket, seen_round) only
             newly_seen = seenmod.with_probe_hashes(
                 sched_keys.withColumn("seen_round", F.lit(round_id))
-                .repartition(cfg.n_buckets, "bucket")
+                .repartition("bucket")
             ).select("url_hash", "h1", "h2", "bucket", "seen_round")
 
             tables: dict[str, list[str]] = dict((snap or {}).get("tables", {}))
@@ -409,8 +443,10 @@ class FrontierDriver:
             if cfg.use_bloom:
                 m_by_bucket = {b: m for b, (m, _) in old_stats.items() if m}
                 # the delta reads (bucket, h1, h2) only: its exchange carries
-                # the two hashes instead of url_hash, and AQE coalesces it
-                # (built from newly_seen, it would run n_buckets tasks)
+                # the two hashes instead of url_hash, and AQE coalesces it.
+                # Built from newly_seen, whose exchange AQE now coalesces too,
+                # crawl_deep's round 1 ran the same 63 tasks, and that
+                # exchange carried 21.6 KB against this one's 21.3 KB.
                 delta = self._bloom_delta(seenmod.with_probe_hashes(sched_keys), m_by_bucket)
                 merged = self._merge_blooms(bloom, delta)
                 # capacity policy: once a bucket's item count exceeds
@@ -456,6 +492,8 @@ class FrontierDriver:
                 "seen_rows_per_bucket": delta_n,
                 "round": round_id,
             }
+            if obs_errors:
+                lineage["obs_errors"] = len(obs_errors)
             cat.commit(round_id, tables, counters, lineage, parent)
             return counters
         finally:

@@ -360,8 +360,10 @@ def filter_new_urls(
     the new rows by the extraction's bucket exchange (``extract._refs``)
     and the pending rows by their own, joined by the partition-aware union.
     Without that partitioning the result is the same, with one more
-    exchange. With a Bloom table the output is the union of the two routes,
-    with twice the candidates' partitions; the round driver coalesces it.
+    exchange. The width is the caller's (in the round, data-sized by AQE);
+    the Bloom side is exchanged to match it. With a Bloom table the output
+    is the union of the two routes, with twice the candidates' partitions
+    (Spark does not plan it partition-aware).
 
     The filters only *route* rows; membership is decided by the exact
     tables, so Bloom and cuckoo false positives never change the result.

@@ -271,6 +271,9 @@ def near_dup_pairs(
     Pairs form only INSIDE a hyperplane-signature bucket (a.id < b.id), so
     the comparison count is sum of squared bucket sizes, not n² — the shape
     that survives a 10^9-vector corpus (recall trades off with n_planes).
+    A repeated id never pairs with itself, and a pair is emitted once per
+    bucket. Precondition: ids are distinct across buckets; an id whose
+    rows land in two buckets can emit one pair from each.
     Output is (id_a, id_b) without the raw similarity so downstream
     equality checks are float-free; re-derive scores with ``cosine`` if
     needed.
@@ -317,9 +320,11 @@ def near_dup_pairs(
             keep = np.isfinite(blk) & (blk >= thr) & (col_pos > np.arange(i0, i1)[:, None])
             rows, cols = np.nonzero(keep)
             ia, ib = ids[rows + i0], ids[cols]
-            out_a.append(np.minimum(ia, ib))
-            out_b.append(np.maximum(ia, ib))
-        return pd.DataFrame({"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)})
+            distinct = ia != ib  # a repeated id is not its own near-dup
+            out_a.append(np.minimum(ia, ib)[distinct])
+            out_b.append(np.maximum(ia, ib)[distinct])
+        out = pd.DataFrame({"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)})
+        return out.drop_duplicates()  # a repeated id scores its partners once per copy
 
     return v.groupBy("bucket").applyInPandas(_score, f"id_a {id_type}, id_b {id_type}")
 

@@ -61,6 +61,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the final stage of a persisted frame's plan too
+        # (off by default: a reader may then need an exchange the cached
+        # partitioning would have spared). The frontier round persists its
+        # probe, live queue and scheduled batch, whose readers re-exchange
+        # or broadcast anyway; without it they keep shuffle-partitions
+        # tasks however few rows a round carries.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

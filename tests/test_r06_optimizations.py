@@ -203,6 +203,25 @@ def test_near_dup_pairs_numpy_kernel_equals_hof_filter(spark):
     assert got == want and len(got) > 0
 
 
+def test_near_dup_pairs_repeated_ids(spark):
+    """An id that repeats inside a bucket pairs with neither itself nor
+    any partner twice: ids 1 and 3 each appear twice, all four rows and
+    id 2 nearly parallel (one bucket), id 4 orthogonal to them."""
+    from image_search_indexing_spark.operators.similarity import near_dup_pairs
+
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [1.0, 0.01, 0.0, 0.0]),
+        (3, [1.0, 0.0, 0.01, 0.0]),
+        (3, [1.0, 0.0, 0.0, 0.01]),
+        (4, [0.0, 0.0, 0.0, 1.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = [tuple(r) for r in near_dup_pairs(emb, dim=4, threshold=0.9, n_planes=1).collect()]
+    assert sorted(got) == [(1, 2), (1, 3), (2, 3)], got
+
+
 def test_cosine_topk_numpy_equals_hof_path(spark):
     from image_search_indexing_spark.operators.similarity import cosine_topk
 

@@ -2,15 +2,20 @@
 from the documents scan to the Bloom cogroup (the J4 window rides it), the
 pending rows get their own, the partition-aware union feeds the champion
 dedup with none, and no exchange carries the recomputable h1/h2 except
-the Bloom delta build's, which carries them in place of the key. Also:
-the live queue keeps ``n_buckets`` partitions, checkpoints whose pending
-files still carry h1/h2 resume identically, and a listed checkpoint path
-missing on disk fails the round instead of reading as empty."""
+the Bloom delta build's, which carries them in place of the key. Every
+exchange and cached frame of the round is sized by the data, never by
+``n_buckets``. Also: checkpoints whose pending files still carry h1/h2
+resume identically, the politeness ``top`` is read once per run, an
+unreadable observation is counted in the lineage, and a listed checkpoint
+path missing on disk fails the round instead of reading as empty."""
 
+import glob
+import logging
 import os
 import shutil
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from image_search_indexing_spark.frontier import politeness as pol
@@ -87,15 +92,29 @@ def _output(node):
     return [attrs.apply(i).name() for i in range(attrs.size())]
 
 
+def _shuffle_partitions(df):
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
+class _Crawl(tuple):
+    """The crawl fixture's tuple, with its other records in ``extra``."""
+
+
 @pytest.fixture(scope="module")
 def crawl(spark, corpus, tmp_path_factory):
     """A 3-round crawl. For round 1 (a filled seen set, pending rows from
     round 0) it records the candidates handed to the seen filter, the live
-    queue handed to the scheduler, the scheduled frame and the Bloom delta."""
+    queue handed to the scheduler, the scheduled frame, the Bloom delta,
+    the seen write, and the partitions of the three cached frames (probe,
+    live queue, scheduled) as the round materialized them; and, for the
+    whole run, each ``top`` the scheduler was handed and each
+    ``budget_top`` call."""
     drv = FrontierDriver(spark, str(tmp_path_factory.mktemp("exchanges")), _cfg())
-    seen_in, sched_in, deltas = [], [], []
+    seen_in, sched_in, deltas, probes, seen_w, tops, top_jobs = [], [], [], [], [], [], []
+    parts = {}
     orig_filter, orig_sched = seenmod.filter_new_urls, pol.schedule_round
-    orig_delta = drv._bloom_delta
+    orig_probe, orig_top = seenmod.bloom_probe, pol.budget_top
+    orig_delta, orig_write = drv._bloom_delta, Catalog.write_table
 
     def filt(spark_, cand, *a, **kw):
         seen_in.append(cand)
@@ -104,7 +123,27 @@ def crawl(spark, corpus, tmp_path_factory):
     def schedule(live, *a, **kw):
         out = orig_sched(live, *a, **kw)
         sched_in.append((live, out))
+        tops.append(kw.get("top"))
         return out
+
+    def probe(*a, **kw):
+        out = orig_probe(*a, **kw)
+        probes.append(out)
+        return out
+
+    def budget_top(*a, **kw):
+        top_jobs.append(a)
+        return orig_top(*a, **kw)
+
+    def write(cat, df, table, round_id, partition_by=None):
+        if table == "seen":
+            seen_w.append(df)
+        if table == "fetch_batch_1":
+            # the frames are cached and materialized here: .rdd scans the cache
+            (live, scheduled), probe = sched_in[-1], probes[-1]
+            parts.update({name: f.rdd.getNumPartitions() for name, f in
+                          (("probe", probe), ("live", live), ("scheduled", scheduled))})
+        return orig_write(cat, df, table, round_id, partition_by)
 
     def delta(*a, **kw):
         out = orig_delta(*a, **kw)
@@ -113,12 +152,16 @@ def crawl(spark, corpus, tmp_path_factory):
 
     drv._bloom_delta = delta
     seenmod.filter_new_urls, pol.schedule_round = filt, schedule
+    seenmod.bloom_probe, pol.budget_top, Catalog.write_table = probe, budget_top, write
     try:
         counters = drv.run(*_args(corpus), n_rounds=N_ROUNDS)
     finally:
         seenmod.filter_new_urls, pol.schedule_round = orig_filter, orig_sched
+        seenmod.bloom_probe, pol.budget_top, Catalog.write_table = orig_probe, orig_top, orig_write
     live, scheduled = sched_in[1]
-    return drv, counters, seen_in[1], live, scheduled, deltas[1]
+    out = _Crawl((drv, counters, seen_in[1], live, scheduled, deltas[1]))
+    out.extra = {"parts": parts, "seen_write": seen_w[1], "tops": tops, "top_jobs": top_jobs}
+    return out
 
 
 def test_one_bucket_exchange_from_documents_to_the_probe(crawl):
@@ -147,7 +190,9 @@ def test_one_bucket_exchange_from_documents_to_the_probe(crawl):
         xs = [i for i, n in enumerate(nodes) if _name(n) == "ShuffleExchangeExec"]
         assert len(xs) == 1, [nodes[i].simpleString(25) for i in xs]
         assert "hashpartitioning(bucket#" in nodes[xs[0]].simpleString(25)
-        assert nodes[xs[0]].outputPartitioning().numPartitions() == N_BUCKETS
+        # repartition("bucket"): shuffle-partitions wide, and AQE may coalesce it
+        assert nodes[xs[0]].shuffleOrigin().toString() == "REPARTITION_BY_COL"
+        assert nodes[xs[0]].outputPartitioning().numPartitions() == _shuffle_partitions(cand)
         if not is_pending:
             windows = [i for i, n in enumerate(nodes) if _name(n) == "WindowExec"]
             assert len(windows) == 1 and windows[0] < xs[0]
@@ -186,11 +231,71 @@ def test_bloom_delta_exchange_carries_bucket_h1_h2_only(crawl, plan_ops):
     assert any("hashpartitioning(host" in line for line, _ in exchanges)
 
 
-def test_live_queue_has_n_buckets_partitions(crawl):
-    """The union of the seen filter's two routes is coalesced back to
-    n_buckets partitions before the scheduler and the pending write read it."""
-    _, _, _, live, _, _ = crawl
-    assert live.rdd.getNumPartitions() == N_BUCKETS
+def test_live_queue_has_twice_the_probe_partitions(crawl):
+    """The live queue is the union of the seen filter's two routes, each
+    with the cached Bloom probe's AQE-chosen partitions, and nothing
+    re-widens it before the scheduler and the pending write read it."""
+    parts = crawl.extra["parts"]
+    assert parts["live"] == 2 * parts["probe"], parts
+
+
+def test_round_is_data_sized(crawl, plan_ops):
+    """On the test corpus, round 1's cached scheduled batch and live queue
+    have fewer partitions than n_buckets, the cached probe and scheduled
+    batch fewer than the shuffle partitions (AQE coalesced the last stage
+    of their cached plans), and no exchange or coalesce of the round,
+    cached plans and the Bloom delta and seen write included, is n_buckets
+    wide. Each bucket's seen directory still gets one file."""
+    drv, _, _, live, scheduled, delta = crawl
+    parts = crawl.extra["parts"]
+    n_shuffle = _shuffle_partitions(live)
+    assert n_shuffle != N_BUCKETS  # else the width check below proves nothing
+    assert parts["live"] < N_BUCKETS, parts
+    assert max(parts["probe"], parts["scheduled"]) < min(N_BUCKETS, n_shuffle), parts
+    widths = [
+        (cls, line, node.numPartitions() if cls == "CoalesceExec"
+         else node.outputPartitioning().numPartitions())
+        for df in (scheduled, delta, crawl.extra["seen_write"])
+        for cls, line, node in plan_ops(df)
+        if cls in ("ShuffleExchangeExec", "CoalesceExec")
+    ]
+    assert any("REPARTITION_BY_COL" in line for _, line, _ in widths)
+    assert not [w for w in widths if w[2] == N_BUCKETS], widths
+    (seen_path,) = [p for p in drv.catalog.snapshot()["tables"]["seen"] if p.endswith("round=1")]
+    bucket_dirs = glob.glob(os.path.join(seen_path, "bucket=*"))
+    assert bucket_dirs
+    for d in bucket_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+
+def test_politeness_top_read_once_per_run(crawl):
+    """The politeness table does not change between rounds: ``run`` reads
+    its ``top`` with one job and hands it to every round's scheduler."""
+    _, counters, *_ = crawl
+    assert len(crawl.extra["top_jobs"]) == 1
+    assert len(crawl.extra["tops"]) == len(counters) == N_ROUNDS
+    assert len(set(crawl.extra["tops"])) == 1 and crawl.extra["tops"][0] >= 5
+
+
+def test_unreadable_observation_is_counted(spark, corpus, tmp_path_factory, crawl,
+                                           monkeypatch, caplog):
+    """An observation that cannot be read leaves its counters at 0 but not
+    silently: each one is logged and counted in the lineage. A normal round
+    records no ``obs_errors``."""
+    drv_ok, *_ = crawl
+    assert "obs_errors" not in drv_ok.catalog.snapshot()["lineage"]
+
+    def unreadable(self):
+        raise RuntimeError("observation never ran")
+
+    monkeypatch.setattr(Observation, "get", property(unreadable))
+    drv = FrontierDriver(spark, str(tmp_path_factory.mktemp("obs-errors")), _cfg())
+    with caplog.at_level(logging.WARNING, logger="image_search_indexing_spark.frontier.rounds"):
+        counters = drv.run_round(0, *_args(corpus))
+    # docs, spans, media, robots, the merged queue and the live queue
+    assert drv.catalog.snapshot()["lineage"]["obs_errors"] == 6
+    assert counters["pages"] == 0
+    assert sum("observation never ran" in r.getMessage() for r in caplog.records) == 6
 
 
 def test_resume_from_pending_with_h1_h2(spark, corpus, tmp_path_factory, crawl):
