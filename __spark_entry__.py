@@ -1107,13 +1107,14 @@ def _robots_eval(spark, sf):
     ``$``, RFC 9309 group selection, empty-disallow, comments and
     Crawl-delay) are parsed by the REAL distributed parser
     (``robots_table_from_txt`` — Arrow batch ``parse_robots_txt``) and
-    evaluated by the REAL filter (``robots_filter`` — broadcast rule
-    arrays, exact wildcard regex, longest-pattern precedence). The
-    oracle derives every expected decision INDEPENDENTLY from the
+    evaluated by the REAL filter (``robots_rules`` + ``robots_filter``
+    — broadcast rule arrays, exact wildcard regex, longest-pattern
+    precedence). The oracle derives every expected decision INDEPENDENTLY from the
     closed form (a 6×8 outcome matrix hand-derived from RFC 9309), so
     any parse or precedence bug breaks the row."""
     from image_search_indexing_spark.frontier.politeness import (
         robots_filter,
+        robots_rules,
         robots_table_from_txt,
     )
 
@@ -1134,7 +1135,7 @@ def _robots_eval(spark, sf):
         "doc_id", host.alias("host"), path.alias("path"),
         F.concat(F.lit("http://"), host, path).alias("ref_url"),
     )
-    out = robots_filter(refs, tbl.where(F.col("rule").isNotNull()))
+    out = robots_filter(refs, robots_rules(tbl.where(F.col("rule").isNotNull())))
     delays = tbl.groupBy("host").agg(F.max("crawl_delay_ms").alias("__delay"))
     return (
         out.join(delays, "host", "left")

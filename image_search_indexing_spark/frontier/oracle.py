@@ -125,10 +125,13 @@ class FrontierOracle:
             h = s["host"]
             p = int(s["priority"])
             self.host_prio[h] = min(p, self.host_prio.get(h, p))
-        self.budget: dict[str, tuple[int, int]] = {
-            p["host"]: (int(p["max_fetch_per_round"]), int(p["crawl_delay_ms"]))
-            for p in (politeness or [])
-        }
+        # a host listed twice keeps its strictest rule: the smallest budget
+        # and the longest delay (mirrors politeness.host_budgets)
+        self.budget: dict[str, tuple[int, int]] = {}
+        for p in politeness or []:
+            b, d = int(p["max_fetch_per_round"]), int(p["crawl_delay_ms"])
+            old = self.budget.get(p["host"])
+            self.budget[p["host"]] = (b, d) if old is None else (min(old[0], b), max(old[1], d))
         # RFC 9309 rule list per host: (rule, pattern), empty patterns
         # dropped ("Disallow:" = allow-all). A rule dict may carry a full
         # wildcard "pattern"; prefix-only dicts (path_pre) are pure-prefix

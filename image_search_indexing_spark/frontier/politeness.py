@@ -4,10 +4,14 @@ The reference paces crawling operationally (1-5 WARCs per map task,
 ``README.md:46``) and has no robots/priority machinery — those are
 north-rule additions. Semantics here:
 
-- **robots**: per-host disallow path-prefix rules. Rules are aggregated to
-  one array per host and **broadcast-joined** (small dimension), evaluated
-  with ``F.exists`` — no row explosion, no UDF, no extra shuffle.
+- **robots**: per-host disallow path-prefix rules. ``robots_rules``
+  aggregates them to one array per host (one small aggregate job per
+  prepared frame: the round driver prepares it once and reuses it every
+  round); ``robots_filter`` **broadcast-joins** that (small dimension) and
+  evaluates it with ``F.exists`` — no row explosion, no UDF, no extra
+  shuffle.
 - **budgets**: per-host ``max_fetch_per_round`` (broadcast dimension);
+  ``host_budgets`` folds a host listed twice to its strictest rule, and
   hosts without a configured budget get ``default_budget``.
 - **priority queue**: deterministic total order per host —
   ``(priority, page_ts, length(url), url)`` — the reference's champion
@@ -17,8 +21,8 @@ north-rule additions. Semantics here:
 - **skew**: a hot host (10M candidates on one window partition) is the
   classic straggler. Selection is one exact per-host ``row_number`` cut at
   ``min(top, budget)``, where ``top`` is the largest budget any host can
-  have (a Python int, read with one small aggregate job over the
-  politeness table per call). Because ``top`` is a literal, Spark's
+  have (a Python int, read with one small aggregate job per prepared
+  budgets frame, so once per driver). Because ``top`` is a literal, Spark's
   ``InsertWindowGroupLimit`` plans a Partial ``WindowGroupLimit`` (a
   top-``top`` per map partition) before the host exchange, so the exchange
   carries at most ``input partitions × top`` rows per host. The partial
@@ -73,29 +77,20 @@ def robots_rule_cols(robots: DataFrame) -> DataFrame:
     return robots
 
 
-def robots_filter(refs: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """Mark rows disallowed by robots rules (adds boolean ``robots_blocked``).
+def robots_rules(robots: DataFrame) -> DataFrame:
+    """The per-host rule arrays ``robots_filter`` evaluates: one
+    ``(host, __rules)`` row per host, ``__rules`` an array of
+    ``(rule, path_pre, path_re, spec_len)`` structs.
 
     ``robots(host, rule, path_pre[, path_re, spec_len])`` with ``rule ∈
-    {allow, disallow}``, evaluated with RFC 9309 (Robots Exclusion
-    Protocol) precedence: among all rules whose PATTERN matches the URL
-    path, the most specific (longest original pattern, ``spec_len``)
-    wins; at equal length ``allow`` wins; no matching rule = allowed.
-    Empty-pattern rules are dropped at aggregation ("Disallow:" means
-    allow-all in REP). Pure-prefix rules (the overwhelming majority) are
-    evaluated with prefix arithmetic; wildcard/``$`` rules carry an
-    anchored regex (``path_re``) and are matched EXACTLY with
-    ``regexp_like`` — ``Disallow: *`` blocks everything, ``Disallow:
-    *.php`` blocks only matching paths, and a truncation can no longer
-    flip an allow/disallow tie. Everything stays builtin higher-order
-    functions over a broadcast-joined per-host rule array: no row
-    explosion, no UDF, no shuffle of the refs fact table (the regex path
-    only runs for rules that actually contain a wildcard).
+    {allow, disallow}`` (``robots_rule_cols`` widens prefix-only tables).
+    Empty-pattern rules are dropped here ("Disallow:" means allow-all in
+    REP). This is one aggregate job over the rule table: a caller that
+    filters many frames against one table (the round driver) prepares it
+    once and passes the result to every ``robots_filter`` call.
     """
-    if robots is None:
-        return refs.withColumn("robots_blocked", F.lit(False))
     robots = robots_rule_cols(robots)
-    rules = (
+    return (
         robots.where(
             (F.coalesce(F.col("path_pre"), F.lit("")) != "")
             | F.col("path_re").isNotNull()
@@ -107,6 +102,27 @@ def robots_filter(refs: DataFrame, robots: DataFrame | None) -> DataFrame:
             ).alias("__rules")
         )
     )
+
+
+def robots_filter(refs: DataFrame, rules: DataFrame | None) -> DataFrame:
+    """Mark rows disallowed by robots rules (adds boolean ``robots_blocked``).
+
+    ``rules`` is ``robots_rules(robots)`` (None: nothing is blocked),
+    evaluated with RFC 9309 (Robots Exclusion Protocol) precedence: among
+    all rules whose PATTERN matches the URL path, the most specific
+    (longest original pattern, ``spec_len``) wins; at equal length
+    ``allow`` wins; no matching rule = allowed. Pure-prefix rules (the
+    overwhelming majority) are evaluated with prefix arithmetic;
+    wildcard/``$`` rules carry an anchored regex (``path_re``) and are
+    matched EXACTLY with ``regexp_like`` — ``Disallow: *`` blocks
+    everything, ``Disallow: *.php`` blocks only matching paths, and a
+    truncation can no longer flip an allow/disallow tie. Everything stays
+    builtin higher-order functions over a broadcast-joined per-host rule
+    array: no row explosion, no UDF, no shuffle of the refs fact table
+    (the regex path only runs for rules that actually contain a wildcard).
+    """
+    if rules is None:
+        return refs.withColumn("robots_blocked", F.lit(False))
     path = F.regexp_replace(F.col("ref_url"), r"^(?:https?:)?//[^/]*", "")
     matches = F.filter(
         F.col("__rules"),
@@ -127,7 +143,7 @@ def robots_filter(refs: DataFrame, robots: DataFrame | None) -> DataFrame:
 
 
 def parse_robots_txt(text: str, agent: str = "archivebot") -> tuple[list[tuple[str, str]], int | None]:
-    """Parse a robots.txt FILE into ``robots_filter`` rows — RFC 9309
+    """Parse a robots.txt FILE into ``robots_rules`` rows — RFC 9309
     group selection + directive extraction (pure Python; runs where the
     fetcher runs, one call per host, so rows — not files — are what the
     cluster broadcasts).
@@ -227,7 +243,7 @@ def robots_table_from_txt(
 ) -> DataFrame:
     """(host, robots_txt) → (host, rule, path_pre, path_re, spec_len,
     crawl_delay_ms) rows — the distributed parse step between fetching
-    per-host robots.txt files and ``robots_filter``/politeness. One Arrow
+    per-host robots.txt files and ``robots_rules``/politeness. One Arrow
     batch pass (robots files are tiny and per-host, so this is
     embarrassingly parallel); a host whose file yields only a crawl-delay
     emits one NULL-rule row so the delay survives to the politeness
@@ -272,6 +288,17 @@ def crawl_order() -> list[Column]:
     ]
 
 
+def host_budgets(politeness: DataFrame) -> DataFrame:
+    """One ``(host, max_fetch_per_round, crawl_delay_ms)`` row per host,
+    the form ``schedule_round`` needs: a host listed more than once keeps
+    its strictest rule, the smallest budget and the longest delay. One
+    small aggregate job per call; the round driver prepares it once."""
+    return politeness.groupBy("host").agg(
+        F.min("max_fetch_per_round").alias("max_fetch_per_round"),
+        F.max("crawl_delay_ms").alias("crawl_delay_ms"),
+    )
+
+
 def budget_top(politeness: DataFrame, default_budget: int = 5) -> int:
     """``max(default_budget, max(max_fetch_per_round))``: a bound on every
     host's budget, read with one small aggregate job."""
@@ -292,6 +319,9 @@ def schedule_round(
     ``(ref_url, url_hash, host, priority, page_ts)``. Output adds
     ``queue_pos`` (1-based per-host fetch order) and ``fetch_delay_ms``
     (queue_pos × crawl_delay_ms), restricted to scheduled rows.
+    ``politeness`` must hold at most one row per host (``host_budgets``
+    makes it so): the budgets are joined to the candidates, so a host
+    listed twice would schedule each of its URLs twice.
 
     One window ranks each host's rows in ``crawl_order`` and keeps
     ``queue_pos <= top`` and ``queue_pos <= budget``. ``top`` =

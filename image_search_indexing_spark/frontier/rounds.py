@@ -3,7 +3,10 @@
 One round (the reference's two chained MR jobs become one DataFrame plan,
 SURVEY.md §7.0):
 
-  docs slice → extract refs (P1-P5, F1-F14; the J4 window rides one
+  side tables prepared once per driver (robots rule arrays, seed
+  priority, politeness budgets: aggregated per host and persisted in the
+  first round that reads them, broadcast from the cache in every later
+  one) → docs slice → extract refs (P1-P5, F1-F14; the J4 window rides one
   exchange by ``bucket``) → robots filter → union with the carried-over
   ``pending`` queue (its own exchange by ``bucket``) → champion dedup
   (A5-A7 order) on that partitioning, no exchange → h1/h2 → seen filter
@@ -12,7 +15,9 @@ SURVEY.md §7.0):
   per-partition top-k before its exchange) → one per-bucket count
   (scheduled total + lineage) → fetch batch → append scheduled URLs to
   ``seen`` + OR-merge their bits into the per-bucket Blooms → atomic
-  checkpoint.
+  checkpoint (its manifest records each table's schema and each Bloom's
+  ``(m, n_items)``, so the next round reads its state with no inference
+  job and no stats scan).
 
 So each new candidate crosses one exchange from the documents scan to the
 Bloom cogroup, and none of the round's exchanges on the queue's path
@@ -45,6 +50,7 @@ the input corpus, as the sandbox has no network.
 from __future__ import annotations
 
 import logging
+import weakref
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -111,6 +117,20 @@ def _obs_get(obs, errors: list[str]) -> dict:
         return {}
 
 
+def _release(prepared: dict[str, tuple[DataFrame, DataFrame]]) -> None:
+    """Unpersist and forget every prepared side table. A stopped context
+    dropped its cache already (and cannot be asked to)."""
+    for _, frame in prepared.values():
+        if frame.sparkSession.sparkContext._jsc is not None:
+            frame.unpersist()
+    prepared.clear()
+
+
+def _host_priority(seeds: DataFrame) -> DataFrame:
+    """One ``(host, __prio)`` row per seeded host: its best seed priority."""
+    return seeds.groupBy("host").agg(F.min("priority").alias("__prio"))
+
+
 def _dedup_candidates(cand: DataFrame) -> DataFrame:
     """One deterministic champion per url_hash (A5-A7 tie-break style).
 
@@ -138,17 +158,61 @@ class FrontierDriver:
         self.spark = spark
         self.cfg = cfg or FrontierConfig()
         self.catalog = Catalog(workdir)
-        # (politeness frame, schedule_round's top): the frame is kept so
-        # the identity check cannot match a new frame at a reused id
-        self._top: tuple[DataFrame, int] | None = None
+        # the round-invariant per-host side tables (robots rule arrays,
+        # seed priority, politeness budgets), each aggregated and persisted
+        # once per input frame: name → (input frame, prepared frame). The
+        # input frame is kept so the identity check cannot match a new
+        # frame at a reused id.
+        self._prepared: dict[str, tuple[DataFrame, DataFrame]] = {}
+        self._top: int | None = None  # schedule_round's top, read from the budgets
+        # a driver dropped without close() releases them when collected;
+        # not at interpreter exit, where the JVM may already be gone
+        self._finalizer = weakref.finalize(self, _release, self._prepared)
+        self._finalizer.atexit = False
+
+    def close(self) -> None:
+        """Release the prepared side tables (``run`` calls this on exit).
+        The driver stays usable: its next round prepares them again."""
+        _release(self._prepared)
+        self._top = None
 
     # ---------------------------------------------------------------- helpers
 
-    def _candidates(self, docs: DataFrame, meta: DataFrame, seeds: DataFrame | None,
-                    robots: DataFrame | None):
-        """Build the round's candidate frame. Counters ride as observation
-        metrics on the single extraction pass (reference A1's "count while
-        you map" — no extra actions, no wide persist); call the returned
+    def _prepare(self, name: str, src: DataFrame | None, build) -> DataFrame | None:
+        """``build(src)``, persisted, once per ``src`` frame: a new frame
+        releases the frame prepared from the old one and prepares again.
+        The persisted frame is computed by the first round that reads it;
+        later rounds broadcast it from the cache."""
+        held = self._prepared.pop(name, None)
+        if held is not None and held[0] is src:
+            self._prepared[name] = held
+            return held[1]
+        if held is not None:
+            held[1].unpersist()
+        if src is None:
+            return None
+        frame = build(src).persist()
+        self._prepared[name] = (src, frame)
+        return frame
+
+    def _budgets(self, politeness_df: DataFrame | None) -> tuple[DataFrame | None, int | None]:
+        """The prepared per-host budgets and ``schedule_round``'s ``top``,
+        read from them with one small job each time they are prepared.
+        (None, None) without a table: ``schedule_round`` then needs no job."""
+        held = self._prepared.get("politeness")
+        budgets = self._prepare("politeness", politeness_df, pol.host_budgets)
+        if budgets is None:
+            self._top = None
+        elif held is None or held[1] is not budgets:
+            self._top = pol.budget_top(budgets, self.cfg.default_budget)
+        return budgets, self._top
+
+    def _candidates(self, docs: DataFrame, meta: DataFrame, host_prio: DataFrame | None,
+                    rules: DataFrame | None):
+        """Build the round's candidate frame from the prepared seed
+        priorities and robots rules. Counters ride as observation metrics
+        on the single extraction pass (reference A1's "count while you map"
+        — no extra actions, no wide persist); call the returned
         ``finish_counters(errors)`` after the first action over the frame;
         it appends each unreadable observation to ``errors``."""
         from pyspark.sql import Observation
@@ -157,15 +221,14 @@ class FrontierDriver:
             docs, meta, spans_cap=self.cfg.spans_cap, n_buckets=self.cfg.n_buckets
         )
         valid = refs.where(F.col("drop_reason").isNull())
-        valid = pol.robots_filter(valid, robots)
+        valid = pol.robots_filter(valid, rules)
         obs_robots = Observation()
         valid = valid.observe(
             obs_robots,
             F.count(F.when(F.col("robots_blocked"), 1)).alias("robots_blocked"),
         )
         # seed priority per host (broadcast dim); unknown hosts get default
-        if seeds is not None:
-            host_prio = seeds.groupBy("host").agg(F.min("priority").alias("__prio"))
+        if host_prio is not None:
             valid = valid.join(F.broadcast(host_prio), "host", "left")
             prio = F.coalesce(F.col("__prio"), F.lit(self.cfg.default_priority))
         else:
@@ -243,16 +306,6 @@ class FrontierDriver:
             .applyInPandas(orfold, seenmod.BLOOM_SCHEMA)
         )
 
-    def _politeness_top(self, politeness_df: DataFrame | None) -> int | None:
-        """``schedule_round``'s ``top``, read once per politeness frame (one
-        small job), not once per round. None without a table: then
-        ``schedule_round`` needs no job."""
-        if politeness_df is None:
-            return None
-        if self._top is None or self._top[0] is not politeness_df:
-            self._top = (politeness_df, pol.budget_top(politeness_df, self.cfg.default_budget))
-        return self._top[1]
-
     # ------------------------------------------------------------------ rounds
 
     def run_round(
@@ -265,7 +318,8 @@ class FrontierDriver:
         robots: DataFrame | None = None,
     ) -> dict[str, int]:
         """Execute one frontier round and commit its checkpoint; a round that
-        raises commits nothing and releases the frames it cached."""
+        raises commits nothing and releases the frames it cached, the
+        prepared side tables too (the next round prepares them again)."""
         spark, cfg, cat = self.spark, self.cfg, self.catalog
         snap = cat.snapshot()
         parent = snap["snapshot_id"] if snap else None
@@ -283,62 +337,69 @@ class FrontierDriver:
         prev_counters = (snap or {}).get("counters", {})
         n_pend_prev = int(prev_counters.get("pending_after", 0))
         prev_seen_total = int(prev_counters.get("seen_total", 0))
-        # per-bucket (m, n_items) of the filters on disk — n_buckets rows,
-        # column-pruned (the bits stay on disk)
+        # per-bucket (m, n_items) of the filters on disk, as the commit that
+        # wrote them recorded them (the filters stay on disk)
+        bloom_stats = (snap or {}).get("lineage", {}).get("bloom")
         old_stats: dict[int, tuple[int, int]] = {}
-        if bloom is not None:
-            old_stats = {
-                int(r["bucket"]): (int(r["m"]), int(r["n_items"]))
-                for r in bloom.select("bucket", "m", "n_items").collect()
-            }
+        if bloom is not None and bloom_stats is not None:
+            old_stats = {int(b): (int(m), int(n)) for b, (m, n) in bloom_stats.items()}
         n_ever = prev_seen_total + int(prev_counters.get("invalidated", 0))
-        if cfg.use_bloom and seen is not None and sum(n for _, n in old_stats.values()) < n_ever:
-            # no filter holds every URL ever scheduled (none, or one an older
-            # checkpoint kept across a round run without it): it must not
-            # route, and step 5 rebuilds each bucket from the seen table
+        if cfg.use_bloom and seen is not None and (
+            bloom_stats is None or sum(n for _, n in old_stats.values()) < n_ever
+        ):
+            # no filter holds every URL ever scheduled (none, one an older
+            # checkpoint kept across a round run without it, or one whose
+            # manifest predates the recorded stats): it must not route, and
+            # step 5 rebuilds each bucket from the seen table
             bloom = None
             old_stats = {
                 int(r["bucket"]): (0, int(r["count"]))
                 for r in seen.groupBy("bucket").count().collect()
             }
 
-        # 1. this round's arriving documents (closed-world fetch simulation)
-        rdocs = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_rounds)) == round_id)
-        cand, finish_counters = self._candidates(rdocs, meta, seeds, robots)
-        cand = cand.withColumn("__is_new", F.lit(1))
-
-        # 2. merge with the carried-over queue, dedup deterministically.
-        # The pending queue is a list of append-only DELTA files (plus an
-        # occasional compaction) — rows already scheduled in later rounds
-        # remain in old deltas and are dropped here by the seen filter, so
-        # per-round pending WRITE IO is O(new discoveries), not O(queue).
-        from pyspark.sql import Observation
-
-        if pending is not None:
-            # pending files written before h1/h2 left CAND_COLS still read:
-            # the select drops the two columns
-            cand = cand.unionByName(
-                pending.select(*CAND_COLS)
-                .withColumn("__is_new", F.lit(0))
-                .repartition("bucket")
-            )
-        # both sides are hash-partitioned by bucket (the new rows by the
-        # extraction's bucket exchange) at one width, and AQE coalesces the
-        # two exchanges with one spec, so the partition-aware union
-        # (spark.sql.unionOutputPartitioning) feeds the dedup with no
-        # exchange, and none runs between it and the Bloom cogroup (caching
-        # these champions would hide that partitioning from the planner; the
-        # seen filter caches its probe). h1/h2 are derived here, after the
-        # last exchange, for the Bloom/cuckoo probes.
-        cand = seenmod.with_probe_hashes(_dedup_candidates(cand))
-        obs_queue = Observation()
-        cand = cand.observe(
-            obs_queue, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
-        )
         cached: list[DataFrame] = []
         obs_errors: list[str] = []
-        top = self._politeness_top(politeness_df)
         try:
+            # 0. the per-host side tables, prepared once per driver (per input
+            # frame) and read from the cache in every later round
+            rules = self._prepare("robots", robots, pol.robots_rules)
+            host_prio = self._prepare("seeds", seeds, _host_priority)
+            budgets, top = self._budgets(politeness_df)
+
+            # 1. this round's arriving documents (closed-world fetch simulation)
+            rdocs = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_rounds)) == round_id)
+            cand, finish_counters = self._candidates(rdocs, meta, host_prio, rules)
+            cand = cand.withColumn("__is_new", F.lit(1))
+
+            # 2. merge with the carried-over queue, dedup deterministically.
+            # The pending queue is a list of append-only DELTA files (plus an
+            # occasional compaction) — rows already scheduled in later rounds
+            # remain in old deltas and are dropped here by the seen filter, so
+            # per-round pending WRITE IO is O(new discoveries), not O(queue).
+            from pyspark.sql import Observation
+
+            if pending is not None:
+                # pending files written before h1/h2 left CAND_COLS still read:
+                # the select drops the two columns
+                cand = cand.unionByName(
+                    pending.select(*CAND_COLS)
+                    .withColumn("__is_new", F.lit(0))
+                    .repartition("bucket")
+                )
+            # both sides are hash-partitioned by bucket (the new rows by the
+            # extraction's bucket exchange) at one width, and AQE coalesces the
+            # two exchanges with one spec, so the partition-aware union
+            # (spark.sql.unionOutputPartitioning) feeds the dedup with no
+            # exchange, and none runs between it and the Bloom cogroup (caching
+            # these champions would hide that partitioning from the planner; the
+            # seen filter caches its probe). h1/h2 are derived here, after the
+            # last exchange, for the Bloom/cuckoo probes.
+            cand = seenmod.with_probe_hashes(_dedup_candidates(cand))
+            obs_queue = Observation()
+            cand = cand.observe(
+                obs_queue, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
+            )
+
             # 3. seen-set filter (bloom prefilter routes; exact join decides;
             # tombstoned URLs — re-crawl invalidation — count as unseen)
             new_urls = seenmod.filter_new_urls(
@@ -363,7 +424,7 @@ class FrontierDriver:
             cached.append(new_urls.persist())
 
             # 4. politeness scheduling (per-host top-k, one host exchange)
-            scheduled = pol.schedule_round(new_urls, politeness_df, cfg.default_budget, top=top)
+            scheduled = pol.schedule_round(new_urls, budgets, cfg.default_budget, top=top)
             cached.append(scheduled.persist())
             # single action materializes extract→dedup→seen-filter→schedule,
             # resolves every observation riding on the pass, and yields the
@@ -452,16 +513,25 @@ class FrontierDriver:
                 # capacity policy: once a bucket's item count exceeds
                 # bloom_rebuild_load of its sized capacity (m / bits_per_key),
                 # rebuild that bucket from the exact seen table at 4x the size.
-                # Pure metadata arithmetic — no filter is materialized to decide.
-                default_m = seenmod._bloom_params(cfg.expected_per_bucket, cfg.bits_per_key)[0]
+                # Pure metadata arithmetic — no filter is materialized to
+                # decide, and the (m, n_items) of every filter written goes to
+                # the manifest for the next round.
+                new_stats: dict[int, tuple[int, int]] = {}
                 over: dict[int, int] = {}
                 for b in set(old_stats) | set(delta_n):
-                    m = old_stats.get(b, (default_m, 0))[0]
-                    n_tot = old_stats.get(b, (0, 0))[1] + delta_n.get(b, 0)
+                    m, n_tot = old_stats.get(b, (0, 0))
+                    n_tot += delta_n.get(b, 0)
+                    if b not in old_stats:  # a new filter, sized as the delta build sizes it
+                        m = seenmod._bloom_params(
+                            cfg.expected_per_bucket or max(n_tot, 1), cfg.bits_per_key
+                        )[0]
+                    new_stats[b] = (m, n_tot)
                     if n_tot * cfg.bits_per_key > cfg.bloom_rebuild_load * m:
                         over[b] = n_tot
                 if over:
-                    seen_all = cat.read_table(spark, "seen", {"tables": tables})
+                    seen_all = cat.read_table(
+                        spark, "seen", {"tables": tables, "schemas": (snap or {}).get("schemas", {})}
+                    )
                     m_new = {
                         b: seenmod._bloom_params(4 * n, cfg.bits_per_key)[0]
                         for b, n in over.items()
@@ -471,6 +541,7 @@ class FrontierDriver:
                         cfg.n_buckets, cfg.bits_per_key, m_by_bucket=m_new,
                     )
                     merged = merged.where(~F.col("bucket").isin(*over)).unionByName(rebuilt)
+                    new_stats.update((b, (m_new[b], n)) for b, n in over.items())
                     counters["bloom_rebuilt_buckets"] = len(over)
                 bloom_path = cat.write_table(merged, "bloom", round_id)
                 tables["bloom"] = [bloom_path]
@@ -492,10 +563,15 @@ class FrontierDriver:
                 "seen_rows_per_bucket": delta_n,
                 "round": round_id,
             }
+            if cfg.use_bloom:
+                lineage["bloom"] = {b: list(v) for b, v in sorted(new_stats.items())}
             if obs_errors:
                 lineage["obs_errors"] = len(obs_errors)
             cat.commit(round_id, tables, counters, lineage, parent)
             return counters
+        except BaseException:
+            self.close()
+            raise
         finally:
             for df in cached:
                 df.unpersist()
@@ -509,14 +585,18 @@ class FrontierDriver:
         robots: DataFrame | None = None,
         n_rounds: int | None = None,
     ) -> list[dict[str, int]]:
-        """Run all rounds, resuming after the last committed snapshot."""
+        """Run all rounds, resuming after the last committed snapshot, and
+        release the prepared side tables on exit."""
         total = n_rounds or self.cfg.n_rounds
         snap = self.catalog.snapshot()
         start = (snap["round"] + 1) if snap else 0
-        out = []
-        for r in range(start, total):
-            out.append(self.run_round(r, docs, meta, seeds, politeness_df, robots))
-        return out
+        try:
+            return [
+                self.run_round(r, docs, meta, seeds, politeness_df, robots)
+                for r in range(start, total)
+            ]
+        finally:
+            self.close()
 
     def fetch_batch(self, round_id: int) -> DataFrame | None:
         return self.catalog.read_table(self.spark, f"fetch_batch_{round_id}")

@@ -1,6 +1,7 @@
 """tools/eventlog_profile.py over a small synthetic Spark event log: one
 row per stage that ran tasks, grouped by the description of the first job
-that listed it, with summed task metrics and the stage's plan scopes."""
+that listed it, with summed task metrics and the stage's plan scopes. A
+rolled log directory reads as its files concatenated in numeric order."""
 
 import json
 import os
@@ -39,7 +40,7 @@ def _job(jid, desc, stages):
             "Stage IDs": [s["Stage ID"] for s in stages], "Properties": props}
 
 
-def _write_log(path):
+def _events():
     map_stage = _stage(0, "collect at rounds.py:1",
                        [_rdd(2, "Exchange"), _rdd(1, "WholeStageCodegen (1)"),
                         _rdd(0, "Scan parquet ")])
@@ -56,9 +57,12 @@ def _write_log(path):
         _task(2, 7, rows_in=3),
         {"Event": "SparkListenerTaskEnd", "Stage ID": 2},  # a failed task: no metrics
     ]
+    return [json.dumps(ev) + "\n" for ev in events]
+
+
+def _write_log(path):
     with open(path, "w") as f:
-        for ev in events:
-            f.write(json.dumps(ev) + "\n")
+        f.writelines(_events())
 
 
 def test_profile_rows(tmp_path):
@@ -89,3 +93,22 @@ def test_table_and_cli(tmp_path, capsys):
     assert ep.main([path, "--desc", "round", "--json"]) == 0
     rows = json.loads(capsys.readouterr().out)
     assert {r["desc"] for r in rows} == {"round 1: lineage"} and len(rows) == 2
+
+
+def test_rolled_log_directory(tmp_path):
+    """Spark's rolling event log is a directory ``eventlog_v2_<app>/`` of
+    ``events_<n>_<app>`` files: they are read in numeric order of ``n``
+    (10 after 2), and other files in the directory are ignored."""
+    app = "local-1700000000000"
+    roll = tmp_path / f"eventlog_v2_{app}"
+    roll.mkdir()
+    lines = _events()
+    # job 0 is in file 2, job 1 in file 10: read as names sort, job 1
+    # would list stage 0 first and take it from job 0's description
+    for n, chunk in ((1, lines[:1]), (2, lines[1:5]), (10, lines[5:])):
+        (roll / f"events_{n}_{app}").write_text("".join(chunk))
+    (roll / f"appstatus_{app}").write_text("")
+    single = str(tmp_path / "eventlog")
+    _write_log(single)
+    assert ep.profile(str(roll)) == ep.profile(single)
+    assert ep.main([str(roll), "--json"]) == 0

@@ -386,12 +386,52 @@ def test_span_cap_counters_match_oracle(spark, corpus, corpus_py, tmp_path_facto
         ]
 
 
+def test_duplicated_politeness_row_matches_oracle(spark, corpus, corpus_py, tmp_path_factory):
+    """A host listed twice in the politeness table keeps its strictest
+    rule (smallest budget, longest delay): the batches and counters match
+    the oracle, and no url_hash is scheduled twice."""
+    from pyspark.sql import functions as F
+
+    dup = corpus["politeness"].select(
+        "host",
+        (F.col("max_fetch_per_round") + 2).alias("max_fetch_per_round"),
+        (F.col("crawl_delay_ms") + 500).alias("crawl_delay_ms"),
+    )
+    politeness = corpus["politeness"].unionByName(dup)
+    wd = str(tmp_path_factory.mktemp("frontier-dup-politeness"))
+    drv = FrontierDriver(spark, wd, FrontierConfig(n_rounds=2, n_buckets=16, default_budget=5))
+    counters = drv.run(
+        corpus["docs"], corpus["meta"], corpus["seeds"], politeness, corpus["robots"], n_rounds=2,
+    )
+    oracle = FrontierOracle(
+        OracleConfig(n_rounds=2, default_budget=5),
+        seeds=corpus_py["seeds"],
+        politeness=[r.asDict() for r in politeness.collect()],
+        robots=corpus_py["robots"],
+    )
+    state = oracle.run(corpus_py["docs"], 2)
+    hashes = []
+    for r in range(2):
+        assert counters[r]["scheduled"] == state.counters[r]["scheduled"]
+        assert counters[r]["seen_total"] == state.counters[r]["seen_total"]
+        rows = _batch_rows(drv, r)
+        assert rows == [{k: row[k] for k in BATCH_COLS} for row in state.fetch_batches[r]]
+        hashes += [row["url_hash"] for row in rows]
+    assert len(hashes) == len(set(hashes)), "a url_hash was scheduled twice"
+    # the smaller budget binds on some host, so taking the larger would show
+    budget = {r["host"]: r["max_fetch_per_round"] for r in corpus_py["politeness"]}
+    per_host = {}
+    for row in _batch_rows(drv, 0):
+        per_host[row["host"]] = per_host.get(row["host"], 0) + 1
+    assert any(n == budget.get(h) for h, n in per_host.items())
+
+
 def test_robots_rfc9309_precedence(spark):
     """RFC 9309 rule precedence in robots_filter: longest matching prefix
     wins; allow wins equal-length ties; empty prefixes are allow-all; no
     matching rule = allowed (engine and Python oracle agree case by case)."""
     from image_search_indexing_spark.frontier.oracle import FrontierOracle, OracleConfig
-    from image_search_indexing_spark.frontier.politeness import robots_filter
+    from image_search_indexing_spark.frontier.politeness import robots_filter, robots_rules
 
     rules = [
         ("h1", "disallow", "/img/"),
@@ -416,7 +456,7 @@ def test_robots_rfc9309_precedence(spark):
     robots = spark.createDataFrame(rules, "host string, rule string, path_pre string")
     got = {
         (r["host"], r["ref_url"]): r["robots_blocked"]
-        for r in robots_filter(refs, robots).collect()
+        for r in robots_filter(refs, robots_rules(robots)).collect()
     }
     oracle = FrontierOracle(
         OracleConfig(),
@@ -501,6 +541,7 @@ def test_robots_wildcard_exact_semantics(spark):
     from image_search_indexing_spark.frontier.oracle import FrontierOracle, OracleConfig
     from image_search_indexing_spark.frontier.politeness import (
         robots_filter,
+        robots_rules,
         robots_table_from_txt,
     )
 
@@ -527,7 +568,9 @@ def test_robots_wildcard_exact_semantics(spark):
     )
     got = {
         (r["host"], r["ref_url"]): r["robots_blocked"]
-        for r in robots_filter(refs, tbl.where(F.col("rule").isNotNull())).collect()
+        for r in robots_filter(
+            refs, robots_rules(tbl.where(F.col("rule").isNotNull()))
+        ).collect()
     }
     # oracle mirror takes full patterns
     pats = {
@@ -555,6 +598,7 @@ def test_robots_txt_to_filter_end_to_end(spark):
 
     from image_search_indexing_spark.frontier.politeness import (
         robots_filter,
+        robots_rules,
         robots_table_from_txt,
     )
 
@@ -582,7 +626,9 @@ def test_robots_txt_to_filter_end_to_end(spark):
     )
     got = {
         r["ref_url"]: r["robots_blocked"]
-        for r in robots_filter(refs, tbl.where(F.col("rule").isNotNull())).collect()
+        for r in robots_filter(
+            refs, robots_rules(tbl.where(F.col("rule").isNotNull()))
+        ).collect()
     }
     assert got["http://site1.pt/img/okthing.png"] is False  # longer allow
     assert got["http://site1.pt/img/no.png"] is True

@@ -39,7 +39,9 @@ def test_politeness_budgets_broadcast(spark, corpus):
     plan = _plan(sched)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     # robots rules also broadcast
-    marked = pol.robots_filter(refs.where(F.col("drop_reason").isNull()), corpus["robots"])
+    marked = pol.robots_filter(
+        refs.where(F.col("drop_reason").isNull()), pol.robots_rules(corpus["robots"])
+    )
     assert "BroadcastHashJoin" in _plan(marked)
 
 

@@ -10,6 +10,7 @@ unreadable observation is counted in the lineage, and a listed checkpoint
 path missing on disk fails the round instead of reading as empty."""
 
 import glob
+import json
 import logging
 import os
 import shutil
@@ -90,6 +91,11 @@ def _streamed(node):
 def _output(node):
     attrs = node.output()
     return [attrs.apply(i).name() for i in range(attrs.size())]
+
+
+def _crawl(counters):
+    # bloom_* counters describe the filter maintenance, not the crawl
+    return {k: v for k, v in counters.items() if not k.startswith("bloom_")}
 
 
 def _shuffle_partitions(df):
@@ -298,11 +304,10 @@ def test_unreadable_observation_is_counted(spark, corpus, tmp_path_factory, craw
     assert sum("observation never ran" in r.getMessage() for r in caplog.records) == 6
 
 
-def test_resume_from_pending_with_h1_h2(spark, corpus, tmp_path_factory, crawl):
-    """A checkpoint written when pending files carried h1/h2 resumes to the
-    same batches, seen set and counters as an uninterrupted run."""
-    drv_full, counters_full, _, _, _, _ = crawl
-    wd = str(tmp_path_factory.mktemp("old-pending"))
+def _old_pending_checkpoint(spark, corpus, wd, old_manifest):
+    """Round 0 in ``wd``, its pending file rewritten in the layout that
+    carried h1/h2; with ``old_manifest``, the snapshot also loses what
+    manifests of that time lacked: table schemas and Bloom stats."""
     FrontierDriver(spark, wd, _cfg()).run(*_args(corpus), n_rounds=1)
     cat = Catalog(wd)
     (path,) = cat.snapshot()["tables"]["pending"]
@@ -315,7 +320,41 @@ def test_resume_from_pending_with_h1_h2(spark, corpus, tmp_path_factory, crawl):
     old.write.parquet(tmp)
     shutil.rmtree(path)
     os.rename(tmp, path)
+    if old_manifest:
+        snap_path = os.path.join(cat.meta_dir, f"snapshot-{cat.current_snapshot_id()}.json")
+        with open(snap_path) as f:
+            snap = json.load(f)
+        del snap["schemas"], snap["lineage"]["bloom"]
+        with open(snap_path, "w") as f:
+            json.dump(snap, f)
+    return cat
+
+
+def test_resume_from_pending_with_h1_h2(spark, corpus, tmp_path_factory, crawl):
+    """A checkpoint written when pending files carried h1/h2 (and its
+    manifest recorded no schemas and no Bloom stats) resumes to the same
+    batches, seen set and counters as an uninterrupted run."""
+    drv_full, counters_full, _, _, _, _ = crawl
+    wd = str(tmp_path_factory.mktemp("old-pending"))
+    cat = _old_pending_checkpoint(spark, corpus, wd, old_manifest=True)
     assert {"h1", "h2"} <= set(cat.read_table(spark, "pending").columns)
+
+    drv = FrontierDriver(spark, wd, _cfg())
+    counters = drv.run(*_args(corpus), n_rounds=N_ROUNDS)
+    assert counters[0]["bloom_rebuilt_buckets"] > 0  # no stats: the stale-filter path
+    assert [_crawl(c) for c in counters] == [_crawl(c) for c in counters_full[1:]]
+    assert _batches(drv) == _batches(drv_full)
+    assert _seen(drv) == _seen(drv_full)
+
+
+def test_pending_with_h1_h2_under_a_recorded_schema(spark, corpus, tmp_path_factory, crawl):
+    """Pending files that carry h1/h2 under a manifest that records the
+    pending schema (a checkpoint resumed across the layout change) read
+    without them, and the run resumes as an uninterrupted one."""
+    drv_full, counters_full, _, _, _, _ = crawl
+    wd = str(tmp_path_factory.mktemp("old-pending-schema"))
+    cat = _old_pending_checkpoint(spark, corpus, wd, old_manifest=False)
+    assert not {"h1", "h2"} & set(cat.read_table(spark, "pending").columns)
 
     drv = FrontierDriver(spark, wd, _cfg())
     counters = drv.run(*_args(corpus), n_rounds=N_ROUNDS)

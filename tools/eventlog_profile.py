@@ -5,7 +5,10 @@ Usage::
     python tools/eventlog_profile.py EVENTLOG [--desc PREFIX] [--json]
 
 ``EVENTLOG`` is the uncompressed JSON-lines file Spark writes with
-``spark.eventLog.enabled=true`` (and ``spark.eventLog.compress=false``).
+``spark.eventLog.enabled=true`` (and ``spark.eventLog.compress=false``),
+or the directory ``eventlog_v2_<app>/`` a rolling event log writes (the
+default since Spark 4.0), whose ``events_<n>_<app>`` files are read in
+the order of ``n``.
 Each stage that ran tasks gets one row: its id, tasks, shuffle read and
 write bytes, records read (input plus shuffle), the summed executor run
 time of its tasks, and the names of the plan scopes its RDDs came from
@@ -21,6 +24,8 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import re
 import sys
 
 COLS = ("stage", "tasks", "read_kb", "write_kb", "records", "run_ms")
@@ -31,35 +36,50 @@ def _scope_name(rdd: dict) -> str | None:
     return json.loads(scope).get("name") if scope else None
 
 
+def _lines(path: str):
+    """The event lines of a log file, or of a rolled log directory's
+    ``events_<n>_*`` files in numeric order of ``n``."""
+    if os.path.isdir(path):
+        parts = sorted(
+            (int(m.group(1)), name) for name in os.listdir(path)
+            if (m := re.match(r"events_(\d+)_", name))
+        )
+        files = [os.path.join(path, name) for _, name in parts]
+    else:
+        files = [path]
+    for fp in files:
+        with open(fp) as f:
+            yield from f
+
+
 def profile(path: str) -> list[dict]:
     """One dict per stage that ran tasks, in stage-id order."""
     desc_of: dict[int, str] = {}
     info: dict[int, dict] = {}
     stats: dict[int, dict] = {}
-    with open(path) as f:
-        for line in f:
-            ev = json.loads(line)
-            kind = ev.get("Event")
-            if kind == "SparkListenerJobStart":
-                desc = (ev.get("Properties") or {}).get("spark.job.description") or "(none)"
-                for st in ev.get("Stage Infos", []):
-                    desc_of.setdefault(st["Stage ID"], desc)
-                    info.setdefault(st["Stage ID"], st)
-            elif kind == "SparkListenerTaskEnd":
-                tm = ev.get("Task Metrics")
-                if not tm:
-                    continue
-                rd = tm.get("Shuffle Read Metrics", {})
-                s = stats.setdefault(
-                    ev["Stage ID"],
-                    {"tasks": 0, "read_b": 0, "write_b": 0, "records": 0, "run_ms": 0},
-                )
-                s["tasks"] += 1
-                s["read_b"] += rd.get("Remote Bytes Read", 0) + rd.get("Local Bytes Read", 0)
-                s["write_b"] += tm.get("Shuffle Write Metrics", {}).get("Shuffle Bytes Written", 0)
-                s["records"] += (tm.get("Input Metrics", {}).get("Records Read", 0)
-                                 + rd.get("Total Records Read", 0))
-                s["run_ms"] += tm.get("Executor Run Time", 0)
+    for line in _lines(path):
+        ev = json.loads(line)
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart":
+            desc = (ev.get("Properties") or {}).get("spark.job.description") or "(none)"
+            for st in ev.get("Stage Infos", []):
+                desc_of.setdefault(st["Stage ID"], desc)
+                info.setdefault(st["Stage ID"], st)
+        elif kind == "SparkListenerTaskEnd":
+            tm = ev.get("Task Metrics")
+            if not tm:
+                continue
+            rd = tm.get("Shuffle Read Metrics", {})
+            s = stats.setdefault(
+                ev["Stage ID"],
+                {"tasks": 0, "read_b": 0, "write_b": 0, "records": 0, "run_ms": 0},
+            )
+            s["tasks"] += 1
+            s["read_b"] += rd.get("Remote Bytes Read", 0) + rd.get("Local Bytes Read", 0)
+            s["write_b"] += tm.get("Shuffle Write Metrics", {}).get("Shuffle Bytes Written", 0)
+            s["records"] += (tm.get("Input Metrics", {}).get("Records Read", 0)
+                             + rd.get("Total Records Read", 0))
+            s["run_ms"] += tm.get("Executor Run Time", 0)
     rows = []
     for sid in sorted(stats):
         st = info.get(sid, {})
