@@ -14,7 +14,9 @@ SURVEY.md §7.0):
   exact join) → per-host politeness top-k (one host window; a partial
   per-partition top-k before its exchange) → one per-bucket count
   (scheduled total + lineage) → fetch batch → append scheduled URLs to
-  ``seen`` + OR-merge their bits into the per-bucket Blooms → atomic
+  ``seen`` + one Bloom update (``seen.bloom_plan`` decides each bucket's
+  size from counts, ``seen.bloom_update`` folds the scheduled keys into the
+  filters or rebuilds a bucket from seen, in one grouped kernel) → atomic
   checkpoint (its manifest records each table's schema and each Bloom's
   ``(m, n_items)``, so the next round reads its state with no inference
   job and no stats scan).
@@ -22,8 +24,8 @@ SURVEY.md §7.0):
 So each new candidate crosses one exchange from the documents scan to the
 Bloom cogroup, and none of the round's exchanges on the queue's path
 carries h1/h2 (recomputed from url_hash after the last one). The Bloom
-delta build is the exception: it reads (bucket, h1, h2) and nothing else,
-so there the two hashes replace the key.
+update is the exception: its key side reads (bucket, h1, h2) and nothing
+else, so there the two hashes replace the key.
 
 Every exchange and cached frame on the queue's path is sized by the
 round's data, never by ``n_buckets``. The bucket exchanges are
@@ -51,8 +53,7 @@ from __future__ import annotations
 
 import logging
 import weakref
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,14 +93,9 @@ class FrontierConfig:
     expected_per_bucket: int = 4096  # Bloom sizing: per-bucket m recorded in the table
     spans_cap: int = extract.MAX_IMAGE_IN_HTML
     use_bloom: bool = True
-    # rebuild a bucket's Bloom at 4x m once n_items exceeds this load factor
-    # of its sized capacity (m / bits_per_key) — keeps fpp bounded when the
-    # seen set outgrows the initial sizing by orders of magnitude
-    bloom_rebuild_load: float = 0.5
     # pending queue is delta-appended; compact (fold deltas + drop seen) when
     # the manifest lists this many delta files for it
     pending_compact_every: int = 8
-    extra: dict[str, Any] = field(default_factory=dict)
 
 
 def _obs_get(obs, errors: list[str]) -> dict:
@@ -264,48 +260,6 @@ class FrontierDriver:
 
         return cand, finish_counters
 
-    def _bloom_delta(self, newly_seen: DataFrame, m_by_bucket: dict[int, int] | None) -> DataFrame:
-        return seenmod.build_bloom_table(
-            newly_seen, self.cfg.n_buckets, self.cfg.bits_per_key,
-            self.cfg.expected_per_bucket, m_by_bucket=m_by_bucket,
-        )
-
-    @staticmethod
-    def _merge_blooms(old: DataFrame | None, delta: DataFrame) -> DataFrame:
-        if old is None:
-            return delta
-        import numpy as np
-        import pandas as pd
-
-        def orfold(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf["m"].nunique() > 1 or pdf["k"].nunique() > 1:
-                raise ValueError(
-                    "bloom sizing config changed across rounds for bucket "
-                    f"{int(pdf['bucket'].iloc[0])}: m={sorted(pdf['m'].unique())} "
-                    f"k={sorted(pdf['k'].unique())}; OR-merge needs one (m, k) — "
-                    "resume with the original expected_per_bucket/bits_per_key "
-                    "or rebuild the filters from the seen table"
-                )
-            bits = None
-            for buf in pdf["bits"]:
-                arr = np.frombuffer(buf, dtype=np.uint64)
-                bits = arr if bits is None else (bits | arr)
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["bucket"].iloc[0])],
-                    "m": [int(pdf["m"].iloc[0])],
-                    "k": [int(pdf["k"].iloc[0])],
-                    "n_items": [int(pdf["n_items"].sum())],
-                    "bits": [bits.tobytes()],
-                }
-            )
-
-        return (
-            old.unionByName(delta)
-            .groupBy("bucket")
-            .applyInPandas(orfold, seenmod.BLOOM_SCHEMA)
-        )
-
     # ------------------------------------------------------------------ rounds
 
     def run_round(
@@ -337,25 +291,24 @@ class FrontierDriver:
         prev_counters = (snap or {}).get("counters", {})
         n_pend_prev = int(prev_counters.get("pending_after", 0))
         prev_seen_total = int(prev_counters.get("seen_total", 0))
-        # per-bucket (m, n_items) of the filters on disk, as the commit that
-        # wrote them recorded them (the filters stay on disk)
-        bloom_stats = (snap or {}).get("lineage", {}).get("bloom")
-        old_stats: dict[int, tuple[int, int]] = {}
-        if bloom is not None and bloom_stats is not None:
-            old_stats = {int(b): (int(m), int(n)) for b, (m, n) in bloom_stats.items()}
-        n_ever = prev_seen_total + int(prev_counters.get("invalidated", 0))
-        if cfg.use_bloom and seen is not None and (
-            bloom_stats is None or sum(n for _, n in old_stats.values()) < n_ever
-        ):
-            # no filter holds every URL ever scheduled (none, one an older
-            # checkpoint kept across a round run without it, or one whose
-            # manifest predates the recorded stats): it must not route, and
-            # step 5 rebuilds each bucket from the seen table
-            bloom = None
-            old_stats = {
-                int(r["bucket"]): (0, int(r["count"]))
-                for r in seen.groupBy("bucket").count().collect()
-            }
+        # the filters as the commit that wrote them recorded them (they stay
+        # on disk), or None when no filter holds every URL ever scheduled
+        # (none, one an older checkpoint kept across a round run without it,
+        # or one whose manifest predates the recorded stats): then it must
+        # not route, and step 5 rebuilds each bucket from the seen table
+        filters = seen_rows = None
+        if cfg.use_bloom:
+            filters = seenmod.recorded_filters(
+                (snap or {}).get("lineage", {}).get("bloom") if bloom is not None else None,
+                prev_seen_total + int(prev_counters.get("invalidated", 0)),
+            )
+            if filters is None:
+                bloom = None
+                if seen is not None:
+                    seen_rows = {
+                        int(r["bucket"]): int(r["count"])
+                        for r in seen.groupBy("bucket").count().collect()
+                    }
 
         cached: list[DataFrame] = []
         obs_errors: list[str] = []
@@ -401,7 +354,11 @@ class FrontierDriver:
             )
 
             # 3. seen-set filter (bloom prefilter routes; exact join decides;
-            # tombstoned URLs — re-crawl invalidation — count as unseen)
+            # tombstoned URLs — re-crawl invalidation — count as unseen).
+            # Without a Bloom probe to cache, the filter's anti and semi joins
+            # both read the champions: cache them so the dedup runs once
+            if bloom is None and tomb is not None and seen is not None:
+                cached.append(cand.persist())
             new_urls = seenmod.filter_new_urls(
                 spark, cand, seen, bloom, tombstones=tomb, cuckoo_table=cuckoo_tbl,
                 key="url_hash", cache=cached,
@@ -428,7 +385,7 @@ class FrontierDriver:
             cached.append(scheduled.persist())
             # single action materializes extract→dedup→seen-filter→schedule,
             # resolves every observation riding on the pass, and yields the
-            # per-bucket lineage (which also feeds the bloom capacity arithmetic)
+            # per-bucket lineage (which also feeds the Bloom plan of step 5)
             lineage_rows = scheduled.groupBy("bucket").count().collect()
             delta_n = {int(r["bucket"]): int(r["count"]) for r in sorted(lineage_rows)}
             n_sched = sum(delta_n.values())
@@ -442,7 +399,8 @@ class FrontierDriver:
             n_queue = n_live + (n_merged_new - n_live_new)
             n_cand = counters["round_candidates"]
 
-            # 5. state updates: pending += delta (new − scheduled); seen += scheduled
+            # 5. state updates: pending += delta (new − scheduled); seen += scheduled;
+            # the Bloom takes the scheduled keys (seen.bloom_plan/bloom_update)
             sched_keys = scheduled.select("url_hash", "bucket")
             # h1/h2 are derived after the bucket exchange of the seen write,
             # so it carries (url_hash, bucket, seen_round) only
@@ -502,49 +460,19 @@ class FrontierDriver:
                 ]
 
             if cfg.use_bloom:
-                m_by_bucket = {b: m for b, (m, _) in old_stats.items() if m}
-                # the delta reads (bucket, h1, h2) only: its exchange carries
-                # the two hashes instead of url_hash, and AQE coalesces it.
-                # Built from newly_seen, whose exchange AQE now coalesces too,
-                # crawl_deep's round 1 ran the same 63 tasks, and that
-                # exchange carried 21.6 KB against this one's 21.3 KB.
-                delta = self._bloom_delta(seenmod.with_probe_hashes(sched_keys), m_by_bucket)
-                merged = self._merge_blooms(bloom, delta)
-                # capacity policy: once a bucket's item count exceeds
-                # bloom_rebuild_load of its sized capacity (m / bits_per_key),
-                # rebuild that bucket from the exact seen table at 4x the size.
-                # Pure metadata arithmetic — no filter is materialized to
-                # decide, and the (m, n_items) of every filter written goes to
-                # the manifest for the next round.
-                new_stats: dict[int, tuple[int, int]] = {}
-                over: dict[int, int] = {}
-                for b in set(old_stats) | set(delta_n):
-                    m, n_tot = old_stats.get(b, (0, 0))
-                    n_tot += delta_n.get(b, 0)
-                    if b not in old_stats:  # a new filter, sized as the delta build sizes it
-                        m = seenmod._bloom_params(
-                            cfg.expected_per_bucket or max(n_tot, 1), cfg.bits_per_key
-                        )[0]
-                    new_stats[b] = (m, n_tot)
-                    if n_tot * cfg.bits_per_key > cfg.bloom_rebuild_load * m:
-                        over[b] = n_tot
-                if over:
-                    seen_all = cat.read_table(
-                        spark, "seen", {"tables": tables, "schemas": (snap or {}).get("schemas", {})}
-                    )
-                    m_new = {
-                        b: seenmod._bloom_params(4 * n, cfg.bits_per_key)[0]
-                        for b, n in over.items()
-                    }
-                    rebuilt = seenmod.build_bloom_table(
-                        seen_all.where(F.col("bucket").isin(*over)),
-                        cfg.n_buckets, cfg.bits_per_key, m_by_bucket=m_new,
-                    )
-                    merged = merged.where(~F.col("bucket").isin(*over)).unionByName(rebuilt)
-                    new_stats.update((b, (m_new[b], n)) for b, n in over.items())
-                    counters["bloom_rebuilt_buckets"] = len(over)
-                bloom_path = cat.write_table(merged, "bloom", round_id)
-                tables["bloom"] = [bloom_path]
+                # planned from counts alone; one grouped kernel folds the
+                # scheduled keys into the filters (or rebuilds a bucket over
+                # capacity from seen) inside the write, and the plan's
+                # (m, n_items) go to the manifest for the next round
+                stats, rebuild = seenmod.bloom_plan(
+                    filters, delta_n, cfg.bits_per_key, cfg.expected_per_bucket, seen_rows
+                )
+                update = seenmod.bloom_update(
+                    bloom, sched_keys, seen, stats, rebuild, cfg.bits_per_key
+                )
+                tables["bloom"] = [cat.write_table(update, "bloom", round_id)]
+                if rebuild:
+                    counters["bloom_rebuilt_buckets"] = len(rebuild)
             else:
                 tables.pop("bloom", None)  # it would miss this round's URLs
 
@@ -564,7 +492,7 @@ class FrontierDriver:
                 "round": round_id,
             }
             if cfg.use_bloom:
-                lineage["bloom"] = {b: list(v) for b, v in sorted(new_stats.items())}
+                lineage["bloom"] = {b: list(v) for b, v in sorted(stats.items())}
             if obs_errors:
                 lineage["obs_errors"] = len(obs_errors)
             cat.commit(round_id, tables, counters, lineage, parent)
@@ -690,27 +618,18 @@ class FrontierDriver:
         scheduled in the meantime (now in ``seen``) dropped — the same view
         a round's step 2+3 reconstructs, and what compaction materializes.
 
-        Seen-ness is the EFFECTIVE set (seen minus tombstones), mirroring
-        ``seen.filter_new_urls``: with an active invalidation, a tombstoned
-        URL rediscovered into the queue is live here exactly as run_round
-        would treat it."""
+        Seen-ness is the EFFECTIVE set (seen minus tombstones), decided by
+        ``seen.filter_new_urls`` without filters: with an active
+        invalidation, a tombstoned URL rediscovered into the queue is live
+        here exactly as run_round would treat it."""
         snap = self.catalog.snapshot()
         if snap is None:
             return None
         pending = self.catalog.read_table(self.spark, "pending", snap)
         if pending is None:
             return None
-        live = _dedup_candidates(pending.select(*CAND_COLS))
-        seen = self.catalog.read_table(self.spark, "seen", snap)
-        if seen is not None:
-            tomb = self.catalog.read_table(self.spark, "tombstones", snap)
-            if tomb is not None:
-                # (live ∉ seen) ∪ (live ∈ seen ∧ tombstoned) — exclusive
-                not_in_seen = live.join(seen.select("url_hash"), "url_hash", "left_anti")
-                resurrected = live.join(
-                    seen.select("url_hash"), "url_hash", "left_semi"
-                ).join(tomb.select("url_hash"), "url_hash", "left_semi")
-                live = not_in_seen.unionByName(resurrected)
-            else:
-                live = live.join(seen.select("url_hash"), "url_hash", "left_anti")
-        return live
+        return seenmod.filter_new_urls(
+            self.spark, _dedup_candidates(pending.select(*CAND_COLS)),
+            self.catalog.read_table(self.spark, "seen", snap), None,
+            tombstones=self.catalog.read_table(self.spark, "tombstones", snap), cache=[],
+        )

@@ -9,7 +9,7 @@ round, so this engine uses the classic two-tier design:
 1. **Partitioned Bloom filters** (one per ``bucket = pmod(h1, n_buckets)``)
    route candidates: "definitely new" URLs skip the exact join entirely;
    only "maybe seen" candidates (true dups + ~1% false positives) reach it.
-2. **Exact confirm**: the maybe-seen slice left-joins the exact seen keys.
+2. **Exact confirm**: the maybe-seen slice anti-joins the exact seen keys.
    Bloom false positives therefore never drop URLs — the seen set matches
    the single-process oracle bit-exactly (the BASELINE.json exactness
    contract).
@@ -22,6 +22,12 @@ All hashing is JVM-side (``xxhash64`` twice, independent seeds); the numpy
 bit-set work runs in Arrow-vectorized ``applyInPandas`` / ``pandas_udf``
 (no per-row Python). Filters are stored per bucket as binary rows in the
 checkpoint, so a 1000-executor cluster loads only its buckets' filters.
+
+This module owns the Bloom layout and its capacity policy: the round
+driver hands ``bloom_plan`` the recorded per-bucket ``(m, n_items)`` and
+the round's per-bucket scheduled counts, and ``bloom_update`` turns the
+plan into each bucket's new filter row in one grouped kernel (the OR-merge
+of the round's keys, or a rebuild from the seen table).
 """
 
 from __future__ import annotations
@@ -64,11 +70,17 @@ def with_hashes(df: DataFrame, key: str = "url_hash", n_buckets: int = 64) -> Da
 # ---------------------------------------------------------------------------
 
 
+BLOOM_REBUILD_LOAD = 0.5  # rebuild a bucket's filter at 4x m past this load
+
+
 def _bloom_params(n_items: int, bits_per_key: int = 12) -> tuple[int, int]:
     m = max(1024, int(n_items * bits_per_key))
     m = (m + 63) // 64 * 64  # whole uint64 words
-    k = max(1, int(round(bits_per_key * math.log(2))))  # ≈ 8 for 12 bpk
-    return m, k
+    return m, bloom_k(bits_per_key)
+
+
+def bloom_k(bits_per_key: int) -> int:
+    return max(1, int(round(bits_per_key * math.log(2))))  # ≈ 8 for 12 bpk
 
 
 def _bloom_positions(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> np.ndarray:
@@ -77,11 +89,13 @@ def _bloom_positions(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> np.ndarr
     return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)
 
 
-def bloom_build(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> bytes:
-    bits = np.zeros(m // 64, dtype=np.uint64)
+def bloom_build(h1: np.ndarray, h2: np.ndarray, m: int, k: int, bits: bytes | None = None) -> bytes:
+    """The filter of the keys (h1, h2) at (m, k); with ``bits``, that
+    filter's bits with the keys' positions set (an OR-merge at its m)."""
+    arr = np.zeros(m // 64, dtype=np.uint64) if bits is None else np.frombuffer(bits, np.uint64).copy()
     pos = _bloom_positions(h1, h2, m, k).ravel()
-    np.bitwise_or.at(bits, pos // 64, np.uint64(1) << (pos % np.uint64(64)))
-    return bits.tobytes()
+    np.bitwise_or.at(arr, pos // 64, np.uint64(1) << (pos % np.uint64(64)))
+    return arr.tobytes()
 
 
 def bloom_contains(bits_buf: bytes, h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> np.ndarray:
@@ -92,46 +106,112 @@ def bloom_contains(bits_buf: bytes, h1: np.ndarray, h2: np.ndarray, m: int, k: i
     return hit.all(axis=1)
 
 
-def build_bloom_table(
-    seen: DataFrame,
-    n_buckets: int,
-    bits_per_key: int = 12,
-    expected_per_bucket: int | None = None,
-    m_by_bucket: dict[int, int] | None = None,
-) -> DataFrame:
-    """Per-bucket Bloom rows from a seen table carrying (h1, h2, bucket).
+def recorded_filters(recorded: dict | None, n_ever: int) -> dict[int, tuple[int, int]] | None:
+    """Each bucket's ``(m, n_items)`` as the manifest recorded it, or None
+    when the filters must not route: none recorded, or together they hold
+    fewer items than the ``n_ever`` URLs ever scheduled (a filter an older
+    checkpoint kept across a round run without it)."""
+    if recorded is None:
+        return None
+    filters = {int(b): (int(m), int(n)) for b, (m, n) in recorded.items()}
+    return filters if sum(n for _, n in filters.values()) >= n_ever else None
 
-    Partial+final pattern (reference A1's map-side pre-agg analog): each
-    bucket's filter is built where its rows live after one hash shuffle.
 
-    ``m_by_bucket`` pins specific buckets to an existing filter size so the
-    delta OR-merges with filters already on disk (buckets grow independently
-    via the rebuild policy in rounds.py); unlisted buckets size from
-    ``expected_per_bucket``. The dict is tiny (n_buckets entries) and ships
-    in the task closure.
-    """
+def bloom_plan(
+    filters: dict[int, tuple[int, int]] | None,
+    scheduled: dict[int, int],
+    bits_per_key: int,
+    expected_per_bucket: int,
+    seen_rows: dict[int, int] | None = None,
+) -> tuple[dict[int, tuple[int, int]], set[int]]:
+    """The round's filter maintenance, decided from counts alone: each
+    bucket's new ``(m, n_items)`` and the buckets rebuilt from the seen
+    table.
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        b = int(pdf["bucket"].iloc[0])
-        if m_by_bucket and b in m_by_bucket:
-            m = int(m_by_bucket[b])
-            k = max(1, int(round(bits_per_key * math.log(2))))
+    ``filters`` are the trusted filters' ``(m, n_items)``; None when no
+    filter can be trusted, and then every bucket of ``seen_rows`` (its
+    per-bucket seen row counts) is rebuilt. A bucket without a filter is
+    sized for ``expected_per_bucket`` keys (or its own count when that is
+    0). Capacity policy: once a bucket's items exceed ``BLOOM_REBUILD_LOAD``
+    of its sized capacity (m / bits_per_key), it is rebuilt at 4x its items,
+    which keeps the false-positive rate bounded when the seen set outgrows
+    the initial sizing by orders of magnitude. The rest OR-merge their new
+    keys at their m."""
+    untrusted = dict(seen_rows or {}) if filters is None else {}
+    filters = filters or {}
+    stats: dict[int, tuple[int, int]] = {}
+    rebuild: set[int] = set()
+    for b in set(filters) | set(untrusted) | set(scheduled):
+        if b in filters:
+            m, n = filters[b]
+        elif b in untrusted:
+            m, n = 0, untrusted[b]  # no usable filter: over capacity at any load
         else:
-            m, k = _bloom_params(expected_per_bucket or max(n, 1), bits_per_key)
-        h1 = pdf["h1"].to_numpy().astype(np.uint64)
-        h2 = pdf["h2"].to_numpy().astype(np.uint64)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "m": [m],
-                "k": [k],
-                "n_items": [n],
-                "bits": [bloom_build(h1, h2, m, k)],
-            }
+            m, n = _bloom_params(expected_per_bucket or max(scheduled[b], 1), bits_per_key)[0], 0
+        n += scheduled.get(b, 0)
+        if n * bits_per_key > BLOOM_REBUILD_LOAD * m:
+            m = _bloom_params(4 * n, bits_per_key)[0]
+            rebuild.add(b)
+        stats[b] = (m, n)
+    return stats, rebuild
+
+
+def bloom_update(
+    old: DataFrame | None,
+    keys: DataFrame,
+    seen: DataFrame | None,
+    stats: dict[int, tuple[int, int]],
+    rebuild: set[int],
+    bits_per_key: int,
+) -> DataFrame:
+    """Each bucket's new filter row, from ``bloom_plan``'s ``stats`` and
+    ``rebuild``: one grouped Python kernel.
+
+    One side is the old filter rows (``old``; None when no filter is
+    kept), grouped by ``bucket``; the other is the ``(bucket, h1, h2)`` of
+    ``keys`` (rows carrying ``url_hash`` and ``bucket``: the round's
+    scheduled URLs), plus the ``seen`` rows of the rebuilt buckets (read by
+    bucket directory). A rebuilt bucket, or one without an old row, gets a
+    filter of its keys at the planned m; any other bucket sets its new keys'
+    bits in its old filter, whose ``(m, k)`` must be the planned one. Each
+    row's ``(m, n_items)`` is the plan's, so the rows and the manifest stats
+    that record the plan agree. The plan is tiny (n_buckets entries) and
+    ships in the task closure; filters never pass through the driver."""
+    k = bloom_k(bits_per_key)
+    added = with_probe_hashes(keys).select("bucket", "h1", "h2")
+    if rebuild and seen is not None:
+        added = added.unionByName(
+            seen.where(F.col("bucket").isin(*sorted(rebuild))).select("bucket", "h1", "h2")
         )
 
-    return seen.select("bucket", "h1", "h2").groupBy("bucket").applyInPandas(build, BLOOM_SCHEMA)
+    def update(old_pdf: pd.DataFrame, key_pdf: pd.DataFrame) -> pd.DataFrame:
+        b = int((key_pdf if len(key_pdf) else old_pdf)["bucket"].iloc[0])
+        m, n = stats[b]
+        base = None
+        if b not in rebuild and len(old_pdf):
+            old_m, old_k = int(old_pdf["m"].iloc[0]), int(old_pdf["k"].iloc[0])
+            if (old_m, old_k) != (m, k):
+                raise ValueError(
+                    f"bloom sizing config changed across rounds for bucket {b}: "
+                    f"m={sorted({old_m, m})} k={sorted({old_k, k})}; OR-merge needs one "
+                    "(m, k) — resume with the original expected_per_bucket/bits_per_key "
+                    "or rebuild the filters from the seen table"
+                )
+            base = old_pdf["bits"].iloc[0]
+        h1 = key_pdf["h1"].to_numpy().astype(np.uint64)
+        h2 = key_pdf["h2"].to_numpy().astype(np.uint64)
+        bits = bloom_build(h1, h2, m, k, base)
+        return pd.DataFrame(
+            {"bucket": [b], "m": [m], "k": [k], "n_items": [n], "bits": [bits]}
+        )
+
+    if old is None:
+        return added.groupBy("bucket").applyInPandas(
+            lambda pdf: update(pdf.iloc[:0], pdf), BLOOM_SCHEMA
+        )
+    return (
+        old.groupBy("bucket").cogroup(added.groupBy("bucket")).applyInPandas(update, BLOOM_SCHEMA)
+    )
 
 
 def bloom_probe(
@@ -354,27 +434,32 @@ def filter_new_urls(
     ``with_hashes``; the round driver derives h1/h2 with
     ``with_probe_hashes`` after its last exchange, so no exchange carries
     them; ``seen`` carries ``key``; ``candidates`` is UNIQUE per ``key``
-    (the round driver calls this after the champion dedup), so no join fans
-    out; and, for the Bloom cogroup to shuffle only the filter table,
-    ``candidates`` is hash-partitioned by ``bucket``: in the round driver,
-    the new rows by the extraction's bucket exchange (``extract._refs``)
-    and the pending rows by their own, joined by the partition-aware union.
-    Without that partitioning the result is the same, with one more
-    exchange. The width is the caller's (in the round, data-sized by AQE);
-    the Bloom side is exchanged to match it. With a Bloom table the output
-    is the union of the two routes, with twice the candidates' partitions
-    (Spark does not plan it partition-aware).
+    (the round driver calls this after the champion dedup). ``seen`` may
+    hold a key more than once (a URL scheduled, invalidated and scheduled
+    again has a row per scheduling); it only meets the candidates in anti
+    and semi joins, so no key fans out. For the Bloom cogroup to shuffle
+    only the filter table, ``candidates`` is hash-partitioned by
+    ``bucket``: in the round driver, the new rows by the extraction's
+    bucket exchange (``extract._refs``) and the pending rows by their own,
+    joined by the partition-aware union. Without that partitioning the
+    result is the same, with one more exchange. The width is the caller's
+    (in the round, data-sized by AQE); the Bloom side is exchanged to match
+    it. With a Bloom table the output is the union of the routes, each with
+    the candidates' partitions (Spark does not plan it partition-aware).
 
     The filters only *route* rows; membership is decided by the exact
     tables, so Bloom and cuckoo false positives never change the result.
     One Bloom probe marks every candidate: negatives are new and never meet
-    the seen table; the maybe-seen slice left-joins the seen keys. The probe
-    is persisted so both routes read it once, and appended to ``cache`` for
-    the caller to unpersist after materializing the result. A maybe-seen row
-    found in seen is kept iff it is cuckoo-positive ∧ ∈ tombstones; a cuckoo
-    negative (no false negatives) never matches in the tombstone join. The
-    10^10-row seen table is only the build side of one join and never flows
-    through a Python kernel.
+    the seen table; the maybe-seen slice anti-joins the seen keys. The probe
+    is persisted so every route reads it once, and appended to ``cache`` for
+    the caller to unpersist after materializing the result. With
+    tombstones, the maybe-seen rows found in seen (a semi join) are
+    resurrected iff they are cuckoo-positive and in the tombstone table (a
+    second semi join); a cuckoo negative (no false negatives) is final.
+    Without a Bloom table those two joins read ``candidates`` directly, so a
+    caller whose candidates are costly to compute persists them first (the
+    round driver does). The 10^10-row seen table is only the build side of the joins and never
+    flows through a Python kernel.
     """
     if seen is None:
         return candidates
@@ -386,24 +471,15 @@ def filter_new_urls(
         maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
     else:
         fresh, maybe = None, candidates
-    # seen is unique per key (one row per scheduled URL)
-    seen_keys = seen.select(F.col(key).alias("__seen_key")).withColumn("__in_seen", F.lit(1))
-    flagged = maybe.join(
-        seen_keys, maybe[key] == seen_keys["__seen_key"], "left"
-    ).drop("__seen_key")
-    keep = F.col("__in_seen").isNull()
+    seen_keys = seen.select(F.col(key).alias("__seen_key"))
+    in_seen = maybe[key] == seen_keys["__seen_key"]
+    confirmed = maybe.join(seen_keys, in_seen, "left_anti")
     if tombstones is not None:
+        resurrected = maybe.join(seen_keys, in_seen, "left_semi")
         if cuckoo_table is not None:
-            flagged = cuckoo_probe(spark, flagged, cuckoo_table)
-        else:
-            flagged = flagged.withColumn("maybe_deleted", F.lit(True))
-        t_keys = tombstones.select(F.col(key).alias("__t_key")).withColumn("__tomb", F.lit(1))
-        flagged = flagged.join(
-            t_keys,
-            (flagged[key] == t_keys["__t_key"]) & flagged["maybe_deleted"]
-            & flagged["__in_seen"].isNotNull(),
-            "left",
-        ).drop("__t_key", "maybe_deleted")
-        keep = keep | F.col("__tomb").isNotNull()
-    confirmed = flagged.where(keep).drop("__in_seen", "__tomb")
+            resurrected = cuckoo_probe(spark, resurrected, cuckoo_table)
+            resurrected = resurrected.where(F.col("maybe_deleted")).drop("maybe_deleted")
+        t_keys = tombstones.select(F.col(key).alias("__t_key"))
+        resurrected = resurrected.join(t_keys, resurrected[key] == t_keys["__t_key"], "left_semi")
+        confirmed = confirmed.unionByName(resurrected)
     return confirmed if fresh is None else fresh.unionByName(confirmed)

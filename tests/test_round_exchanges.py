@@ -2,7 +2,7 @@
 from the documents scan to the Bloom cogroup (the J4 window rides it), the
 pending rows get their own, the partition-aware union feeds the champion
 dedup with none, and no exchange carries the recomputable h1/h2 except
-the Bloom delta build's, which carries them in place of the key. Every
+the Bloom update's, which carries them in place of the key. Every
 exchange and cached frame of the round is sized by the data, never by
 ``n_buckets``. Also: checkpoints whose pending files still carry h1/h2
 resume identically, the politeness ``top`` is read once per run, an
@@ -110,17 +110,18 @@ class _Crawl(tuple):
 def crawl(spark, corpus, tmp_path_factory):
     """A 3-round crawl. For round 1 (a filled seen set, pending rows from
     round 0) it records the candidates handed to the seen filter, the live
-    queue handed to the scheduler, the scheduled frame, the Bloom delta,
-    the seen write, and the partitions of the three cached frames (probe,
-    live queue, scheduled) as the round materialized them; and, for the
+    queue handed to the scheduler, the scheduled frame, the Bloom update
+    (the frame of the ``bloom`` write), the seen write, and the partitions
+    of the three cached frames (probe, live queue, scheduled) as the round
+    materialized them; and, for the
     whole run, each ``top`` the scheduler was handed and each
     ``budget_top`` call."""
     drv = FrontierDriver(spark, str(tmp_path_factory.mktemp("exchanges")), _cfg())
-    seen_in, sched_in, deltas, probes, seen_w, tops, top_jobs = [], [], [], [], [], [], []
+    seen_in, sched_in, blooms, probes, seen_w, tops, top_jobs = [], [], [], [], [], [], []
     parts = {}
     orig_filter, orig_sched = seenmod.filter_new_urls, pol.schedule_round
     orig_probe, orig_top = seenmod.bloom_probe, pol.budget_top
-    orig_delta, orig_write = drv._bloom_delta, Catalog.write_table
+    orig_write = Catalog.write_table
 
     def filt(spark_, cand, *a, **kw):
         seen_in.append(cand)
@@ -144,6 +145,9 @@ def crawl(spark, corpus, tmp_path_factory):
     def write(cat, df, table, round_id, partition_by=None):
         if table == "seen":
             seen_w.append(df)
+        if table == "bloom":
+            _plan(df)  # planned (and kept) while the scheduled batch is cached
+            blooms.append(df)
         if table == "fetch_batch_1":
             # the frames are cached and materialized here: .rdd scans the cache
             (live, scheduled), probe = sched_in[-1], probes[-1]
@@ -151,12 +155,6 @@ def crawl(spark, corpus, tmp_path_factory):
                           (("probe", probe), ("live", live), ("scheduled", scheduled))})
         return orig_write(cat, df, table, round_id, partition_by)
 
-    def delta(*a, **kw):
-        out = orig_delta(*a, **kw)
-        deltas.append(out)
-        return out
-
-    drv._bloom_delta = delta
     seenmod.filter_new_urls, pol.schedule_round = filt, schedule
     seenmod.bloom_probe, pol.budget_top, Catalog.write_table = probe, budget_top, write
     try:
@@ -165,7 +163,7 @@ def crawl(spark, corpus, tmp_path_factory):
         seenmod.filter_new_urls, pol.schedule_round = orig_filter, orig_sched
         seenmod.bloom_probe, pol.budget_top, Catalog.write_table = orig_probe, orig_top, orig_write
     live, scheduled = sched_in[1]
-    out = _Crawl((drv, counters, seen_in[1], live, scheduled, deltas[1]))
+    out = _Crawl((drv, counters, seen_in[1], live, scheduled, blooms[1]))
     out.extra = {"parts": parts, "seen_write": seen_w[1], "tops": tops, "top_jobs": top_jobs}
     return out
 
@@ -219,20 +217,42 @@ def test_no_exchange_carries_h1_h2(crawl, plan_ops):
     assert {"h1", "h2"} <= set(cand.columns)
 
 
-def test_bloom_delta_exchange_carries_bucket_h1_h2_only(crawl, plan_ops):
-    """The one exchange that carries h1/h2: the Bloom delta build shuffles
-    the two hashes it folds into the bits, with the bucket and without the
-    url_hash they derive from. Every other exchange under it has neither."""
-    *_, delta = crawl
+def _python_nodes(df):
+    """The Python operators of ``df``'s own plan: cached relations are
+    leaves here (the cached scheduled batch holds the Bloom probe)."""
+    out = []
+
+    def walk(node):
+        cls = _name(node)
+        if "Python" in cls or "Pandas" in cls or "Arrow" in cls:
+            out.append(node)
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        for k in _kids(node):
+            walk(k)
+
+    walk(_plan(df))
+    return out
+
+
+def test_bloom_update_is_one_kernel_and_one_hash_exchange(crawl, plan_ops):
+    """The Bloom maintenance of a round is one Python node, which takes the
+    old filter rows and the scheduled keys, and the one exchange that
+    carries h1/h2: it shuffles the two hashes the kernel folds into the
+    bits, with the bucket and without the url_hash they derive from. Every
+    other exchange under it has neither."""
+    *_, update = crawl
+    (kernel,) = _python_nodes(update)
+    assert _name(kernel) == "FlatMapCoGroupsInPandasExec", kernel.simpleString(25)
     exchanges = [
-        (line, _output(node)) for cls, line, node in plan_ops(delta)
+        (line, _output(node)) for cls, line, node in plan_ops(update)
         if cls == "ShuffleExchangeExec"
     ]
     with_hashes = [(line, out) for line, out in exchanges if {"h1", "h2"} & set(out)]
     assert len(with_hashes) == 1, with_hashes
     ((line, out),) = with_hashes
     assert "hashpartitioning(bucket#" in line
-    # applyInPandas shuffles its grouping key next to the input columns
+    # the grouped kernel shuffles its grouping key next to the input columns
     assert set(out) == {"bucket", "h1", "h2"}, out
     assert any("hashpartitioning(host" in line for line, _ in exchanges)
 
@@ -250,9 +270,9 @@ def test_round_is_data_sized(crawl, plan_ops):
     have fewer partitions than n_buckets, the cached probe and scheduled
     batch fewer than the shuffle partitions (AQE coalesced the last stage
     of their cached plans), and no exchange or coalesce of the round,
-    cached plans and the Bloom delta and seen write included, is n_buckets
+    cached plans and the Bloom update and seen write included, is n_buckets
     wide. Each bucket's seen directory still gets one file."""
-    drv, _, _, live, scheduled, delta = crawl
+    drv, _, _, live, scheduled, update = crawl
     parts = crawl.extra["parts"]
     n_shuffle = _shuffle_partitions(live)
     assert n_shuffle != N_BUCKETS  # else the width check below proves nothing
@@ -261,7 +281,7 @@ def test_round_is_data_sized(crawl, plan_ops):
     widths = [
         (cls, line, node.numPartitions() if cls == "CoalesceExec"
          else node.outputPartitioning().numPartitions())
-        for df in (scheduled, delta, crawl.extra["seen_write"])
+        for df in (scheduled, update, crawl.extra["seen_write"])
         for cls, line, node in plan_ops(df)
         if cls in ("ShuffleExchangeExec", "CoalesceExec")
     ]

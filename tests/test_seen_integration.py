@@ -3,7 +3,10 @@
 from pyspark.sql import functions as F
 
 from image_search_indexing_spark.frontier.seen import (
-    build_bloom_table,
+    BLOOM_REBUILD_LOAD,
+    _bloom_params,
+    bloom_probe,
+    bloom_update,
     build_cuckoo_table,
     filter_new_urls,
     with_hashes,
@@ -18,10 +21,22 @@ def _urls(spark, lo, hi):
     )
 
 
+def _blooms(seen):
+    """Per-bucket Blooms of a seen table, each sized for its own keys at 12
+    bits per key (fpp about 0.3%), so some new candidates test Bloom-positive
+    and only the exact confirm keeps them. ``bloom_plan`` cannot size them so:
+    at 12 bits per key its capacity policy rebuilds every bucket at 4x."""
+    counts = {int(r["bucket"]): int(r["count"]) for r in seen.groupBy("bucket").count().collect()}
+    stats = {b: (_bloom_params(n, 12)[0], n) for b, n in counts.items()}
+    return bloom_update(None, seen, None, stats, set(), 12)
+
+
 def test_bloom_routing_is_exact(spark, cache):
     seen = _urls(spark, 0, 3000)
     cand = _urls(spark, 2000, 6000)
-    bloom = build_bloom_table(seen, 16)
+    bloom = _blooms(seen)
+    fp = bloom_probe(spark, _urls(spark, 3000, 6000), bloom).where("maybe_seen").count()
+    assert fp > 0  # some unseen URLs take the Bloom-positive route
     new = filter_new_urls(spark, cand, seen, bloom, cache=cache)
     assert new.count() == 3000  # ids 3000..5999; bloom fp never drops a URL
     # without bloom, identical result (bloom is routing only)
@@ -32,7 +47,7 @@ def test_bloom_routing_is_exact(spark, cache):
 def test_cuckoo_deletions_resurrect(spark, cache):
     seen = _urls(spark, 0, 3000)
     cand = _urls(spark, 2000, 6000)
-    bloom = build_bloom_table(seen, 16)
+    bloom = _blooms(seen)
     tomb = _urls(spark, 2500, 3000)  # re-crawl invalidation of 500 URLs
     cuckoo = build_cuckoo_table(tomb)
     new = filter_new_urls(spark, cand, seen, bloom, tomb, cuckoo, cache=cache)
@@ -44,16 +59,16 @@ def test_cuckoo_deletions_resurrect(spark, cache):
 
 def test_cuckoo_probe_runs_on_candidate_slice_not_seen_table(spark, plan_ops, cache):
     """Scale-shape regression guard: with tombstones active, the cuckoo
-    cogroup must probe the flagged maybe-seen candidates, NOT the full seen
-    table — an earlier shape piped O(seen) rows through Arrow every round
-    once any tombstone existed. Witness: exactly two Python cogroups (one
-    Bloom probe, read by both routes from its cache, and one cuckoo probe),
-    and the cuckoo cogroup's subtree holds the ``__in_seen`` membership
-    flag and the Bloom-positive filter — it consumes the flagged maybe
-    slice, not the seen relation."""
+    cogroup must probe the maybe-seen candidates found in seen, NOT the
+    full seen table — an earlier shape piped O(seen) rows through Arrow
+    every round once any tombstone existed. Witness: exactly two Python
+    cogroups (one Bloom probe, read by every route from its cache, and one
+    cuckoo probe), and the cuckoo cogroup's subtree holds the semi join
+    against seen and the Bloom-positive filter — it consumes the in-seen
+    maybe slice, not the seen relation."""
     seen = _urls(spark, 0, 3000)
     cand = _urls(spark, 2000, 6000)
-    bloom = build_bloom_table(seen, 16)
+    bloom = _blooms(seen)
     tomb = _urls(spark, 2500, 3000)
     cuckoo = build_cuckoo_table(tomb)
     new = filter_new_urls(spark, cand, seen, bloom, tomb, cuckoo, cache=cache)
@@ -61,7 +76,7 @@ def test_cuckoo_probe_runs_on_candidate_slice_not_seen_table(spark, plan_ops, ca
     assert len(cogroups) == 2, [n.simpleString(25) for n in cogroups]
     (cuckoo_node,) = [n for n in cogroups if "maybe_deleted" in n.simpleString(25)]
     subtree = cuckoo_node.toString()
-    assert "__in_seen" in subtree, subtree
+    assert "LeftSemi" in subtree, subtree
     assert "AND maybe_seen" in subtree and "NOT maybe_seen" not in subtree, subtree
 
 
@@ -84,7 +99,7 @@ def test_bloom_rebuild_keeps_fpp_bounded(spark, corpus, tmpdir_path):
     stats = {int(r["bucket"]): (int(r["m"]), int(r["n_items"])) for r in bloom.collect()}
     # every bucket ends within its load budget (n * bits_per_key <= load * m)
     for b, (m, n) in stats.items():
-        assert n * cfg.bits_per_key <= cfg.bloom_rebuild_load * m, (b, m, n)
+        assert n * cfg.bits_per_key <= BLOOM_REBUILD_LOAD * m, (b, m, n)
 
     fresh = with_hashes(
         spark.range(50_000).select(
@@ -104,7 +119,7 @@ def test_missing_bloom_row_routes_to_exact_check(spark, cache):
     changes nothing against running with no Bloom at all."""
     seen = _urls(spark, 0, 3000)
     cand = _urls(spark, 2000, 6000)
-    bloom = build_bloom_table(seen, 16).where(F.col("bucket") != 3)
+    bloom = _blooms(seen).where(F.col("bucket") != 3)
     got = filter_new_urls(spark, cand, seen, bloom, cache=cache)
     want = filter_new_urls(spark, cand, seen, None, cache=cache)
     got, want = ({r["url_hash"] for r in df.collect()} for df in (got, want))
@@ -119,7 +134,7 @@ def test_filter_hash_exchange_count(spark, plan_ops):
     seen-key join. The probe is cached, so both routes share its three."""
     seen = _urls(spark, 0, 3000)
     cand = _urls(spark, 2000, 6000)
-    bloom = build_bloom_table(seen, 16)
+    bloom = _blooms(seen)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     cache = []
@@ -143,7 +158,7 @@ def test_bloom_negatives_never_meet_seen_table(spark, plan_ops):
     the negatives reach the output without any join."""
     seen = _urls(spark, 0, 3000)
     cand = _urls(spark, 2000, 6000)
-    bloom = build_bloom_table(seen, 16)
+    bloom = _blooms(seen)
     for threshold in ("-1", None):  # shuffled join, then broadcast join
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         if threshold:
