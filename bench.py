@@ -527,15 +527,6 @@ def main() -> None:
         "contended": contended,
         "query_reps_min_of": max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))),
     }
-    # surface the recorded N-vs-4N evidence (bench.py --scaling artifact)
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH/BASELINE.md")) as f:
-            import re
-
-            effs = re.findall(r"local\[(\d+)\] → local\[(\d+)\].*efficiency = ([0-9.]+)", f.read())
-            extras["scaling"] = {f"{a}_to_{b}": float(e) for a, b, e in effs}
-    except OSError:
-        pass
     print(
         json.dumps(
             {

@@ -252,6 +252,8 @@ class FrontierOracle:
                 counters[k] = counters.get(k, 0) + v
             cand_rows.extend(rows)
 
+        # robots rules filter a URL when it is discovered, never the queue:
+        # a URL already pending is scheduled even if these rules disallow it
         blocked = [r for r in cand_rows if self._robots_blocked(r)]
         counters["robots_blocked"] = len(blocked)
         cand_rows = [r for r in cand_rows if not self._robots_blocked(r)]

@@ -9,7 +9,10 @@ north-rule additions. Semantics here:
   prepared frame: the round driver prepares it once and reuses it every
   round); ``robots_filter`` **broadcast-joins** that (small dimension) and
   evaluates it with ``F.exists`` — no row explosion, no UDF, no extra
-  shuffle.
+  shuffle. The round driver applies robots rules when a URL is
+  discovered, never to the queue: a URL already in ``pending`` is
+  scheduled in a later round even when that round's rules disallow it
+  (``frontier/oracle.py`` has the same semantics).
 - **budgets**: per-host ``max_fetch_per_round`` (broadcast dimension);
   ``host_budgets`` folds a host listed twice to its strictest rule, and
   hosts without a configured budget get ``default_budget``.

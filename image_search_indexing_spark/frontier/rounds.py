@@ -14,7 +14,8 @@ SURVEY.md §7.0):
   exact join) → per-host politeness top-k (one host window; a partial
   per-partition top-k before its exchange) → one per-bucket count
   (scheduled total + lineage) → fetch batch → append scheduled URLs to
-  ``seen`` + one Bloom update (``seen.bloom_plan`` decides each bucket's
+  ``seen`` + rewrite ``pending`` as the live queue minus the scheduled
+  URLs + one Bloom update (``seen.bloom_plan`` decides each bucket's
   size from counts, ``seen.bloom_update`` folds the scheduled keys into the
   filters or rebuilds a bucket from seen, in one grouped kernel) → atomic
   checkpoint (its manifest records each table's schema and each Bloom's
@@ -52,6 +53,7 @@ the input corpus, as the sandbox has no network.
 from __future__ import annotations
 
 import logging
+import os
 import weakref
 from dataclasses import dataclass
 
@@ -93,8 +95,7 @@ class FrontierConfig:
     expected_per_bucket: int = 4096  # Bloom sizing: per-bucket m recorded in the table
     spans_cap: int = extract.MAX_IMAGE_IN_HTML
     use_bloom: bool = True
-    # pending queue is delta-appended; compact (fold deltas + drop seen) when
-    # the manifest lists this many delta files for it
+    # unused (every round rewrites pending whole); perfbench/crawl.py still sets it
     pending_compact_every: int = 8
 
 
@@ -131,22 +132,16 @@ def _dedup_candidates(cand: DataFrame) -> DataFrame:
     """One deterministic champion per url_hash (A5-A7 tie-break style).
 
     Grouped by (bucket, url_hash) — the same groups, as bucket derives from
-    url_hash — so an input hash-partitioned by ``bucket`` needs no exchange.
-    ``__is_new``, when present, marks rows observed THIS round (vs rows
-    read back from pending deltas); the group keeps max(__is_new) so the
-    round driver knows which champions carry a fresh observation."""
+    url_hash — so an input hash-partitioned by ``bucket`` needs no exchange."""
     keys = ("bucket", "url_hash")
     ordk = F.struct(
         F.col("priority"), F.col("page_ts"), F.length("ref_url"), F.col("ref_url"),
         F.col("doc_id"), F.col("offset"),
     )
-    aggs = [F.min_by(F.struct(*[c for c in CAND_COLS if c not in keys]), ordk).alias("c")]
-    flagged = "__is_new" in cand.columns
-    if flagged:
-        aggs.append(F.max("__is_new").alias("__is_new"))
-    out = cand.groupBy(*keys).agg(*aggs)
-    cols = [c if c in keys else f"c.{c}" for c in CAND_COLS] + (["__is_new"] if flagged else [])
-    return out.select(*cols)
+    out = cand.groupBy(*keys).agg(
+        F.min_by(F.struct(*[c for c in CAND_COLS if c not in keys]), ordk).alias("c")
+    )
+    return out.select(*[c if c in keys else f"c.{c}" for c in CAND_COLS])
 
 
 class FrontierDriver:
@@ -273,7 +268,13 @@ class FrontierDriver:
     ) -> dict[str, int]:
         """Execute one frontier round and commit its checkpoint; a round that
         raises commits nothing and releases the frames it cached, the
-        prepared side tables too (the next round prepares them again)."""
+        prepared side tables too (the next round prepares them again).
+
+        The first round over a checkpoint of the older delta layout (several
+        pending files) reads their stale rows too: the seen filter drops
+        them, but that round's ``queue_after_dedup`` and ``dup_dropped``
+        count them, so only these two counters differ from an uninterrupted
+        run's. The round leaves one pending file."""
         spark, cfg, cat = self.spark, self.cfg, self.catalog
         snap = cat.snapshot()
         parent = snap["snapshot_id"] if snap else None
@@ -322,23 +323,21 @@ class FrontierDriver:
             # 1. this round's arriving documents (closed-world fetch simulation)
             rdocs = docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_rounds)) == round_id)
             cand, finish_counters = self._candidates(rdocs, meta, host_prio, rules)
-            cand = cand.withColumn("__is_new", F.lit(1))
 
             # 2. merge with the carried-over queue, dedup deterministically.
-            # The pending queue is a list of append-only DELTA files (plus an
-            # occasional compaction) — rows already scheduled in later rounds
-            # remain in old deltas and are dropped here by the seen filter, so
-            # per-round pending WRITE IO is O(new discoveries), not O(queue).
+            # ``pending`` is the live queue the last round left (step 5): no
+            # URL of the effective seen set (seen minus tombstones), no
+            # url_hash twice. So the seen filter never drops a champion that
+            # came from it, and the merged queue is the oracle's. A checkpoint
+            # of the older delta layout lists several pending files whose
+            # stale rows (URLs scheduled since) the seen filter drops; its
+            # first round here rewrites the table whole.
             from pyspark.sql import Observation
 
             if pending is not None:
                 # pending files written before h1/h2 left CAND_COLS still read:
                 # the select drops the two columns
-                cand = cand.unionByName(
-                    pending.select(*CAND_COLS)
-                    .withColumn("__is_new", F.lit(0))
-                    .repartition("bucket")
-                )
+                cand = cand.unionByName(pending.select(*CAND_COLS).repartition("bucket"))
             # both sides are hash-partitioned by bucket (the new rows by the
             # extraction's bucket exchange) at one width, and AQE coalesces the
             # two exchanges with one spec, so the partition-aware union
@@ -349,9 +348,7 @@ class FrontierDriver:
             # last exchange, for the Bloom/cuckoo probes.
             cand = seenmod.with_probe_hashes(_dedup_candidates(cand))
             obs_queue = Observation()
-            cand = cand.observe(
-                obs_queue, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
-            )
+            cand = cand.observe(obs_queue, F.count(F.lit(1)).alias("n"))
 
             # 3. seen-set filter (bloom prefilter routes; exact join decides;
             # tombstoned URLs — re-crawl invalidation — count as unseen).
@@ -364,9 +361,7 @@ class FrontierDriver:
                 key="url_hash", cache=cached,
             )
             obs_live = Observation()
-            new_urls = new_urls.observe(
-                obs_live, F.count(F.lit(1)).alias("n"), F.sum("__is_new").alias("n_new")
-            )
+            new_urls = new_urls.observe(obs_live, F.count(F.lit(1)).alias("n"))
             # host is a pure derivation of ref_url, recomputed AFTER the dedup
             # + seen filter (politeness is the first consumer) — the bucket
             # exchange and the pending files carry no host/surt strings
@@ -390,16 +385,12 @@ class FrontierDriver:
             delta_n = {int(r["bucket"]): int(r["count"]) for r in sorted(lineage_rows)}
             n_sched = sum(delta_n.values())
             counters = finish_counters(obs_errors)
-            qd, live = _obs_get(obs_queue, obs_errors), _obs_get(obs_live, obs_errors)
-            n_merged_new = int(qd.get("n_new") or 0)  # champions w/ a fresh observation
-            n_live = int(live.get("n") or 0)  # live queue size (post seen filter)
-            n_live_new = int(live.get("n_new") or 0)
-            # live queue + fresh champions the seen filter dropped == the oracle's
-            # "merged queue" (stale delta rows are invisible to it)
-            n_queue = n_live + (n_merged_new - n_live_new)
+            # the merged queue: the oracle's, as no champion from pending is seen
+            n_queue = int(_obs_get(obs_queue, obs_errors).get("n") or 0)
+            n_live = int(_obs_get(obs_live, obs_errors).get("n") or 0)  # post seen filter
             n_cand = counters["round_candidates"]
 
-            # 5. state updates: pending += delta (new − scheduled); seen += scheduled;
+            # 5. state updates: pending = live queue − scheduled; seen += scheduled;
             # the Bloom takes the scheduled keys (seen.bloom_plan/bloom_update)
             sched_keys = scheduled.select("url_hash", "bucket")
             # h1/h2 are derived after the bucket exchange of the seen write,
@@ -441,23 +432,10 @@ class FrontierDriver:
                     tables.pop("tombstones", None)
                     tables.pop("cuckoo", None)
 
-            pend_paths = list(tables.get("pending", []))
-            not_scheduled = lambda df: df.join(
-                scheduled.select("url_hash"), "url_hash", "left_anti"
-            )
-            if len(pend_paths) >= cfg.pending_compact_every - 1:
-                # compaction round: fold every delta + drop scheduled/seen rows
-                # into one table (amortized — most rounds write only the delta)
-                pend_df = not_scheduled(new_urls).select(*CAND_COLS)
-                tables["pending"] = [cat.write_table(pend_df, "pending", round_id)]
-                counters["pending_compacted"] = 1
-            else:
-                delta_pend = not_scheduled(new_urls.where(F.col("__is_new") == 1)).select(
-                    *CAND_COLS
-                )
-                tables["pending"] = pend_paths + [
-                    cat.write_table(delta_pend, "pending", round_id)
-                ]
+            # the live queue minus this round's batch, as the table's only
+            # path (the invariant step 2 counts on)
+            pend_df = new_urls.join(scheduled.select("url_hash"), "url_hash", "left_anti")
+            tables["pending"] = [cat.write_table(pend_df.select(*CAND_COLS), "pending", round_id)]
 
             if cfg.use_bloom:
                 # planned from counts alone; one grouped kernel folds the
@@ -543,12 +521,23 @@ class FrontierDriver:
         decisions always come from the exact tombstone table
         (seen.filter_new_urls), so false positives never resurrect or drop
         the wrong URL.
+
+        ``pending`` must be one round's live queue: a checkpoint of the
+        older delta layout holds stale rows of URLs scheduled since, which a
+        tombstone would bring back to the queue without a rediscovery. Such
+        a checkpoint raises ``ValueError`` and commits nothing; one round
+        rewrites its pending table.
         """
         spark, cfg, cat = self.spark, self.cfg, self.catalog
         snap = cat.snapshot()
         if snap is None:
             raise ValueError("nothing crawled yet — no seen set to invalidate")
         tables = dict(snap["tables"])
+        if [os.path.basename(p) for p in tables.get("pending", [])] != [f"round={snap['round']}"]:
+            raise ValueError(
+                "the pending queue holds delta files of an older checkpoint layout: "
+                "run one round first"
+            )
         counters = dict(snap.get("counters", {}))
         sid_next = snap["snapshot_id"] + 1
 
@@ -564,35 +553,12 @@ class FrontierDriver:
         # which of these are actually in the (effective) seen set — read
         # only the affected buckets (partition pruning on the seen table)
         seen = cat.read_table(spark, "seen", snap)
-        n_removed = 0
-        stale = None  # tombstoned AND once-scheduled url_hashes
+        n_removed = 0  # tombstoned AND once-scheduled url_hashes
         if seen is not None:
             buckets = [int(r["bucket"]) for r in fresh.select("bucket").distinct().collect()]
             if buckets:
                 seen_slice = seen.where(F.col("bucket").isin(buckets)).select("url_hash")
-                stale = fresh.join(seen_slice, "url_hash", "left_semi").select(
-                    "url_hash"
-                ).persist()
-                n_removed = stale.count()
-
-        # Purge the pending DELTAS of rows for tombstoned-and-once-scheduled
-        # URLs: a URL scheduled from the queue in round r+1 leaves its stale
-        # row behind in round r's delta file; tombstoning it would otherwise
-        # resurrect that stale row next round and reschedule the URL WITHOUT
-        # a rediscovery — the oracle (which deletes pending entries at
-        # schedule time) only reschedules on rediscovery. A tombstoned URL
-        # that was never scheduled keeps its live queue rows (invalidating an
-        # uncrawled URL is a no-op for the queue, matching the oracle), and
-        # rows discovered AFTER this call are written fresh and stay live.
-        # Cost: one O(queue) compaction per invalidate() — invalidation is a
-        # rare administrative event, and ``stale`` is broadcast-small.
-        if stale is not None and n_removed > 0:
-            pending = cat.read_table(spark, "pending", snap)
-            if pending is not None:
-                purged = pending.join(F.broadcast(stale), "url_hash", "left_anti")
-                tables["pending"] = [cat.write_table(purged, "pending", f"{sid_next}-inv")]
-        if stale is not None:
-            stale.unpersist()
+                n_removed = fresh.join(seen_slice, "url_hash", "left_semi").count()
 
         merged = ts_new if old_tomb is None else old_tomb.unionByName(
             ts_new.join(old_tomb.select("url_hash"), "url_hash", "left_anti")
@@ -614,9 +580,11 @@ class FrontierDriver:
         return {"invalidated_in_seen": n_removed}
 
     def pending_live(self) -> DataFrame | None:
-        """The LIVE pending queue: delta files folded to champions, rows
+        """The LIVE pending queue: pending rows folded to champions, rows
         scheduled in the meantime (now in ``seen``) dropped — the same view
-        a round's step 2+3 reconstructs, and what compaction materializes.
+        a round's step 2+3 reconstructs. For a checkpoint a round wrote this
+        is ``pending`` itself; for one of the older delta layout it drops
+        the stale rows.
 
         Seen-ness is the EFFECTIVE set (seen minus tombstones), decided by
         ``seen.filter_new_urls`` without filters: with an active

@@ -225,7 +225,6 @@ def ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF-style approximate top-k: (query_id, neighbor_id, rank).
 
@@ -234,12 +233,7 @@ def ivf_topk(
     fraction is nprobe/n_centroids of the corpus — the 100 TB path when
     hyperplane LSH recall is insufficient. With ``nprobe == n_centroids``
     this degenerates to exact brute force (the property the unit test
-    pins against ``cosine_topk``).
-
-    ``broadcast_queries=False`` switches the probe join to a shuffle join
-    partitioned by centroid id — use it when the query set itself is
-    table-sized (≫ broadcast threshold); both sides then co-partition on
-    ``cid`` and no executor holds the full query set.
+    pins against ``cosine_topk``). The query side is broadcast.
     """
     cents = train_ivf_centroids(corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col)
     c = spread(corpus.select(
@@ -248,8 +242,7 @@ def ivf_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
     ).withColumn("cid", F.explode(_nearest_centroid_ids(F.col("qv"), cents, nprobe)))
-    qside = F.broadcast(q) if broadcast_queries else q
-    scored = c.join(qside, "cid").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+    scored = c.join(F.broadcast(q), "cid").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -337,14 +330,11 @@ def ann_topk_lsh(
     n_planes: int = 12,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket.
 
-    One equi-join on the signature instead of a cross join — the scan of
-    the corpus partitions by bucket; recall trades off with n_planes.
-    ``broadcast_queries=False`` makes it a shuffle join co-partitioned on
-    the signature for table-sized query sets (query ≫ broadcast threshold).
+    One equi-join on the signature against the broadcast query side instead
+    of a cross join; recall trades off with n_planes.
     """
     sig = lambda col: hyperplane_signature(col, dim, n_planes)
     # Per-pair HOF cosine kept on purpose: the banding means only a few
@@ -361,8 +351,7 @@ def ann_topk_lsh(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )).withColumn("bucket", sig(F.col("cv")))
-    qside = F.broadcast(q) if broadcast_queries else q
-    scored = c.join(qside, "bucket").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+    scored = c.join(F.broadcast(q), "bucket").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

@@ -14,7 +14,7 @@ from image_search_indexing_spark.frontier.oracle import (
     OracleConfig,
     OracleState,
 )
-from image_search_indexing_spark.frontier.rounds import FrontierConfig, FrontierDriver
+from image_search_indexing_spark.frontier.rounds import CAND_COLS, FrontierConfig, FrontierDriver
 
 N_ROUNDS = 3
 BATCH_COLS = [
@@ -105,15 +105,6 @@ def test_pending_matches_oracle(spark, engine_and_oracle):
         for h, row in state.pending.items()
     }
     assert got_rows == want_rows
-
-
-def test_pending_is_delta_appended(spark, engine_and_oracle):
-    """Per-round pending writes are DELTAS (append-only manifest entries),
-    not full queue rewrites — the per-round write-IO scale contract."""
-    drv, _, _ = engine_and_oracle
-    snap = drv.catalog.snapshot()
-    # 3 rounds below the compaction threshold → 3 listed delta paths
-    assert len(snap["tables"]["pending"]) == N_ROUNDS
 
 
 def test_counters_match_oracle(engine_and_oracle):
@@ -256,11 +247,10 @@ def test_invalidation_of_queue_scheduled_url_without_rediscovery(
 ):
     """A URL discovered in round 0, scheduled FROM THE QUEUE in round 1,
     then invalidated, must NOT reappear in round 2 unless round 2
-    rediscovers it. The stale copy in round 0's pending delta is purged at
-    invalidate() time (FrontierDriver.invalidate), matching the oracle,
-    which deletes pending entries at schedule time — without the purge the
-    tombstone would resurrect the stale delta row and reschedule the URL
-    with no rediscovery."""
+    rediscovers it. Round 1 rewrote pending as its live queue minus its
+    batch, so no stale copy of the URL is left there for the tombstone to
+    bring back — matching the oracle, which deletes pending entries at
+    schedule time."""
     wd = str(tmp_path_factory.mktemp("frontier-inv-stale"))
     cfgs = dict(n_rounds=3, n_buckets=16, default_budget=2)
     drv = FrontierDriver(spark, wd, FrontierConfig(**cfgs))
@@ -307,7 +297,7 @@ def test_invalidation_of_queue_scheduled_url_without_rediscovery(
     assert got == want
     assert not ({r["url_hash"] for r in got} & set(target)), (
         "invalidated-but-not-rediscovered URLs must not resurrect from "
-        "stale pending deltas"
+        "the pending table"
     )
     for k in ("scheduled", "seen_total", "pending_after", "queue_after_dedup"):
         assert c2.get(k, 0) == c2_oracle.get(k, 0), k
@@ -317,39 +307,87 @@ def test_invalidation_of_queue_scheduled_url_without_rediscovery(
     assert live_hashes == set(state.pending)
 
 
-def test_pending_compaction_preserves_equality(spark, corpus, corpus_py, tmp_path_factory):
-    """With a low compaction threshold the pending manifest folds back to
-    one table on schedule, and the live queue still equals the oracle's."""
-    wd = str(tmp_path_factory.mktemp("frontier-compact"))
-    drv = FrontierDriver(
-        spark,
-        wd,
-        FrontierConfig(
-            n_rounds=4, n_buckets=16, default_budget=3,
-            pending_compact_every=2,
-        ),
-    )
-    args = (corpus["docs"], corpus["meta"], corpus["seeds"], corpus["politeness"], corpus["robots"])
-    counters = drv.run(*args, n_rounds=4)
-    snap = drv.catalog.snapshot()
-    # every 2nd round compacts → never more than 2 pending paths listed
-    assert len(snap["tables"]["pending"]) <= 2
-    assert any(c.get("pending_compacted") for c in counters)
+@pytest.fixture(scope="module")
+def delta_layout(spark, corpus, tmp_path_factory):
+    """A checkpoint of the older layout, whose pending table was a list of
+    delta files: rounds 0-1, then round 0's pending directory listed again
+    before round 1's, so the queue read back holds round 0's rows of
+    ``stale`` URLs round 1 scheduled. Before the resume, ``invalidate()``
+    of batch 0 is tried on it and on the one pending file the older
+    ``invalidate()`` wrote (which kept the stale rows of URLs it did not
+    tombstone); each error message and the snapshot id after it are kept."""
+    import json
+    import os
 
-    oracle = FrontierOracle(
-        OracleConfig(n_rounds=4, default_budget=3),
-        seeds=corpus_py["seeds"],
-        politeness=corpus_py["politeness"],
-        robots=corpus_py["robots"],
-    )
-    state = oracle.run(corpus_py["docs"], 4)
-    got = {r["url_hash"] for r in drv.pending_live().collect()}
-    assert got == set(state.pending)
-    for r in range(4):
-        assert _batch_rows(drv, r) == [
-            {k: row[k] for k in BATCH_COLS} for row in state.fetch_batches[r]
-        ]
-    assert counters[-1]["pending_after"] == state.counters[-1]["pending_after"]
+    wd = str(tmp_path_factory.mktemp("frontier-delta-layout"))
+    args = (corpus["docs"], corpus["meta"], corpus["seeds"], corpus["politeness"], corpus["robots"])
+    cfg = FrontierConfig(n_rounds=N_ROUNDS, n_buckets=16, default_budget=5)
+    drv = FrontierDriver(spark, wd, cfg)
+    drv.run(*args, n_rounds=2)
+    cat = drv.catalog
+    sid = cat.current_snapshot_id()
+    snap_path = os.path.join(cat.meta_dir, f"snapshot-{sid}.json")
+    with open(snap_path) as f:
+        snap = json.load(f)
+    (path1,) = snap["tables"]["pending"]
+    path0 = os.path.join(os.path.dirname(path1), "round=0")
+    stale = spark.read.parquet(path0).join(drv.fetch_batch(1), "url_hash", "left_semi").count()
+
+    def list_pending(paths):
+        snap["tables"]["pending"] = paths
+        with open(snap_path, "w") as f:
+            json.dump(snap, f)
+
+    inv = drv.fetch_batch(0).select("url_hash")
+    refused = []
+    for paths in ([path0, path1], [os.path.join(os.path.dirname(path1), f"round={sid}-inv")]):
+        list_pending(paths)
+        try:
+            drv.invalidate(inv)
+            refused.append((None, cat.current_snapshot_id()))
+        except ValueError as e:
+            refused.append((str(e), cat.current_snapshot_id()))
+    list_pending([path0, path1])
+    resumed = FrontierDriver(spark, wd, cfg).run(*args)
+    return drv, sid, stale, refused, resumed
+
+
+def test_invalidate_refuses_delta_layout_checkpoint(delta_layout):
+    """On a checkpoint whose pending files may hold stale rows,
+    ``invalidate()`` raises and commits nothing: a tombstone would bring
+    those rows back to the queue without a rediscovery."""
+    _, sid, stale, refused, _ = delta_layout
+    assert stale > 0, "round 1 must schedule some of round 0's queue"
+    assert len(refused) == 2
+    for msg, sid_after in refused:
+        assert msg is not None and "run one round first" in msg, msg
+        assert sid_after == sid
+
+
+def test_resume_from_delta_layout_checkpoint(spark, delta_layout, engine_and_oracle):
+    """The resumed round drops the stale rows in the seen filter, gives the
+    uninterrupted run's batches, seen set, live queue and counters, and
+    leaves one pending path. Only its ``queue_after_dedup`` and
+    ``dup_dropped`` count the stale rows."""
+    drv, _, stale, _, resumed = delta_layout
+    drv_full, counters_full, _ = engine_and_oracle
+    assert len(resumed) == 1
+    for r in range(N_ROUNDS):
+        assert _batch_rows(drv, r) == _batch_rows(drv_full, r), r
+    seen = lambda d: sorted(x["url_hash"] for x in d.seen_table().select("url_hash").collect())
+    assert seen(drv) == seen(drv_full)
+    assert len(drv.catalog.snapshot()["tables"]["pending"]) == 1
+    rows = lambda df: sorted(map(tuple, df.select(*CAND_COLS).collect()))
+    pending = lambda d: rows(d.catalog.read_table(spark, "pending"))
+    assert pending(drv) == pending(drv_full) == rows(drv.pending_live())
+    got, want = resumed[0], counters_full[N_ROUNDS - 1]
+    extra = got["queue_after_dedup"] - want["queue_after_dedup"]
+    assert 0 < extra <= stale
+    assert want["dup_dropped"] - got["dup_dropped"] == extra
+    skip = ("queue_after_dedup", "dup_dropped")
+    assert {k: v for k, v in got.items() if k not in skip} == {
+        k: v for k, v in want.items() if k not in skip
+    }
 
 
 def test_span_cap_counters_match_oracle(spark, corpus, corpus_py, tmp_path_factory):

@@ -298,25 +298,6 @@ def test_ivf_topk_degenerates_to_exact_and_recalls(spark):
         assert recall >= floor, (nc, npr, recall)
 
 
-def test_ann_shuffle_join_matches_broadcast(spark):
-    """broadcast_queries=False (table-sized query sets) must produce
-    bit-identical results and drop the explicit broadcast HINT — the join
-    strategy is then AQE's size-based choice (it may still broadcast a
-    small side at runtime; at table scale it stays a shuffle join)."""
-    from image_search_indexing_spark.operators.similarity import ann_topk_lsh, ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 16)
-    c = emb.where(F.col("vec_id") >= 16)
-
-    for fn, kw in ((ann_topk_lsh, dict(n_planes=4)), (ivf_topk, dict(n_centroids=8, nprobe=3))):
-        a = fn(q, c, dim=64, k=5, broadcast_queries=True, **kw)
-        b = fn(q, c, dim=64, k=5, broadcast_queries=False, **kw)
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-        assert "ResolvedHint" in a._jdf.queryExecution().analyzed().toString()
-        assert "ResolvedHint" not in b._jdf.queryExecution().analyzed().toString()
-
-
 def test_synthetic_media_binary_roundtrip(spark):
     """Binary closed-form payloads (r4): every generated PNG/BMP/GIF/JPEG
     container must (a) sniff to its real MIME from magic bytes, (b)
