@@ -9,18 +9,17 @@ SURVEY.md §7.0):
   one) → docs slice → extract refs (P1-P5, F1-F14; the J4 window rides one
   exchange by ``bucket``) → robots filter → union with the carried-over
   ``pending`` queue (its own exchange by ``bucket``) → champion dedup
-  (A5-A7 order) on that partitioning, no exchange → h1/h2 → seen filter
-  (one Bloom probe on that partitioning routes the maybe-seen slice to one
-  exact join) → per-host politeness top-k (one host window; a partial
-  per-partition top-k before its exchange) → one per-bucket count
-  (scheduled total + lineage) → fetch batch → append scheduled URLs to
-  ``seen`` + rewrite ``pending`` as the live queue minus the scheduled
-  URLs + one Bloom update (``seen.bloom_plan`` decides each bucket's
-  size from counts, ``seen.bloom_update`` folds the scheduled keys into the
-  filters or rebuilds a bucket from seen, in one grouped kernel) → atomic
-  checkpoint (its manifest records each table's schema and each Bloom's
-  ``(m, n_items)``, so the next round reads its state with no inference
-  job and no stats scan).
+  (A5-A7 order) on that partitioning, no exchange → h1/h2 →
+  ``SeenSet.filter`` (one Bloom probe on that partitioning routes the
+  maybe-seen slice to one exact join) → per-host politeness top-k (one
+  host window; a partial per-partition top-k before its exchange) → one
+  per-bucket count (scheduled total + lineage) → fetch batch → ``pending``
+  rewritten as the live queue minus the batch → ``SeenSet.commit`` (seen
+  += batch, their tombstones cleared, one Bloom update sized from counts)
+  → atomic checkpoint (its manifest records each table's schema and each
+  Bloom's ``(m, n_items)``, so the next round reads its state with no
+  inference job and no stats scan). ``seen.SeenSet`` owns the seen set's
+  tables (seen, bloom, tombstones, cuckoo); this module keeps the flow.
 
 So each new candidate crosses one exchange from the documents scan to the
 Bloom cogroup, and none of the round's exchanges on the queue's path
@@ -281,35 +280,11 @@ class FrontierDriver:
         if snap is not None and snap["round"] >= round_id:
             raise ValueError(f"round {round_id} already committed (snapshot {parent})")
 
-        seen = cat.read_table(spark, "seen", snap)
         pending = cat.read_table(spark, "pending", snap)
-        bloom = cat.read_table(spark, "bloom", snap) if cfg.use_bloom else None
-        tomb = cat.read_table(spark, "tombstones", snap)
-        cuckoo_tbl = cat.read_table(spark, "cuckoo", snap)
-        # carried from the parent snapshot's counters — never rescan state
-        # tables for bookkeeping (a count() over a 10^10-row seen table per
-        # round is exactly the scan the metadata exists to avoid)
-        prev_counters = (snap or {}).get("counters", {})
-        n_pend_prev = int(prev_counters.get("pending_after", 0))
-        prev_seen_total = int(prev_counters.get("seen_total", 0))
-        # the filters as the commit that wrote them recorded them (they stay
-        # on disk), or None when no filter holds every URL ever scheduled
-        # (none, one an older checkpoint kept across a round run without it,
-        # or one whose manifest predates the recorded stats): then it must
-        # not route, and step 5 rebuilds each bucket from the seen table
-        filters = seen_rows = None
-        if cfg.use_bloom:
-            filters = seenmod.recorded_filters(
-                (snap or {}).get("lineage", {}).get("bloom") if bloom is not None else None,
-                prev_seen_total + int(prev_counters.get("invalidated", 0)),
-            )
-            if filters is None:
-                bloom = None
-                if seen is not None:
-                    seen_rows = {
-                        int(r["bucket"]): int(r["count"])
-                        for r in seen.groupBy("bucket").count().collect()
-                    }
+        state = seenmod.SeenSet.load(spark, cat, snap, cfg)
+        # carried from the parent snapshot's counters: no state table is
+        # rescanned for bookkeeping
+        n_pend_prev = int((snap or {}).get("counters", {}).get("pending_after", 0))
 
         cached: list[DataFrame] = []
         obs_errors: list[str] = []
@@ -351,15 +326,8 @@ class FrontierDriver:
             cand = cand.observe(obs_queue, F.count(F.lit(1)).alias("n"))
 
             # 3. seen-set filter (bloom prefilter routes; exact join decides;
-            # tombstoned URLs — re-crawl invalidation — count as unseen).
-            # Without a Bloom probe to cache, the filter's anti and semi joins
-            # both read the champions: cache them so the dedup runs once
-            if bloom is None and tomb is not None and seen is not None:
-                cached.append(cand.persist())
-            new_urls = seenmod.filter_new_urls(
-                spark, cand, seen, bloom, tombstones=tomb, cuckoo_table=cuckoo_tbl,
-                key="url_hash", cache=cached,
-            )
+            # tombstoned URLs — re-crawl invalidation — count as unseen)
+            new_urls = state.filter(cand, cached)
             obs_live = Observation()
             new_urls = new_urls.observe(obs_live, F.count(F.lit(1)).alias("n"))
             # host is a pure derivation of ref_url, recomputed AFTER the dedup
@@ -390,17 +358,9 @@ class FrontierDriver:
             n_live = int(_obs_get(obs_live, obs_errors).get("n") or 0)  # post seen filter
             n_cand = counters["round_candidates"]
 
-            # 5. state updates: pending = live queue − scheduled; seen += scheduled;
-            # the Bloom takes the scheduled keys (seen.bloom_plan/bloom_update)
-            sched_keys = scheduled.select("url_hash", "bucket")
-            # h1/h2 are derived after the bucket exchange of the seen write,
-            # so it carries (url_hash, bucket, seen_round) only
-            newly_seen = seenmod.with_probe_hashes(
-                sched_keys.withColumn("seen_round", F.lit(round_id))
-                .repartition("bucket")
-            ).select("url_hash", "h1", "h2", "bucket", "seen_round")
-
-            tables: dict[str, list[str]] = dict((snap or {}).get("tables", {}))
+            # 5. the fetch batch; pending = the live queue minus the batch, as
+            # the table's only path (the invariant step 2 counts on); the seen
+            # set takes the batch (seen, tombstones, Bloom)
             batch = scheduled.withColumn("surt", U.surt(F.col("ref_url"))).select(
                 "url_hash", "ref_url", "surt", "host", "kind", "priority", "page_ts",
                 "doc_id", "offset", "queue_pos", "fetch_delay_ms",
@@ -408,69 +368,25 @@ class FrontierDriver:
             batch_path = cat.write_table(
                 batch.sortWithinPartitions("host", "queue_pos"), f"fetch_batch_{round_id}", round_id
             )
-            tables[f"fetch_batch_{round_id}"] = [batch_path]
-            # one file per bucket dir (vs n_tasks × n_buckets small files).
-            # seen stores only the membership key + hash/bucket columns — URL
-            # strings live in the fetch_batch tables (the crawl log); at 10^10
-            # rows the string columns would triple the table for no reader.
-            seen_path = cat.write_table(newly_seen, "seen", round_id, partition_by=["bucket"])
-            tables["seen"] = tables.get("seen", []) + [seen_path]  # append (Iceberg add-files)
-
-            # scheduling a resurrected URL clears its tombstone (it is seen
-            # again); tombstone tables are small — O(tombstones) rewrite
-            if tomb is not None:
-                remaining = tomb.join(scheduled.select("url_hash"), "url_hash", "left_anti")
-                cached.append(remaining.persist())
-                if remaining.count() > 0:
-                    tomb_path = cat.write_table(remaining, "tombstones", round_id)
-                    ck_path = cat.write_table(
-                        seenmod.build_cuckoo_table(remaining), "cuckoo", round_id
-                    )
-                    tables["tombstones"] = [tomb_path]
-                    tables["cuckoo"] = [ck_path]
-                else:
-                    tables.pop("tombstones", None)
-                    tables.pop("cuckoo", None)
-
-            # the live queue minus this round's batch, as the table's only
-            # path (the invariant step 2 counts on)
             pend_df = new_urls.join(scheduled.select("url_hash"), "url_hash", "left_anti")
-            tables["pending"] = [cat.write_table(pend_df.select(*CAND_COLS), "pending", round_id)]
-
-            if cfg.use_bloom:
-                # planned from counts alone; one grouped kernel folds the
-                # scheduled keys into the filters (or rebuilds a bucket over
-                # capacity from seen) inside the write, and the plan's
-                # (m, n_items) go to the manifest for the next round
-                stats, rebuild = seenmod.bloom_plan(
-                    filters, delta_n, cfg.bits_per_key, cfg.expected_per_bucket, seen_rows
-                )
-                update = seenmod.bloom_update(
-                    bloom, sched_keys, seen, stats, rebuild, cfg.bits_per_key
-                )
-                tables["bloom"] = [cat.write_table(update, "bloom", round_id)]
-                if rebuild:
-                    counters["bloom_rebuilt_buckets"] = len(rebuild)
-            else:
-                tables.pop("bloom", None)  # it would miss this round's URLs
+            pend_path = cat.write_table(pend_df.select(*CAND_COLS), "pending", round_id)
+            tables, state_counters, state_lineage = state.commit(
+                scheduled, delta_n, round_id, cached
+            )
+            tables[f"fetch_batch_{round_id}"] = [batch_path]
+            tables["pending"] = [pend_path]
 
             # 6. counters (oracle-equal semantics; see frontier/oracle.py)
-            seen_total = prev_seen_total + n_sched
             counters.update(
                 {
                     "queue_after_dedup": int(n_queue),
                     "dup_dropped": int(n_cand + n_pend_prev - n_queue),
                     "scheduled": int(n_sched),
                     "pending_after": int(n_live - n_sched),
-                    "seen_total": int(seen_total),
+                    **state_counters,
                 }
             )
-            lineage = {
-                "seen_rows_per_bucket": delta_n,
-                "round": round_id,
-            }
-            if cfg.use_bloom:
-                lineage["bloom"] = {b: list(v) for b, v in sorted(stats.items())}
+            lineage = {"seen_rows_per_bucket": delta_n, "round": round_id, **state_lineage}
             if obs_errors:
                 lineage["obs_errors"] = len(obs_errors)
             cat.commit(round_id, tables, counters, lineage, parent)
@@ -508,7 +424,8 @@ class FrontierDriver:
         return self.catalog.read_table(self.spark, f"fetch_batch_{round_id}")
 
     def seen_table(self) -> DataFrame | None:
-        return self.catalog.read_table(self.spark, "seen")
+        snap = self.catalog.snapshot()
+        return seenmod.SeenSet.load(self.spark, self.catalog, snap, self.cfg).seen
 
     def invalidate(self, urls: DataFrame) -> dict[str, int]:
         """Re-crawl invalidation: mark URLs as no-longer-seen.
@@ -516,11 +433,8 @@ class FrontierDriver:
         ``urls`` carries ``url_hash`` (md5 of the canonical SURT — the
         seen-set key). Commits a new snapshot whose tombstone table +
         per-bucket cuckoo overlay make those URLs schedulable again on
-        their next discovery; scheduling one clears its tombstone (see
-        run_round). Exactness: the cuckoo filter only routes — membership
-        decisions always come from the exact tombstone table
-        (seen.filter_new_urls), so false positives never resurrect or drop
-        the wrong URL.
+        their next discovery; scheduling one clears its tombstone. The
+        cuckoo filter only routes: the exact tombstone table decides.
 
         ``pending`` must be one round's live queue: a checkpoint of the
         older delta layout holds stale rows of URLs scheduled since, which a
@@ -528,55 +442,20 @@ class FrontierDriver:
         a checkpoint raises ``ValueError`` and commits nothing; one round
         rewrites its pending table.
         """
-        spark, cfg, cat = self.spark, self.cfg, self.catalog
+        cat = self.catalog
         snap = cat.snapshot()
         if snap is None:
             raise ValueError("nothing crawled yet — no seen set to invalidate")
-        tables = dict(snap["tables"])
-        if [os.path.basename(p) for p in tables.get("pending", [])] != [f"round={snap['round']}"]:
+        pending = snap["tables"].get("pending", [])
+        if [os.path.basename(p) for p in pending] != [f"round={snap['round']}"]:
             raise ValueError(
                 "the pending queue holds delta files of an older checkpoint layout: "
                 "run one round first"
             )
-        counters = dict(snap.get("counters", {}))
-        sid_next = snap["snapshot_id"] + 1
-
-        ts_new = seenmod.with_hashes(
-            urls.select("url_hash").dropDuplicates(["url_hash"]), "url_hash", cfg.n_buckets
-        ).persist()
-        old_tomb = cat.read_table(spark, "tombstones", snap)
-        if old_tomb is not None:
-            fresh = ts_new.join(old_tomb.select("url_hash"), "url_hash", "left_anti")
-        else:
-            fresh = ts_new
-
-        # which of these are actually in the (effective) seen set — read
-        # only the affected buckets (partition pruning on the seen table)
-        seen = cat.read_table(spark, "seen", snap)
-        n_removed = 0  # tombstoned AND once-scheduled url_hashes
-        if seen is not None:
-            buckets = [int(r["bucket"]) for r in fresh.select("bucket").distinct().collect()]
-            if buckets:
-                seen_slice = seen.where(F.col("bucket").isin(buckets)).select("url_hash")
-                n_removed = fresh.join(seen_slice, "url_hash", "left_semi").count()
-
-        merged = ts_new if old_tomb is None else old_tomb.unionByName(
-            ts_new.join(old_tomb.select("url_hash"), "url_hash", "left_anti")
-        )
-        tomb_path = cat.write_table(merged, "tombstones", f"{sid_next}-inv")
-        ck_path = cat.write_table(
-            seenmod.build_cuckoo_table(
-                spark.read.option("basePath", tomb_path).parquet(tomb_path).drop("round")
-            ),
-            "cuckoo", f"{sid_next}-inv",
-        )
-        ts_new.unpersist()
-        tables["tombstones"] = [tomb_path]
-        tables["cuckoo"] = [ck_path]
-        counters["seen_total"] = max(0, int(counters.get("seen_total", 0)) - n_removed)
-        counters["invalidated"] = int(counters.get("invalidated", 0)) + n_removed
-        lineage = dict(snap.get("lineage", {}))
-        cat.commit(snap["round"], tables, counters, lineage, snap["snapshot_id"])
+        state = seenmod.SeenSet.load(self.spark, cat, snap, self.cfg)
+        tables, counters, n_removed = state.invalidate(urls)
+        counters = {**snap.get("counters", {}), **counters}
+        cat.commit(snap["round"], tables, counters, snap.get("lineage", {}), snap["snapshot_id"])
         return {"invalidated_in_seen": n_removed}
 
     def pending_live(self) -> DataFrame | None:
@@ -587,17 +466,12 @@ class FrontierDriver:
         the stale rows.
 
         Seen-ness is the EFFECTIVE set (seen minus tombstones), decided by
-        ``seen.filter_new_urls`` without filters: with an active
-        invalidation, a tombstoned URL rediscovered into the queue is live
-        here exactly as run_round would treat it."""
+        the exact joins alone (``SeenSet.live``), as in ``run_round``."""
         snap = self.catalog.snapshot()
         if snap is None:
             return None
         pending = self.catalog.read_table(self.spark, "pending", snap)
         if pending is None:
             return None
-        return seenmod.filter_new_urls(
-            self.spark, _dedup_candidates(pending.select(*CAND_COLS)),
-            self.catalog.read_table(self.spark, "seen", snap), None,
-            tombstones=self.catalog.read_table(self.spark, "tombstones", snap), cache=[],
-        )
+        state = seenmod.SeenSet.load(self.spark, self.catalog, snap, self.cfg)
+        return state.live(_dedup_candidates(pending.select(*CAND_COLS)))

@@ -8,7 +8,11 @@ round, so this engine uses the classic two-tier design:
 
 1. **Partitioned Bloom filters** (one per ``bucket = pmod(h1, n_buckets)``)
    route candidates: "definitely new" URLs skip the exact join entirely;
-   only "maybe seen" candidates (true dups + ~1% false positives) reach it.
+   only "maybe seen" candidates reach it: true dups plus false positives,
+   ≈0.3% at the sized load (12 bits per key, k = 8) by design. Buckets
+   measure about 11x over that, as probe 0 (``h1 mod m``) shares its low
+   bits with the bucket (``pmod(h1, n_buckets)``) and so reaches only
+   m / n_buckets bits; only a new filter layout removes the correlation.
 2. **Exact confirm**: the maybe-seen slice anti-joins the exact seen keys.
    Bloom false positives therefore never drop URLs — the seen set matches
    the single-process oracle bit-exactly (the BASELINE.json exactness
@@ -23,11 +27,12 @@ bit-set work runs in Arrow-vectorized ``applyInPandas`` / ``pandas_udf``
 (no per-row Python). Filters are stored per bucket as binary rows in the
 checkpoint, so a 1000-executor cluster loads only its buckets' filters.
 
-This module owns the Bloom layout and its capacity policy: the round
-driver hands ``bloom_plan`` the recorded per-bucket ``(m, n_items)`` and
-the round's per-bucket scheduled counts, and ``bloom_update`` turns the
-plan into each bucket's new filter row in one grouped kernel (the OR-merge
-of the round's keys, or a rebuild from the seen table).
+This module owns the seen set's state: ``SeenSet`` alone reads and writes
+its four checkpoint tables, decides whether the filters may route and
+keeps their counters and recorded sizes. The round driver hands it the
+champions to filter and the scheduled batch to commit; ``bloom_plan``
+sizes each bucket from counts and ``bloom_update`` folds the keys in (or
+rebuilds a bucket from seen) in one grouped kernel.
 """
 
 from __future__ import annotations
@@ -39,6 +44,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.catalog import Catalog
 
 BLOOM_SCHEMA = "bucket int, m long, k int, n_items long, bits binary"
 CUCKOO_SCHEMA = "bucket int, n_buckets long, n_items long, table binary"
@@ -60,7 +67,7 @@ def with_probe_hashes(df: DataFrame, key: str = "url_hash") -> DataFrame:
     )
 
 
-def with_hashes(df: DataFrame, key: str = "url_hash", n_buckets: int = 64) -> DataFrame:
+def with_hashes(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
     """Attach (h1, h2, bucket) derived JVM-side from the key column."""
     return with_probe_hashes(df, key).withColumn("bucket", bucket_of(F.col(key), n_buckets))
 
@@ -104,17 +111,6 @@ def bloom_contains(bits_buf: bytes, h1: np.ndarray, h2: np.ndarray, m: int, k: i
     word = bits[pos // 64]
     hit = (word >> (pos % np.uint64(64))) & np.uint64(1)
     return hit.all(axis=1)
-
-
-def recorded_filters(recorded: dict | None, n_ever: int) -> dict[int, tuple[int, int]] | None:
-    """Each bucket's ``(m, n_items)`` as the manifest recorded it, or None
-    when the filters must not route: none recorded, or together they hold
-    fewer items than the ``n_ever`` URLs ever scheduled (a filter an older
-    checkpoint kept across a round run without it)."""
-    if recorded is None:
-        return None
-    filters = {int(b): (int(m), int(n)) for b, (m, n) in recorded.items()}
-    return filters if sum(n for _, n in filters.values()) >= n_ever else None
 
 
 def bloom_plan(
@@ -214,45 +210,46 @@ def bloom_update(
     )
 
 
+def _probe(df: DataFrame, filters: DataFrame, out_col: str, absent: bool, contains) -> DataFrame:
+    """``df`` with ``out_col``: ``contains(filter_row, h1, h2)`` against its
+    bucket's filter row, ``absent`` in a bucket without one. One cogroup by
+    ``bucket``: each group gets its rows and its one filter row, so filters
+    never pass through the driver."""
+    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+    out_schema += f", {out_col} boolean"
+
+    def probe(pdf: pd.DataFrame, filter_pdf: pd.DataFrame) -> pd.DataFrame:
+        out = pdf.copy()
+        if len(pdf) == 0:
+            out[out_col] = pd.Series([], dtype=bool)
+        elif len(filter_pdf) == 0:
+            out[out_col] = absent
+        else:
+            u1 = pdf["h1"].to_numpy().astype(np.uint64)
+            u2 = pdf["h2"].to_numpy().astype(np.uint64)
+            out[out_col] = contains(filter_pdf.iloc[0], u1, u2)
+        return out
+
+    return df.groupBy("bucket").cogroup(filters.groupBy("bucket")).applyInPandas(probe, out_schema)
+
+
 def bloom_probe(
     spark: SparkSession, candidates: DataFrame, bloom_table: DataFrame, out_col: str = "maybe_seen"
 ) -> DataFrame:
     """Mark candidates maybe-seen via the per-bucket Blooms — distributed.
 
-    Cogroup by ``bucket``: each group receives its candidate slice plus its
-    single Bloom row, so filters NEVER pass through the driver and no
-    executor holds more than its buckets' filters — the property that keeps
-    a 10^10-entry seen set feasible (total filter bytes stay sharded). An
-    earlier collect+broadcast variant serialized ~2MB × n_buckets through
-    the driver and every Python worker; at bench scale that alone capped
-    scaling at ~1.7x from 8→32 cores.
+    Cogroup by ``bucket``, so no executor holds more than its buckets'
+    filters — the property that keeps a 10^10-entry seen set feasible
+    (total filter bytes stay sharded). An earlier collect+broadcast variant
+    serialized ~2MB × n_buckets through the driver and every Python worker;
+    at bench scale that alone capped scaling at ~1.7x from 8→32 cores.
 
     A bucket without a Bloom row is marked maybe-seen: an absent filter
     routes its rows to the exact check instead of declaring them new.
     """
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields)
-    out_schema += f", {out_col} boolean"
-
-    def probe(cand_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = cand_pdf.copy()
-        if len(cand_pdf) == 0:
-            out[out_col] = pd.Series([], dtype=bool)
-            return out
-        if len(bloom_pdf) == 0:
-            out[out_col] = True  # no filter for this bucket → exact check
-            return out
-        m = int(bloom_pdf["m"].iloc[0])
-        k = int(bloom_pdf["k"].iloc[0])
-        bits = bloom_pdf["bits"].iloc[0]
-        u1 = cand_pdf["h1"].to_numpy().astype(np.uint64)
-        u2 = cand_pdf["h2"].to_numpy().astype(np.uint64)
-        out[out_col] = bloom_contains(bits, u1, u2, m, k)
-        return out
-
-    return (
-        candidates.groupBy("bucket")
-        .cogroup(bloom_table.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
+    return _probe(
+        candidates, bloom_table, out_col, True,
+        lambda f, h1, h2: bloom_contains(f["bits"], h1, h2, int(f["m"]), int(f["k"])),
     )
 
 
@@ -387,33 +384,16 @@ def build_cuckoo_table(tombstones: DataFrame) -> DataFrame:
 def cuckoo_probe(
     spark: SparkSession, df: DataFrame, cuckoo_table: DataFrame, out_col: str = "maybe_deleted"
 ) -> DataFrame:
-    """Distributed cuckoo probe — cogroup by bucket (see bloom_probe)."""
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema += f", {out_col} boolean"
-
-    def probe(pdf: pd.DataFrame, ck_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.copy()
-        if len(pdf) == 0:
-            out[out_col] = pd.Series([], dtype=bool)
-            return out
-        if len(ck_pdf) == 0:
-            out[out_col] = False
-            return out
-        cf = CuckooFilter.from_bytes(ck_pdf["table"].iloc[0])
-        u1 = pdf["h1"].to_numpy().astype(np.uint64)
-        u2 = pdf["h2"].to_numpy().astype(np.uint64)
-        out[out_col] = cf.contains(u1, u2)
-        return out
-
-    return (
-        df.groupBy("bucket")
-        .cogroup(cuckoo_table.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
+    """Distributed cuckoo probe — cogroup by bucket (see bloom_probe); a
+    bucket without a filter holds no tombstone."""
+    return _probe(
+        df, cuckoo_table, out_col, False,
+        lambda f, h1, h2: CuckooFilter.from_bytes(f["table"]).contains(h1, h2),
     )
 
 
 # ---------------------------------------------------------------------------
-# The seen-set operation used by the round driver
+# The seen set: its filter operation and the owner of its state
 # ---------------------------------------------------------------------------
 
 
@@ -424,28 +404,23 @@ def filter_new_urls(
     bloom_table: DataFrame | None,
     tombstones: DataFrame | None = None,
     cuckoo_table: DataFrame | None = None,
-    key: str = "url_hash",
     *,
     cache: list[DataFrame],
 ) -> DataFrame:
     """Return candidates not in the effective seen set (seen − tombstones).
 
     Preconditions: ``candidates`` carry (h1, h2, bucket) — see
-    ``with_hashes``; the round driver derives h1/h2 with
-    ``with_probe_hashes`` after its last exchange, so no exchange carries
-    them; ``seen`` carries ``key``; ``candidates`` is UNIQUE per ``key``
-    (the round driver calls this after the champion dedup). ``seen`` may
-    hold a key more than once (a URL scheduled, invalidated and scheduled
-    again has a row per scheduling); it only meets the candidates in anti
-    and semi joins, so no key fans out. For the Bloom cogroup to shuffle
-    only the filter table, ``candidates`` is hash-partitioned by
-    ``bucket``: in the round driver, the new rows by the extraction's
-    bucket exchange (``extract._refs``) and the pending rows by their own,
-    joined by the partition-aware union. Without that partitioning the
-    result is the same, with one more exchange. The width is the caller's
-    (in the round, data-sized by AQE); the Bloom side is exchanged to match
-    it. With a Bloom table the output is the union of the routes, each with
-    the candidates' partitions (Spark does not plan it partition-aware).
+    ``with_hashes`` — and are UNIQUE per ``url_hash`` (the round's
+    champions). ``seen`` may hold a key more than once (a URL scheduled,
+    invalidated and scheduled again has a row per scheduling); it only
+    meets the candidates in anti and semi joins, so no key fans out. For
+    the Bloom cogroup to shuffle only the filter table, ``candidates`` is
+    hash-partitioned by ``bucket`` (in the round, by the partition-aware
+    union of two bucket exchanges); without that, the result is the same,
+    with one more exchange. The width is the caller's (in the round,
+    data-sized by AQE); the Bloom side is exchanged to match it. With a
+    Bloom table the output is the union of the routes, each with the
+    candidates' partitions (Spark does not plan it partition-aware).
 
     The filters only *route* rows; membership is decided by the exact
     tables, so Bloom and cuckoo false positives never change the result.
@@ -457,9 +432,9 @@ def filter_new_urls(
     resurrected iff they are cuckoo-positive and in the tombstone table (a
     second semi join); a cuckoo negative (no false negatives) is final.
     Without a Bloom table those two joins read ``candidates`` directly, so a
-    caller whose candidates are costly to compute persists them first (the
-    round driver does). The 10^10-row seen table is only the build side of the joins and never
-    flows through a Python kernel.
+    caller whose candidates are costly to compute persists them first
+    (``SeenSet.filter`` does). The 10^10-row seen table is only the build
+    side of the joins and never flows through a Python kernel.
     """
     if seen is None:
         return candidates
@@ -471,15 +446,164 @@ def filter_new_urls(
         maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
     else:
         fresh, maybe = None, candidates
-    seen_keys = seen.select(F.col(key).alias("__seen_key"))
-    in_seen = maybe[key] == seen_keys["__seen_key"]
+    seen_keys = seen.select(F.col("url_hash").alias("__seen_key"))
+    in_seen = maybe["url_hash"] == seen_keys["__seen_key"]
     confirmed = maybe.join(seen_keys, in_seen, "left_anti")
     if tombstones is not None:
         resurrected = maybe.join(seen_keys, in_seen, "left_semi")
         if cuckoo_table is not None:
             resurrected = cuckoo_probe(spark, resurrected, cuckoo_table)
             resurrected = resurrected.where(F.col("maybe_deleted")).drop("maybe_deleted")
-        t_keys = tombstones.select(F.col(key).alias("__t_key"))
-        resurrected = resurrected.join(t_keys, resurrected[key] == t_keys["__t_key"], "left_semi")
+        t_keys = tombstones.select(F.col("url_hash").alias("__t_key"))
+        in_tomb = resurrected["url_hash"] == t_keys["__t_key"]
+        resurrected = resurrected.join(t_keys, in_tomb, "left_semi")
         confirmed = confirmed.unionByName(resurrected)
     return confirmed if fresh is None else fresh.unionByName(confirmed)
+
+
+class SeenSet:
+    """The seen set at one snapshot, the only reader and writer of its
+    tables: ``seen`` (a row per scheduling of a URL), ``bloom`` (a filter
+    row per bucket), ``tombstones`` (invalidated URLs) and ``cuckoo`` (a
+    filter of a bucket's tombstones). ``commit`` and ``invalidate`` return
+    the snapshot's tables with their new paths and the seen set's counters
+    for the caller's ``Catalog.commit``. ``cfg`` is a ``FrontierConfig``."""
+
+    @classmethod
+    def load(cls, spark: SparkSession, catalog: Catalog, snap: dict | None, cfg) -> SeenSet:
+        """The seen set ``snap`` lists (None: nothing committed yet). Its
+        tables are read with the schemas the manifest records, so no Spark
+        job runs, and the Bloom routes only when it can be trusted."""
+        self = cls()
+        self.spark, self.catalog, self.snap, self.cfg = spark, catalog, snap or {}, cfg
+        read = lambda table: catalog.read_table(spark, table, snap)  # noqa: E731
+        self.seen, self.tombstones, self.cuckoo = read("seen"), read("tombstones"), read("cuckoo")
+        self.bloom = read("bloom") if cfg.use_bloom else None
+        counters = self.snap.get("counters", {})  # never a count() of seen
+        self.seen_total = int(counters.get("seen_total", 0))
+        self.invalidated = int(counters.get("invalidated", 0))
+        # the filters route only if their recorded items cover every URL ever
+        # scheduled (not so for one an older checkpoint kept across a round
+        # run without it); else ``commit`` rebuilds each bucket from seen
+        recorded = self.snap.get("lineage", {}).get("bloom") if self.bloom is not None else None
+        self.filters = {int(b): (int(m), int(n)) for b, (m, n) in (recorded or {}).items()}
+        n_ever = self.seen_total + self.invalidated
+        if recorded is None or sum(n for _, n in self.filters.values()) < n_ever:
+            self.filters = self.bloom = None
+        return self
+
+    def filter(self, champions: DataFrame, cache: list[DataFrame]) -> DataFrame:
+        """A round's live queue: the ``champions`` (one row per url_hash,
+        with h1, h2 and bucket) outside the effective seen set, by
+        ``filter_new_urls``. Frames it persists go to ``cache``."""
+        if self.bloom is None and self.tombstones is not None and self.seen is not None:
+            # without a Bloom probe to cache, the anti and semi joins both
+            # read the champions: cache them so the dedup runs once
+            cache.append(champions.persist())
+        return filter_new_urls(
+            self.spark, champions, self.seen, self.bloom, tombstones=self.tombstones,
+            cuckoo_table=self.cuckoo, cache=cache,
+        )
+
+    def live(self, champions: DataFrame) -> DataFrame:
+        """``champions`` outside the effective seen set, by the exact joins
+        alone (no filter, no Spark job)."""
+        return filter_new_urls(
+            self.spark, champions, self.seen, None, tombstones=self.tombstones, cache=[]
+        )
+
+    def commit(
+        self, scheduled: DataFrame, per_bucket: dict[int, int], round_id: int,
+        cache: list[DataFrame],
+    ) -> tuple[dict[str, list[str]], dict[str, int], dict]:
+        """Fold a round's ``scheduled`` URLs (``url_hash``, ``bucket``;
+        ``per_bucket`` counts them) into the state: append them to seen,
+        clear the tombstones of those rescheduled, and fold their keys into
+        the Bloom. Returns the tables, the counters and the lineage entry
+        (the filters' per-bucket ``(m, n_items)``) of the round's commit."""
+        cat, cfg = self.catalog, self.cfg
+        tables = dict(self.snap.get("tables", {}))
+        counters = {"seen_total": self.seen_total + sum(per_bucket.values())}
+        lineage = {}
+        keys = scheduled.select("url_hash", "bucket")
+        # one file per bucket dir, of the key and its hashes (URL strings
+        # live in the fetch batches); h1/h2 are derived after the exchange
+        newly_seen = with_probe_hashes(
+            keys.withColumn("seen_round", F.lit(round_id)).repartition("bucket")
+        ).select("url_hash", "h1", "h2", "bucket", "seen_round")
+        seen_path = cat.write_table(newly_seen, "seen", round_id, partition_by=["bucket"])
+        tables["seen"] = tables.get("seen", []) + [seen_path]  # append (Iceberg add-files)
+
+        # scheduling a resurrected URL clears its tombstone (it is seen
+        # again); tombstone tables are small — O(tombstones) rewrite
+        if self.tombstones is not None:
+            remaining = self.tombstones.join(scheduled.select("url_hash"), "url_hash", "left_anti")
+            cache.append(remaining.persist())
+            if remaining.count() > 0:
+                self._write_tombstones(remaining, round_id, tables)
+            else:
+                tables.pop("tombstones", None)
+                tables.pop("cuckoo", None)
+
+        if cfg.use_bloom:
+            # planned from counts alone (a bucket without a trusted filter
+            # is rebuilt from seen, counted per bucket here); one grouped
+            # kernel folds the keys into the filters inside the write
+            seen_rows = None
+            if self.filters is None and self.seen is not None:
+                seen_rows = {
+                    int(r["bucket"]): int(r["count"])
+                    for r in self.seen.groupBy("bucket").count().collect()
+                }
+            stats, rebuild = bloom_plan(
+                self.filters, per_bucket, cfg.bits_per_key, cfg.expected_per_bucket, seen_rows
+            )
+            update = bloom_update(self.bloom, keys, self.seen, stats, rebuild, cfg.bits_per_key)
+            tables["bloom"] = [cat.write_table(update, "bloom", round_id)]
+            if rebuild:
+                counters["bloom_rebuilt_buckets"] = len(rebuild)
+            lineage["bloom"] = {b: list(v) for b, v in sorted(stats.items())}
+        else:
+            tables.pop("bloom", None)  # it would miss this round's URLs
+        return tables, counters, lineage
+
+    def invalidate(self, urls: DataFrame) -> tuple[dict[str, list[str]], dict[str, int], int]:
+        """Tombstone the ``url_hash`` keys of ``urls`` (repeats allowed):
+        the merged tombstones and their cuckoo filters are written under
+        the next snapshot's ``<id>-inv`` tag. Returns the tables, the
+        counters and how many of the keys were in the effective seen set
+        (seen and not yet tombstoned)."""
+        tag = f"{self.snap['snapshot_id'] + 1}-inv"
+        ts_new = with_hashes(
+            urls.select("url_hash").dropDuplicates(["url_hash"]), "url_hash", self.cfg.n_buckets
+        ).persist()
+        cache, fresh, merged = [ts_new], ts_new, ts_new
+        if self.tombstones is not None:
+            fresh = ts_new.join(self.tombstones.select("url_hash"), "url_hash", "left_anti")
+            merged = self.tombstones.unionByName(fresh).persist()
+            cache.append(merged)
+        try:
+            # read only the buckets of the fresh keys (partition pruning)
+            n_removed = 0
+            if self.seen is not None:
+                buckets = [int(r["bucket"]) for r in fresh.select("bucket").distinct().collect()]
+                if buckets:
+                    seen_slice = self.seen.where(F.col("bucket").isin(buckets)).select("url_hash")
+                    n_removed = fresh.join(seen_slice, "url_hash", "left_semi").count()
+            tables = dict(self.snap["tables"])
+            self._write_tombstones(merged, tag, tables)
+        finally:
+            for df in cache:
+                df.unpersist()
+        counters = {
+            "seen_total": max(0, self.seen_total - n_removed),
+            "invalidated": self.invalidated + n_removed,
+        }
+        return tables, counters, n_removed
+
+    def _write_tombstones(self, tombstones: DataFrame, tag: int | str, tables: dict) -> None:
+        """Write ``tombstones`` and their per-bucket cuckoo filters under
+        ``tag`` and list both in ``tables``. Both writes read the frame:
+        the caller persists it."""
+        tables["tombstones"] = [self.catalog.write_table(tombstones, "tombstones", tag)]
+        tables["cuckoo"] = [self.catalog.write_table(build_cuckoo_table(tombstones), "cuckoo", tag)]
