@@ -219,7 +219,7 @@ def _cosine_topk(spark, sf):
 
     emb = _t(spark, sf, "embeddings")
     return cosine_topk(
-        emb.where(F.col("vec_id") < 16), emb.where(F.col("vec_id") >= 16), k=5, dim=64
+        emb.where(F.col("vec_id") < 16), emb.where(F.col("vec_id") >= 16), k=5
     )
 
 
@@ -246,7 +246,7 @@ def _ivf_topk(spark, sf):
     emb = _t(spark, sf, "embeddings")
     return ivf_topk(
         emb.where(F.col("vec_id") < 16), emb.where(F.col("vec_id") >= 16),
-        dim=64, n_centroids=8, nprobe=3,
+        n_centroids=8, nprobe=3,
     )
 
 

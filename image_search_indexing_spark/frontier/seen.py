@@ -524,6 +524,8 @@ class SeenSet:
         cat, cfg = self.catalog, self.cfg
         tables = dict(self.snap.get("tables", {}))
         counters = {"seen_total": self.seen_total + sum(per_bucket.values())}
+        if self.invalidated:  # ``load``'s trust rule counts it as ever scheduled
+            counters["invalidated"] = self.invalidated
         lineage = {}
         keys = scheduled.select("url_hash", "bucket")
         # one file per bucket dir, of the key and its hashes (URL strings

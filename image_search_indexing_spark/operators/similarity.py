@@ -1,11 +1,15 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — queries × corpus with the dot
-product as a JVM-side higher-order ``zip_with``/``aggregate`` expression
-(no Python in the hot path); broadcast the (small) query side so the big
-corpus never shuffles. Scale path: LSH bucketing by random-hyperplane
-signs (deterministic seed), so each query only scans its bucket —
-the IVF-style variant a 100 TB corpus needs.
+One scoring path per operator, set by how many pairs it scores.
+``cosine_topk`` (every query against every corpus vector) and
+``near_dup_pairs`` (every pair in an LSH bucket) score blocks of vectors
+by one BLAS matmul (``_cos_block``) in a pandas kernel. ``ann_topk_lsh``
+(the query's LSH bucket) and ``ivf_topk`` (its nprobe nearest inverted
+lists) score only the pairs that share a list, by the JVM ``cosine``
+after a broadcast join (``_topk_in_lists``): at a few thousand pairs a
+Python stage's fixed cost (about 0.25 s on 4 cores) outweighs the
+matmul. The top-k operators all rank by ``_rank``: sim descending, ties
+to the lower neighbor id, a NULL sim (a zero-norm vector) last.
 """
 
 from __future__ import annotations
@@ -20,11 +24,11 @@ from ..session import spread
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<double> columns, as a JVM-side HOF fold.
 
-    The fold is CodegenFallback (interpreted per element); per-pair
-    kernels at volume belong in a vectorized Arrow batch (see
-    ``near_dup_pairs`` / ``cosine_topk``). An unrolled 64-term sum ran
-    slower still: it inflates whole-stage codegen past the JIT's ~8 KB
-    method limit."""
+    It serves per-row work (the LSH signature) and the per-pair ``cosine``
+    of the list-probing operators. The fold is CodegenFallback
+    (interpreted per element), so operators that score every pair use the
+    BLAS kernel instead. An unrolled 64-term sum ran slower still: it
+    inflates whole-stage codegen past the JIT's ~8 KB method limit."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
@@ -35,7 +39,53 @@ def l2norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2norm(a) * l2norm(b))
+    """Cosine of two array<double> columns; NULL when either norm is 0."""
+    return F.try_divide(dot(a, b), l2norm(a) * l2norm(b))
+
+
+def _cos_block(A, B):
+    """Cosines of every row of ``A`` against every row of ``B`` (float64
+    matrices) as one BLAS matmul; NaN where either norm is 0."""
+    import numpy as np
+
+    an, bn = np.sqrt((A * A).sum(axis=1)), np.sqrt((B * B).sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return (A @ B.T) / np.outer(an, bn)
+
+
+def _sides(queries: DataFrame, corpus: DataFrame, id_col: str, vec_col: str):
+    """(query_id, qv) of the queries and (neighbor_id, cv) of the corpus,
+    spread before its per-row work; vectors are cast to double so results
+    are engine-portable."""
+    vecs = lambda df, i, v: df.select(  # noqa: E731
+        F.col(id_col).alias(i), F.col(vec_col).cast("array<double>").alias(v)
+    )
+    return vecs(queries, "query_id", "qv"), spread(vecs(corpus, "neighbor_id", "cv"))
+
+
+def _ids_ddl(queries: DataFrame, corpus: DataFrame, id_col: str) -> str:
+    """The DDL of the two output ids, each typed as on its own side."""
+    q_t, n_t = (df.schema[id_col].dataType.simpleString() for df in (queries, corpus))
+    return f"query_id {q_t}, neighbor_id {n_t}"
+
+
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """The top ``k`` rows of ``scored`` per query by (sim DESC,
+    neighbor_id), a NULL sim last: (query_id, neighbor_id, rank, sim)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "sim")
+    )
+
+
+def _topk_in_lists(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
+    """``_rank`` over the pairs of ``q`` and ``c`` that share a ``list``
+    id. The query lists are broadcast, so the corpus never shuffles for
+    the join."""
+    scored = c.join(F.broadcast(q), "list").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+    return _rank(scored, k)
 
 
 def cosine_topk(
@@ -44,95 +94,52 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
-    """Brute-force cosine top-k: (query_id, neighbor_id, rank).
+    """Exact cosine top-k: (query_id, neighbor_id, rank).
 
-    The query side is small by construction (broadcast, or collected for
-    the matmul); ranking ties break by neighbor id for determinism.
-    Vectors are cast to double before arithmetic so results are
-    engine-portable. Without ``dim`` each pair is scored by the HOF
-    ``cosine`` over a broadcast cross join; with ``dim`` (the vector
-    length) each corpus Arrow batch is scored by one BLAS matmul against
-    the collected query block, and only the batch-local top-k per query
-    survives.
+    Each corpus Arrow batch is scored against the whole query block by
+    one BLAS matmul, and only the batch-local top-k per query leaves the
+    batch. That is exact: a global top-k row is a batch-local top-k row
+    under the same (sim DESC, neighbor_id) order. ``_rank`` ranks the
+    union. Each output id keeps its own side's type.
+
+    The query side is small by contract: building the plan collects it
+    (one bounded Spark job) into the scoring matrix, so the plan holds
+    the queries as they were at that moment. An empty query side yields
+    an empty frame.
+
+    Float safety: BLAS sums in another order than a sequential fold, but
+    the least gap between adjacent top-12 sims is 1.3e-6 at sf1.0
+    (5.6e-6..1.9e-5 at smaller SFs) against ~1e-15 of order noise, and
+    the output equals the DuckDB oracle's at every SF.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    if dim is not None:
-        # Vectorized kernel (guide §4.2): the query block is small by
-        # contract (it was broadcast before; collecting it to build the
-        # scoring matrix is the same driver-bounded transfer), each corpus
-        # Arrow batch is scored as ONE BLAS matmul, and only the
-        # batch-local top-k per query survives — exact, because a global
-        # top-k row is necessarily batch-local top-k under the SAME
-        # (sim DESC, neighbor_id) order. The final window ranks the tiny
-        # union. Float caveat: BLAS sum order differs from the HOF fold,
-        # but the minimum adjacent top-12 sim gap is 1.3e-6 at sf1.0
-        # (5.6e-6..1.9e-5 at smaller SFs) vs ~1e-15 order noise, and the
-        # output was verified equal to the DuckDB oracle at every SF.
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        qrows = q.collect()  # bounded: the query side of a top-k probe
-        # each id keeps its own side's type, as on the cross-join path
-        q_t, n_t = (df.schema[id_col].dataType.simpleString() for df in (queries, corpus))
-        if not qrows:  # no query vectors: nothing to rank, and Q would be 1-D
-            return queries.sparkSession.createDataFrame(
-                [], f"query_id {q_t}, neighbor_id {n_t}, rank int"
-            )
-        qids = np.array([r["query_id"] for r in qrows])
-        Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        kk = int(k)
+    q, c = _sides(queries, corpus, id_col, vec_col)
+    ids = _ids_ddl(queries, corpus, id_col)
+    qrows = q.collect()
+    if not qrows:  # nothing to rank, and Q would be 1-D
+        return queries.sparkSession.createDataFrame([], f"{ids}, rank int")
+    qids = np.array([r["query_id"] for r in qrows])
+    Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
+    kk = int(k)
 
-        def _score(it):
-            for pdf in it:
-                nids = pdf["neighbor_id"].to_numpy()
-                C = np.asarray(pdf["cv"].tolist(), dtype=np.float64)
-                cn = np.sqrt((C * C).sum(axis=1))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = (Q @ C.T) / np.outer(qn, cn)
-                out_q, out_n, out_s = [], [], []
-                for i in range(len(qids)):
-                    s = sims[i]
-                    # non-finite sims (zero-norm vectors) mirror the JVM
-                    # path's NULL: ordered last here, emitted as NULL below
-                    key = np.where(np.isfinite(s), -s, np.inf)
-                    order = np.lexsort((nids, key))[:kk]
-                    out_q.append(np.full(len(order), qids[i]))
-                    out_n.append(nids[order])
-                    out_s.append(s[order])
-                s_all = np.concatenate(out_s)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "sim": pd.array(
-                            np.where(np.isfinite(s_all), s_all, np.nan), dtype="Float64"
-                        ).to_numpy(dtype=object, na_value=None)
-                        if not np.isfinite(s_all).all()
-                        else s_all,
-                    }
-                )
+    def _score(it):
+        for pdf in it:
+            nids = pdf["neighbor_id"].to_numpy()
+            sims = _cos_block(Q, np.asarray(pdf["cv"].tolist(), dtype=np.float64))
+            # a non-finite sim (a zero-norm vector) ranks last and leaves
+            # as NaN, which the Arrow hand-off turns into NULL
+            sims[~np.isfinite(sims)] = np.nan
+            top = [np.lexsort((nids, np.nan_to_num(-s, nan=np.inf)))[:kk] for s in sims]
+            yield pd.DataFrame({
+                "query_id": np.repeat(qids, [len(t) for t in top]),
+                "neighbor_id": np.concatenate([nids[t] for t in top]),
+                "sim": np.concatenate([s[t] for s, t in zip(sims, top)]),
+            })
 
-        scored = spread(c).mapInPandas(
-            _score, f"query_id {q_t}, neighbor_id {n_t}, sim double"
-        )
-    else:
-        scored = c.crossJoin(F.broadcast(q)).withColumn(
-            "sim", cosine(F.col("qv"), F.col("cv"))
-        )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank(c.mapInPandas(_score, f"{ids}, sim double"), k).drop("sim")
 
 
 def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = 7) -> Column:
@@ -151,8 +158,7 @@ def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = 
     # here, while an unrolled n_planes×dim expression (384+ terms at
     # n_planes=12) bloats codegen past the JIT's method limits and its
     # compile time dominated small queries (measured: ann_topk_lsh 4.3 s
-    # unrolled vs 1.4 s HOF in-suite). Unrolling pays only in per-PAIR
-    # hot paths (see ``dot``).
+    # unrolled vs 1.4 s HOF in-suite).
     sig = F.lit(0).cast("long")
     for p, coeffs in enumerate(planes):
         arr = F.array(*[F.lit(c) for c in coeffs])
@@ -163,7 +169,6 @@ def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = 
 
 def train_ivf_centroids(
     corpus: DataFrame,
-    dim: int,
     n_centroids: int = 16,
     iters: int = 5,
     sample_cap: int = 4096,
@@ -174,7 +179,8 @@ def train_ivf_centroids(
     id-ordered sample (the standard IVF practice — train on a sample,
     assign at scale). Init = the sample's first n_centroids vectors;
     fixed iteration count; no RNG — identical centroids on every run and
-    partition count. Returns a (n_centroids, dim) float64 ndarray.
+    partition count. Returns a (n_centroids, dim) float64 ndarray, with
+    no rows for an empty corpus.
     """
     import numpy as np
 
@@ -184,6 +190,8 @@ def train_ivf_centroids(
         .limit(sample_cap)
         .collect()
     )
+    if not sample:
+        return np.empty((0, 0))
     x = np.array([r["v"] for r in sample], dtype=np.float64)
     cents = x[:n_centroids].copy()
     for _ in range(iters):
@@ -219,7 +227,6 @@ def _nearest_centroid_ids(vec: Column, cents, nprobe: int) -> Column:
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
-    dim: int,
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 4,
@@ -228,27 +235,22 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF-style approximate top-k: (query_id, neighbor_id, rank).
 
-    The corpus shuffles ONCE by its nearest centroid (the inverted lists);
-    each query probes only its ``nprobe`` nearest lists, so the scan
+    The inverted lists are the corpus vectors' nearest centroids; each
+    query probes only its ``nprobe`` nearest lists, so the scan
     fraction is nprobe/n_centroids of the corpus — the 100 TB path when
     hyperplane LSH recall is insufficient. With ``nprobe == n_centroids``
     this degenerates to exact brute force (the property the unit test
-    pins against ``cosine_topk``). The query side is broadcast.
+    pins against ``cosine_topk``). An empty corpus yields an empty frame.
     """
-    cents = train_ivf_centroids(corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col)
-    c = spread(corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    )).withColumn("cid", _nearest_centroid_ids(F.col("cv"), cents, 1)[0])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).withColumn("cid", F.explode(_nearest_centroid_ids(F.col("qv"), cents, nprobe)))
-    scored = c.join(F.broadcast(q), "cid").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    cents = train_ivf_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
+    if not len(cents):  # no lists to probe
+        return queries.sparkSession.createDataFrame(
+            [], f"{_ids_ddl(queries, corpus, id_col)}, rank int"
+        )
+    q, c = _sides(queries, corpus, id_col, vec_col)
+    c = c.withColumn("list", _nearest_centroid_ids(F.col("cv"), cents, 1)[0])
+    q = q.withColumn("list", F.explode(_nearest_centroid_ids(F.col("qv"), cents, nprobe)))
+    return _topk_in_lists(q, c, k).drop("sim")
 
 
 def near_dup_pairs(
@@ -301,14 +303,12 @@ def near_dup_pairs(
         if m < 2:
             return pd.DataFrame({"id_a": ids[:0], "id_b": ids[:0]})
         V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-        nr = np.sqrt((V * V).sum(axis=1))
         out_a, out_b = [], []
         col_pos = np.arange(m)[None, :]
         B = 4096  # row-block bound: peak sims block is B×m float64
         for i0 in range(0, m, B):
             i1 = min(i0 + B, m)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                blk = (V[i0:i1] @ V.T) / np.outer(nr[i0:i1], nr)
+            blk = _cos_block(V[i0:i1], V)
             # upper triangle only (j > i): each unordered pair scored once
             keep = np.isfinite(blk) & (blk >= thr) & (col_pos > np.arange(i0, i1)[:, None])
             rows, cols = np.nonzero(keep)
@@ -331,30 +331,13 @@ def ann_topk_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's LSH bucket.
-
-    One equi-join on the signature against the broadcast query side instead
-    of a cross join; recall trades off with n_planes.
+    """Approximate top-k: (query_id, neighbor_id, rank, sim), candidates
+    restricted to the query's LSH bucket (its one list); recall trades off
+    with n_planes. ``sim`` is rounded to 6 places, NULL for a zero-norm
+    vector.
     """
-    sig = lambda col: hyperplane_signature(col, dim, n_planes)
-    # Per-pair HOF cosine kept on purpose: the banding means only a few
-    # thousand pairs survive the bucket join, so interpreted evaluation is
-    # cheap, while the unrolled 64-term form was measured SLOWER in-suite
-    # (codegen bloat/compile; same lesson as hyperplane_signature). The
-    # one real cost was the 1-row-group corpus scan serializing the
-    # signature stage — spread() fixes that.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("bucket", sig(F.col("qv")))
-    c = spread(corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )).withColumn("bucket", sig(F.col("cv")))
-    scored = c.join(F.broadcast(q), "bucket").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    sig = lambda col: hyperplane_signature(col, dim, n_planes)  # noqa: E731
+    q, c = _sides(queries, corpus, id_col, vec_col)
+    q = q.withColumn("list", sig(F.col("qv")))
+    c = c.withColumn("list", sig(F.col("cv")))
+    return _topk_in_lists(q, c, k).withColumn("sim", F.round("sim", 6))

@@ -8,9 +8,10 @@ Covered rewrites:
 - minhash_bands' explode + MIN aggregates == the array_min(transform(md5))
   definition, including the zero-shingle NULL-signature doc;
 - near_dup_pairs' per-bucket BLAS kernel == the per-pair HOF cosine filter;
-- cosine_topk's batch-local-top-k numpy kernel == the crossJoin + window
-  HOF path (ranks identical, ties broken by neighbor_id), also on an empty
-  query side.
+- cosine_topk's batch-local-top-k numpy kernel == DuckDB's
+  list_cosine_similarity top-k in the oracle SQL's shape (ranks identical,
+  ties broken by neighbor_id), with each id typed as on its own side, and
+  an empty query side yields the declared schema.
 """
 
 from __future__ import annotations
@@ -222,67 +223,84 @@ def test_near_dup_pairs_repeated_ids(spark):
     assert sorted(got) == [(1, 2), (1, 3), (2, 3)], got
 
 
-def test_cosine_topk_numpy_equals_hof_path(spark):
+def _duckdb_topk(q_rows, c_rows, k):
+    """The cosine_topk oracle SQL's shape (``__spark_entry__.oracle_sql()``)
+    over (vec_id, embedding) rows, scored by DuckDB's
+    list_cosine_similarity: {(query_id, neighbor_id, rank)}."""
+    import duckdb
+    import pyarrow as pa
+
+    con = duckdb.connect()
+    for name, rows in (("q", q_rows), ("c", c_rows)):
+        con.register(name, pa.table({
+            "vec_id": [r[0] for r in rows],
+            "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float64())),
+        }))
+    return set(con.execute(f"""
+        WITH scored AS (
+          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                 list_cosine_similarity(q.embedding, c.embedding) AS sim
+          FROM q, c)
+        SELECT query_id, neighbor_id, rank FROM (
+          SELECT query_id, neighbor_id,
+                 row_number() OVER (PARTITION BY query_id
+                                    ORDER BY sim DESC, neighbor_id) AS rank
+          FROM scored) WHERE rank <= {k}
+    """).fetchall())
+
+
+def _topk_rows(df):
+    return {(r["query_id"], r["neighbor_id"], r["rank"]) for r in df.collect()}
+
+
+def test_cosine_topk_equals_duckdb_oracle(spark):
     from image_search_indexing_spark.operators.similarity import cosine_topk
 
     rng = np.random.RandomState(11)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(24)]) for i in range(300)],
-        "vec_id long, embedding array<double>",
-    )
+    rows = [(i, [float(x) for x in rng.randn(24)]) for i in range(300)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.where(F.col("vec_id") < 8)
     c = emb.where(F.col("vec_id") >= 8)
-    fast = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in cosine_topk(q, c, k=5, dim=24).collect()
-    }
-    slow = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in cosine_topk(q, c, k=5).collect()
-    }
-    assert fast == slow and len(fast) == 8 * 5
+    got = _topk_rows(cosine_topk(q, c, k=5))
+    assert got == _duckdb_topk(rows[:8], rows[8:], 5) and len(got) == 8 * 5
 
 
 def test_cosine_topk_numpy_empty_queries(spark):
-    """An empty query side yields an empty frame with the HOF path's
-    schema (the numpy kernel used to raise while building the plan)."""
+    """An empty query side yields an empty frame with the declared schema
+    (the numpy kernel used to raise while building the plan)."""
+    from pyspark.sql.types import IntegerType, LongType
+
     from image_search_indexing_spark.operators.similarity import cosine_topk
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0, 0.5]) for i in range(20)],
         "vec_id long, embedding array<double>",
     )
-    q = emb.where(F.col("vec_id") < 0)
-    fast = cosine_topk(q, emb, k=3, dim=3)
-    slow = cosine_topk(q, emb, k=3)
-    assert fast.collect() == [] and slow.collect() == []
-    assert [(f.name, f.dataType) for f in fast.schema] == [
-        (f.name, f.dataType) for f in slow.schema
+    out = cosine_topk(emb.where(F.col("vec_id") < 0), emb, k=3)
+    assert out.collect() == []
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        ("query_id", LongType()), ("neighbor_id", LongType()), ("rank", IntegerType())
     ]
 
 
 def test_cosine_topk_numpy_ids_keep_their_side_types(spark):
     """Int query ids and bigint corpus ids: each output id keeps its own
-    side's type, on both paths and also for an empty query side."""
+    side's type, also for an empty query side, and the ranks equal the
+    DuckDB oracle's."""
     from pyspark.sql.types import IntegerType, LongType
 
     from image_search_indexing_spark.operators.similarity import cosine_topk
 
     rng = np.random.RandomState(5)
-    q = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(6)]) for i in range(4)],
-        "vec_id int, embedding array<double>",
-    )
-    c = spark.createDataFrame(
-        [(10_000_000_000 + i, [float(x) for x in rng.randn(6)]) for i in range(40)],
-        "vec_id bigint, embedding array<double>",
-    )
-    fast = cosine_topk(q, c, k=3, dim=6)
-    slow = cosine_topk(q, c, k=3)
+    q_rows = [(i, [float(x) for x in rng.randn(6)]) for i in range(4)]
+    c_rows = [(10_000_000_000 + i, [float(x) for x in rng.randn(6)]) for i in range(40)]
+    q = spark.createDataFrame(q_rows, "vec_id int, embedding array<double>")
+    c = spark.createDataFrame(c_rows, "vec_id bigint, embedding array<double>")
     types = lambda df: {f.name: f.dataType for f in df.schema}  # noqa: E731
-    assert types(fast)["query_id"] == IntegerType() and types(fast)["neighbor_id"] == LongType()
-    assert types(fast) == types(slow)
-    rows = lambda df: {(r["query_id"], r["neighbor_id"], r["rank"]) for r in df.collect()}  # noqa: E731
-    assert rows(fast) == rows(slow) and len(rows(fast)) == 4 * 3
-    empty = cosine_topk(q.where(F.col("vec_id") < 0), c, k=3, dim=6)
-    assert empty.collect() == [] and types(empty) == types(slow)
+    want = {"query_id": IntegerType(), "neighbor_id": LongType(), "rank": IntegerType()}
+    out = cosine_topk(q, c, k=3)
+    got = _topk_rows(out)
+    assert types(out) == want
+    assert got == _duckdb_topk(q_rows, c_rows, 3) and len(got) == 4 * 3
+    empty = cosine_topk(q.where(F.col("vec_id") < 0), c, k=3)
+    assert empty.collect() == [] and types(empty) == want

@@ -148,6 +148,7 @@ def sequence(spark, tmp_path_factory):
         out["tombstoned"] = set(first) | set(still_seen[:2])
         out["tombstones_left"] = tomb
         out["batches"] = {r: set(_hashes(drv.fetch_batch(r))) for r in range(1, N_ROUNDS)}
+        out["final_counters"] = drv.catalog.snapshot()["counters"]
         yield out
     finally:
         docs.unpersist()
@@ -170,6 +171,16 @@ def test_invalidation_edge_cases_match_the_oracle(sequence):
     assert rescheduled
     assert sequence["tombstones_left"] == sequence["tombstoned"] - rescheduled
     assert set(NEVER_DISCOVERED) <= sequence["tombstones_left"]
+
+
+def test_invalidated_count_outlives_the_rounds_after_it(sequence):
+    """The rounds after the invalidations carry their count forward, so the
+    last snapshot still counts every URL ever scheduled as ``seen_total +
+    invalidated``: the count ``SeenSet.load`` trusts a filter by."""
+    counters = sequence["final_counters"]
+    assert counters["invalidated"] == sum(got for got, _ in sequence["invalidated"])
+    scheduled = sum(c["scheduled"] for c in sequence["counters"])
+    assert counters["seen_total"] + counters["invalidated"] == scheduled
 
 
 def test_only_the_seen_set_touches_its_tables(sequence):

@@ -280,7 +280,7 @@ def test_ivf_topk_degenerates_to_exact_and_recalls(spark):
     exact = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in cosine_topk(q, c, k=5).collect()}
     full_probe = {
         (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in ivf_topk(q, c, dim=64, k=5, n_centroids=8, nprobe=8).collect()
+        for r in ivf_topk(q, c, k=5, n_centroids=8, nprobe=8).collect()
     }
     assert full_probe == exact  # nprobe == n_centroids ⇒ exhaustive
 
@@ -292,7 +292,7 @@ def test_ivf_topk_degenerates_to_exact_and_recalls(spark):
     for (nc, npr), floor in floors.items():
         approx = {
             (r["query_id"], r["neighbor_id"])
-            for r in ivf_topk(q, c, dim=64, k=5, n_centroids=nc, nprobe=npr).collect()
+            for r in ivf_topk(q, c, k=5, n_centroids=nc, nprobe=npr).collect()
         }
         recall = len(approx & exact_pairs) / len(exact_pairs)
         assert recall >= floor, (nc, npr, recall)

@@ -51,9 +51,12 @@ def main() -> None:
     cap("minhash_lsh_buckets", qs["minhash_lsh_buckets"](spark, sf),
         "staged token/shingle/signature projections (no re-evaluation).")
     cap("cosine_topk", qs["cosine_topk"](spark, sf),
-        "corpus never shuffles; query side broadcast; JVM-side zip_with dot.")
+        "corpus spread once, then one BLAS matmul per Arrow batch "
+        "(MapInPandas) against the collected query block; one window ranks "
+        "the batch-local top-k.")
     cap("emb_near_dup_pairs", qs["emb_near_dup_pairs"](spark, sf),
-        "pairs only inside LSH buckets (no cross join); sim filter JVM-side.")
+        "pairs only inside LSH buckets (no cross join); one BLAS matmul "
+        "per bucket (FlatMapGroupsInPandas) applies the sim threshold.")
     cap("simhash_buckets_md5", qs["simhash_buckets_md5"](spark, sf),
         "explode + 60 codegen'd sign-sum aggregates (no interpreted HOF fold).")
     cap("indexer_compact", qs["indexer_compact"](spark, sf),
