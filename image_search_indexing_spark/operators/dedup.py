@@ -13,9 +13,13 @@ detection; this module provides:
 
 Scale notes: every variant is shuffle-by-signature (narrow keys), no
 pairwise cross joins — candidate pairs only materialize inside an LSH
-bucket. MinHash here is **md5-based** (min over md5(i‖shingle)) so the
-DuckDB oracle can reproduce it bit-for-bit; at production scale you would
-swap in xxhash64 permutations (same plan shape, cheaper hash).
+bucket. The four pair operators (MinHash, SimHash, ``hamming_pairs``
+and ``multimodal.audio_fp_pairs``) share one hot-duplicate defence,
+``_collapse_identical`` (identical keys become star edges to the
+group-min id), and one candidate self-join, ``_pairs_sharing``.
+MinHash here is **md5-based** (min over md5(i‖shingle)) so the DuckDB
+oracle can reproduce it bit-for-bit; at production scale you would swap
+in xxhash64 permutations (same plan shape, cheaper hash).
 """
 
 from __future__ import annotations
@@ -25,6 +29,57 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..session import spread
+
+
+def _collapse_identical(df: DataFrame, id_col: str, key: str) -> tuple[DataFrame, DataFrame]:
+    """The hot-duplicate defence of the near-dup pair operators.
+
+    Rows sharing one ``key`` value collapse onto the group-min id: a
+    g-member group (a ubiquitous asset or text can put g in the millions)
+    emits g−1 STAR EDGES instead of its g²/2 clique, and only the
+    representative enters the candidate join, so output is LINEAR in
+    group size. Lossless whenever a row's pairing depends on its key
+    alone: a member then pairs with any third row exactly as its
+    representative does, and ``connected_components`` over the output
+    yields the un-collapsed graph's groups. Rows with a NULL key pair
+    with nothing and are dropped.
+
+    Returns ``(star, reps)``: ``reps`` is one ``(key, __rep)`` row per
+    distinct value; ``star`` is ``(id_a = __rep, id_b = member, *df's
+    other columns)`` per non-representative member. ``df`` is shuffled
+    on ``key`` once; the group-min aggregate and the member join both
+    ride that exchange."""
+    h = df.where(F.col(key).isNotNull()).repartition(key)
+    reps = h.groupBy(key).agg(F.min(id_col).alias("__rep"))
+    rest = [c for c in df.columns if c not in (id_col, key)]
+    star = (
+        h.join(reps.hint("shuffle_hash"), key)
+        .where(F.col(id_col) != F.col("__rep"))
+        .select(F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"), *rest)
+    )
+    return star, reps
+
+
+def _pairs_sharing(
+    df: DataFrame, id_col: str, keys: list[str], carry: str | None = None
+) -> DataFrame:
+    """``(id_a, id_b[, <carry>_a, <carry>_b])`` for every two rows of
+    ``df`` that share ``keys``, id_a < id_b: the candidate self-join of
+    the near-dup pair operators. Pairs stream out of the join, nothing
+    accumulates per key. The caller partitions ``df`` by ``keys``; both
+    sides are the same projection of it, so the second reads the first's
+    exchange (ReusedExchange) instead of recomputing ``df``."""
+
+    def side(s: str) -> DataFrame:
+        extra = [F.col(carry).alias(f"{carry}_{s}")] if carry else []
+        return df.select(F.col(id_col).alias(f"id_{s}"), *keys, *extra)
+
+    out = ["id_a", "id_b"] + ([f"{carry}_a", f"{carry}_b"] if carry else [])
+    return (
+        side("a").join(side("b").hint("shuffle_hash"), keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select(*out)
+    )
 
 
 def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -140,37 +195,19 @@ def minhash_candidate_pairs(
     pairs incrementally (sort-merge/hash join state, AQE-splittable), so no
     per-bucket array ever materializes.
 
-    EXACT-TEXT duplicates are PRE-COLLAPSED before banding (the same
-    100 TB skew fix as ``hamming_pairs``): docs group by ``md5(text)``;
-    a g-member identical-text group emits g−1 star edges to the
-    group-min representative instead of the g²/2 within-bucket clique,
-    and only representatives are MinHashed and banded. Star edges are
-    genuine candidates (identical text ⇒ identical signature ⇒ every
-    band shared), and a member's banding behavior equals its
-    representative's, so downstream verify+components
-    (``text_dup_groups``) produce EXACTLY the groups the un-collapsed
-    graph would — identical texts also verify identically under any
-    Jaccard threshold."""
-    keyed = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("__k")).repartition(
-        "__k"
-    )
-    grp = keyed.groupBy("__k").agg(F.min(id_col).alias("__rep"))
-    m = keyed.join(grp.hint("shuffle_hash"), "__k")
-    star = m.where(F.col(id_col) != F.col("__rep")).select(
-        F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b")
-    )
-    reps = m.where(F.col(id_col) == F.col("__rep")).select(id_col)
-    rep_docs = docs.join(reps, id_col)
+    EXACT-TEXT duplicates collapse on ``md5(text)`` before banding
+    (``_collapse_identical``); only representatives are MinHashed and
+    banded. Lossless: identical text ⇒ identical signature ⇒ every band
+    shared, so star edges are genuine candidates, a member bands as its
+    representative does, and identical texts verify identically under
+    any Jaccard threshold (``text_dup_groups`` gets EXACTLY the
+    un-collapsed groups). A NULL text pairs with nothing."""
+    keyed = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("__k"))
+    star, reps = _collapse_identical(keyed, id_col, "__k")
+    rep_docs = docs.join(reps.select(F.col("__rep").alias(id_col)), id_col)
     b = minhash_bands(rep_docs, text_col, id_col, k, bands, shingle_words)
     b = b.repartition("band", "band_hash")
-    a = b.select(F.col(id_col).alias("id_a"), "band", "band_hash")
-    c = b.select(F.col(id_col).alias("id_b"), "band", "band_hash")
-    rep_pairs = (
-        a.join(c.hint("shuffle_hash"), ["band", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    rep_pairs = _pairs_sharing(b, id_col, ["band", "band_hash"]).distinct()
     return star.unionByName(rep_pairs)
 
 
@@ -332,45 +369,31 @@ def simhash_candidate_pairs(
     exact Hamming distance (``bit_count(a XOR b)``) as the verify step,
     JVM-side. Returns ``(id_a, id_b, hamming)``, id_a < id_b.
 
-    IDENTICAL SimHash values are PRE-COLLAPSED before the bucket join
-    (the ``hamming_pairs`` skew fix): a g-member identical-hash group —
-    exact-dup texts are the common case, but any sign-sum collision
-    collapses too — emits g−1 star edges ``(group-min id, member,
-    hamming=0)``, and only DISTINCT SimHash values enter the self-join.
-    Exactly faithful: a member's bucket AND its Hamming distance to any
-    third doc depend only on its SimHash, which equals its
-    representative's, so the collapsed graph has the same components
-    under any ``max_hamming``.
+    IDENTICAL SimHash values collapse before the bucket join
+    (``_collapse_identical``; exact-dup texts are the common case, but
+    any sign-sum collision collapses too) into ``hamming=0`` star edges,
+    and only DISTINCT SimHash values enter the self-join. Lossless: a
+    member's bucket AND its Hamming distance to any third doc depend
+    only on its SimHash, so the components are the same under any
+    ``max_hamming``. A NULL or empty text has SimHash 0 and pairs with
+    every other one at hamming 0.
 
     ``token_hash='md5'`` (default) is the oracle-reproducible twin;
     ``token_hash='xxhash64'`` with ``bits=63`` is the PRODUCTION path —
     identical plan shape and pair contract, cheaper hash."""
-    sim = simhash_frame(docs, text_col, id_col, bits, token_hash).repartition("simhash")
-    grp = sim.groupBy("simhash").agg(F.min(id_col).alias("__rep"))
-    star = (
-        sim.join(grp.hint("shuffle_hash"), "simhash")
-        .where(F.col(id_col) != F.col("__rep"))
-        .select(
-            F.col("__rep").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    b = grp.select(
+    sim = simhash_frame(docs, text_col, id_col, bits, token_hash)
+    star, reps = _collapse_identical(sim, id_col, "simhash")
+    b = reps.select(
         F.col("__rep"), "simhash",
         F.shiftright("simhash", bits - prefix_bits).alias("bucket"),
     ).repartition("bucket")
-    a = b.select(F.col("__rep").alias("id_a"), F.col("simhash").alias("__sa"), "bucket")
-    c = b.select(F.col("__rep").alias("id_b"), F.col("simhash").alias("__sb"), "bucket")
-    pairs = (
-        a.join(c.hint("shuffle_hash"), "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))).alias("hamming")
-        )
+    pairs = _pairs_sharing(b, "__rep", ["bucket"], carry="simhash").select(
+        "id_a", "id_b",
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
     )
     if max_hamming is not None:
         pairs = pairs.where(F.col("hamming") <= max_hamming)
+    star = star.select("id_a", "id_b", F.lit(0).cast("int").alias("hamming"))
     return star.unionByName(pairs)
 
 
@@ -391,22 +414,15 @@ def hamming_pairs(
     (4 bands) recall is EXACT for ``max_hamming <= 3``. The exact
     ``bit_count(xor)`` Hamming gate verifies every banding survivor.
 
-    IDENTICAL hashes are PRE-COLLAPSED before banding (the 100 TB skew
-    fix): a g-member identical-hash group (a ubiquitous asset — blank
-    image, silence frame — can put g in the millions) emits g−1 STAR
-    EDGES ``(group-min id, member, hamming=0)`` instead of the g²/2
-    within-bucket clique, and only DISTINCT hash values enter the band
-    self-join. Output volume is therefore LINEAR in duplicate-group
-    size. Star edges represent exact-dup connectivity losslessly (every
-    member is Hamming-0 to its representative, and the representative
-    carries the group's edges to other hash values), so
-    ``connected_components`` over the output yields EXACTLY the groups
-    the un-collapsed clique would — only the redundant intra-clique pair
-    rows are gone. Consequence of banding distinct hashes through reps:
-    a near-dup edge between two groups appears once, as
-    (rep_a, rep_b, hamming); non-representative members pair only with
-    their representative. Returns ``(id_a, id_b, hamming)``, id_a <
-    id_b, streaming out of the join — the same skew-safe shape as
+    IDENTICAL hashes collapse before banding (``_collapse_identical``;
+    a blank image or silence frame is the hot group) into ``hamming=0``
+    star edges, and only DISTINCT hash values enter the band self-join.
+    Lossless: every member is Hamming-0 to its representative, which
+    carries the group's edges to other hash values. So a near-dup edge
+    between two groups appears once, as (rep_a, rep_b, hamming), and a
+    non-representative member pairs only with its representative. A
+    NULL hash pairs with nothing. Returns ``(id_a, id_b, hamming)``,
+    id_a < id_b — the same skew-safe shape as
     ``simhash_candidate_pairs``."""
     n_bands = (bits + band_bits - 1) // band_bits
     if max_hamming >= n_bands:
@@ -420,27 +436,11 @@ def hamming_pairs(
             f"bands (smaller band_bits) or lower max_hamming"
         )
     mask = (1 << band_bits) - 1
-    # Materialize the hashed table ONCE in the shuffle layer: the explicit
-    # repartition on the hash value feeds (a) the identical-hash groupBy
-    # (already co-partitioned — no second exchange) and (b) the member →
-    # representative join, as a ReusedExchange. Every current caller's
-    # upstream is an Arrow decode+hash pass (phash_frame), so the
-    # expensive fingerprint stage runs exactly once.
-    h = (
-        df.where(F.col(hash_col).isNotNull())
-        .select(F.col(id_col), F.col(hash_col).alias("__h"))
-        .repartition("__h")
-    )
-    grp = h.groupBy("__h").agg(F.min(id_col).alias("__rep"))
-    star = (
-        h.join(grp.hint("shuffle_hash"), "__h")
-        .where(F.col(id_col) != F.col("__rep"))
-        .select(
-            F.col("__rep").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
+    # The collapse's one exchange on the hash value feeds the group-min
+    # aggregate and the member join, so the upstream Arrow decode+hash
+    # pass of every current caller (phash_frame) runs exactly once.
+    h = df.select(F.col(id_col), F.col(hash_col).alias("__h"))
+    star, reps = _collapse_identical(h, id_col, "__h")
     bands = F.array(
         *[
             F.shiftrightunsigned(F.col("__h"), b * band_bits)
@@ -451,21 +451,19 @@ def hamming_pairs(
     # Band only the DISTINCT hash values (one representative each); the
     # banded table is again repartitioned on the join keys so the self-join
     # reuses one exchange instead of recomputing the aggregate per side.
-    e = grp.select(
+    e = reps.select(
         F.col("__rep"), F.col("__h"), F.posexplode(bands).alias("band", "bv")
     ).repartition("band", "bv")
-    a = e.select(F.col("__rep").alias("id_a"), F.col("__h").alias("__ha"), "band", "bv")
-    b = e.select(F.col("__rep").alias("id_b"), F.col("__h").alias("__hb"), "band", "bv")
     rep_pairs = (
-        a.join(b.hint("shuffle_hash"), ["band", "bv"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _pairs_sharing(e, "__rep", ["band", "bv"], carry="__h")
         .select(
             "id_a", "id_b",
-            F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb"))).alias("hamming"),
+            F.bit_count(F.col("__h_a").bitwiseXOR(F.col("__h_b"))).alias("hamming"),
         )
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
+    star = star.select("id_a", "id_b", F.lit(0).cast("int").alias("hamming"))
     return star.unionByName(rep_pairs)
 
 

@@ -75,6 +75,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _collapse_identical, _pairs_sharing
+
 MAX_THUMB_SIDE = 200  # ImageParse.java thumbnail bound
 MIN_WIDTH = 51  # ImageParse.java:41-56 size gates
 MIN_HEIGHT = 51
@@ -2739,16 +2741,14 @@ def audio_fp_pairs(
     — appears in millions of docs). Two structural fixes keep output
     LINEAR in duplicate-group size:
 
-    1. EXACT-DUP PRE-COLLAPSE: docs are grouped by their full
-       (frame_idx, fp) sequence; a g-member identical-sequence group
-       emits g−1 STAR EDGES ``(group-min id, member, n_matched =
-       distinct-frame count)`` instead of the g²/2 clique, and only the
-       per-group representative enters the inverted-index join. A
-       member's fp multiset is identical to its representative's, so its
-       match behavior against any third doc is exactly the
-       representative's — star edges are lossless for connectivity AND
-       for the symmetric ``n_matched`` score (the same argument as
-       ``hamming_pairs``'s collapse).
+    1. EXACT-DUP PRE-COLLAPSE: docs collapse on their full
+       (frame_idx, fp) sequence (``dedup._collapse_identical``) into
+       star edges ``(group-min id, member, n_matched = distinct-frame
+       count)``, and only the representative enters the inverted-index
+       join. A member's fp multiset is identical to its
+       representative's, so it matches any third doc exactly as the
+       representative does — lossless for connectivity AND for the
+       symmetric ``n_matched`` score.
     2. DOCUMENT-FREQUENCY CAP: fp values held by more than
        ``max_fp_docs`` representatives are dropped from the inverted
        index before the join (they carry no discriminative signal — an
@@ -2779,17 +2779,9 @@ def audio_fp_pairs(
         F.sort_array(F.collect_list(F.struct("frame_idx", "fp"))).alias("__sig"),
         F.countDistinct("frame_idx").alias("__nf"),
     )
-    grp = sig.groupBy("__sig").agg(F.min(id_col).alias("__rep"))
-    mem = sig.join(grp, "__sig").select(id_col, "__rep", "__nf")
-    star = (
-        mem.where((F.col(id_col) != F.col("__rep")) & (F.col("__nf") >= min_matched))
-        .select(
-            F.col("__rep").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.col("__nf").alias("n_matched"),
-        )
-    )
-    reps = mem.where(F.col(id_col) == F.col("__rep")).select(id_col)
+    star, reps = _collapse_identical(sig, id_col, "__sig")
+    star = star.where(F.col("__nf") >= min_matched).withColumnRenamed("__nf", "n_matched")
+    reps = reps.select(F.col("__rep").alias(id_col))
     rf = f.join(reps.hint("shuffle_hash"), id_col).repartition("fp")
     if max_fp_docs is not None:
         ok = (
@@ -2799,14 +2791,13 @@ def audio_fp_pairs(
             .select("fp")
         )
         rf = rf.join(ok.hint("shuffle_hash"), "fp")
-    a = rf.select(F.col(id_col).alias("id_a"), F.col("frame_idx").alias("fa"), "fp")
-    b = rf.select(F.col(id_col).alias("id_b"), F.col("frame_idx").alias("fb"), "fp")
     rep_pairs = (
-        a.join(b.hint("shuffle_hash"), "fp")
-        .where(F.col("id_a") < F.col("id_b"))
+        _pairs_sharing(rf, id_col, ["fp"], carry="frame_idx")
         .groupBy("id_a", "id_b")
         .agg(
-            F.least(F.countDistinct("fa"), F.countDistinct("fb")).alias("n_matched")
+            F.least(
+                F.countDistinct("frame_idx_a"), F.countDistinct("frame_idx_b")
+            ).alias("n_matched")
         )
         .where(F.col("n_matched") >= min_matched)
     )

@@ -1,5 +1,7 @@
+import importlib.util
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 
@@ -55,6 +57,37 @@ def plan_ops(spark):
         return out
 
     return ops
+
+
+@pytest.fixture(scope="session")
+def oracle(spark):
+    """``oracle(name)`` asserts that the declared query ``name`` of
+    ``__spark_entry__`` equals its oracle SQL on the sf0.001 tables in
+    DuckDB, cell by cell under ``tools/compare_oracle.py``'s
+    ``canon``/``cells_equal``, and is not empty."""
+    import duckdb
+
+    sf = "/root/testdata/sf0.001"
+    path = Path(__file__).resolve().parents[1] / "tools" / "compare_oracle.py"
+    spec = importlib.util.spec_from_file_location("compare_oracle", path)
+    co = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(co)
+    con = duckdb.connect()
+    for t in co.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    queries, sqls = co.E.queries(), co.E.oracle_sql()
+
+    def check(name):
+        got = co.canon(queries[name](spark, sf).toPandas())
+        want = co.canon(con.execute(sqls[name]).df())
+        assert list(got.columns) == list(want.columns) and len(got) == len(want) > 0
+        g, w = got.to_numpy(dtype=object), want.to_numpy(dtype=object)
+        bad = [(i, j) for i in range(len(g)) for j in range(g.shape[1])
+               if not co.cells_equal(g[i, j], w[i, j])]
+        assert not bad, (name, bad[:3])
+
+    yield check
+    con.close()
 
 
 @pytest.fixture()

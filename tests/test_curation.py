@@ -241,3 +241,27 @@ def test_domain_profile_integer_exact(spark):
     # all-integer output schema: no floating point anywhere
     kinds = {f.dataType.simpleString() for f in domain_profile(docs).schema.fields}
     assert kinds <= {"string", "bigint"}, kinds
+
+
+def test_domain_profile_non_divisor_p(spark):
+    """``block_dup_per_20`` that does not divide 20 blocks above exactly
+    p/20: at p=3, 4 dup docs of 25 (0.16) block, above 3/20 and below the
+    1/6 that the old ``int(20 // p)`` multiplier blocked at; 3 of 25
+    (0.12) keep. Both sources' mean quality stays above the cut, so only
+    the dup rule decides."""
+    from image_search_indexing_spark.operators.curation import domain_profile
+
+    good = "the quick brown fox jumps over the lazy dog and runs far away today"
+    rows = []
+    for src, n_dup in (("d.com", 4), ("e.com", 3)):
+        rows += [(src, good + f" {src} copy") for _ in range(n_dup)]
+        rows += [(src, good + f" {src} unique {i}") for i in range(25 - n_dup)]
+    docs = spark.createDataFrame(
+        [(i, t, "en", s, 10) for i, (s, t) in enumerate(rows)],
+        "doc_id long, text string, lang string, source string, n_chars int",
+    )
+    out = {r["source"]: r for r in domain_profile(docs, block_dup_per_20=3).collect()}
+    for src, n_dup, verdict in (("d.com", 4, "block"), ("e.com", 3, "keep")):
+        r = out[src]
+        assert (r["n_docs"], r["dup_docs"], r["verdict"]) == (25, n_dup, verdict)
+        assert r["sum_q_micro"] >= 300_000 * 25

@@ -3,18 +3,12 @@ zero-norm corpus vector ranks last in every top-k operator, an empty side
 yields an empty frame, and the similarity queries of ``__spark_entry__``
 equal their oracle SQL on the sf0.001 tables."""
 
-import importlib.util
-from pathlib import Path
-
-import duckdb
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from image_search_indexing_spark.operators import similarity as S
 
-SF = "/root/testdata/sf0.001"
-COMPARE_ORACLE = Path(__file__).resolve().parents[1] / "tools" / "compare_oracle.py"
 ORACLE_QUERIES = ("cosine_topk", "ann_topk_lsh", "ivf_topk", "emb_near_dup_pairs",
                   "near_dup_components")
 
@@ -82,27 +76,6 @@ def test_an_empty_side_yields_an_empty_frame(spark, op, side):
     assert out.collect() == [] and out.columns == cols
 
 
-@pytest.fixture(scope="module")
-def oracle():
-    """``tools/compare_oracle.py`` (its ``canon``/``cells_equal``), the
-    entry's queries and oracle SQL, and DuckDB views of the sf0.001 tables."""
-    spec = importlib.util.spec_from_file_location("compare_oracle", COMPARE_ORACLE)
-    co = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(co)
-    con = duckdb.connect()
-    for t in co.TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    yield co, co.E.queries(), co.E.oracle_sql(), con
-    con.close()
-
-
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_similarity_queries_equal_the_duckdb_oracle(spark, oracle, name):
-    co, queries, sqls, con = oracle
-    got = co.canon(queries[name](spark, SF).toPandas())
-    want = co.canon(con.execute(sqls[name]).df())
-    assert list(got.columns) == list(want.columns) and len(got) == len(want) > 0
-    g, w = got.to_numpy(dtype=object), want.to_numpy(dtype=object)
-    bad = [(i, j) for i in range(len(g)) for j in range(g.shape[1])
-           if not co.cells_equal(g[i, j], w[i, j])]
-    assert not bad, (name, bad[:3])
+def test_similarity_queries_equal_the_duckdb_oracle(oracle, name):
+    oracle(name)
