@@ -636,16 +636,16 @@ def _winnow_fp(spark, sf):
     """Winnowing fingerprints (Schleimer et al. SIGMOD'03 / MOSS) per
     document, k=16-char grams, w=16 windows — compacted to (count,
     digest-of-set) per doc so the driver compare stays scalar. The md5
-    lexicographic-min trick makes the whole algorithm one built-in
-    projection, mirrored exactly in the DuckDB oracle."""
+    lexicographic-min trick makes the whole algorithm built-in
+    expressions (three staged projections), mirrored exactly in the
+    DuckDB oracle."""
     from image_search_indexing_spark.functions import text as TX
 
-    d = _t(spark, sf, "documents")
-    fps = TX.winnow_fingerprints(F.col("text"), 16, 16)
+    d = TX.winnow_fingerprints(_t(spark, sf, "documents"), "text", 16, 16)
     return d.select(
         "doc_id",
-        F.size(fps).alias("n_fp"),
-        F.md5(F.array_join(fps, ",")).alias("fp_digest"),
+        F.size("winnow").alias("n_fp"),
+        F.md5(F.array_join("winnow", ",")).alias("fp_digest"),
     )
 
 
@@ -707,11 +707,11 @@ def _clean_corpus_neardup(spark, sf):
     kept = scored.where((F.col("quality") >= 0.55) & (F.col("lang_pred") != "und"))
     w = Window.partitionBy("fp").orderBy("doc_id")
     champ = kept.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1)
-    ex = (
-        champ.select("doc_id")
-        .join(corpus, "doc_id")
-        .select("doc_id", F.explode(TX.winnow_fingerprints(F.col("text"), 16, 16)).alias("w"))
-    )
+    # explode_outer: see winnow_fingerprints (a fingerprint-less doc's
+    # NULL row meets no other in the equi-join)
+    ex = TX.winnow_fingerprints(
+        champ.select("doc_id").join(corpus, "doc_id"), "text", 16, 16
+    ).select("doc_id", F.explode_outer("winnow").alias("w"))
     dominated = (
         ex.select(F.col("doc_id").alias("id_a"), "w")
         .join(ex.select(F.col("doc_id").alias("id_b"), "w"), "w")

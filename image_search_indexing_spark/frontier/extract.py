@@ -27,13 +27,17 @@ model ``spans: array<struct<kind,text,media_ref,offset>>``:
 
 One core builds every media-ref row: ``_capped_docs`` → ``_explode`` →
 media filter → ``_ref_url`` → ``_with_ref_columns`` (ext, drop_reason,
-SURT, hash, host, page_ts). The entry points differ only around it:
+SURT, hash, host, page_ts). ``with_url_hash`` is the one derivation of
+SURT and hash from ``ref_url``; the round driver calls it too, after its
+queue's exchanges, so none of them ships the hash. The entry points
+differ only around the core:
 
 - ``media_refs``: the core (``REF_COLS``).
 - ``extract_refs_frontier``: the core with the round's counters riding
   as ``observe`` metrics on the same pass. Its J4 window rides the
-  round's bucket exchange (``_refs`` with ``n_buckets``), which the
-  champion dedup and the Bloom probe then reuse.
+  round's bucket exchange (``_refs`` with ``n_buckets``; it carries the
+  bucket, not the hash), which the champion dedup and the Bloom probe
+  then reuse.
 - ``extract_refs``: the caption-context windows before the media filter,
   then the core, then the indexer's text features and the caption guard.
 - ``extract_refs_streaming``: the core with the window-free J4 check.
@@ -126,13 +130,27 @@ def _ref_empty(media_ref: Column) -> Column:
     return media_ref.isNull() | (F.trim(media_ref) == "")
 
 
+def with_url_hash(df: DataFrame) -> DataFrame:
+    """``df`` with ``surt`` and ``url_hash`` (the md5 hex of the SURT, the
+    seen-set and dedup key) derived from its ``ref_url``.
+
+    The one derivation of the key. The extraction core calls it on every
+    media row (the round's bucket path twice: for the bucket before its
+    exchange, and after it), and the round driver after each other
+    exchange its queue crosses (the pending rows' bucket exchange, the
+    politeness host exchange): the 32-char hash is the costliest column of
+    those exchanges, and one ``md5(surt)`` costs about 9 µs of core time
+    per row."""
+    return df.withColumn("surt", U.surt(F.col("ref_url"))).withColumn(
+        "url_hash", U.url_hash(F.col("surt"))
+    )
+
+
 def _derived() -> dict[str, Column]:
     """``_with_ref_columns``' caller-supplied inputs, computed on the media
-    rows themselves: the empty_ref gate, url_hash (from the ``surt`` column
-    ``_with_ref_columns`` adds first) and page_ts."""
+    rows themselves: the empty_ref gate and page_ts."""
     return {
         "ref_empty": _ref_empty(F.col("media_ref")),
-        "url_hash": U.url_hash(F.col("surt")),
         "page_ts": U.parse_archive_ts(F.col("fetch_ts")),
     }
 
@@ -142,13 +160,12 @@ def _with_ref_columns(
     css_dup: Column,
     max_url_length: int,
     ref_empty: Column,
-    url_hash: Column,
     page_ts: Column,
 ) -> DataFrame:
     """The shared ref columns over media rows: ext, drop_reason (null =
-    valid), surt, url_hash, host, page_ts. ``css_dup`` is the J4 mark: the
-    row is css and an img/a span of the same doc parsed the same URL.
-    ``ref_empty``, ``url_hash`` and ``page_ts`` are the caller's: the
+    valid), surt, url_hash (``with_url_hash``), host, page_ts. ``css_dup``
+    is the J4 mark: the row is css and an img/a span of the same doc parsed
+    the same URL. ``ref_empty`` and ``page_ts`` are the caller's: the
     derivations of ``_derived``, or the round's columns carried through its
     bucket exchange (``_refs``)."""
     ext = U.url_ext(F.col("ref_url"))
@@ -159,10 +176,7 @@ def _with_ref_columns(
         .when(css_dup, F.lit("css_already_parsed"))
     )
     return (
-        media.withColumn("ext", ext)
-        .withColumn("drop_reason", drop_reason)
-        .withColumn("surt", U.surt(F.col("ref_url")))
-        .withColumn("url_hash", url_hash)
+        with_url_hash(media.withColumn("ext", ext).withColumn("drop_reason", drop_reason))
         .withColumn("host", U.url_host(F.col("ref_url")))
         .withColumn("page_ts", page_ts)
     )
@@ -177,28 +191,28 @@ def _refs(spans: DataFrame, max_url_length: int, n_buckets: int | None = None) -
     its one exchange, which carries media rows only.
 
     With ``n_buckets`` (the round driver), the window rides the round's
-    bucket exchange: the media rows get url_hash and ``bucket =
+    bucket exchange: the media rows get ``bucket =
     pmod(xxhash64(url_hash), n_buckets)``, are reduced to the columns
     needed downstream (media_ref to its empty_ref gate, fetch_ts to
-    page_ts) and repartitioned by ``bucket``, and the window partitions by
-    (bucket, doc_id, ref_url): the same groups, as bucket is a function of
-    ref_url. The output keeps that ``bucket`` attribute, so the champion
-    dedup and the Bloom probe after it need no exchange of their own.
-    ``n_buckets`` sets the bucket values, not the exchange's width: that
-    is ``spark.sql.shuffle.partitions`` (``repartition("bucket")``), and
-    AQE may coalesce it to the data's size; a bucket never spans two
+    page_ts; url_hash itself is not shipped, ``_with_ref_columns`` derives
+    it again from ref_url after the exchange) and repartitioned by
+    ``bucket``, and the window partitions by (bucket, doc_id, ref_url):
+    the same groups, as bucket is a function of ref_url. The output keeps
+    that ``bucket`` attribute, so the champion dedup and the Bloom probe
+    after it need no exchange of their own. ``n_buckets`` sets the bucket
+    values, not the exchange's width: that is
+    ``spark.sql.shuffle.partitions`` (``repartition("bucket")``), and AQE
+    may coalesce it to the data's size; a bucket never spans two
     partitions either way."""
     media = _media(spans)
     keys = ["doc_id", "ref_url"]
     cols = _derived()
     if n_buckets is not None:
-        url_hash = U.url_hash(U.surt(F.col("ref_url")))
-        media = media.select(
+        media = with_url_hash(media).select(
             "doc_id", "kind", "span_idx", "offset", "ref_url",
             cols["ref_empty"].alias("ref_empty"),
             cols["page_ts"].alias("page_ts"),
-            url_hash.alias("url_hash"),
-            bucket_of(url_hash, n_buckets).alias("bucket"),
+            bucket_of(F.col("url_hash"), n_buckets).alias("bucket"),
         ).repartition("bucket")
         keys = ["bucket", *keys]
         cols = {name: F.col(name) for name in cols}

@@ -318,10 +318,12 @@ def schedule_round(
 ) -> DataFrame:
     """Select each host's top-``budget`` candidates, skew-safely.
 
-    Input: one row per *new, allowed* URL with columns at least
-    ``(ref_url, url_hash, host, priority, page_ts)``. Output adds
-    ``queue_pos`` (1-based per-host fetch order) and ``fetch_delay_ms``
-    (queue_pos × crawl_delay_ms), restricted to scheduled rows.
+    Input: one row per *new, allowed* URL. The function reads ``ref_url``,
+    ``host``, ``priority`` and ``page_ts``; every other column passes
+    through unread (the round driver hands it no ``url_hash``, so the host
+    exchange does not ship it). Output adds ``queue_pos`` (1-based
+    per-host fetch order) and ``fetch_delay_ms`` (queue_pos ×
+    crawl_delay_ms), restricted to scheduled rows.
     ``politeness`` must hold at most one row per host (``host_budgets``
     makes it so): the budgets are joined to the candidates, so a host
     listed twice would schedule each of its URLs twice.

@@ -22,10 +22,17 @@ SURVEY.md §7.0):
   tables (seen, bloom, tombstones, cuckoo); this module keeps the flow.
 
 So each new candidate crosses one exchange from the documents scan to the
-Bloom cogroup, and none of the round's exchanges on the queue's path
-carries h1/h2 (recomputed from url_hash after the last one). The Bloom
-update is the exception: its key side reads (bucket, h1, h2) and nothing
-else, so there the two hashes replace the key.
+Bloom cogroup. The round's exchanges on the queue's path (the extraction's
+and the pending rows' bucket exchanges, the politeness host exchange)
+ship ref_url, bucket and the candidate's fields, and derive the rest
+after the exchange: url_hash = md5(surt(ref_url)) (``extract.with_url_hash``),
+h1/h2 from url_hash, host from ref_url. The hash was the costliest column
+of those exchanges (on crawl_deep it shuffled more bytes than ref_url).
+Deriving it again costs one ``md5(surt)``, about 9 µs of core time per
+row, for each new media row and each pending row every round; scheduled
+rows pay only the md5, as their fetch batch reuses that surt. The seen
+write ships the key it writes, and the Bloom update reads (bucket, h1, h2)
+and nothing else, so there the two hashes replace the key.
 
 Every exchange and cached frame on the queue's path is sized by the
 round's data, never by ``n_buckets``. The bucket exchanges are
@@ -64,13 +71,15 @@ from . import extract, politeness as pol, seen as seenmod
 
 log = logging.getLogger(__name__)
 
-# Columns carried through the round's bucket exchange, the champion dedup
-# and the pending queue. Deliberately WITHOUT `surt`, `host`, `h1` and `h2`:
-# surt and host derive from ref_url (functions/urls.py), h1/h2 from url_hash
-# (seen.with_probe_hashes), so they are recomputed after the exchange
-# instead of shuffling derivable bytes — at 10^10 URLs the bucket exchange
-# is the round's dominant byte mover. Pending files written with h1/h2
-# still read: every reader selects these columns.
+# The candidate columns: the rows of the champion dedup and the seen
+# filter, and the pending files (which keep url_hash, the checkpoint's
+# key). Deliberately WITHOUT `surt`, `host`, `h1` and `h2`: surt and host
+# derive from ref_url (functions/urls.py), h1/h2 from url_hash
+# (seen.with_probe_hashes). The round's queue exchanges ship url_hash
+# neither: it is md5(surt(ref_url)) (extract.with_url_hash), derived after
+# each of them. At 10^10 URLs the bucket exchange is the round's dominant
+# byte mover, and the 32-char hash was its costliest column. Pending files
+# written with h1/h2 still read: every reader selects these columns.
 CAND_COLS = [
     "url_hash",
     "ref_url",
@@ -310,9 +319,12 @@ class FrontierDriver:
             from pyspark.sql import Observation
 
             if pending is not None:
-                # pending files written before h1/h2 left CAND_COLS still read:
-                # the select drops the two columns
-                cand = cand.unionByName(pending.select(*CAND_COLS).repartition("bucket"))
+                # the pending files keep url_hash, the exchange does not: it
+                # is derived again after it. Files written before h1/h2 left
+                # CAND_COLS still read: the select drops the two columns
+                shipped = [c for c in CAND_COLS if c != "url_hash"]
+                queued = pending.select(*shipped).repartition("bucket")
+                cand = cand.unionByName(extract.with_url_hash(queued).select(*CAND_COLS))
             # both sides are hash-partitioned by bucket (the new rows by the
             # extraction's bucket exchange) at one width, and AQE coalesces the
             # two exchanges with one spec, so the partition-aware union
@@ -343,8 +355,13 @@ class FrontierDriver:
             new_urls = new_urls.drop("h1", "h2").withColumn("host", U.url_host(F.col("ref_url")))
             cached.append(new_urls.persist())
 
-            # 4. politeness scheduling (per-host top-k, one host exchange)
-            scheduled = pol.schedule_round(new_urls, budgets, cfg.default_budget, top=top)
+            # 4. politeness scheduling (per-host top-k, one host exchange).
+            # The host exchange ships no url_hash: surt and url_hash are
+            # derived on its output, and the fetch batch takes that surt.
+            scheduled = pol.schedule_round(
+                new_urls.drop("url_hash"), budgets, cfg.default_budget, top=top
+            )
+            scheduled = extract.with_url_hash(scheduled)
             cached.append(scheduled.persist())
             # single action materializes extract→dedup→seen-filter→schedule,
             # resolves every observation riding on the pass, and yields the
@@ -361,7 +378,7 @@ class FrontierDriver:
             # 5. the fetch batch; pending = the live queue minus the batch, as
             # the table's only path (the invariant step 2 counts on); the seen
             # set takes the batch (seen, tombstones, Bloom)
-            batch = scheduled.withColumn("surt", U.surt(F.col("ref_url"))).select(
+            batch = scheduled.select(
                 "url_hash", "ref_url", "surt", "host", "kind", "priority", "page_ts",
                 "doc_id", "offset", "queue_pos", "fetch_delay_ms",
             )

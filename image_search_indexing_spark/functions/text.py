@@ -8,11 +8,13 @@ downstream (``managed-schema:400-427``). This module carries those kernels
 plus the text-analysis operators a large-scale training-data pipeline needs
 (language-ID, quality scoring, token counting, fingerprinting) — all as
 built-in Column expressions (JVM-side, codegen'd, SQL-portable). No UDFs.
+``winnow_fingerprints`` takes and returns a frame: it stages its
+expressions in three projections (see there).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MAX_CAPTION_SIZE = 250  # ImageInformationExtractor.java:59 MAX_PARENT_CAPTION_SIZE
@@ -258,25 +260,43 @@ def rolling_fingerprint(text: Column) -> Column:
     return F.xxhash64(normalize_text(text))
 
 
-def winnow_fingerprints(text: Column, k: int = 8, w: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
-    SIGMOD'03 — the MOSS algorithm): md5 of every k-char-gram of the
-    normalized text, then the minimum hash of each w-gram window is
-    selected; the sorted distinct minima are the document's fingerprint
-    set. Guarantees: any match of length ≥ k+w-1 shares a fingerprint,
-    and selection density is ~2/(w+1) — position-robust local sampling
-    that plain shingle-MinHash doesn't give. Fixed-width lowercase hex
-    compares lexicographically == numerically, so ``array_min`` over md5
-    strings is the numeric winnow and the SAME expression runs in the
-    DuckDB oracle. Built-ins only: one projection, no shuffle, no UDF."""
-    grams = char_ngrams(text, k)
-    hashes = F.transform(grams, lambda g: F.md5(g))
+def winnow_fingerprints(
+    df: DataFrame, text: str, k: int = 8, w: int = 4, out: str = "winnow"
+) -> DataFrame:
+    """``df`` with ``out``: the winnowing fingerprints of its ``text``
+    column (Schleimer, Wilkerson & Aiken, SIGMOD'03 — the MOSS algorithm):
+    md5 of every k-char-gram of the normalized text, then the minimum hash
+    of each w-gram window is selected; the sorted distinct minima are the
+    document's fingerprint set. Guarantees: any match of length ≥ k+w-1
+    shares a fingerprint, and selection density is ~2/(w+1) —
+    position-robust local sampling that plain shingle-MinHash doesn't give.
+    Fixed-width lowercase hex compares lexicographically == numerically, so
+    ``array_min`` over md5 strings is the numeric winnow and the SAME
+    expression runs in the DuckDB oracle. Built-ins only, no shuffle, no UDF.
+
+    Three projections, each materializing what the next one's lambdas
+    read: the normalized text, the gram hashes (``char_ngrams`` over it),
+    then the window minima over the hashes. Higher-order functions are
+    CodegenFallback, so a hash array inlined into the window lambda would
+    be recomputed (every gram's md5, and under it the normalizing regex
+    once per gram) for EVERY window: O(n²) md5s and O(n³) regex work for
+    an n-char document (see ``word_shingles_from_tokens``). For the same
+    reason no filter on ``out`` may run: the optimizer pushes it below the
+    three projections with the whole expression inlined. An inner
+    ``explode(out)`` infers one (``size(out) > 0``), so callers explode
+    with ``explode_outer`` (an empty set gives one NULL row)."""
+    norm = df.withColumn("__norm", normalize_text(F.col(text)))
+    hashed = norm.withColumn(
+        "__hashes", F.transform(char_ngrams(F.col("__norm"), k), lambda g: F.md5(g))
+    )
+    hashes = F.col("__hashes")
     n = F.size(hashes)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(w - 1), F.lit(1)))
     mins = F.transform(idx, lambda i: F.array_min(F.slice(hashes, i, w)))
-    return F.when(n > 0, F.array_sort(F.array_distinct(mins))).otherwise(
+    fps = F.when(n > 0, F.array_sort(F.array_distinct(mins))).otherwise(
         F.array().cast("array<string>")
     )
+    return hashed.withColumn(out, fps).drop("__norm", "__hashes")
 
 
 def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
@@ -302,9 +322,11 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return word_shingles_from_tokens(word_tokens(text), k)
 
 
-def char_ngrams(text: Column, n: int = 5) -> Column:
-    """array<string> of character n-grams of the normalized text."""
-    norm = normalize_text(text)
+def char_ngrams(norm: Column, n: int = 5) -> Column:
+    """array<string> of character n-grams of an ALREADY-MATERIALIZED
+    normalized text column (``normalize_text`` in a separate projection):
+    the per-gram lambda reads ``norm`` once per gram, so an inlined
+    normalizing expression would rerun its regex once per gram."""
     ln = F.length(norm)
     idx = F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(0)))
     return F.when(ln >= n, F.transform(idx, lambda i: F.substring(norm, i, n))).otherwise(

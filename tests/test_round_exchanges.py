@@ -1,13 +1,16 @@
 """The round's exchanges: one bucket exchange carries each new candidate
 from the documents scan to the Bloom cogroup (the J4 window rides it), the
 pending rows get their own, the partition-aware union feeds the champion
-dedup with none, and no exchange carries the recomputable h1/h2 except
-the Bloom update's, which carries them in place of the key. Every
-exchange and cached frame of the round is sized by the data, never by
-``n_buckets``. Also: checkpoints whose pending files still carry h1/h2
-resume identically, the politeness ``top`` is read once per run, an
-unreadable observation is counted in the lineage, and a listed checkpoint
-path missing on disk fails the round instead of reading as empty."""
+dedup with none, no exchange carries the recomputable h1/h2 except the
+Bloom update's, which carries them in place of the key, and none of the
+queue's exchanges but the seen write's carries the recomputable
+url_hash. Every exchange and cached frame of the round is sized by the
+data, never by ``n_buckets``. Also: checkpoints whose pending files still
+carry h1/h2 resume identically, the politeness ``top`` is read once per
+run, an unreadable observation is counted in the lineage, a listed
+checkpoint path missing on disk fails the round instead of reading as
+empty, the pending files keep url_hash = md5(surt(ref_url)), and a
+rediscovered URL variant collapses with its pending row."""
 
 import glob
 import json
@@ -110,28 +113,27 @@ class _Crawl(tuple):
 def crawl(spark, corpus, tmp_path_factory):
     """A 3-round crawl. For round 1 (a filled seen set, pending rows from
     round 0) it records the candidates handed to the seen filter, the live
-    queue handed to the scheduler, the scheduled frame, the Bloom update
-    (the frame of the ``bloom`` write), the seen write, and the partitions
-    of the three cached frames (probe, live queue, scheduled) as the round
-    materialized them; and, for the
-    whole run, each ``top`` the scheduler was handed and each
-    ``budget_top`` call."""
+    queue handed to the scheduler, the scheduled frame the round persists
+    (the one it hands the seen set's commit), the Bloom update (the frame
+    of the ``bloom`` write), the seen write, and the partitions of the
+    three cached frames (probe, live queue, scheduled) as the round
+    materialized them; and, for the whole run, each ``top`` the scheduler
+    was handed and each ``budget_top`` call."""
     drv = FrontierDriver(spark, str(tmp_path_factory.mktemp("exchanges")), _cfg())
     seen_in, sched_in, blooms, probes, seen_w, tops, top_jobs = [], [], [], [], [], [], []
-    parts = {}
+    committed, parts = [], {}
     orig_filter, orig_sched = seenmod.filter_new_urls, pol.schedule_round
     orig_probe, orig_top = seenmod.bloom_probe, pol.budget_top
-    orig_write = Catalog.write_table
+    orig_write, orig_commit = Catalog.write_table, seenmod.SeenSet.commit
 
     def filt(spark_, cand, *a, **kw):
         seen_in.append(cand)
         return orig_filter(spark_, cand, *a, **kw)
 
     def schedule(live, *a, **kw):
-        out = orig_sched(live, *a, **kw)
-        sched_in.append((live, out))
+        sched_in.append(live)
         tops.append(kw.get("top"))
-        return out
+        return orig_sched(live, *a, **kw)
 
     def probe(*a, **kw):
         out = orig_probe(*a, **kw)
@@ -148,21 +150,27 @@ def crawl(spark, corpus, tmp_path_factory):
         if table == "bloom":
             _plan(df)  # planned (and kept) while the scheduled batch is cached
             blooms.append(df)
-        if table == "fetch_batch_1":
-            # the frames are cached and materialized here: .rdd scans the cache
-            (live, scheduled), probe = sched_in[-1], probes[-1]
-            parts.update({name: f.rdd.getNumPartitions() for name, f in
-                          (("probe", probe), ("live", live), ("scheduled", scheduled))})
         return orig_write(cat, df, table, round_id, partition_by)
+
+    def commit(state, scheduled, per_bucket, round_id, cache):
+        committed.append(scheduled)
+        if round_id == 1:
+            # the frames are cached and materialized here: .rdd scans the cache
+            parts.update({name: f.rdd.getNumPartitions() for name, f in
+                          (("probe", probes[-1]), ("live", sched_in[-1]),
+                           ("scheduled", scheduled))})
+        return orig_commit(state, scheduled, per_bucket, round_id, cache)
 
     seenmod.filter_new_urls, pol.schedule_round = filt, schedule
     seenmod.bloom_probe, pol.budget_top, Catalog.write_table = probe, budget_top, write
+    seenmod.SeenSet.commit = commit
     try:
         counters = drv.run(*_args(corpus), n_rounds=N_ROUNDS)
     finally:
         seenmod.filter_new_urls, pol.schedule_round = orig_filter, orig_sched
         seenmod.bloom_probe, pol.budget_top, Catalog.write_table = orig_probe, orig_top, orig_write
-    live, scheduled = sched_in[1]
+        seenmod.SeenSet.commit = orig_commit
+    live, scheduled = sched_in[1], committed[1]
     out = _Crawl((drv, counters, seen_in[1], live, scheduled, blooms[1]))
     out.extra = {"parts": parts, "seen_write": seen_w[1], "tops": tops, "top_jobs": top_jobs}
     return out
@@ -215,6 +223,32 @@ def test_no_exchange_carries_h1_h2(crawl, plan_ops):
     for line, node in exchanges:
         assert not {"h1", "h2"} & set(_output(node)), line
     assert {"h1", "h2"} <= set(cand.columns)
+
+
+def test_queue_exchanges_carry_no_url_hash(crawl, plan_ops):
+    """url_hash derives from ref_url (``extract.with_url_hash``): round 1's
+    extraction and pending bucket exchanges and its host exchange ship
+    without it, and the seen write's bucket exchange, which writes the key,
+    is the only exchange of the queue's path that carries it."""
+    _, _, cand, _, scheduled, _ = crawl
+    seen_write = crawl.extra["seen_write"]
+    exchanges = lambda df: [  # noqa: E731
+        (line, _output(node)) for cls, line, node in plan_ops(df)
+        if cls == "ShuffleExchangeExec"
+    ]
+    # the queue's rows: under the persisted scheduled frame lie the live
+    # queue, the probe and the candidates (side tables carry no ref_url)
+    queue = [(line, out) for line, out in exchanges(scheduled) if "ref_url" in out]
+    kinds = sorted(line.split("(")[1].split("#")[0] for line, _ in queue)
+    assert kinds == ["bucket", "bucket", "host"], queue
+    for line, out in queue:
+        assert "url_hash" not in out, line
+    # the seen write's plan holds the queue's too, under the cached batch
+    ((line, out),) = [x for x in exchanges(seen_write) if "url_hash" in x[1]]
+    assert "hashpartitioning(bucket#" in line and "ref_url" not in out, line
+    # the derived key feeds the seen filter and the persisted batch
+    assert "url_hash" in cand.columns
+    assert {"url_hash", "surt"} <= set(scheduled.columns)
 
 
 def _python_nodes(df):
@@ -394,3 +428,85 @@ def test_missing_seen_round_fails_the_next_round(spark, corpus, tmp_path_factory
     with pytest.raises(FileNotFoundError, match="'seen'.*round=0"):
         drv.run_round(1, *_args(corpus))
     assert drv.catalog.snapshot()["round"] == 0
+
+
+def test_pending_url_hash_is_md5_of_surt(spark, corpus, tmp_path_factory):
+    """The pending files keep url_hash, and after round 0 every row's is
+    md5(surt(ref_url)) as the pure-Python oracle derives it."""
+    from image_search_indexing_spark.frontier.oracle import md5, surt
+
+    wd = str(tmp_path_factory.mktemp("pending-key"))
+    FrontierDriver(spark, wd, _cfg()).run(*_args(corpus), n_rounds=1)
+    rows = Catalog(wd).read_table(spark, "pending").select("url_hash", "ref_url").collect()
+    assert rows
+    assert all(r["url_hash"] == md5(surt(r["ref_url"])) for r in rows)
+
+
+def _doc_in_round(round_id, n_rounds):
+    """A doc id the round slice (pmod(xxhash64(doc_id), n_rounds)) assigns
+    to ``round_id``."""
+    from image_search_indexing_spark.functions.hashing import xxhash64
+
+    return next(d for d in (f"toy-{i}" for i in range(1000))
+                if xxhash64(d) % n_rounds == round_id)
+
+
+def test_rediscovered_variant_collapses_with_its_pending_row(spark, tmp_path_factory):
+    """Round 0 leaves three URLs of a host with budget 1 pending; round 1
+    rediscovers each under a variant that differs only in scheme, ``www.``
+    or host case, from a page fetched earlier, so the variant is the new
+    champion. The key derived after the exchanges is the pending row's, so
+    each pair collapses to one champion: batches, pending queue and
+    counters (``queue_after_dedup`` and ``dup_dropped`` too) equal the
+    oracle's. A ``data:`` ref (a ``hash:`` URL) in both rounds is scheduled
+    once."""
+    from image_search_indexing_spark.frontier.oracle import FrontierOracle, OracleConfig
+
+    from image_search_indexing_spark.frontier.datagen import DOCMETA_SCHEMA, SPANS_SCHEMA
+
+    d0, d1 = _doc_in_round(0, 2), _doc_in_round(1, 2)
+    data_ref = "data:image/png;base64,iVBORw0KGgo="
+    docs = [
+        {"doc_id": d0, "base_url": "http://h.example/p.html", "fetch_ts": "20200102000000",
+         "refs": ["/a.jpg", "/b.jpg", "/c.jpg", "/d.jpg", data_ref]},
+        {"doc_id": d1, "base_url": "http://other.example/q.html", "fetch_ts": "20200101000000",
+         "refs": ["https://h.example/b.jpg", "http://www.h.example/c.jpg",
+                  "http://H.EXAMPLE/d.jpg", data_ref]},
+    ]
+    for d in docs:
+        d["spans"] = [{"kind": "img", "text": None, "media_ref": ref, "offset": i + 1}
+                      for i, ref in enumerate(d.pop("refs"))]
+    politeness = [{"host": "h.example", "max_fetch_per_round": 1, "crawl_delay_ms": 1000}]
+    docs_df = spark.createDataFrame([(d["doc_id"], d["spans"]) for d in docs], SPANS_SCHEMA)
+    meta_df = spark.createDataFrame(
+        [(d["doc_id"], d["base_url"], d["fetch_ts"]) for d in docs], DOCMETA_SCHEMA)
+    pol_df = spark.createDataFrame(
+        politeness, "host string, max_fetch_per_round int, crawl_delay_ms long")
+
+    drv = FrontierDriver(spark, str(tmp_path_factory.mktemp("variants")),
+                         FrontierConfig(n_rounds=2, n_buckets=4, default_budget=5))
+    counters = drv.run(docs_df, meta_df, None, pol_df, None)
+    oracle = FrontierOracle(OracleConfig(n_rounds=2, default_budget=5), politeness=politeness)
+    state = oracle.run(docs, 2)
+
+    # the three variants met their pending rows; the data: ref, scheduled
+    # in round 0, meets the seen set in round 1, not a pending row
+    assert counters[1]["dup_dropped"] == 3
+    assert counters[0]["data_url_refs"] == counters[1]["data_url_refs"] == 1
+    for got, want in zip(counters, state.counters):
+        for k in ("round_candidates", "queue_after_dedup", "dup_dropped", "scheduled",
+                  "pending_after", "seen_total", "data_url_refs"):
+            assert got.get(k, 0) == want.get(k, 0), (k, got, want)
+    cols = ["url_hash", "ref_url", "surt", "host", "doc_id", "offset", "queue_pos"]
+    for r in range(2):
+        got = sorted(tuple(x) for x in drv.fetch_batch(r).select(*cols).collect())
+        assert got == sorted(tuple(row[c] for c in cols) for row in state.fetch_batches[r])
+    hash_url = [row["ref_url"] for row in state.fetch_batches[0] if row["host"] == "hash"]
+    assert len(hash_url) == 1 and hash_url[0].startswith("hash:")
+    # round 1 scheduled the (shortest) host-case variant; the other two
+    # wait in their variants' spelling
+    assert [row["ref_url"] for row in state.fetch_batches[1]] == ["http://H.EXAMPLE/d.jpg"]
+    pending = {(r["url_hash"], r["ref_url"])
+               for r in drv.catalog.read_table(spark, "pending").collect()}
+    assert pending == {(h, row["ref_url"]) for h, row in state.pending.items()}
+    assert {u for _, u in pending} == {"https://h.example/b.jpg", "http://www.h.example/c.jpg"}

@@ -97,7 +97,9 @@ def main() -> None:
     cap("clean_corpus_neardup", qs["clean_corpus_neardup"](spark, sf),
         "winnow near-dup stage: champion window shuffles SCALARS only "
         "(fingerprint arrays computed post-champion via an id join-back); "
-        "near-dup pairs stream out of the fingerprint equi-join.")
+        "near-dup pairs stream out of the fingerprint equi-join; the "
+        "winnow's normalized text and gram hashes are their own projections, "
+        "and no Filter holds the fingerprint expression (explode_outer).")
     cap("simhash_pairs_xx", qs["simhash_pairs_xx"](spark, sf),
         "production pair path: identical shape to the md5 twin with "
         "xxhash64 token hashing — bucket self-join, bit_count gate.")
