@@ -535,12 +535,11 @@ def _media_dims(spark, sf):
     met = MM.decode_image_meta(media)
     tw, th = MM.thumbnail_dims(F.col("width"), F.col("height"))
     parsed = F.col("width").isNotNull() & F.col("height").isNotNull()
+    too_small, too_large, _ = MM.p2_gates()
     gate = (
         F.when(~parsed, F.lit("unparseable"))
-        .when((F.col("width") < MM.MIN_WIDTH) | (F.col("height") < MM.MIN_HEIGHT),
-              F.lit("too_small"))
-        .when(F.col("width").cast("long") * F.col("height") > F.lit(MM.MAX_AREA),
-              F.lit("too_big"))
+        .when(too_small, F.lit("too_small"))
+        .when(too_large, F.lit("too_big"))
         .otherwise(F.lit("pass"))
     )
     return met.select(

@@ -67,6 +67,7 @@ from __future__ import annotations
 
 import re
 import zlib
+from itertools import islice
 from typing import Iterator
 
 import numpy as np
@@ -174,16 +175,27 @@ def _jpeg_dims(data: bytes) -> tuple[int | None, int | None]:
     return None, None
 
 
+def _riff_chunks(data: bytes, lo: int = 12, hi: int | None = None):
+    """Walk the RIFF chunks in ``data[lo:hi]`` (WebP, WAVE and AVI alike):
+    yield ``(fourcc, body_start, body_end)`` per chunk, the body clamped
+    to the enclosing range. A chunk is fourcc + u32-LE size + body,
+    padded to an even length; a LIST body leads with its list-type
+    fourcc."""
+    hi = len(data) if hi is None else hi
+    pos = lo
+    while pos + 8 <= hi:
+        sz = int.from_bytes(data[pos + 4 : pos + 8], "little")
+        yield data[pos : pos + 4], pos + 8, min(pos + 8 + sz, hi)
+        pos += 8 + sz + (sz & 1)  # chunks are word-aligned
+
+
 def _webp_dims(data: bytes) -> tuple[int | None, int | None]:
     """WebP (width, height) from the container chunks — extended (VP8X
     canvas), lossless (VP8L 14-bit packed) and lossy (VP8 frame tag).
     Header arithmetic only; a capability the reference's ImageIO lacks
     (webp there falls into the unparseable/MIME_INVALID branch)."""
-    pos = 12
-    while pos + 8 <= len(data):
-        cc = data[pos : pos + 4]
-        sz = int.from_bytes(data[pos + 4 : pos + 8], "little")
-        body = data[pos + 8 : pos + 8 + sz]
+    for cc, lo, hi in _riff_chunks(data):
+        body = data[lo:hi]
         if cc == b"VP8X" and len(body) >= 10:
             w = int.from_bytes(body[4:7], "little") + 1
             h = int.from_bytes(body[7:10], "little") + 1
@@ -195,7 +207,6 @@ def _webp_dims(data: bytes) -> tuple[int | None, int | None]:
             w = int.from_bytes(body[6:8], "little") & 0x3FFF
             h = int.from_bytes(body[8:10], "little") & 0x3FFF
             return w, h
-        pos += 8 + sz + (sz & 1)
     return None, None
 
 
@@ -1277,9 +1288,11 @@ def encode_tiff(arr: np.ndarray) -> bytes:
     analog for tiff-sourced thumbnails (``utils/ImageParse.java:175``)."""
     h, w = int(arr.shape[0]), int(arr.shape[1])
     pix = np.ascontiguousarray(arr[:, :, :3], dtype=np.uint8).tobytes()
-    # layout: 8-byte header | pixel strip | BitsPerSample triple | IFD
+    # layout: 8-byte header | pixel strip, padded to an even length |
+    # BitsPerSample triple | IFD — both offsets on a word boundary (TIFF 6.0)
     strip_off = 8
-    bps_off = strip_off + len(pix)
+    pad = b"\x00" * (len(pix) & 1)
+    bps_off = strip_off + len(pix) + len(pad)
     ifd_off = bps_off + 6
 
     def entry(tag: int, typ: int, count: int, value: int) -> bytes:
@@ -1307,7 +1320,7 @@ def encode_tiff(arr: np.ndarray) -> bytes:
         + (0).to_bytes(4, "little")
     )
     header = b"II*\x00" + ifd_off.to_bytes(4, "little")
-    return header + pix + (8).to_bytes(2, "little") * 3 + ifd
+    return header + pix + pad + (8).to_bytes(2, "little") * 3 + ifd
 
 
 # --- TIFF (6.0 baseline, strip layout) ---------------------------------------
@@ -1885,15 +1898,7 @@ def decode_webp(data: bytes | None) -> np.ndarray | None:
     if data is None or len(data) < 20 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         return None
     try:
-        pos = 12
-        body = None
-        while pos + 8 <= len(data):
-            cc = data[pos : pos + 4]
-            sz = int.from_bytes(data[pos + 4 : pos + 8], "little")
-            if cc == b"VP8L":
-                body = data[pos + 8 : pos + 8 + sz]
-                break
-            pos += 8 + sz + (sz & 1)
+        body = next((data[lo:hi] for cc, lo, hi in _riff_chunks(data) if cc == b"VP8L"), None)
         if body is None or len(body) < 5 or body[0] != 0x2F:
             return None
         br = _Vp8lBits(body[1:])
@@ -2030,24 +2035,6 @@ THUMB_SCHEMA = T.StructType(
 )
 
 
-def attach_thumbnails(df: DataFrame, binary_col: str = "payload") -> DataFrame:
-    """F10 over real bytes: per-payload source-MIME thumbnail columns (NULL for
-    containers without a real decoder). Arrow-batched ``mapInPandas`` —
-    the same batch loop a PIL-backed decoder would use."""
-
-    def _thumbs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            res = [thumbnail_bytes(b) for b in pdf[binary_col]]
-            out["thumb"] = [r[0] for r in res]
-            out["thumb_width"] = pd.array([r[1] for r in res], dtype="Int32")
-            out["thumb_height"] = pd.array([r[2] for r in res], dtype="Int32")
-            yield out
-
-    schema = T.StructType(df.schema.fields + list(THUMB_SCHEMA.fields))
-    return df.mapInPandas(_thumbs, schema)
-
-
 DECODE_SCHEMA = T.StructType(
     [
         T.StructField("width", T.IntegerType()),
@@ -2103,13 +2090,22 @@ def decode_image_meta(
     return df.mapInPandas(_decode_batch, T.StructType(fields))
 
 
+def p2_gates() -> tuple[Column, Column, Column]:
+    """P2 size gates (ImageParse.java:41-56) over the ``width`` and
+    ``height`` columns as ``(too_small, too_large, passed)``: under
+    ``MIN_WIDTH``×``MIN_HEIGHT`` on either side, over ``MAX_AREA``
+    pixels, or neither. SQL three-valued: a gate that NULL dims leave
+    undecided is NULL (``decode_image_meta`` sets both dims or neither,
+    so an unparsed image is NULL in all three)."""
+    width, height = F.col("width"), F.col("height")
+    too_small = (width < MIN_WIDTH) | (height < MIN_HEIGHT)
+    too_large = width.cast("long") * height > MAX_AREA
+    return too_small, too_large, ~too_small & ~too_large
+
+
 def size_gate(df: DataFrame) -> DataFrame:
-    """P2 size gates (ImageParse.java:41-56): drop tiny/huge images."""
-    return df.where(
-        (F.col("width") >= MIN_WIDTH)
-        & (F.col("height") >= MIN_HEIGHT)
-        & (F.col("width").cast("long") * F.col("height") <= MAX_AREA)
-    )
+    """Keep the images that pass the P2 size gates (``p2_gates``)."""
+    return df.where(p2_gates()[2])
 
 
 # --- perceptual hash (pHash) -------------------------------------------------
@@ -2254,16 +2250,8 @@ def decode_wav(data: bytes | None) -> tuple[np.ndarray, int] | None:
     if data is None or len(data) < 44 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         return None
     try:
-        pos, fmt, raw = 12, None, None
-        while pos + 8 <= len(data):
-            cid = data[pos : pos + 4]
-            sz = int.from_bytes(data[pos + 4 : pos + 8], "little")
-            body = data[pos + 8 : pos + 8 + sz]
-            if cid == b"fmt ":
-                fmt = body
-            elif cid == b"data":
-                raw = body
-            pos += 8 + sz + (sz & 1)  # chunks are word-aligned
+        chunks = {cc: data[lo:hi] for cc, lo, hi in _riff_chunks(data)}  # a repeat: last wins
+        fmt, raw = chunks.get(b"fmt "), chunks.get(b"data")
         if fmt is None or raw is None or len(fmt) < 16:
             return None
         audio_fmt = int.from_bytes(fmt[0:2], "little")
@@ -2931,6 +2919,13 @@ def parse_mp4_meta(data: bytes | None) -> tuple[int, int] | None:
         return None
 
 
+def _riff_list(data: bytes, list_type: bytes):
+    """The sub-chunks of every top-level ``LIST`` chunk of ``list_type``."""
+    for cc, lo, hi in _riff_chunks(data):
+        if cc == b"LIST" and data[lo : lo + 4] == list_type:
+            yield from _riff_chunks(data, lo + 4, hi)
+
+
 def parse_avi_meta(data: bytes | None) -> tuple[int, int, int, int, int] | None:
     """REAL AVI (RIFF) main-header parse: ``(usec_per_frame,
     total_frames, n_streams, width, height)`` from the ``hdrl``/``avih``
@@ -2939,21 +2934,10 @@ def parse_avi_meta(data: bytes | None) -> tuple[int, int, int, int, int] | None:
     if data is None or len(data) < 24 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         return None
     try:
-        def walk(lo: int, hi: int):
-            pos = lo
-            while pos + 8 <= hi:
-                cc = data[pos : pos + 4]
-                sz = int.from_bytes(data[pos + 4 : pos + 8], "little")
-                yield cc, pos + 8, min(pos + 8 + sz, hi)
-                pos += 8 + sz + (sz & 1)  # chunks are word-aligned
-
-        for cc, body, end in walk(12, len(data)):
-            if cc != b"LIST" or data[body : body + 4] != b"hdrl":
-                continue
-            for c2, b2, e2 in walk(body + 4, end):
-                if c2 == b"avih" and e2 - b2 >= 40:
-                    u32 = lambda o: int.from_bytes(data[b2 + o : b2 + o + 4], "little")
-                    return u32(0), u32(16), u32(24), u32(32), u32(36)
+        for cc, lo, hi in _riff_list(data, b"hdrl"):
+            if cc == b"avih" and hi - lo >= 40:
+                u32 = lambda o: int.from_bytes(data[lo + o : lo + o + 4], "little")
+                return u32(0), u32(16), u32(24), u32(32), u32(36)
         return None
     except Exception:
         return None
@@ -2963,20 +2947,26 @@ def iter_avi_frames(data: bytes):
     """Walk the ``movi`` LIST and yield ``(stream_no, code, bytes)`` per
     frame chunk — ``code`` is the two-char stream code (``db`` =
     uncompressed DIB, ``dc`` = compressed video, ``wb`` = audio)."""
-    def walk(lo: int, hi: int):
-        pos = lo
-        while pos + 8 <= hi:
-            cc = data[pos : pos + 4]
-            sz = int.from_bytes(data[pos + 4 : pos + 8], "little")
-            yield cc, pos + 8, min(pos + 8 + sz, hi)
-            pos += 8 + sz + (sz & 1)
+    for cc, lo, hi in _riff_list(data, b"movi"):
+        if len(cc) == 4 and cc[:2].isdigit():
+            yield int(cc[:2]), cc[2:].decode("latin-1"), data[lo:hi]
 
-    for cc, body, end in walk(12, len(data)):
-        if cc != b"LIST" or data[body : body + 4] != b"movi":
-            continue
-        for c2, b2, e2 in walk(body + 4, end):
-            if len(c2) == 4 and c2[:2].isdigit():
-                yield int(c2[:2]), c2[2:].decode("latin-1"), data[b2:e2]
+
+def _avi_video_frames(buf, max_frames: int):
+    """The video-frame walk the AVI frame operators share. None when
+    ``buf`` is no AVI, else ``(w, h, frames)``: ``frames`` yields
+    ``(frame_idx, ts_ms, code, chunk bytes)`` per video chunk of the
+    ``movi`` list, audio (``wb``) chunks skipped, cut at ``max_frames``
+    without walking the tail, ``ts_ms`` from the avih frame period."""
+    data = bytes(buf) if buf is not None else None
+    meta = parse_avi_meta(data)
+    if meta is None:
+        return None
+    upf, _total, _ns, w, h = meta
+    video = ((code, fb) for _sno, code, fb in iter_avi_frames(data) if code != "wb")
+    frames = ((idx, idx * upf // 1000, code, fb)
+              for idx, (code, fb) in enumerate(islice(video, max(max_frames, 0))))
+    return w, h, frames
 
 
 def decode_dib_frame(buf: bytes, w: int, h: int) -> np.ndarray | None:
@@ -3025,21 +3015,12 @@ def extract_video_frames(
         for pdf in it:
             rows = []
             for mid, buf in zip(pdf[media_id], pdf[payload]):
-                if buf is None:
+                avi = _avi_video_frames(buf, max_frames)
+                if avi is None:
                     continue
-                data = bytes(buf)
-                meta = parse_avi_meta(data)
-                if meta is None:
-                    continue
-                upf, _total, _ns, w, h = meta
-                idx = 0
-                for _sno, code, fb in iter_avi_frames(data):
-                    if idx >= max_frames:
-                        break  # stop the movi walk, don't scan the tail
-                    if code == "wb":
-                        continue
+                w, h, frames = avi
+                for idx, ts, code, fb in frames:
                     img = decode_avi_frame(code, fb, w, h)
-                    ts = idx * upf // 1000
                     if img is None:
                         rows.append((mid, idx, ts, w, h, None, None, None, False))
                     else:
@@ -3048,7 +3029,6 @@ def extract_video_frames(
                             (mid, idx, ts, img.shape[1], img.shape[0],
                              float(m[0]), float(m[1]), float(m[2]), True)
                         )
-                    idx += 1
             out = pd.DataFrame(
                 rows,
                 columns=[
@@ -3075,23 +3055,14 @@ def video_phash_frames(
         for pdf in it:
             rows = []
             for mid, buf in zip(pdf[id_col], pdf[binary_col]):
-                if buf is None:
+                avi = _avi_video_frames(buf, max_frames)
+                if avi is None:
                     continue
-                data = bytes(buf)
-                meta = parse_avi_meta(data)
-                if meta is None:
-                    continue
-                _upf, _total, _ns, w, h = meta
-                idx = 0
-                for _sno, code, fb in iter_avi_frames(data):
-                    if idx >= max_frames:
-                        break  # stop the movi walk, don't scan the tail
-                    if code == "wb":
-                        continue
+                w, h, frames = avi
+                for idx, _ts, code, fb in frames:
                     img = decode_avi_frame(code, fb, w, h)
                     if img is not None:
                         rows.append((mid, idx, phash64(img)))
-                    idx += 1
             yield pd.DataFrame(rows, columns=[id_col, "frame_idx", "fp"])
 
     id_field = df.schema[id_col]
@@ -3149,18 +3120,9 @@ def sample_frames(df: DataFrame, media_id: str = "media_id", payload: str = "pay
             for mid, buf in zip(pdf[media_id], pdf[payload]):
                 if buf is None:
                     continue
-                data = bytes(buf)
-                avi = parse_avi_meta(data)
+                avi = _avi_video_frames(buf, max_frames)
                 if avi is not None:  # REAL frames from the movi walk
-                    upf = avi[0]
-                    idx = 0
-                    for _sno, code, fb in iter_avi_frames(data):
-                        if idx >= max_frames:
-                            break  # stop the movi walk, don't scan the tail
-                        if code == "wb":
-                            continue
-                        rows.append((mid, idx, idx * upf // 1000, fb))
-                        idx += 1
+                    rows += [(mid, idx, ts, fb) for idx, ts, _code, fb in avi[2]]
                     continue
                 meta = parse_mp4_meta(bytes(buf))
                 if meta is not None:  # real timeline from the mvhd duration

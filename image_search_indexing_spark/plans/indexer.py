@@ -28,12 +28,15 @@ Content digests: without image bytes the digest models "identical content
 served from different URLs" deterministically as ``md5('content:' + url
 path)`` — two hosts serving ``/img/7.png`` share a digest, exercising the
 digest-rekey/merge path exactly like SHA-256 of bytes does in the
-reference (``utils/ImageParse.java:116-124``). When a ``media_df`` of
-(url, payload) binary rows IS supplied, captures joined to real bytes
-take ``sha2(payload, 256)`` as their digest (F3), get decoded dimensions
-+ sniffed MIME attached (F9/F10 plumbing), and pass the P2 size gates —
-so identical bytes at different URLs/SURTs merge under one digest, the
-reference's actual dedup case (``DupDigestMergerJob.java:151-174``).
+reference (``utils/ImageParse.java:116-124``). The media plans
+(``build_records_media``, ``indexer_full_media``,
+``indexer_compact_media``) attach (url, payload) binary rows instead:
+captures joined to real bytes take ``sha2(payload, 256)`` as their
+digest (F3), get decoded dimensions + sniffed MIME attached (F9), and
+pass the P2 size gates (``attach_media_meta``) — so identical bytes at
+different URLs/SURTs merge under one digest, the reference's actual
+dedup case (``DupDigestMergerJob.java:151-174``). ``media_counters``
+counts the same decode pre-gate.
 """
 
 from __future__ import annotations
@@ -61,104 +64,52 @@ def content_digest(ref_url) -> "F.Column":
     return F.md5(F.concat(F.lit("content:"), path))
 
 
-def attach_media_meta(
-    captures: DataFrame,
-    media_df: DataFrame,
-    url_col: str = "url",
-    payload_col: str = "payload",
-    observation=None,
-    with_thumbnails: bool = False,
-) -> DataFrame:
-    """F3 + P2 + F9 over real bytes: SHA-256 content digest, header-parsed
-    dimensions, magic-byte MIME and the reported-vs-detected mismatch flag
-    (counter analog of ``ImageInformationExtractor.java:290-306``).
-    Captures with no matching payload keep their path digest and pass the
-    gates (gates apply only to images with bytes). Captures WITH a payload
-    that fails to parse (unknown container / malformed header) are DROPPED
-    — the reference's ``ImageParse.java`` returns null for unreadable
-    bytes and the image is skipped.
-
-    When an ``Observation`` is supplied, the reference's per-image parse
-    counters (``ImageIndexerWithDupsJob.IMAGE_COUNTERS``, lines 70-98) ride
-    the same pass pre-gate: ``images_decoded`` (IMAGES_IN_WARC_TOTAL with
-    bytes), ``images_too_small`` / ``images_too_large`` (P2 gates),
-    ``images_mime_invalid`` (no known magic — MIME_INVALID) and
-    ``images_mime_wrong`` (detected ≠ reported — MIME_WRONG)."""
+def _join_media(frame: DataFrame, media_df: DataFrame) -> DataFrame:
+    """``frame`` left-joined on ``img_url`` to its (url, payload) bytes:
+    the SHA-256 content digest (``__content_digest``), header-parsed
+    dimensions and magic-byte MIME (NULL without a payload), plus the
+    MIME the URL's extension reports."""
     from ..operators import multimodal as MM
 
-    # with_thumbnails: the REAL pixel path (PNG/BMP/baseline-JPEG decode →
-    # ≤200×200 resample → source-MIME re-encode) rides the same Arrow
-    # pass, and the output
-    # carries `img_src_base64` — the reference's stored-thumbnail field
-    # (`ImageDataSerializer.java:46` imgSrcBase64). gif/svg ride through
-    # with their ORIGINAL bytes (ImageParse.java:131-134 passthrough);
-    # only containers with no pixel decoder (webp) yield NULL.
-    thumb_cols = [F.base64(F.col("thumb")).alias("img_src_base64")] if with_thumbnails else []
     meta = MM.decode_image_meta(
-        media_df.select(F.col(url_col).alias("img_url"), F.col(payload_col).alias("payload")),
-        thumbnails=with_thumbnails,
+        media_df.select(F.col("url").alias("img_url"), "payload")
     ).select(
         "img_url",
         F.sha2("payload", 256).alias("__content_digest"),
         "width",
         "height",
         "mime_detected",
-        *thumb_cols,
     )
     reported = F.element_at(
         F.create_map(*[F.lit(x) for kv in _EXT_MIME.items() for x in kv]),
         U.url_ext(F.col("img_url")),
     )
-    joined = (
-        captures.join(meta, "img_url", "left")
-        .withColumn("mime_reported", reported)
-        .withColumn(
-            "mime_mismatch",
-            F.col("mime_detected").isNotNull()
-            & F.col("mime_reported").isNotNull()
-            & (F.col("mime_detected") != F.col("mime_reported")),
-        )
-    )
-    if observation is not None:
-        decoded = F.col("width").isNotNull()
-        joined = joined.observe(
-            observation,
-            F.count(F.when(decoded, 1)).alias("images_decoded"),
-            F.count(
-                F.when(
-                    decoded
-                    & ((F.col("width") < MM.MIN_WIDTH) | (F.col("height") < MM.MIN_HEIGHT)),
-                    1,
-                )
-            ).alias("images_too_small"),
-            F.count(
-                F.when(
-                    decoded & (F.col("width").cast("long") * F.col("height") > MM.MAX_AREA), 1
-                )
-            ).alias("images_too_large"),
-            F.count(F.when(F.col("mime_detected") == "application/octet-stream", 1)).alias(
-                "images_mime_invalid"
-            ),
-            # wrong = detected a KNOWN type that differs from reported (the
-            # reference's invalid/wrong branches are disjoint)
-            F.count(
-                F.when(
-                    F.col("mime_mismatch")
-                    & (F.col("mime_detected") != "application/octet-stream"),
-                    1,
-                )
-            ).alias("images_mime_wrong"),
-        )
+    return frame.join(meta, "img_url", "left").withColumn("mime_reported", reported)
+
+
+def _mime_mismatch() -> "F.Column":
+    """Detected and reported MIME both known and different (counter
+    analog of ``ImageInformationExtractor.java:290-306``)."""
+    detected, reported = F.col("mime_detected"), F.col("mime_reported")
+    return detected.isNotNull() & reported.isNotNull() & (detected != reported)
+
+
+def attach_media_meta(captures: DataFrame, media_df: DataFrame) -> DataFrame:
+    """F3 + P2 + F9 over real (url, payload) bytes: SHA-256 content
+    digest, header-parsed dimensions, magic-byte MIME (``_join_media``)
+    and the reported-vs-detected mismatch flag. Captures with
+    no matching payload keep their path digest and pass the gates (gates
+    apply only to images with bytes). Captures WITH a payload that fails
+    to parse (unknown container / malformed header) are DROPPED — the
+    reference's ``ImageParse.java`` returns null for unreadable bytes and
+    the image is skipped. ``media_counters`` counts the same pass."""
+    from ..operators import multimodal as MM
+
     # no payload (left-join miss → mime_detected NULL) passes untouched;
     # payload present requires parsed dims within the P2 gates
+    joined = _join_media(captures, media_df).withColumn("mime_mismatch", _mime_mismatch())
     gated = joined.where(
-        F.col("mime_detected").isNull()
-        | (
-            F.col("width").isNotNull()
-            & (F.col("width") >= MM.MIN_WIDTH)
-            & (F.col("height") >= MM.MIN_HEIGHT)
-            & (F.col("width").cast("long") * F.col("height") <= MM.MAX_AREA)
-        )
+        F.col("mime_detected").isNull() | (F.col("width").isNotNull() & MM.p2_gates()[2])
     )
     return gated.withColumn(
         "digest", F.coalesce("__content_digest", F.col("digest"))
@@ -173,19 +124,16 @@ def _valid_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return refs.where(F.col("drop_reason").isNull())
 
 
-def build_records(spark: SparkSession, sf_dir: str, media_df: DataFrame | None = None):
-    """(captures, page_records) from the interleaved corpus."""
-    refs = _valid_refs(spark, sf_dir)
-    return records_from_refs(refs, media_df)
+def build_records(spark: SparkSession, sf_dir: str):
+    """(captures, page_records) from the interleaved corpus, without
+    image bytes (``build_records_media`` attaches them)."""
+    return records_from_refs(_valid_refs(spark, sf_dir))
 
 
-def records_from_refs(
-    refs: DataFrame,
-    media_df: DataFrame | None = None,
-    observation=None,
-    with_thumbnails: bool = False,
-):
-    """(captures, page_records) from an already-extracted valid-refs frame."""
+def records_from_refs(refs: DataFrame, media_df: DataFrame | None = None):
+    """(captures, page_records) from an already-extracted valid-refs
+    frame; a ``media_df`` of (url, payload) rows attaches real bytes
+    (``attach_media_meta``)."""
     captures = refs.select(
         "surt",
         content_digest(F.col("ref_url")).alias("digest"),
@@ -195,9 +143,7 @@ def records_from_refs(
         F.col("img_filename_tokens").alias("img_title"),
     )
     if media_df is not None:
-        captures = attach_media_meta(
-            captures, media_df, observation=observation, with_thumbnails=with_thumbnails
-        )
+        captures = attach_media_meta(captures, media_df)
     else:
         captures = (
             captures.withColumn("width", F.lit(None).cast("int"))
@@ -273,14 +219,14 @@ def assign_captures(pages_d: DataFrame, captures: DataFrame) -> DataFrame:
     )
 
 
-def indexer_full(spark: SparkSession, sf_dir: str, media_df: DataFrame | None = None) -> DataFrame:
+def indexer_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL output: one row per page record with its assigned image.
 
     Output parity with the reference serializer
     (``MultiPageImageDataSerializer.java:45-55``): imgWidth/imgHeight/mime
-    ride as ``img_width``/``img_height``/``img_mime`` — populated when a
-    ``media_df`` supplies real bytes, NULL otherwise."""
-    return full_from_records(*build_records(spark, sf_dir, media_df))
+    ride as ``img_width``/``img_height``/``img_mime`` — NULL here, and
+    populated over real bytes by ``indexer_full_media``."""
+    return full_from_records(*build_records(spark, sf_dir))
 
 
 def full_from_records(captures: DataFrame, pages: DataFrame) -> DataFrame:
@@ -311,15 +257,13 @@ def full_from_records(captures: DataFrame, pages: DataFrame) -> DataFrame:
     )
 
 
-def indexer_compact(
-    spark: SparkSession, sf_dir: str, media_df: DataFrame | None = None
-) -> DataFrame:
+def indexer_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPACT output: one row per digest with metadata lists (A11/O3).
 
     Lists are ordered by the page metadata string (the reference's TreeMap
     iteration order) and deduped; empties dropped
     (MultiPageImageData.java:200-212)."""
-    return compact_from_records(*build_records(spark, sf_dir, media_df))
+    return compact_from_records(*build_records(spark, sf_dir))
 
 
 def compact_from_records(captures: DataFrame, pages: DataFrame) -> DataFrame:
@@ -430,7 +374,7 @@ def indexer_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def build_records_media(spark: SparkSession, sf_dir: str, observation=None):
+def build_records_media(spark: SparkSession, sf_dir: str):
     """(captures, page_records) with the deterministic closed-form media
     table attached (``sources/mediagen.py``): captures carry SHA-256
     byte digests, parsed dimensions and sniffed MIME; the P2 gates drop
@@ -440,7 +384,7 @@ def build_records_media(spark: SparkSession, sf_dir: str, observation=None):
 
     refs = _valid_refs(spark, sf_dir)
     media = synthetic_media(refs.select(F.col("ref_url").alias("url")))
-    return records_from_refs(refs, media, observation=observation)
+    return records_from_refs(refs, media)
 
 
 def indexer_full_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,57 +405,32 @@ def indexer_compact_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compact_from_records(*build_records_media(spark, sf_dir))
 
 
-def media_parse_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parse-stage image counters over the byte path, long format
-    ``(counter, value)`` — the IMAGE_COUNTERS family of
-    ``ImageIndexerWithDupsJob.java:70-98`` computed PRE-GATE from the
-    actual decode results (not the closed form), so the DuckDB oracle's
-    closed-form expectations check the decoder end-to-end."""
+def media_counters(refs: DataFrame, media_df: DataFrame) -> DataFrame:
+    """Parse-stage image counters, long format ``(counter, value)``: the
+    IMAGE_COUNTERS family of ``ImageIndexerWithDupsJob.java:70-98`` over
+    each valid ref's (url, payload) bytes, computed PRE-GATE from the
+    actual decode results — ``images_decoded`` (IMAGES_IN_WARC_TOTAL with
+    bytes), ``images_too_small`` / ``images_too_large`` (P2 gates),
+    ``images_mime_invalid`` (no known magic — MIME_INVALID) and
+    ``images_mime_wrong`` (detected ≠ reported — MIME_WRONG), plus the
+    payload, gate-pass and no-payload totals."""
     from ..operators import multimodal as MM
-    from ..sources.mediagen import synthetic_media
 
-    refs = _valid_refs(spark, sf_dir)
-    media = synthetic_media(refs.select(F.col("ref_url").alias("url")))
-    dec = MM.decode_image_meta(
-        media.select(F.col("url").alias("img_url"), "payload")
-    ).select("img_url", "width", "height", "mime_detected")
-    reported = F.element_at(
-        F.create_map(*[F.lit(x) for kv in _EXT_MIME.items() for x in kv]),
-        U.url_ext(F.col("img_url")),
-    )
-    joined = (
-        refs.select(F.col("ref_url").alias("img_url"))
-        .join(dec, "img_url", "left")
-        .withColumn("mime_reported", reported)
-    )
+    joined = _join_media(refs.select(F.col("ref_url").alias("img_url")), media_df)
     has_payload = F.col("mime_detected").isNotNull()
     decoded = F.col("width").isNotNull()
-    wrong = (
-        F.col("mime_detected").isNotNull()
-        & F.col("mime_reported").isNotNull()
-        & (F.col("mime_detected") != F.col("mime_reported"))
-        & (F.col("mime_detected") != "application/octet-stream")
-    )
-    gate_ok = (
-        decoded
-        & (F.col("width") >= MM.MIN_WIDTH)
-        & (F.col("height") >= MM.MIN_HEIGHT)
-        & (F.col("width").cast("long") * F.col("height") <= MM.MAX_AREA)
-    )
+    invalid = F.col("mime_detected") == "application/octet-stream"
+    too_small, too_large, passed = MM.p2_gates()
     wide = joined.agg(
         F.count(F.when(has_payload, 1)).alias("images_with_payload"),
         F.count(F.when(decoded, 1)).alias("images_decoded"),
-        F.count(
-            F.when(decoded & ((F.col("width") < MM.MIN_WIDTH) | (F.col("height") < MM.MIN_HEIGHT)), 1)
-        ).alias("images_too_small"),
-        F.count(
-            F.when(decoded & (F.col("width").cast("long") * F.col("height") > MM.MAX_AREA), 1)
-        ).alias("images_too_large"),
-        F.count(F.when(F.col("mime_detected") == "application/octet-stream", 1)).alias(
-            "images_mime_invalid"
-        ),
-        F.count(F.when(wrong, 1)).alias("images_mime_wrong"),
-        F.count(F.when(gate_ok, 1)).alias("images_gate_passed"),
+        F.count(F.when(decoded & too_small, 1)).alias("images_too_small"),
+        F.count(F.when(decoded & too_large, 1)).alias("images_too_large"),
+        F.count(F.when(invalid, 1)).alias("images_mime_invalid"),
+        # wrong = detected a KNOWN type that differs from reported (the
+        # reference's invalid/wrong branches are disjoint)
+        F.count(F.when(_mime_mismatch() & ~invalid, 1)).alias("images_mime_wrong"),
+        F.count(F.when(decoded & passed, 1)).alias("images_gate_passed"),
         F.count(F.when(~has_payload, 1)).alias("captures_without_payload"),
     )
     return (
@@ -519,6 +438,16 @@ def media_parse_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("counter", F.col("value").cast("long").alias("value"))
         .orderBy("counter")
     )
+
+
+def media_parse_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``media_counters`` over the testdata corpus and its deterministic
+    media table, so the DuckDB oracle's closed-form expectations check
+    the decoder end-to-end."""
+    from ..sources.mediagen import synthetic_media
+
+    refs = _valid_refs(spark, sf_dir)
+    return media_counters(refs, synthetic_media(refs.select(F.col("ref_url").alias("url"))))
 
 
 def to_jsonl(df: DataFrame, path: str, field_order: list[str] | None = None) -> None:

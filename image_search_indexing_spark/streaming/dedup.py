@@ -33,16 +33,7 @@ def first_occurrence_urls(refs: DataFrame, watermark: str = "24 hours") -> DataF
 
 def run_streaming_seen(spark, src_path: str, query_name: str = "seen_live"):
     """Drive the streaming dedup synchronously (test/demo harness)."""
-    from .ingest import read_document_stream, streaming_refs
+    from .ingest import _drain_to_memory, read_document_stream, streaming_refs
 
     refs = streaming_refs(read_document_stream(spark, src_path))
-    deduped = first_occurrence_urls(refs)
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return _drain_to_memory(first_occurrence_urls(refs), query_name)

@@ -50,15 +50,16 @@ def host_discovery_counts(refs: DataFrame, watermark: str = "1 hour") -> DataFra
     )
 
 
-def run_to_memory(spark: SparkSession, src_path: str, query_name: str = "refs_live"):
-    """Drive the stream synchronously to completion (test/demo harness)."""
-    refs = streaming_refs(read_document_stream(spark, src_path))
-    q = (
-        refs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+def _drain_to_memory(stream: DataFrame, query_name: str) -> DataFrame:
+    """Run a streaming frame to completion into the in-memory table
+    ``query_name`` (append mode) and return that table — the harness the
+    ``run_*`` drivers share."""
+    q = stream.writeStream.outputMode("append").format("memory").queryName(query_name).start()
     q.processAllAvailable()
     q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return stream.sparkSession.sql(f"SELECT * FROM {query_name}")
+
+
+def run_to_memory(spark: SparkSession, src_path: str, query_name: str = "refs_live"):
+    """Drive the stream synchronously to completion (test/demo harness)."""
+    return _drain_to_memory(streaming_refs(read_document_stream(spark, src_path)), query_name)

@@ -9,9 +9,11 @@ carries across micro-batches without re-reading history.
 
 This is the engine's custom stateful operator (SURVEY.md §2.7: the
 reference has no streaming; the north rule's politeness semantics are the
-engine addition). Determinism inside a micro-batch uses the same crawl
-order as batch politeness: (priority, page_ts, length(url), url). Across
-micro-batches, arrival order governs — the live-scheduling semantic.
+engine addition). Determinism inside a micro-batch: a host's rows are
+taken in (page_ts, length(ref_url), ref_url) order — batch politeness's
+crawl order without its leading priority, which streamed refs do not
+carry. Across micro-batches, arrival order governs — the live-scheduling
+semantic.
 """
 
 from __future__ import annotations
@@ -63,16 +65,7 @@ def run_streaming_budget(
     spark, src_path: str, budget: int = 5, query_name: str = "budget_live"
 ):
     """Drive the stateful budget synchronously (test/demo harness)."""
-    from .ingest import read_document_stream, streaming_refs
+    from .ingest import _drain_to_memory, read_document_stream, streaming_refs
 
     refs = streaming_refs(read_document_stream(spark, src_path, max_files=1))
-    sched = stateful_host_budget(refs, budget=budget)
-    q = (
-        sched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return _drain_to_memory(stateful_host_budget(refs, budget=budget), query_name)

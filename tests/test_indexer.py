@@ -309,15 +309,19 @@ def test_media_size_gates_and_mime_mismatch(spark):
 
 
 def test_media_thumbnails_ride_the_capture_pass(spark):
-    """imgSrcBase64 parity (ImageDataSerializer.java:46): with
-    with_thumbnails=True a decodable payload's capture carries a REAL
-    ≤200×200 PNG thumbnail, base64-encoded, produced in the same Arrow
-    pass as digest/dims; undecodable containers carry NULL."""
-    import base64
-
+    """imgSrcBase64 parity (ImageDataSerializer.java:46): the captures'
+    own media frame through ``decode_image_meta(thumbnails=True)`` gives
+    each surviving capture a REAL ≤200×200 PNG thumbnail whose source
+    dims are the capture's width/height; gif keeps its ORIGINAL bytes.
+    The capture rows themselves carry no thumbnail column (no indexer
+    output selects one)."""
     import numpy as np
 
-    from image_search_indexing_spark.operators.multimodal import decode_png, encode_png
+    from image_search_indexing_spark.operators.multimodal import (
+        decode_image_meta,
+        decode_png,
+        encode_png,
+    )
     from image_search_indexing_spark.plans.indexer import records_from_refs
 
     url_png = "http://www.hosta.pt/x/real.png"
@@ -333,35 +337,40 @@ def test_media_thumbnails_ride_the_capture_pass(spark):
         [(url_png, bytearray(encode_png(img))), (url_gif, bytearray(gif_bytes))],
         "url string, payload binary",
     )
-    captures, _ = records_from_refs(_refs(spark, rows), media, with_thumbnails=True)
-    got = {r["img_url"]: r for r in captures.collect()}
-    thumb = decode_png(base64.b64decode(got[url_png]["img_src_base64"]))
+    captures, _ = records_from_refs(_refs(spark, rows), media)
+    assert "img_src_base64" not in captures.columns
+    caps = {r["img_url"]: r for r in captures.collect()}
+    thumbs = {r["url"]: r for r in decode_image_meta(media, thumbnails=True).collect()}
+    assert set(caps) == set(thumbs) == {url_png, url_gif}
+    for url in caps:
+        assert (caps[url]["width"], caps[url]["height"]) == (
+            thumbs[url]["width"],
+            thumbs[url]["height"],
+        )
+    thumb = decode_png(bytes(thumbs[url_png]["thumb"]))
     assert thumb.shape == (150, 200, 3)  # 400x300 → reference aspect box
     # gif: ORIGINAL bytes pass through untouched (ImageParse.java:131-134)
-    assert base64.b64decode(got[url_gif]["img_src_base64"]) == gif_bytes
-    # default path unchanged: no thumbnail column
-    cap2, _ = records_from_refs(_refs(spark, rows), media)
-    assert "img_src_base64" not in cap2.columns
+    assert bytes(thumbs[url_gif]["thumb"]) == gif_bytes
 
 
-def test_media_gate_counters_observation(spark):
+def test_media_counters_core(spark):
     """IMAGE_COUNTERS parity (ImageIndexerWithDupsJob.java:70-98): the
-    parse-stage counters ride an Observation on the attach_media_meta pass —
+    parse-stage counters the ``indexer_media_counters`` query reads —
     too-small gate hits, octet-stream = MIME_INVALID, known-but-different
-    magic = MIME_WRONG."""
-    from pyspark.sql import Observation
-
-    from image_search_indexing_spark.plans.indexer import records_from_refs
+    magic = MIME_WRONG — over four hand-built payloads."""
+    from image_search_indexing_spark.plans.indexer import media_counters
 
     url_small = "http://www.hosta.pt/x/tiny.jpg"
     url_good = "http://www.hosta.pt/x/good.gif"
     url_png = "http://www.hosta.pt/x/fake.jpg"  # png magic, .jpg name
     url_junk = "http://www.hosta.pt/x/junk.jpg"  # no known magic
+    url_none = "http://www.hosta.pt/x/none.jpg"  # no payload row
     rows = [
         ("d1", [_t("cap", 0), _img(url_small, 1)]),
         ("d2", [_t("cap", 0), _img(url_good, 1)]),
         ("d3", [_t("cap", 0), _img(url_png, 1)]),
         ("d4", [_t("cap", 0), _img(url_junk, 1)]),
+        ("d5", [_t("cap", 0), _img(url_none, 1)]),
     ]
     media = spark.createDataFrame(
         [
@@ -372,16 +381,17 @@ def test_media_gate_counters_observation(spark):
         ],
         "url string, payload binary",
     )
-    obs = Observation()
-    captures, _ = records_from_refs(_refs(spark, rows), media, observation=obs)
-    n = captures.count()  # action → observation materializes
-    got = obs.get
-    assert got["images_decoded"] == 3  # junk has no parseable header
-    assert got["images_too_small"] == 1
-    assert got["images_too_large"] == 0
-    assert got["images_mime_invalid"] == 1  # junk: no magic → octet-stream
-    assert got["images_mime_wrong"] == 2  # png + tiny-gif bytes at .jpg URLs
-    assert n == 2  # good + png survive; tiny gated, junk unparseable
+    got = {r["counter"]: r["value"] for r in media_counters(_refs(spark, rows), media).collect()}
+    assert got == {
+        "images_with_payload": 4,
+        "images_decoded": 3,  # junk has no parseable header
+        "images_too_small": 1,
+        "images_too_large": 0,
+        "images_mime_invalid": 1,  # junk: no magic → octet-stream
+        "images_mime_wrong": 2,  # png + tiny-gif bytes at .jpg URLs
+        "images_gate_passed": 2,  # good + png; tiny gated, junk unparseable
+        "captures_without_payload": 1,
+    }
 
 
 def test_indexer_counters_long_format(spark):

@@ -2077,6 +2077,25 @@ def test_encode_bmp_tiff_lossless_round_trip():
     assert np.array_equal(decode_tiff(t), img)
 
 
+def test_encode_tiff_word_aligned():
+    """TIFF 6.0 puts the IFD and every out-of-line value on a word
+    boundary: a 3×5 RGB strip (45 bytes) is padded to even length, so the
+    BitsPerSample triple and the IFD sit at even offsets, and the file
+    still round-trips bit-exact."""
+    from image_search_indexing_spark.operators.multimodal import decode_tiff, encode_tiff
+
+    img = np.random.default_rng(3).integers(0, 256, (3, 5, 3), dtype=np.uint8)
+    t = encode_tiff(img)
+    ifd = int.from_bytes(t[4:8], "little")
+    n = int.from_bytes(t[ifd : ifd + 2], "little")
+    tags = {int.from_bytes(t[e : e + 2], "little"): int.from_bytes(t[e + 8 : e + 12], "little")
+            for e in range(ifd + 2, ifd + 2 + 12 * n, 12)}
+    assert ifd % 2 == 0 and tags[258] % 2 == 0
+    assert t[tags[258] : tags[258] + 6] == (8).to_bytes(2, "little") * 3
+    assert tags[279] == 45  # StripByteCounts: the pad is not strip data
+    assert np.array_equal(decode_tiff(t), img)
+
+
 def test_thumbnail_source_mime_parity():
     """F10 MIME parity with ``ImageParse.java:173-176``
     (``ImageIO.write(scaledImg, mimeDetected.substring(6), ...)``):

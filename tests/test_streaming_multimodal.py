@@ -108,13 +108,14 @@ def test_multimodal_decode_and_gates(spark):
 
 
 def test_attach_thumbnails_real_bytes(spark):
-    """F10 byte-level thumbnail over the Arrow batch path: PNG/BMP
-    payloads get REAL resampled PNG thumbnails (decoded back and checked
-    pixel-for-pixel), undecodable containers get NULLs."""
+    """F10 byte-level thumbnail in ``decode_image_meta(thumbnails=True)``'s
+    Arrow batch pass: PNG payloads get REAL resampled PNG thumbnails
+    (decoded back and checked pixel-for-pixel), gif keeps its ORIGINAL
+    bytes (ImageParse.java:131-134), undecodable containers get NULLs."""
     import numpy as np
 
     from image_search_indexing_spark.operators.multimodal import (
-        attach_thumbnails,
+        decode_image_meta,
         decode_png,
         encode_png,
         resize_nearest,
@@ -123,13 +124,15 @@ def test_attach_thumbnails_real_bytes(spark):
     y, x = np.mgrid[0:240, 0:400]
     big = np.stack([x % 256, y % 256, (x * 3 + y) % 256], axis=2).astype(np.uint8)
     small = np.full((60, 60, 3), 17, np.uint8)
+    gif = b"GIF87a" + (120).to_bytes(2, "little") + (90).to_bytes(2, "little") + b"x"
     rows = [
         ("big", bytearray(encode_png(big))),
         ("small", bytearray(encode_png(small))),
         ("jpeg", bytearray(b"\xff\xd8\xff\xe0 not decodable here")),
+        ("gif", bytearray(gif)),
     ]
     df = spark.createDataFrame(rows, "media_id string, payload binary")
-    out = {r["media_id"]: r for r in attach_thumbnails(df).collect()}
+    out = {r["media_id"]: r for r in decode_image_meta(df, thumbnails=True).collect()}
 
     assert (out["big"]["thumb_width"], out["big"]["thumb_height"]) == (200, 120)
     got = decode_png(bytes(out["big"]["thumb"]))
@@ -138,6 +141,8 @@ def test_attach_thumbnails_real_bytes(spark):
     assert (out["small"]["thumb_width"], out["small"]["thumb_height"]) == (60, 60)
     assert np.array_equal(decode_png(bytes(out["small"]["thumb"])), small)
     assert out["jpeg"]["thumb"] is None and out["jpeg"]["thumb_width"] is None
+    assert bytes(out["gif"]["thumb"]) == gif
+    assert (out["gif"]["thumb_width"], out["gif"]["thumb_height"]) == (120, 90)
 
 
 def test_simhash_and_ann(spark):
